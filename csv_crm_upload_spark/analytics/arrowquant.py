@@ -2,9 +2,10 @@
 stages (spark_optimization_guide §4.2: hand whole batches to vectorized
 native code instead of a giant JVM expression tree).
 
-Why: the k-unrolled scoring expressions (`ivf.cell_id_expr`,
-`pq.codes_expr`) plan correctly — map-only, zero exchanges — but their
-literal trees (k×dim + m×k×sub doubles, nested folds per candidate) cost
+Why: the k-unrolled scoring expressions (`cell_id_expr`, `codes_expr`
+and the k-means `_assign`, kept as references in
+tests/_quantizer_reference.py) plan correctly — map-only, zero
+exchanges — but their literal trees (k×dim + m×k×sub doubles, nested folds per candidate) cost
 seconds of driver-side Catalyst analysis + whole-stage codegen on every
 COLD process, which dominates pq1/ivfpq1/ivfpq2's cold wall time at any
 corpus size. A `mapInArrow` stage replaces the tree with one tiny plan
@@ -33,9 +34,9 @@ DuckDB oracles unroll:
 The margin fallback is O(ambiguous rows · k); on continuous data the
 ambiguous fraction is ~1e-5, so the stage stays vectorized.
 
-Parity is pinned by tests/test_arrowquant.py (arrow ≡ expression on the
-real corpora + adversarial midpoint/NaN fixtures) and by the standing
-oracle-parity suites for pq1/ivfpq1/ivfpq2/sim_knn_ivf.
+Parity is pinned by tests/test_arrowquant.py (arrow ≡ the reference
+expressions on the real corpora + adversarial midpoint/NaN fixtures)
+and by the standing oracle-parity suites for pq1/ivfpq1/ivfpq2/sim_knn_ivf.
 """
 
 from __future__ import annotations
@@ -154,7 +155,7 @@ def round6_values(vals: np.ndarray) -> np.ndarray:
 
 def pq_codes_batch(emb: np.ndarray, books: np.ndarray) -> np.ndarray:
     """(n, m) int64 codes (−1 = NULL) for already width-gated vectors —
-    the numpy replica of pq.codes_expr."""
+    the numpy replica of the reference codes_expr."""
     m, _k, sub = books.shape
     n = emb.shape[0]
     codes = np.empty((n, m), dtype=np.int64)
@@ -166,7 +167,7 @@ def pq_codes_batch(emb: np.ndarray, books: np.ndarray) -> np.ndarray:
 
 def cell_ids_batch(emb: np.ndarray, centroids: np.ndarray) -> np.ndarray:
     """(n,) int64 nearest-centroid ids — the numpy replica of
-    ivf.cell_id_expr (rounded-dot argmax, first-max tiebreak)."""
+    the reference cell_id_expr (rounded-dot argmax, first-max tiebreak)."""
     return _decide(_seq_dots(emb, centroids), "max")
 
 
@@ -190,13 +191,29 @@ def _emb_list_array(emb: np.ndarray):
     return pa.ListArray.from_arrays(offsets, values)
 
 
-def _gated_input(gated: DataFrame) -> DataFrame:
-    """The two columns an Arrow scoring stage consumes, with vec_id
-    normalized to long (the declared output type; int inputs widen
-    exactly, like every downstream join already did)."""
+def _arrow_stage(frame: DataFrame, dim: int, per_batch, schema: str, *carry: str) -> DataFrame:
+    """The one Arrow stage boundary every scorer here goes through:
+    project vec_id (normalized to long — int inputs widen exactly) plus
+    `embedding` and any `carry` columns, decode each non-empty batch's
+    vectors as an (n, dim) float64 matrix, and build the output batch
+    from `per_batch(batch, emb)` — a list of Arrow arrays in `schema`'s
+    column order (names are read from the DDL `schema`, which has no
+    nested commas)."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    return gated.select(F.col("vec_id").cast("long").alias("vec_id"), "embedding")
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def fn(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            arrays = per_batch(batch, _batch_embeddings(batch, dim))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return frame.select(
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding", *carry
+    ).mapInArrow(fn, schema)
 
 
 def _codes_list_array(codes: np.ndarray):
@@ -217,23 +234,13 @@ def encode_arrow(gated: DataFrame, books: np.ndarray) -> DataFrame:
     """(vec_id, codes) over a pre-gated (valid, codec-width) frame —
     the Arrow-stage replacement for `gated.select(vec_id,
     codes_expr(books))`. One MapInArrow node; no literal tree."""
-    import pyarrow as pa
-
     m, _k, sub = books.shape
-    dim = int(m * sub)
     bks = np.ascontiguousarray(books, dtype=np.float64)
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("vec_id"), _codes_list_array(pq_codes_batch(emb, bks))],
-                names=["vec_id", "codes"],
-            )
+    def per_batch(batch, emb):
+        return [batch.column("vec_id"), _codes_list_array(pq_codes_batch(emb, bks))]
 
-    return _gated_input(gated).mapInArrow(fn, "vec_id long, codes array<int>")
+    return _arrow_stage(gated, int(m * sub), per_batch, "vec_id long, codes array<int>")
 
 
 def cells_arrow(
@@ -247,39 +254,29 @@ def cells_arrow(
     import pyarrow as pa
 
     cts = np.ascontiguousarray(centroids, dtype=np.float64)
-    dim = int(cts.shape[1])
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            cells = pa.array(
-                cell_ids_batch(emb, cts).astype(np.int32), type=pa.int32()
-            )
-            if with_embedding:
-                arrays = [batch.column("vec_id"), _emb_list_array(emb), cells]
-                names = ["vec_id", "embedding", "cell_id"]
-            else:
-                arrays = [batch.column("vec_id"), cells]
-                names = ["vec_id", "cell_id"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+    def per_batch(batch, emb):
+        cells = pa.array(cell_ids_batch(emb, cts).astype(np.int32), type=pa.int32())
+        if with_embedding:
+            return [batch.column("vec_id"), _emb_list_array(emb), cells]
+        return [batch.column("vec_id"), cells]
 
     out_schema = (
         "vec_id long, embedding array<double>, cell_id int"
         if with_embedding
         else "vec_id long, cell_id int"
     )
-    return _gated_input(gated).mapInArrow(fn, out_schema)
+    return _arrow_stage(gated, int(cts.shape[1]), per_batch, out_schema)
 
 
 def assign_arrow(
     gated: DataFrame, cent: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """(vec_id, embedding, cluster_id, sim) — the Arrow replacement for
-    clustering._assign: per row, the FIRST-max position over the 6-dp
-    rounded dots against the centroid list; cluster_id is that
-    position's id from `cent`, sim the (exactly) rounded chosen dot.
+    the expression-form k-means `_assign`: per row, the FIRST-max
+    position over the 6-dp rounded dots against the centroid list;
+    cluster_id is that position's id from `cent`, sim the (exactly)
+    rounded chosen dot.
     Bit-identical to the expression form (tests/test_arrowquant.py):
     decisions via the margin-fallback `_decide`, the visible sim via
     `round6_values`. The embedding passes through widened to double
@@ -288,28 +285,23 @@ def assign_arrow(
 
     ids = np.array([cid for cid, _v in cent], dtype=np.int64)
     mat = np.ascontiguousarray([v for _cid, v in cent], dtype=np.float64)
-    dim = int(mat.shape[1])
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            dots = _seq_dots(emb, mat)
-            pos = _decide(dots, "max")
-            sims = round6_values(dots[np.arange(len(pos)), pos])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id"),
-                    _emb_list_array(emb),
-                    pa.array(ids[pos].astype(np.int32), type=pa.int32()),
-                    pa.array(sims, type=pa.float64()),
-                ],
-                names=["vec_id", "embedding", "cluster_id", "sim"],
-            )
+    def per_batch(batch, emb):
+        dots = _seq_dots(emb, mat)
+        pos = _decide(dots, "max")
+        sims = round6_values(dots[np.arange(len(pos)), pos])
+        return [
+            batch.column("vec_id"),
+            _emb_list_array(emb),
+            pa.array(ids[pos].astype(np.int32), type=pa.int32()),
+            pa.array(sims, type=pa.float64()),
+        ]
 
-    return _gated_input(gated).mapInArrow(
-        fn, "vec_id long, embedding array<double>, cluster_id int, sim double"
+    return _arrow_stage(
+        gated,
+        int(mat.shape[1]),
+        per_batch,
+        "vec_id long, embedding array<double>, cluster_id int, sim double",
     )
 
 
@@ -337,31 +329,23 @@ def margins_arrow(
 
     ids = np.array([cid for cid, _v in cent], dtype=np.int64)
     mat = np.ascontiguousarray([v for _cid, v in cent], dtype=np.float64)
-    dim = int(mat.shape[1])
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            dots = _seq_dots(emb, mat)
-            pos = _decide(dots, "max")
-            sims = round6_values(dots)
-            finite = np.isfinite(sims).all(axis=1)
-            srt = np.sort(sims, axis=1)  # ascending; NaN sorts last = greatest ✓
-            margins = round6_values(srt[:, -1] - srt[:, -2])
-            if not finite.all():
-                for i in np.nonzero(~finite)[0]:
-                    margins[i] = _margin_row_exact(dots[i])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids[pos].astype(np.int32), type=pa.int32()),
-                    pa.array(margins, type=pa.float64()),
-                ],
-                names=["cluster_id", "margin"],
-            )
+    def per_batch(batch, emb):
+        dots = _seq_dots(emb, mat)
+        pos = _decide(dots, "max")
+        sims = round6_values(dots)
+        finite = np.isfinite(sims).all(axis=1)
+        srt = np.sort(sims, axis=1)  # ascending; NaN sorts last = greatest ✓
+        margins = round6_values(srt[:, -1] - srt[:, -2])
+        if not finite.all():
+            for i in np.nonzero(~finite)[0]:
+                margins[i] = _margin_row_exact(dots[i])
+        return [
+            pa.array(ids[pos].astype(np.int32), type=pa.int32()),
+            pa.array(margins, type=pa.float64()),
+        ]
 
-    return _gated_input(gated).mapInArrow(fn, "cluster_id int, margin double")
+    return _arrow_stage(gated, int(mat.shape[1]), per_batch, "cluster_id int, margin double")
 
 
 def fit_codes_longform(gated_vf: DataFrame, books: list[list[list[float]]]) -> DataFrame:
@@ -380,40 +364,28 @@ def fit_codes_longform(gated_vf: DataFrame, books: list[list[list[float]]]) -> D
     m = len(books)
     bks = [np.ascontiguousarray(b, dtype=np.float64) for b in books]
     sub = int(bks[0].shape[1])
-    dim = m * sub
 
-    def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            js = np.empty(n * m, dtype=np.int32)
-            codes = np.empty(n * m, dtype=np.int64)
-            svs = np.empty((n * m, sub), dtype=np.float64)
-            for j in range(m):
-                sv = emb[:, j * sub : (j + 1) * sub]
-                d2 = _seq_d2(sv, bks[j])
-                cj = _decide(d2, "min")
-                if (cj < 0).any():  # all-NaN/inf rows: the join-min keeps code 0
-                    cj = np.where(cj < 0, 0, cj)
-                js[j::m] = j
-                codes[j::m] = cj
-                svs[j::m] = sv
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(js, type=pa.int32()),
-                    pa.array(codes.astype(np.int32), type=pa.int32()),
-                    _emb_list_array(svs),
-                ],
-                names=["j", "code", "sv"],
-            )
+    def per_batch(batch, emb):
+        n = batch.num_rows
+        js = np.empty(n * m, dtype=np.int32)
+        codes = np.empty(n * m, dtype=np.int64)
+        svs = np.empty((n * m, sub), dtype=np.float64)
+        for j in range(m):
+            sv = emb[:, j * sub : (j + 1) * sub]
+            d2 = _seq_d2(sv, bks[j])
+            cj = _decide(d2, "min")
+            if (cj < 0).any():  # all-NaN/inf rows: the join-min keeps code 0
+                cj = np.where(cj < 0, 0, cj)
+            js[j::m] = j
+            codes[j::m] = cj
+            svs[j::m] = sv
+        return [
+            pa.array(js, type=pa.int32()),
+            pa.array(codes.astype(np.int32), type=pa.int32()),
+            _emb_list_array(svs),
+        ]
 
-    from pyspark.sql import functions as F
-
-    return gated_vf.select(
-        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
-    ).mapInArrow(fn, "j int, code int, sv array<double>")
+    return _arrow_stage(gated_vf, m * sub, per_batch, "j int, code int, sv array<double>")
 
 
 def residual_arrow(cells: DataFrame, means: np.ndarray) -> DataFrame:
@@ -421,32 +393,15 @@ def residual_arrow(cells: DataFrame, means: np.ndarray) -> DataFrame:
     cell_id) frame — the elementwise float64 subtract of the residual
     zip_with, computed in Arrow (exact: one IEEE op per element, no
     rounding anywhere)."""
-    import pyarrow as pa
-
     mns = np.ascontiguousarray(means, dtype=np.float64)
-    dim = int(mns.shape[1])
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            cells_np = np.asarray(batch.column("cell_id"), dtype=np.int64)
-            res = emb - mns[cells_np]
-            values = pa.array(res.reshape(-1), type=pa.float64())
-            offsets = pa.array(
-                np.arange(0, (batch.num_rows + 1) * dim, dim, dtype=np.int32)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("vec_id"), pa.ListArray.from_arrays(offsets, values)],
-                names=["vec_id", "embedding"],
-            )
+    def per_batch(batch, emb):
+        cells_np = np.asarray(batch.column("cell_id"), dtype=np.int64)
+        return [batch.column("vec_id"), _emb_list_array(emb - mns[cells_np])]
 
-    from pyspark.sql import functions as F
-
-    return cells.select(
-        F.col("vec_id").cast("long").alias("vec_id"), "embedding", "cell_id"
-    ).mapInArrow(fn, "vec_id long, embedding array<double>")
+    return _arrow_stage(
+        cells, int(mns.shape[1]), per_batch, "vec_id long, embedding array<double>", "cell_id"
+    )
 
 
 def assign_encode_arrow(
@@ -462,27 +417,19 @@ def assign_encode_arrow(
     import pyarrow as pa
 
     m, _k, sub = books.shape
-    dim = int(m * sub)
     cts = np.ascontiguousarray(centroids, dtype=np.float64)
     bks = np.ascontiguousarray(books, dtype=np.float64)
     mns = None if means is None else np.ascontiguousarray(means, dtype=np.float64)
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            emb = _batch_embeddings(batch, dim)
-            cells = cell_ids_batch(emb, cts)
-            x = emb if mns is None else emb - mns[cells]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id"),
-                    _codes_list_array(pq_codes_batch(x, bks)),
-                    pa.array(cells.astype(np.int32), type=pa.int32()),
-                ],
-                names=["vec_id", "codes", "cell_id"],
-            )
+    def per_batch(batch, emb):
+        cells = cell_ids_batch(emb, cts)
+        x = emb if mns is None else emb - mns[cells]
+        return [
+            batch.column("vec_id"),
+            _codes_list_array(pq_codes_batch(x, bks)),
+            pa.array(cells.astype(np.int32), type=pa.int32()),
+        ]
 
-    return _gated_input(gated).mapInArrow(
-        fn, "vec_id long, codes array<int>, cell_id int"
+    return _arrow_stage(
+        gated, int(m * sub), per_batch, "vec_id long, codes array<int>, cell_id int"
     )

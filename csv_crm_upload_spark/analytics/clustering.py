@@ -8,9 +8,10 @@ families.
 Canonical Spark k-means shape (what MLlib does under the hood):
   * centroids live on the DRIVER as a k-row list (bounded — the
     sanctioned scalar-per-iteration pattern of pr1/d_dup_clusters) and
-    ride into the plan as broadcast array literals;
-  * ASSIGNMENT is map-only: per row, argmax over k fused dot-product
-    expressions — no shuffle, no crossJoin blowup;
+    ride into the assignment stage's closure;
+  * ASSIGNMENT is map-only: per row, argmax over k dot products in one
+    Arrow stage (arrowquant.assign_arrow) — no shuffle, no crossJoin
+    blowup;
   * RECOMPUTE is one map-side-combining groupBy per iteration carrying
     k rows of (count, 64 decimal sums) — the shuffle moves k rows per
     partition, not the corpus.
@@ -37,21 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _dot_lit(emb: F.Column, vec: list[float]) -> F.Column:
-    """Sequential left-fold dot product against a literal vector —
-    fold order matches DuckDB's list_sum(list_transform(...)) exactly
-    (the proven cross-engine idiom of the cosine oracles)."""
-    return F.aggregate(
-        F.zip_with(
-            emb,
-            F.array(*[F.lit(float(v)) for v in vec]),
-            lambda x, y: x.cast("double") * y,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def kmeans_assignments(
@@ -105,27 +91,12 @@ def kmeans_assignments(
 
     embeddings = fan_out(embeddings.filter(F.size("embedding") == dim))
     cent = _fitted_centroids(embeddings, k, iters, dim)
-    # Arrow-native since round 13: bit-identical to _assign
-    # (tests/test_arrowquant.py) without the k×dim literal tree's
+    # Arrow-native: bit-identical to the expression-form _assign
+    # (tests/_quantizer_reference.py, pinned by tests/test_arrowquant.py) without the k×dim literal tree's
     # per-call construction/analysis/codegen cost (guide §4.2)
     from csv_crm_upload_spark.analytics.arrowquant import assign_arrow
 
     return assign_arrow(embeddings, cent)
-
-
-def _assign(valid_embeddings: DataFrame, cent: list[tuple[int, list[float]]]) -> DataFrame:
-    """Map-only argmax assignment of every (already valid_vectors-gated)
-    vector against the given driver-side centroid list. FIRST max
-    position ≡ lowest-cluster_id tiebreak (ids ascend in `cent`)."""
-    sims = F.array(*[F.round(_dot_lit(F.col("embedding"), v), 6) for _cid, v in cent])
-    best_pos = F.array_position(sims, F.array_max(sims)).cast("int") - 1
-    ids = F.array(*[F.lit(cid) for cid, _v in cent])
-    return valid_embeddings.select(
-        "vec_id",
-        "embedding",
-        F.element_at(ids, best_pos + 1).alias("cluster_id"),
-        F.element_at(sims, best_pos + 1).alias("sim"),
-    )
 
 
 def _fitted_centroids(
@@ -178,7 +149,7 @@ def _fitted_centroids_impl(
     from csv_crm_upload_spark.analytics.arrowquant import assign_arrow
 
     for _ in range(iters - 1):
-        # Arrow-native assignment (≡ _assign — tests/test_arrowquant.py):
+        # Arrow-native assignment (≡ tests/_quantizer_reference._assign):
         # the per-round k×dim literal tree was the fit's dominant
         # driver-side cost (construction + analysis + codegen per round)
         assigned = assign_arrow(valid_embeddings, cent)

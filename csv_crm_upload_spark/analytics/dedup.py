@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics.fanout import cluster_for_write
+from csv_crm_upload_spark.analytics.fitmemo import memo_fit
 
 MINHASH_K = 16  # signature length
 LSH_BANDS = 4  # 16 hashes → 4 bands × 4 rows
@@ -259,40 +260,6 @@ def d_minhash_signatures(documents: DataFrame, n: int = 3) -> DataFrame:
     return pro.groupBy("doc_id").agg(*aggs)
 
 
-#: Bounded signature-table memo for d_minhash_lsh_pairs: at most this
-#: many persisted signature tables live at once (FIFO eviction with
-#: unpersist). Each entry is tiny — 17 longs per doc — so two entries
-#: cover the common alternation (e.g. two corpora compared in one
-#: session) at negligible storage cost.
-_SIG_MEMO_MAX = 2
-_SIG_MEMO: list[tuple[DataFrame, int, DataFrame]] = []
-
-
-def _memo_signatures(documents: DataFrame, n: int) -> DataFrame:
-    """Persisted MinHash signature table for (documents, n), reused
-    across calls when the input is semantically the SAME plan
-    (DataFrame.sameSemantics — exact canonicalized-plan equality, no
-    hash-collision risk). Staleness caveat matches persist() itself:
-    if the underlying files change, call clear_signature_memo().
-    """
-    for docs, nn, sig in _SIG_MEMO:
-        if nn == n and documents.sameSemantics(docs):
-            return sig
-    sig = d_minhash_signatures(documents, n).persist()
-    _SIG_MEMO.append((documents, n, sig))
-    while len(_SIG_MEMO) > _SIG_MEMO_MAX:
-        _, _, old = _SIG_MEMO.pop(0)
-        old.unpersist()
-    return sig
-
-
-def clear_signature_memo() -> None:
-    """Unpersist and drop every memoized signature table."""
-    while _SIG_MEMO:
-        _, _, old = _SIG_MEMO.pop(0)
-        old.unpersist()
-
-
 def _band_buckets(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id[, *carry], band, bucket) — LSH banding of a signature
     table: each band's bucket is the md5 of its signature slice.
@@ -386,20 +353,16 @@ def d_minhash_lsh_pairs(
     bucket can still pair via their OTHER bands, and genuinely giant
     duplicate groups are better handled by exact-dedup collapse first).
     """
-    # Materialization point: signatures are tiny (17 longs/doc). Since
-    # round 13 the inline query consumes them ONCE (the signature array
-    # rides the band explode, so verification is map-only), but repeat
-    # callers (the graph family, mhcal1, benchmarks) still reuse the
-    # persisted table instead of recomputing the shingle+hash map
-    # stage. Bounded memoization (not a bare persist): a persist() here
-    # could never be paired with an unpersist — it leaked one cached
-    # table per invocation for the life of the session (the round-5
-    # warm-bench anomaly) — while recomputing per call throws away the
-    # signatures a repeated caller (interactive analysis, the graph
-    # family, benchmarks) would reuse. The memo keeps at most
-    # _SIG_MEMO_MAX persisted signature tables, keyed by exact
-    # canonicalized-plan equality, FIFO-evicted with unpersist.
-    sig = _memo_signatures(documents, n)
+    # Materialization point: signatures are tiny (17 longs/doc). The
+    # inline query consumes them once, but repeat callers (the graph
+    # family, mhcal1, benchmarks) reuse the persisted table instead of
+    # recomputing the shingle+hash map stage. A bare persist() here
+    # would have no owner to unpersist it; the fit memo owns it instead
+    # (bounded, keyed by plan semantics + input files, evicted with
+    # unpersist).
+    sig = memo_fit(
+        "minhash_sig", documents, (n,), lambda: d_minhash_signatures(documents, n).persist()
+    )
     # Round 13 (guide §2.4 — remove shuffles outright): the signature
     # ARRAY rides through the band explode, so the in-bucket self-join
     # yields both pair members' signatures directly and the agreement
@@ -833,8 +796,8 @@ def pr1_doc_pagerank(
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .persist()
     )
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
     try:
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
         n_nodes = deg.count()
         if n_nodes == 0:
             return documents.sparkSession.createDataFrame(
@@ -879,19 +842,19 @@ def pr1_doc_pagerank(
                 )
                 .localCheckpoint(eager=True)
             )
-        out = (
+        # materialized → safe to return after the inputs are unpersisted
+        return (
             ranks.join(deg, ranks["doc_id"] == deg["src"])
             .select(
                 "doc_id",
                 F.col("deg").alias("n_neighbors"),
                 F.round(F.col("rank"), 8).alias("pagerank"),
             )
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        out.count()
-        return out
     finally:
         edges.unpersist()
+        deg.unpersist()
         if own_pairs:
             pairs.unpersist()
 
@@ -1123,11 +1086,17 @@ def tri1_triangle_counts(
         .unionAll(tri.select(F.col("x").alias("doc_id")))
         .unionAll(tri.select(F.col("y").alias("doc_id")))
     )
-    return (
+    counts = (
         corners.groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
         .orderBy("doc_id")
     )
+    try:
+        # materialized → safe to return after the inputs are unpersisted
+        return counts.localCheckpoint(eager=True)
+    finally:
+        edges.unpersist()
+        oriented.unpersist()
 
 
 def linedd1_span_dedup(documents: DataFrame, span: int = 8) -> DataFrame:

@@ -1,26 +1,28 @@
-"""Process-scoped memo for expensive DETERMINISTIC fit artifacts (r10
-verdict ask #2) — the dd_minhash signature-memo discipline
-(analytics/dedup.py:_memo_signatures) generalized to the fit-per-call
-oracle entries: within one process (a parity sweep, the bench, a long
-session) the self-contained ANN/PCA queries re-run identical
-distributed Lloyd's / covariance fits dozens of times; BENCH_EXTRA_r10's
-warm≈cold samples proved the 10-16 s per entry is pure re-fit, not JIT.
-Every fit memoized here is bit-deterministic given its inputs (the
-kmeans1/pca1 determinism discipline: fixed init, fixed iteration count,
-order-free decimal sums), so a memo hit returns EXACTLY what a re-run
-would compute — oracle semantics are untouched.
+"""Process-scoped memo for expensive DETERMINISTIC artifacts — the one
+memo in the package. Within one process (a parity sweep, the bench, a
+long session) the self-contained ANN/PCA/kmeans queries and the MinHash
+dedup family would otherwise re-run identical distributed fits and
+signature derivations dozens of times. Every artifact memoized here is
+bit-deterministic given its inputs (fixed init, fixed iteration count,
+order-free decimal sums; MinHash is a pure function of the text), so a
+hit returns EXACTLY what a re-run would compute — oracle semantics are
+untouched.
 
-Keying: (tag, params, sorted inputFiles, plan semantics). The
+Keying: (tag, params, sorted inputFiles, plan semantics, session). The
 sameSemantics check is exact canonicalized-plan equality (no collision
-risk); the inputFiles fingerprint closes the staleness hole persist()
-has — rewriting a parquet table at the SAME path changes the part-file
-names, so a stale entry misses instead of serving the old corpus'
-fit. (Same-path OVERWRITES with identical part names can't happen:
-Spark part files carry a per-write UUID.)
+risk). Plan equality alone cannot see files replaced under the SAME
+path, so the inputFiles fingerprint rides the key: Spark part files
+carry a per-write UUID, so rewritten data lists different files and
+misses. An entry whose plan matches but whose files do not is stale and
+is dropped (unpersisted) before the re-fit — otherwise Spark's cache
+manager, which matches cached plans by path, would serve the old
+corpus to the new persist. Entries are bound to the SparkSession that
+built them; another session misses and drops them.
 
 Values may be driver-side objects (numpy codebooks, collected rows) or
-persisted DataFrames (the PCA sufficient-statistics pair) — eviction
-unpersists DataFrame values. FIFO-bounded like the signature memo.
+persisted DataFrames (MinHash signature tables, the PCA
+sufficient-statistics pair) — eviction unpersists DataFrame values.
+Storage is FIFO-bounded, with a tighter bound for corpus-scale values.
 """
 
 from __future__ import annotations
@@ -37,18 +39,16 @@ from pyspark.sql import DataFrame
 _FIT_MEMO_MAX = 12
 
 #: Tags whose values are CORPUS-SCALE materializations (localCheckpointed
-#: code tables — one row per corpus vector), not tiny driver artifacts
-#: (advice r11): letting those ride the same 12-deep FIFO would pin up
-#: to 12 corpus-scale checkpoints in executor storage, and a truncated
-#: localCheckpoint is irrecoverable on executor loss, so the blast
-#: radius of each pinned entry is larger too. They get their own
-#: small FIFO — one slot per artifact FAMILY that alternates within a
-#: bench/sweep (PQ codes, IVF-PQ codes, IVF cells — the cap was 2 when
-#: only the first two families existed; round 13 added ivf_cells), so
-#: cross-query reuse inside one run survives while storage stays
-#: bounded at three corpora of m-byte codes / cell ids.
-_CORPUS_SCALE_TAGS = frozenset({"pq_codes", "ivfpq_codes", "ivf_cells"})
-_CORPUS_SCALE_MAX = 3
+#: code tables and persisted signature tables — one row per corpus
+#: vector or document), not tiny driver artifacts: letting those ride
+#: the 12-deep FIFO would pin up to 12 corpus-scale tables in executor
+#: storage, and a truncated localCheckpoint is irrecoverable on executor
+#: loss, so each pinned entry has a larger blast radius too. They get
+#: their own small FIFO — one slot per artifact family that alternates
+#: within a bench/sweep — so cross-query reuse inside one run survives
+#: while storage stays bounded.
+_CORPUS_SCALE_TAGS = frozenset({"pq_codes", "ivfpq_codes", "ivf_cells", "minhash_sig"})
+_CORPUS_SCALE_MAX = len(_CORPUS_SCALE_TAGS)
 
 _FIT_MEMO: list[dict[str, Any]] = []
 
@@ -77,13 +77,12 @@ def memo_fit(
     entry and re-fits."""
     key_files = _files_key(df)
     for i, e in enumerate(_FIT_MEMO):
-        if e["tag"] != tag or e["params"] != params or e["files"] != key_files:
+        if e["tag"] != tag or e["params"] != params:
             continue
-        # entries are SESSION-BOUND (review r11): a memoized value may
-        # hold persisted DataFrames or rows belonging to a stopped
-        # SparkSession — serving them (or even probing sameSemantics
-        # against a dead session's plan) raises deep in py4j. A new
-        # session must MISS and re-fit; a broken entry is dropped.
+        # a memoized value may hold persisted DataFrames or rows of a
+        # stopped SparkSession — serving them (or even probing
+        # sameSemantics against a dead session's plan) raises deep in
+        # py4j, so another session misses and drops the entry
         if e["session"] is not df.sparkSession:
             _FIT_MEMO.pop(i)
             _unpersist_value(e["value"])
@@ -95,8 +94,12 @@ def memo_fit(
             break
         if not same:
             continue
-        if validate is not None and not validate(e["value"]):
+        # same plan over different files (data replaced at the same
+        # path), or a failed validate: the entry is stale — drop and
+        # unpersist it so the re-fit cannot be served the old cache
+        if e["files"] != key_files or (validate is not None and not validate(e["value"])):
             _FIT_MEMO.pop(i)
+            _unpersist_value(e["value"])
             break
         _STATS["hit"] += 1
         return e["value"]
@@ -149,9 +152,10 @@ def _unpersist_value(value: Any) -> None:
 
 
 def clear_fit_memo() -> None:
-    """Unpersist and drop every memoized fit artifact (the
-    clear_signature_memo twin — call when underlying tables mutate
-    in-place in ways the part-file fingerprint cannot see)."""
+    """Unpersist and drop every memoized artifact — fits, code tables and
+    MinHash signature tables alike. Call when underlying tables mutate
+    in place in ways the part-file fingerprint cannot see, or to return
+    the session's cache to empty."""
     while _FIT_MEMO:
         _unpersist_value(_FIT_MEMO.pop(0)["value"])
 

@@ -100,36 +100,6 @@ def _fit_centroids_impl(
     return np.array([c for _cid, c in cent], dtype=np.float64)
 
 
-def cell_id_expr(centroids: np.ndarray):
-    """Column expression (over `embedding`) for the nearest-centroid
-    cell id. The centroid matrix rides into the plan as array literals
-    (broadcast-equivalent; k×dim doubles is tiny) — usable in any map
-    stage, e.g. fused with PQ encoding in ivfpq._assign_and_encode.
-    Each dot is 6-dp rounded before the argmax (ties → FIRST max =
-    lowest cell), the clustering._assign discipline, so the assignment
-    is reproducible by the kmeans oracle chain."""
-    emb = F.col("embedding")
-    sims = [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    emb,
-                    F.array(*[F.lit(float(v)) for v in centroids[c]]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        )
-        for c in range(len(centroids))
-    ]
-    best = F.array_position(
-        F.array(*sims), F.array_max(F.array(*sims))
-    ) - 1  # 1-based → 0-based
-    return best.cast("int")
-
-
 def assign_cells(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
     """vec_id → cell_id of nearest centroid — one map stage, no shuffle.
     Gated to valid vectors of the quantizer's width: a NULL/empty/
@@ -141,8 +111,8 @@ def assign_cells(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
     gated = valid_vectors(embeddings).filter(
         F.size("embedding") == int(centroids.shape[1])
     )
-    # Arrow-native since round 13: bit-identical to cell_id_expr
-    # (tests/test_arrowquant.py) without the k×dim literal tree's
+    # Arrow-native: bit-identical to the expression-form cell_id_expr
+    # (tests/_quantizer_reference.py, pinned by tests/test_arrowquant.py) without the k×dim literal tree's
     # construction/analysis/codegen cost per call (guide §4.2)
     return cells_arrow(gated, centroids)
 

@@ -105,9 +105,10 @@ def _assign_and_encode(
     )
     # Arrow-native since round 13 (guide §4.2): one MapInArrow stage
     # computes the cell argmax, the residual subtraction and the m code
-    # argmins — bit-identical decisions to the fused
-    # cell_id_expr/codes_expr tree (tests/test_arrowquant.py), without
-    # paying that tree's py4j construction + analysis + codegen per call
+    # argmins — bit-identical decisions to the fused cell_id_expr/
+    # codes_expr tree (tests/_quantizer_reference.py, pinned by
+    # tests/test_arrowquant.py), without paying that tree's py4j
+    # construction + analysis + codegen per call
     return assign_encode_arrow(gated, centroids, books, means=means)
 
 
@@ -151,9 +152,9 @@ def _fit_residual_codebooks_impl(
 
     dim = int(centroids.shape[1])
     gated = valid_vectors(embeddings).filter(F.size("embedding") == dim)
-    # Arrow-native cell assignment (bit-identical to cell_id_expr —
-    # tests/test_arrowquant.py); the vector rides through for the
-    # per-cell decimal means below
+    # Arrow-native cell assignment (bit-identical to the reference
+    # cell_id_expr in tests/_quantizer_reference.py); the vector rides
+    # through for the per-cell decimal means below
     cells = cells_arrow(gated, centroids, with_embedding=True)
     sums = [
         F.round(

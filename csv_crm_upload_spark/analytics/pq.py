@@ -159,71 +159,6 @@ def _fit_books_on_frame(
     return np.array(books, dtype=np.float64)
 
 
-def _sub_code_expr(xs, entries: list[list[float]]):
-    """Nearest-entry code of the subvector expression `xs` against one
-    subspace's codebook: argmin of the 6-dp ROUNDED squared L2 distance,
-    ties → FIRST (lowest) code — the cross-engine discipline the pq1
-    oracle unrolls (ORDER BY d2, code). The codebook rides in as ONE
-    nested k×sub literal and the distances come from ONE transform —
-    not k separate aggregate lambdas whose tree the argmin then
-    duplicates (that shape planned 2·m·k aggregates; Catalyst ANALYSIS
-    of the tree, not the data, dominated pq1's per-call cost)."""
-    kk = len(entries)
-    book = F.array(
-        *[F.array(*[F.lit(float(v)) for v in e]) for e in entries]
-    )
-    d2s = F.transform(
-        book,
-        lambda e: F.round(
-            F.aggregate(
-                F.zip_with(
-                    xs, e, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ),
-    )
-    # first-min argmin in ONE pass; strictly-less keeps the FIRST min.
-    # A corrupt row (empty/short vector → NULL distances) leaves the -1
-    # init in place and surfaces as a NULL code — element_at(lut, 0)
-    # would otherwise ABORT the whole job under ANSI (the one-corrupt-
-    # row-kills-the-fleet class the degenerate smoke sweep catches)
-    zipped = F.zip_with(
-        d2s,
-        F.sequence(F.lit(0), F.lit(kk - 1)),
-        lambda s, i: F.struct(s.alias("s"), i.alias("i")),
-    )
-    best = F.aggregate(
-        zipped,
-        F.struct(F.lit(float("inf")).alias("s"), F.lit(-1).alias("i")),
-        lambda acc, x: F.when(x["s"] < acc["s"], x).otherwise(acc),
-    )
-    return F.when(best["i"] >= 0, best["i"]).cast("int")
-
-
-def codes_expr(codebooks: np.ndarray, col=None):
-    """Column expression for the m nearest-codebook-entry codes of
-    `col` (default the `embedding` column — pass any array<double>
-    expression, e.g. a residual, for IVF-PQ). The codebook tensor rides
-    into the plan as array literals (m·k·sub doubles — tiny); per
-    subspace the code is the rounded-L2 argmin of _sub_code_expr.
-    Usable in any map stage, e.g. fused with the coarse cell assignment
-    in ivfpq._assign_and_encode."""
-    m, k, sub = codebooks.shape
-    emb = F.col("embedding") if col is None else col
-    return F.array(
-        *[
-            _sub_code_expr(
-                F.slice(emb, j * sub + 1, sub),
-                [[float(v) for v in codebooks[j, c]] for c in range(k)],
-            )
-            for j in range(m)
-        ]
-    )
-
-
 def pq_encode(embeddings: DataFrame, codebooks: np.ndarray) -> DataFrame:
     """vec_id → m codes: ONE map stage over the scan, no shuffle. Gated
     to valid vectors of the codec's width — a corrupt/ragged row
@@ -232,8 +167,9 @@ def pq_encode(embeddings: DataFrame, codebooks: np.ndarray) -> DataFrame:
     have to order around.
 
     Since round 13 the scoring runs as an Arrow-native map stage
-    (arrowquant.encode_arrow): bit-identical decisions to codes_expr
-    (pinned by tests/test_arrowquant.py), without the m·k-literal tree
+    (arrowquant.encode_arrow): bit-identical decisions to the
+    expression-form codes_expr in tests/_quantizer_reference.py (pinned
+    by tests/test_arrowquant.py), without the m·k-literal tree
     whose py4j construction + Catalyst analysis + codegen dominated the
     cold cost of every encode (guide §4.2)."""
     from csv_crm_upload_spark.analytics.arrowquant import encode_arrow
@@ -507,7 +443,7 @@ def save_pq_index(
         # loud, BEFORE any epoch dir lands (review r9: the empty-tensor
         # degrade is for query entry points; an index build over a
         # corpus with zero valid vectors is a caller error, and letting
-        # it reach codes_expr produced a confusing Catalyst crash after
+        # it reach the encoder produced a confusing Catalyst crash after
         # partial writes)
         raise ValueError(
             "save_pq_index: no valid vectors to fit a codebook on "

@@ -22,7 +22,9 @@ file; the HTTP sink stays at-least-once exactly like the reference
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import time
+
+from pyspark.sql import DataFrame, SparkSession
 
 from csv_crm_upload_spark.operators.store import CustomerStore
 from csv_crm_upload_spark.plans.ingest import ingest_batch
@@ -82,21 +84,31 @@ def run_upload_cycle(
     (SURVEY §3.2 note) — same here: each cycle reads the current pending
     snapshot; the uploaded flag converges duplicates across cycles.
     """
-    import time as _time
-
-    kwargs = {"sleep": sleep or _time.sleep}
     pending = store.pending()
     if pending.isEmpty():
         return 0
-    results = upload_pending(pending, crm_url, concurrency=concurrency, max_tries=max_tries, **kwargs)
+    return _upload_and_mark(store, pending, crm_url, concurrency, max_tries, sleep)
+
+
+def _upload_and_mark(
+    store: CustomerStore,
+    pending: DataFrame,
+    crm_url: str,
+    concurrency: int,
+    max_tries: int,
+    sleep,
+) -> int:
+    """POST `pending` and flip the uploaded flag on the successes.
+    Returns rows marked."""
+    results = upload_pending(
+        pending, crm_url, concurrency=concurrency, max_tries=max_tries, sleep=sleep or time.sleep
+    ).persist()
     # Materialize the side-effecting job exactly once: a lazy re-evaluation
     # of `results` would re-POST every row. persist + count pins the
     # outcome before the success set feeds the flag-flip plan.
-    results = results.persist()
     results.count()
     try:
-        ok = successes(results)
-        return store.mark_uploaded(ok)
+        return store.mark_uploaded(successes(results))
     finally:
         results.unpersist()
 
@@ -123,13 +135,10 @@ def run_upload_cycle_incremental(
     out — concurrent appends in between are never skipped). A vacuumed
     `since_version` raises FileNotFoundError; callers should fall back to
     a full `run_upload_cycle` and resume from the current version."""
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from csv_crm_upload_spark.operators.store import PENDING_COLUMNS
 
-    kwargs = {"sleep": sleep or _time.sleep}
     v_now = store._current_version()
     if v_now <= since_version:
         return 0, since_version
@@ -141,14 +150,7 @@ def run_upload_cycle_incremental(
     )
     if pending.isEmpty():
         return 0, v_now
-    results = upload_pending(
-        pending, crm_url, concurrency=concurrency, max_tries=max_tries, **kwargs
-    ).persist()
-    results.count()
-    try:
-        return store.mark_uploaded(successes(results)), v_now
-    finally:
-        results.unpersist()
+    return _upload_and_mark(store, pending, crm_url, concurrency, max_tries, sleep), v_now
 
 
 def run_upload_service(
@@ -192,9 +194,7 @@ def run_upload_service(
     the registered persisted indexes (BM25/LSH-pairs/IVF/PQ/IVF-PQ) via
     their O(new docs) update paths, so the build-once artifacts stay
     fresh without a manual step — a quiet tick costs one listing."""
-    import time as _time
-
-    tick = tick_sleep or _time.sleep
+    tick = tick_sleep or time.sleep
     marked: list[int] = []
     cycle = 0
     cursor: int | None = None

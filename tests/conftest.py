@@ -16,8 +16,9 @@ from csv_crm_upload_spark.session import get_spark  # noqa: E402
 #: VERIFY_r12 recorded a TRUNCATED run), so the long integration /
 #: soak / model-loop suites are marked `deep` here and excluded by
 #: pytest.ini's addopts. The default suite keeps the full
-#: oracle+degenerate parity core and every fast unit/contract file
-#: (~1,000 tests, ≈15-25 min). Run everything with `-m "not sf01"`;
+#: oracle+degenerate parity core, every fast unit/contract file and
+#: the store + upload service contract (test_store_upload.py) —
+#: ≈15-25 min. Run everything with `-m "not sf01"`;
 #: the close-out ledger must still show the full suite green.
 #: Classification source: one full-suite `--durations=0` run
 #: (2026-08-18); every file here cost ≥ ~0.8 min, together ~48 of the
@@ -27,7 +28,6 @@ _DEEP_FILES = {
     "test_property_parity.py",   # 5.9 — seeded-fuzz oracle sweep
     "test_index_service.py",     # 5.6 — multi-index soak
     "test_training_ops.py",      # 3.0
-    "test_store_upload.py",      # 2.9 — HTTP retry/backoff cycles
     "test_ngramlm_model.py",     # 2.4
     "test_ivfpq.py",             # 2.1
     "test_index_compaction.py",  # 1.8

@@ -1,11 +1,11 @@
 """Parity pins for the Arrow-native quantizer scoring (arrowquant.py):
 the MapInArrow stages must be BIT-IDENTICAL to the JVM expression trees
-they replaced (ivf.cell_id_expr / pq.codes_expr / the fused residual
-tree), because the DuckDB oracles unroll those expressions. The
-expression builders stay in the tree precisely so this suite can compare
-the two implementations on every corpus shape that ever diverged an
-engine pair: the real testdata, adversarial rounding midpoints, exact
-ties, and NaN/Inf components."""
+they replaced (cell_id_expr / codes_expr / the fused residual tree /
+the k-means _assign, all in tests/_quantizer_reference.py), because the
+DuckDB oracles unroll those expressions. This suite compares the two
+implementations on every corpus shape that ever diverged an engine
+pair: the real testdata, adversarial rounding midpoints, exact ties,
+and NaN/Inf components."""
 
 from __future__ import annotations
 
@@ -21,14 +21,16 @@ from csv_crm_upload_spark.analytics import ivf as _ivf
 from csv_crm_upload_spark.analytics import pq as _pq
 from csv_crm_upload_spark.analytics.similarity import valid_vectors
 
+from tests._quantizer_reference import _assign, _dot_lit, cell_id_expr, codes_expr
+
 
 def _expr_codes(gated, books):
-    return gated.select("vec_id", _pq.codes_expr(books).alias("codes"))
+    return gated.select("vec_id", codes_expr(books).alias("codes"))
 
 
 def _expr_cells(gated, centroids):
     return gated.select(
-        "vec_id", _ivf.cell_id_expr(centroids).alias("cell_id")
+        "vec_id", cell_id_expr(centroids).alias("cell_id")
     )
 
 
@@ -113,14 +115,14 @@ def test_fused_parity_adversarial_residual(spark, adversarial):
     mean_table = F.array(
         *[F.array(*[F.lit(float(v)) for v in means[c]]) for c in range(len(means))]
     )
-    cell = _ivf.cell_id_expr(cents)
+    cell = cell_id_expr(cents)
     res = F.zip_with(
         F.col("embedding"),
         F.element_at(mean_table, cell + 1),
         lambda a, b: a.cast("double") - b,
     )
     expr = gated.select(
-        "vec_id", _pq.codes_expr(books, col=res).alias("codes"), cell.alias("cell_id")
+        "vec_id", codes_expr(books, col=res).alias("codes"), cell.alias("cell_id")
     )
     _cmp(aq.assign_encode_arrow(gated, cents, books, means=means), expr)
 
@@ -173,15 +175,12 @@ def _cent_from(df, k):
 
 
 def test_assign_parity_adversarial(spark, adversarial):
-    from csv_crm_upload_spark.analytics.clustering import _assign
-
     cent = _cent_from(adversarial, 6)
     gated = _gate(adversarial, 8)
     _cmp(aq.assign_arrow(gated, cent), _assign(gated, cent))
 
 
 def test_assign_parity_real_corpus(spark, sf_dir):
-    from csv_crm_upload_spark.analytics.clustering import _assign
     from csv_crm_upload_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -191,8 +190,6 @@ def test_assign_parity_real_corpus(spark, sf_dir):
 
 
 def _expr_margins(gated, cent):
-    from csv_crm_upload_spark.analytics.clustering import _dot_lit
-
     sims = F.array(*[F.round(_dot_lit(F.col("embedding"), v), 6) for _cid, v in cent])
     ids = F.array(*[F.lit(cid) for cid, _v in cent])
     best_pos = F.array_position(sims, F.array_max(sims)).cast("int") - 1

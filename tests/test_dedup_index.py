@@ -7,6 +7,8 @@ near-dup graph. Index-fed results must be IDENTICAL to the inline path.
 
 from __future__ import annotations
 
+import pytest
+
 from csv_crm_upload_spark.analytics import dedup as dd
 from csv_crm_upload_spark.sources.tables import load_table
 
@@ -202,26 +204,90 @@ def test_probe_during_pair_index_update_sees_old_or_new(spark, sf_dir, tmp_path)
     assert not bad, f"{len(bad)} probes saw a mixed snapshot (of {len(seen)})"
 
 
-def test_signature_memo_is_bounded_and_reused(spark, sf_dir):
-    """The round-5 warm-bench anomaly regression pin: repeated
-    d_minhash_lsh_pairs calls must NOT accumulate persisted signature
-    tables (the old leak), must REUSE the memoized table across
-    semantically-equal fresh plans, and clear_signature_memo must drop
-    everything."""
-    from csv_crm_upload_spark.analytics import dedup as dd
-    from csv_crm_upload_spark.sources.tables import load_table
+def _sig_entries():
+    from csv_crm_upload_spark.analytics import fitmemo as fm
 
-    dd.clear_signature_memo()
+    return [e for e in fm._FIT_MEMO if e["tag"] == "minhash_sig"]
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_signature_memo_is_bounded_and_reused(spark, sf_dir):
+    """Repeated d_minhash_lsh_pairs calls must NOT accumulate persisted
+    signature tables, must REUSE the memoized table across
+    semantically-equal fresh plans, and clear_fit_memo must drop and
+    unpersist everything."""
+    from csv_crm_upload_spark.analytics import fitmemo as fm
+
+    spark.catalog.clearCache()
+    fm.clear_fit_memo()
     docs = load_table(spark, sf_dir, "documents")
     base = {tuple(r) for r in dd.d_minhash_lsh_pairs(docs).collect()}
-    for _ in range(3):  # repeated + fresh-plan calls: memo stays bounded
+    for _ in range(3):  # fresh plans over the same files hit the memo
         again = load_table(spark, sf_dir, "documents")
+        before = fm.memo_stats()
         got = {tuple(r) for r in dd.d_minhash_lsh_pairs(again).collect()}
+        assert fm.memo_stats()["hit"] == before["hit"] + 1
         assert got == base
-    assert len(dd._SIG_MEMO) == 1  # one corpus -> one entry, no growth
-    # a different (documents, n) key adds an entry; cap holds at MAX
-    dd.d_minhash_lsh_pairs(docs, n=2).collect()
-    dd.d_minhash_lsh_pairs(docs.limit(50), n=2).collect()
-    assert len(dd._SIG_MEMO) <= dd._SIG_MEMO_MAX
-    dd.clear_signature_memo()
-    assert not dd._SIG_MEMO
+    assert len(_sig_entries()) == 1  # one corpus -> one entry, no growth
+    # new (documents, n) keys add entries; the corpus-scale cap holds
+    for m in (2, 4, 5, 6):
+        dd.d_minhash_lsh_pairs(docs.limit(50), n=m).collect()
+    assert len(_sig_entries()) <= fm._CORPUS_SCALE_MAX
+    assert not _cache_is_empty(spark)
+    fm.clear_fit_memo()
+    assert not fm._FIT_MEMO
+    assert _cache_is_empty(spark)  # every signature table unpersisted
+
+
+def test_replaced_corpus_files_miss_the_signature_memo(spark, sf_dir, tmp_path):
+    """Replacing the documents directory outside this session's writer
+    keeps the path (and so the plan) but changes the part files: a fresh
+    read must see the NEW corpus's pairs, exactly as with a cleared
+    memo. (A same-session mode("overwrite") would not show the hole:
+    Spark re-caches by path on its own writes.)"""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from csv_crm_upload_spark.analytics import fitmemo as fm
+
+    spark.catalog.clearCache()
+    fm.clear_fit_memo()
+    docs = load_table(spark, sf_dir, "documents")
+    path, staged = str(tmp_path / "documents"), str(tmp_path / "documents_new")
+    docs.write.parquet(path)
+    old = {tuple(r) for r in dd.d_minhash_lsh_pairs(spark.read.parquet(path)).collect()}
+
+    # the new corpus: every doc plus exact clones of the first 20
+    clones = docs.filter(F.col("doc_id") < 20).withColumn(
+        "doc_id", F.col("doc_id") + 1_000_000
+    )
+    docs.unionByName(clones).write.parquet(staged)
+    shutil.rmtree(path)
+    shutil.move(staged, path)
+
+    got = {tuple(r) for r in dd.d_minhash_lsh_pairs(spark.read.parquet(path)).collect()}
+    fm.clear_fit_memo()
+    spark.catalog.clearCache()
+    want = {tuple(r) for r in dd.d_minhash_lsh_pairs(spark.read.parquet(path)).collect()}
+    assert want != old  # the clones add pairs
+    assert got == want
+    fm.clear_fit_memo()
+
+
+@pytest.mark.parametrize("query", ["pr1_doc_pagerank", "tri1_triangle_counts"])
+def test_graph_queries_leave_no_cached_tables(spark, sf_dir, query):
+    """Every persist() a graph query makes has an owner: after the call
+    (and clearing the memo that owns the signature table) the session's
+    cache is empty again."""
+    from csv_crm_upload_spark.analytics import fitmemo as fm
+
+    spark.catalog.clearCache()
+    fm.clear_fit_memo()
+    docs = load_table(spark, sf_dir, "documents")
+    assert getattr(dd, query)(docs).count() > 0
+    fm.clear_fit_memo()
+    assert _cache_is_empty(spark)

@@ -1,8 +1,8 @@
 """Fit-memo discipline (analytics/fitmemo.py): repeat fits over the
-same corpus must HIT (the r10-verdict hit-rate pin, mirroring
-test_signature_memo_is_bounded_and_reused), different corpora / params
-must MISS, values must be identical to a fresh fit, and eviction /
-clear must unpersist DataFrame values."""
+same corpus must HIT, different corpora / params must MISS, values must
+be identical to a fresh fit, and eviction / clear must unpersist
+DataFrame values. The MinHash signature tables riding the same memo are
+pinned in test_dedup_index.py."""
 
 from __future__ import annotations
 
@@ -146,24 +146,26 @@ def test_rollup_memo_rejects_cross_corpus_alternation(spark, tmp_path):
 
 
 def test_corpus_scale_tags_have_their_own_small_fifo(spark):
-    """pq_codes/ivfpq_codes/ivf_cells memoize CORPUS-SCALE checkpointed
-    tables (advice r11): at the shared 12-deep cap they could pin a
-    dozen corpus materializations in executor storage. They ride a
-    3-deep FIFO of their own (one slot per alternating artifact family
-    — round 13 added ivf_cells); tiny-artifact tags keep the 12-deep
-    cap, and one class's eviction never touches the other's entries."""
-    for i in range(5):
+    """Corpus-scale tags (PQ / IVF-PQ codes, IVF cells, MinHash
+    signatures) memoize tables with one row per corpus vector or
+    document: at the shared 12-deep cap they could pin a dozen corpus
+    materializations in executor storage. They ride a FIFO of their own
+    with one slot per family; tiny-artifact tags keep the 12-deep cap,
+    and one class's eviction never touches the other's entries."""
+    cap = fm._CORPUS_SCALE_MAX
+    assert cap == len(fm._CORPUS_SCALE_TAGS)
+    for i in range(cap + 2):
         fm.memo_fit("pq_codes", spark.range(i + 1), (i,), lambda i=i: i)
     heavy = [e for e in fm._FIT_MEMO if e["tag"] == "pq_codes"]
-    assert [e["params"] for e in heavy] == [(2,), (3,), (4,)]  # oldest evicted
+    assert [e["params"] for e in heavy] == [(i,) for i in range(2, cap + 2)]  # oldest evicted
     # tiny entries are untouched by the corpus-scale eviction...
     for i in range(6):
         fm.memo_fit("tiny", spark.range(100 + i), (i,), lambda i=i: i)
-    assert len([e for e in fm._FIT_MEMO if e["tag"] == "pq_codes"]) == 3
+    assert len([e for e in fm._FIT_MEMO if e["tag"] == "pq_codes"]) == cap
     assert len([e for e in fm._FIT_MEMO if e["tag"] == "tiny"]) == 6
-    # ...and both heavy entries still HIT (the A/B alternation pattern)
+    # ...and a surviving heavy entry still HITs (the A/B alternation pattern)
     before = fm.memo_stats()["hit"]
-    assert fm.memo_fit("pq_codes", spark.range(4), ((3,)[0],), lambda: None) == 3
+    assert fm.memo_fit("pq_codes", spark.range(4), (3,), lambda: None) == 3
     assert fm.memo_stats()["hit"] == before + 1
 
 

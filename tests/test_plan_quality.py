@@ -74,14 +74,15 @@ QUERIES = entrymod.queries()
 def _reset_plan_state(spark) -> None:
     """Canonical cold plans: cached relations left over from other tests
     (session-scoped fixture) would re-shape the tree under audit — and
-    the dedup family's bounded signature memo must be dropped WITH the
-    cache, because a memoized-but-uncached signature table plans its
-    full inline derivation (more exchanges than either the fresh-memo
-    or the materialized state)."""
-    from csv_crm_upload_spark.analytics.dedup import clear_signature_memo
+    the fit memo (which also holds the dedup family's persisted MinHash
+    signature tables) must be dropped WITH the cache, because a
+    memoized-but-uncached signature table plans its full inline
+    derivation (more exchanges than either the fresh-memo or the
+    materialized state)."""
+    from csv_crm_upload_spark.analytics.fitmemo import clear_fit_memo
 
     spark.catalog.clearCache()
-    clear_signature_memo()
+    clear_fit_memo()
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

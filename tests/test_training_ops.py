@@ -13,6 +13,7 @@ from csv_crm_upload_spark.analytics import dedup as dd
 from csv_crm_upload_spark.analytics import multimodal as mm
 from csv_crm_upload_spark.analytics import similarity as sim
 from csv_crm_upload_spark.analytics import textstats as ts
+from csv_crm_upload_spark.analytics.fitmemo import clear_fit_memo
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -1479,7 +1480,7 @@ def test_mhcal1_calibration_semantics(spark):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    dd.clear_signature_memo()
+    clear_fit_memo()
     out = dd.mhcal1_minhash_calibration(docs).collect()
     assert out, "clone pair must surface as a candidate"
     by_bucket = {r["bucket"]: r for r in out}
@@ -1494,7 +1495,7 @@ def test_mhcal1_calibration_semantics(spark):
         [(0, "just one doc", "en", "s0", 12)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    dd.clear_signature_memo()
+    clear_fit_memo()
     assert dd.mhcal1_minhash_calibration(lonely).count() == 0
 
 

@@ -22,20 +22,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import HEADLINE
 from csv_crm_upload_spark.session import get_spark
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_unshipped",
-    "q5_region_revenue",
-    "top_customers",
-    "w1_top_orders_per_customer",
-    "e1_sessionize",
-    "dd_exact_dups",
-    "dd_minhash_lsh",
-    "sim_knn_bruteforce",
-    "t2_quality_score",
-]
 
 
 def main() -> None:
