@@ -302,56 +302,12 @@ _ROTATION_FRONT = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict ORDER matters: the driver's correctness harness emits rows for
-    the first 50 entries only (observed in rounds 1-3). Slots 1-12 are
-    pinned to the SURVEY §2 reference-contract core; slots 13-50 rotate so
-    that queries without a prior driver CORRECTNESS row get verified first.
-    Round 1: original surface. Round 2: same. Round 3: the 38 round-1/2
-    additions (pv1..hist1) — all green in CORRECTNESS_r03. Round 4: the
-    38 remaining never-driver-verified oracle-paired queries (t10..rrf1)
-    — all green in CORRECTNESS_r04. Round 5: the final six
-    never-driver-sampled oracle-paired queries closed the ledger and the
-    23 round-5 operators all went green in CORRECTNESS_r05 — every
-    oracle-paired query in the repo now has a green driver row. Round 6
-    (this file): the nineteen NEW round-6 oracle-paired queries
-    (`decon3`, `skw2`, `skw3`, `hn1`, `xsrc1`, `wfp1`, `wfp2`,
-    `drift2`, `bpe3`, `cur1`, `dd4`, `nov1`, `msk1`, `dsir1`,
-    `zipf1`, `bpe4`, `mix4`, `pca1`, `ppl2`) take slots 13-31 (the
-    rows-only `pca2` sits outside the window with its sketch/learned
-    peers);
-    the rest of the window re-samples round-5 keys (all green in r5).
-    mm2/mm3/pca2 are oracle-free rows-only whenever sampled (swept by
-    test_degenerate_rows_only_queries_execute; round 11 retired the
-    hll1/approx_* rows-only entries — the adrec1/pxrec1/hllrec1
-    snapshot audits run the same sketches oracle-paired;
-    round 9 moved sim_knn_ivf, pq1 and raw-mode ivfpq1 OUT of this set —
-    their fits now ride the distributed kmeans discipline and all three
-    are oracle-paired, with ivfrec1/pqrec1 recall audits composed on
-    top). Round 7: the literal
-    below keeps its historical order; the _ROTATION_FRONT reorder at
-    the end of this function moves this round's verification targets
-    into slots 13-35 — the ten signed-zero-patched queries (13-22), the
-    five rank-plan rewrites (23-27: distributed_grouped_rank /
-    distributed rank cuts / q15 max-semi-join, same oracles), and the
-    eight round-7 operators gq1/xsd1/drm1/prep3/mmr1/auc1/cart1/rho1
-    (28-35). Round 8: slots 13-29 are the seventeen round-8 operators
-    (lex1/heaps1/cov1/tfidf1/js1/ccnet1/cal1/bq1, lshrec1/sil1,
-    rd1/shard1/anon2/ks1/pctl2, bqrec1/mi1 — first driver contact);
-    slots 30-50 re-sample oracle-paired keys whose last driver row
-    predates round 6. Round 9: slots 13-20 are the newly oracle-paired
-    sim_knn_ivf/pq1/ivfpq1/ivfpq2 (first oracle contact), the
-    ivfrec1/pqrec1 recall audits, and the w1d1/cvm1 drift ops; slots
-    21-50 re-sample the keys
-    whose last driver row is oldest (rounds 1-5: TPC-H completion, the
-    round-3 retrieval family, the streaming-window trio, the skew
-    family, the window battery, event/session classics). Round 11: the
-    fourteen first-contact keys (five sketch/sketch-algebra audits +
-    the nine-operator batch) lead; then the r10-verdict cohort (the
-    r9-greened ANN batch + prune1/vq1/sil1/bqrec1); then the stalest
-    (round-2) 12 keys. Round 12 (this file): the full remaining
-    round-2/3-stale cohort — all 37 keys whose last green driver row
-    is r2/r3 (per the r11 verdict ask #1) plus the stalest r4 key —
-    see _ROTATION_FRONT's comment."""
+    """Every query, in driver-slot order. The order matters: the
+    driver's correctness harness checks only the first 50 entries.
+    Slots 1-12 are pinned to the SURVEY §2 reference-contract core;
+    `_ROTATION_FRONT` fills slots 13+ (edit it, not the literal below,
+    to choose what the driver verifies next); every other key keeps
+    its relative order after those."""
     q = {
         # reference-faithful core (SURVEY §2 ids) — pinned slots 1-12
         "s1_scan_customer": q_s1_scan_customer,
@@ -1319,13 +1275,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _t("orders")(s, sf), _t("customer")(s, sf)
         ),
     }
-    # Round-7 rotation (driver samples the FIRST 50 entries): slots 1-12
-    # stay the pinned reference core; _ROTATION_FRONT then re-verifies the
-    # ten signed-zero-patched queries post-hardening (VERDICT r6 ask 4),
-    # the five queries whose rank plans were rewritten this round onto
-    # distributed_grouped_rank / max-semi-join (fresh driver rows after
-    # the refactor), and the round-7 operator additions. Everything else
-    # keeps its relative order; all were driver-green in r1-r6.
     pinned = list(q)[:12]
     front = [k for k in _ROTATION_FRONT if k in q]
     chosen = set(pinned) | set(front)

@@ -1,5 +1,5 @@
 """Persisted per-batch sketch-audit log — the STREAMING TWIN of the
-sketch-error audits (r11 verdict ask #4): sketch_audit.py's batch
+sketch-error audits: sketch_audit.py's batch
 audits prove the sketches' error contracts once, over a whole corpus;
 production runs them PER INGEST BATCH and alerts on within_bound=false
 (SCALE.md "Audit cadence at scale"). This module turns that cadence
@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics.sketch_audit import ADREC1_BOUND
-
-AUDITLOG_SUBDIRS = ["rows"]
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 #: derived-key format stamp (manifest.check_key_format): one row per
 #: (batch_key, event_type) with the adrec1 distinct-users error
@@ -41,34 +41,31 @@ AUDITLOG_SUBDIRS = ["rows"]
 #: bound changes.
 KEY_FORMAT = "batch-distinct-audit-v1"
 
-#: explicit read schema (the substr lesson): an empty init epoch holds
-#: a schema-only part file that inference alone cannot type
 _ROW_COLS = (
     "batch_key string, event_type string, exact_users long, "
     "approx_users long, abs_err long, rel_err double, "
     "within_bound boolean"
 )
-_ROWS_SCHEMA = _ROW_COLS + ", epoch int"
+
+#: rows: epoch-RANGED audit FACTS — probes union the live range and
+#: compaction plain-folds (rows are logged once). The explicit read
+#: schema covers the empty init epoch, whose schema-only part file
+#: inference alone cannot type.
+LAYOUT = Layout(
+    ranged={"rows": Ranged(schema=_ROW_COLS + ", epoch int")},
+    key_format=KEY_FORMAT,
+)
 
 
 def save_audit_log(spark, path: str) -> None:
     """Initialize (or atomically reset) the audit log: an EMPTY rows
-    epoch plus the manifest. Rebuild over a live log advances the epoch
-    chain in one commit and preserves last_txn (the replay guard), like
-    every other artifact."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
-    new_epoch, prior = rebuild_epoch(path)
-    empty = spark.createDataFrame([], _ROW_COLS)
-    empty.write.mode("overwrite").parquet(f"{path}/rows/epoch={new_epoch}")
-    commit_manifest(
+    epoch plus the manifest (manifest.rebuild)."""
+    manifest.rebuild(
         path,
-        {
-            **prior,
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "key_format": KEY_FORMAT,
-        },
+        LAYOUT,
+        lambda e: manifest.write_epoch(
+            spark.createDataFrame([], _ROW_COLS), path, LAYOUT, "rows", e
+        ),
     )
 
 
@@ -94,9 +91,9 @@ def _audit_readout(both: DataFrame, batch_key: str) -> DataFrame:
     """The ONE encoding of the error readout (abs_err / rel_err /
     within_bound) over an (event_type, exact_users, approx_users)
     frame — shared by batch_audit_rows and the grouped one-pass builder
-    (advice r12: the two copies had to stay bit-identical by hand; a
-    drift in either would silently desynchronize the stored log from
-    the documented readout)."""
+    (two copies would have to stay bit-identical by hand; a drift in
+    either would silently desynchronize the stored log from the
+    documented readout)."""
     abs_err = F.abs(F.col("approx_users") - F.col("exact_users")).cast("long")
     rel_err = F.round(
         abs_err.cast("double")
@@ -121,63 +118,37 @@ def append_batch_audit(
     txn: tuple[str, int] | None = None,
     precomputed_rows: DataFrame | None = None,
 ) -> None:
-    """Append one batch's audit rows as a new epoch — exactly-once: the
-    txn guard no-ops a replayed streaming batch (the rows would be
-    recomputed identically — HLL register merges are order-free — but
-    the log must not carry the batch twice). An empty batch is a clean
-    no-op BEFORE any directory mutation (the rollup rule: orphan
-    self-heal must not run on a no-op, or it deletes an in-flight
-    concurrent writer's epoch dir).
+    """Append one batch's audit rows as a new epoch (manifest.append) —
+    exactly-once: the txn guard no-ops a replayed streaming batch (the
+    rows would be recomputed identically — HLL register merges are
+    order-free — but the log must not carry the batch twice). An empty
+    batch is a clean no-op.
 
-    `precomputed_rows` (r12): a caller that audits SEVERAL batches of
-    one corpus (the audlog1 simulation) may aggregate them in one
-    grouped pass and hand each batch's already-materialized slice here
-    — the epoch/manifest/txn protocol is unchanged, only the per-batch
-    corpus aggregation is skipped. Rows must be exactly
+    `precomputed_rows`: a caller that audits SEVERAL batches of one
+    corpus (the audlog1 simulation) may aggregate them in one grouped
+    pass and hand each batch's already-materialized slice here — the
+    epoch/manifest/txn protocol is unchanged, only the per-batch corpus
+    aggregation is skipped. Rows must be exactly
     `batch_audit_rows(events_batch, batch_key)`'s output (per-group
     HLL/exact aggregates are identical whether the batch is filtered
     then grouped or grouped by batch key — same groups, same rows)."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already logged
-    epoch = m["epoch"]
-    rows = (
-        precomputed_rows
+    manifest.append(
+        path,
+        LAYOUT,
+        txn,
+        lambda m: precomputed_rows
         if precomputed_rows is not None
-        else batch_audit_rows(events_batch, batch_key).localCheckpoint(eager=True)
+        else batch_audit_rows(events_batch, batch_key).localCheckpoint(eager=True),
+        lambda rows, m, e: manifest.write_epoch(rows, path, LAYOUT, "rows", e),
     )
-    if not rows.limit(1).count():
-        return
-    remove_orphan_epochs(path, AUDITLOG_SUBDIRS, epoch)
-    rows.write.mode("overwrite").parquet(f"{path}/rows/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**m, "epoch": epoch + 1}, txn))
 
 
 def read_audit_rows(spark, path: str) -> DataFrame:
     """Every logged audit row in the live [base_epoch, epoch] range —
     a plain union (rows are per-batch FACTS, not additive counts), with
     the manifest resolved once per probe (old-or-new, never partial)."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        spark.read.schema(_ROWS_SCHEMA)
-        .parquet(f"{path}/rows")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .drop("epoch")
-    )
+    m = manifest.checked_manifest(path, LAYOUT)
+    return manifest.live(spark, path, m, LAYOUT, "rows")
 
 
 def audit_alerts(spark, path: str) -> DataFrame:
@@ -237,14 +208,13 @@ def _ensure_query_auditlog(events: DataFrame, p: str) -> None:
     safe here because the path is process-scoped by construction (no
     concurrent probe can hold an older manifest)."""
     from csv_crm_upload_spark.analytics.fitmemo import memo_fit
-    from csv_crm_upload_spark.operators.manifest import gc_stale_epochs, read_manifest
 
     spark = events.sparkSession
 
     def _build():
         save_audit_log(spark, p)
-        # r12: ONE grouped corpus pass computes every batch's audit rows
-        # (was one full pass per batch — 3× the scan+agg for identical
+        # ONE grouped corpus pass computes every batch's audit rows (one
+        # full pass per batch would be 3× the scan+agg for identical
         # stored bytes): grouping by (batch bucket, event_type) feeds
         # each HLL/exact aggregate exactly the rows the per-batch filter
         # would, so the per-epoch slices are row-identical. The appends
@@ -270,17 +240,10 @@ def _ensure_query_auditlog(events: DataFrame, p: str) -> None:
             append_batch_audit(
                 _batch_of(events, i), p, f"b{i}", precomputed_rows=rows_i
             )
-        gc_stale_epochs(p, AUDITLOG_SUBDIRS)
-        return p, read_manifest(p)
+        manifest.gc_stale_epochs(p, LAYOUT)
+        return p, manifest.read_manifest(p)
 
-    def _still_mine(built) -> bool:
-        path, stamped = built
-        try:
-            return read_manifest(path) == stamped
-        except Exception:
-            return False
-
-    memo_fit("auditlog_build", events, (p,), _build, validate=_still_mine)
+    memo_fit("auditlog_build", events, (p,), _build, validate=manifest.still_committed)
 
 
 def audlog1_batch_audit_log(events: DataFrame, path: str | None = None) -> DataFrame:
@@ -298,11 +261,4 @@ def compact_audit_log(spark, path: str) -> bool:
     """OPTIMIZE: fold the live epoch chain into one epoch (plain union
     — exact because rows are facts logged exactly once) in one atomic
     manifest commit. Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        compact_epochs,
-        read_manifest,
-    )
-
-    check_key_format(read_manifest(path), path, KEY_FORMAT)
-    return compact_epochs(spark, path, {"rows": []})
+    return manifest.compact_epochs(spark, path, LAYOUT)

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics.fanout import fan_out
 from csv_crm_upload_spark.analytics.textstats import norm_tokens
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout
 
 
 def _spaced_symbols(word: F.Column) -> F.Column:
@@ -264,7 +266,7 @@ def bpe4_lang_fertility(
 # superseded snapshots are reclaimed by CorpusIndexService.vacuum().
 # ---------------------------------------------------------------------------
 
-BPE_SUBDIRS = ["vocab", "merges"]
+LAYOUT = Layout(snapshots={"vocab": (), "merges": ()})
 
 _MERGES_SCHEMA = "step int, left string, right string, n_occurrences bigint"
 
@@ -274,81 +276,57 @@ def _write_snapshot(spark, vocab: DataFrame, path: str, epoch: int, steps: int) 
     from it) as epoch dirs — no commit. Merges are learned from the
     vocab FILES just written, so the train loop re-reads a materialized
     table per step instead of recomputing the delta-merge lineage."""
-    vocab.write.mode("overwrite").parquet(f"{path}/vocab/epoch={epoch}")
+    manifest.write_epoch(vocab, path, LAYOUT, "vocab", epoch)
     landed = spark.read.parquet(f"{path}/vocab/epoch={epoch}")
-    merges = _learn_merges(landed, steps)
-    spark.createDataFrame(merges, _MERGES_SCHEMA).write.mode("overwrite").parquet(
-        f"{path}/merges/epoch={epoch}"
-    )
+    merges = spark.createDataFrame(_learn_merges(landed, steps), _MERGES_SCHEMA)
+    manifest.write_epoch(merges, path, LAYOUT, "merges", epoch)
 
 
 def save_bpe_model(documents: DataFrame, path: str, steps: int = 3) -> None:
     """Persist the BPE tokenizer: the (word, freq) vocabulary and the
     learned (step, left, right, n_occurrences) merge table, both
-    epoch-versioned under the shared manifest protocol (atomic
-    rebuild-over-live included — a save over an existing model commits
-    a fresh epoch above the old chain and preserves `last_txn`)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
+    epoch-versioned (atomic rebuild over a live model; manifest.rebuild
+    commits a fresh epoch above the old chain and keeps `last_txn`)."""
     spark = documents.sparkSession
-    new_epoch, prior = rebuild_epoch(path)
-    _write_snapshot(spark, _word_freqs(documents), path, new_epoch, steps)
-    commit_manifest(
+    manifest.rebuild(
         path,
-        {**prior, "epoch": new_epoch, "base_epoch": new_epoch, "steps": steps},
+        LAYOUT,
+        lambda e: _write_snapshot(spark, _word_freqs(documents), path, e, steps),
+        steps=steps,
     )
 
 
 def update_bpe_model(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
-    """Fold a corpus APPEND into the tokenizer: tokenize ONLY the new
-    docs, sum their word counts into the next fully-merged vocab
-    snapshot (a vocab-sized pass), relearn the merges from the merged
-    vocab, and commit atomically. `txn` is the streaming replay guard
-    (batch id commits WITH the epoch — manifest.txn_already_applied).
+    """Fold a corpus APPEND into the tokenizer (manifest.append):
+    tokenize ONLY the new docs, sum their word counts into the next
+    fully-merged vocab snapshot (a vocab-sized pass), relearn the merges
+    from the merged vocab, and commit atomically. A delta with no text
+    is a no-op; `txn` is the streaming replay guard.
 
     Precondition (caller's dedup responsibility): new doc_ids are not
     already trained on — double-folding a shard double-counts it.
     """
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
     spark = new_documents.sparkSession
-    m = read_manifest(path)
-    if txn_already_applied(m, txn):
-        return
-    epoch, steps = m["epoch"], m["steps"]
-    remove_orphan_epochs(path, BPE_SUBDIRS, epoch)
 
-    delta = _word_freqs(new_documents)
-    if not delta.limit(1).count():
-        return  # nothing with text — clean no-op before any write
-    nxt = epoch + 1
-    merged = (
-        spark.read.parquet(f"{path}/vocab/epoch={epoch}")
-        .unionByName(delta)
-        .groupBy("word")
-        .agg(F.sum("freq").cast("bigint").alias("freq"))
-    )
-    _write_snapshot(spark, merged, path, nxt, steps)
-    commit_manifest(
-        path, with_txn({**m, "epoch": nxt, "base_epoch": nxt, "steps": steps}, txn)
-    )
+    def write(delta: DataFrame, m: dict, nxt: int) -> None:
+        merged = (
+            spark.read.parquet(f"{path}/vocab/epoch={m['epoch']}")
+            .unionByName(delta)
+            .groupBy("word")
+            .agg(F.sum("freq").cast("bigint").alias("freq"))
+        )
+        _write_snapshot(spark, merged, path, nxt, m["steps"])
+
+    manifest.append(path, LAYOUT, txn, lambda m: _word_freqs(new_documents), write)
 
 
 def load_bpe_rules(spark, path: str) -> list[tuple[str, str]]:
     """The model's ordered merge rules — the bounded collect every
     apply path rides (`steps` rows; merges enter the tokenize plan as
     literal replaces, the broadcast-centroid pattern)."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    epoch = read_manifest(path)["epoch"]
+    epoch = manifest.read_manifest(path)["epoch"]
     return [
         (r["left"], r["right"])
         for r in spark.read.parquet(f"{path}/merges/epoch={epoch}")

@@ -24,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write
 from csv_crm_upload_spark.analytics.fitmemo import memo_fit
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 MINHASH_K = 16  # signature length
 LSH_BANDS = 4  # 16 hashes → 4 bands × 4 rows
@@ -541,13 +542,25 @@ def d_simhash(documents: DataFrame) -> DataFrame:
 
 
 #: derived-key format stamp for the persisted pair index
-#: (manifest.check_key_format — the substr gram_format lesson
-#: generalized, r9): signatures/bands derive from md5-60 minhash over
-#: ' '-joined word 3-shingles of _norm_text. A tokenization/shingle/
-#: hash change makes stored signatures and band buckets incompatible
-#: with an append's fresh ones — bump this so the mismatch fails
-#: loudly instead of silently pairing nothing.
+#: (manifest.check_key_format): signatures/bands derive from md5-60
+#: minhash over ' '-joined word 3-shingles of _norm_text. A
+#: tokenization/shingle/hash change makes stored signatures and band
+#: buckets incompatible with an append's fresh ones — bump this so the
+#: mismatch fails loudly instead of silently pairing nothing.
 DEDUP_KEY_FORMAT = "normtext-spaceshingle-md560-minhash-v1"
+
+#: pairs / signatures / bands: epoch-RANGED per-document facts (each
+#: append adds the new docs' rows); bands are partitioned BY band so an
+#: incremental probe joins band-partition to band-partition
+DEDUP_LAYOUT = Layout(
+    ranged={
+        "pairs": Ranged(),
+        "signatures": Ranged(),
+        "bands": Ranged(partition=("band",)),
+    },
+    key_format=DEDUP_KEY_FORMAT,
+    missing_ok=True,
+)
 
 
 def save_dedup_index(
@@ -568,12 +581,12 @@ def save_dedup_index(
     instead of once per query is the difference between one corpus pass
     and four.
 
-    Layout is EPOCH-VERSIONED with the shared manifest commit protocol
-    (operators/manifest.py): per-epoch `pairs`, plus the SIGNATURES and
-    BAND BUCKETS that make `update_dedup_index` an O(new docs) append —
-    a corpus shard folds in without re-hashing the indexed corpus. The
-    manifest records the build parameters so a consumer can detect a
-    mismatched probe.
+    Layout is EPOCH-VERSIONED (DEDUP_LAYOUT, atomic rebuild over a live
+    index via manifest.rebuild): per-epoch `pairs`, plus the SIGNATURES
+    and BAND BUCKETS that make `update_dedup_index` an O(new docs)
+    append — a corpus shard folds in without re-hashing the indexed
+    corpus. The manifest records the build parameters so a consumer can
+    detect a mismatched probe.
 
     Unlike the inline oracle query, the PRODUCTION build caps hot
     buckets by default (`max_bucket=INDEX_MAX_BUCKET`): a (band, bucket)
@@ -583,49 +596,40 @@ def save_dedup_index(
     pair via their other bands; giant exact-duplicate groups belong to
     exact-dedup collapse anyway) is recorded in the manifest as
     `max_bucket` so consumers know the artifact's contract."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
 
-    # Rebuild over a LIVE index is atomic (same pattern as the vector
-    # indexes): new epoch + base_epoch advance in one commit; last_txn
-    # from the prior manifest is preserved (streaming replay guard)
-    new_epoch, prior = rebuild_epoch(path)
-    sig = d_minhash_signatures(documents, n).persist()
-    try:
-        bands = _band_buckets(sig)
-        capped = _filter_hot_buckets(bands, max_bucket)
-        cand = (
-            capped.alias("x")
-            .join(capped.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        _verify_pairs(cand, sig, threshold).write.mode("overwrite").parquet(
-            f"{path}/pairs/epoch={new_epoch}"
-        )
-        sig.write.mode("overwrite").parquet(f"{path}/signatures/epoch={new_epoch}")
-        # bands are partitioned BY band so an incremental probe joins
-        # band-partition to band-partition (UNCAPPED: the stored band
-        # table is the full truth; the cap is a candidate-time filter)
-        cluster_for_write(bands, "band").write.mode("overwrite").partitionBy(
-            "band"
-        ).parquet(f"{path}/bands/epoch={new_epoch}")
-        commit_manifest(
-            path,
-            {
-                **prior,
-                "epoch": new_epoch,
-                "base_epoch": new_epoch,
-                "shingle_n": n,
-                "threshold": float(threshold),
-                "minhash_k": MINHASH_K,
-                "lsh_bands": LSH_BANDS,
-                "max_bucket": max_bucket,
-                "key_format": DEDUP_KEY_FORMAT,
-            },
-        )
-    finally:
-        sig.unpersist()
+    def write(e: int) -> None:
+        sig = d_minhash_signatures(documents, n).persist()
+        try:
+            bands = _band_buckets(sig)
+            capped = _filter_hot_buckets(bands, max_bucket)
+            cand = (
+                capped.alias("x")
+                .join(capped.alias("y"), ["band", "bucket"])
+                .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+                .select(
+                    F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
+                )
+                .distinct()
+            )
+            pairs = _verify_pairs(cand, sig, threshold)
+            manifest.write_epoch(pairs, path, DEDUP_LAYOUT, "pairs", e)
+            manifest.write_epoch(sig, path, DEDUP_LAYOUT, "signatures", e)
+            # UNCAPPED: the stored band table is the full truth; the cap
+            # is a candidate-time filter
+            manifest.write_epoch(bands, path, DEDUP_LAYOUT, "bands", e)
+        finally:
+            sig.unpersist()
+
+    manifest.rebuild(
+        path,
+        DEDUP_LAYOUT,
+        write,
+        shingle_n=n,
+        threshold=float(threshold),
+        minhash_k=MINHASH_K,
+        lsh_bands=LSH_BANDS,
+        max_bucket=max_bucket,
+    )
 
 
 def load_dedup_index(spark, path: str) -> DataFrame:
@@ -633,34 +637,25 @@ def load_dedup_index(spark, path: str) -> DataFrame:
     the union of the committed epochs in [base_epoch, epoch]
     (manifest-resolved, so a racing update OR compaction is invisible:
     old-or-new, never a partial epoch)."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, DEDUP_KEY_FORMAT, missing_ok=True)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        spark.read.parquet(f"{path}/pairs")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .drop("epoch")
-    )
+    m = manifest.checked_manifest(path, DEDUP_LAYOUT)
+    return manifest.live(spark, path, m, DEDUP_LAYOUT, "pairs")
 
 
 def update_dedup_index(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
-    """Incremental maintenance for a corpus APPEND: hash and band ONLY
-    the new documents, find every candidate pair with ≥1 new endpoint by
-    joining the new band buckets against ALL band buckets (old epochs
-    included — old↔old pairs are already stored), verify against the
-    stored signatures, and commit pairs/signatures/bands as a new epoch
-    via the shared manifest protocol.
+    """Incremental maintenance for a corpus APPEND (manifest.append):
+    hash and band ONLY the new documents, find every candidate pair with
+    ≥1 new endpoint by joining the new band buckets against ALL band
+    buckets (old epochs included — old↔old pairs are already stored),
+    verify against the stored signatures, and commit
+    pairs/signatures/bands as a new epoch.
 
     Cost: O(new docs) shingle+minhash + one (band, bucket) join of the
     NEW bands against the index — never a re-hash of the indexed corpus.
     Because signatures are pure per-document functions, the incremental
     pair set is EXACTLY what a full rebuild would produce (asserted in
-    tests). Same atomicity story as the text index: a crash self-heals,
-    a racing reader sees old-or-new.
+    tests). A crash self-heals, a racing reader sees old-or-new.
 
     The manifest's `max_bucket` cap applies here too, measured over the
     COMBINED (old + new) bucket membership, so appends can't grow a
@@ -673,94 +668,60 @@ def update_dedup_index(
 
     Precondition (as for any index append): new doc_ids are not already
     indexed."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
     spark = new_documents.sparkSession
-    m = read_manifest(path)
-    check_key_format(m, path, DEDUP_KEY_FORMAT, missing_ok=True)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already folded
-    epoch, n, threshold = m["epoch"], m["shingle_n"], m["threshold"]
-    max_bucket = m.get("max_bucket")
-    remove_orphan_epochs(path, ["pairs", "signatures", "bands"], epoch)
 
-    new_sig = d_minhash_signatures(new_documents, n).persist()
-    try:
-        if not new_sig.limit(1).count():
-            return  # nothing with content — clean no-op before any write
-        nxt = epoch + 1
-        base = m.get("base_epoch", 0)
+    def write(new_sig: DataFrame, m: dict, nxt: int) -> None:
         new_bands = _band_buckets(new_sig).persist()
-        old_bands = (
-            spark.read.parquet(f"{path}/bands")
-            .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-            .drop("epoch")
-        )
-        # restrict to buckets the SHARD actually touches before counting
-        # for the cap: buckets absent from new_bands produce no
-        # candidates anyway, and this keeps the append's extra pass
-        # proportional to the touched buckets, not the whole band table
-        new_keys = new_bands.select("band", "bucket").distinct()
-        relevant = old_bands.unionByName(new_bands).join(
-            new_keys, ["band", "bucket"], "left_semi"
-        )
-        all_bands = _filter_hot_buckets(relevant, max_bucket)
-        # every candidate with ≥1 new endpoint, canonicalized (a < b)
-        raw = (
-            new_bands.alias("x")
-            .join(all_bands.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.doc_id") != F.col("y.doc_id"))
-            .select(
-                F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("doc_a"),
-                F.greatest(F.col("x.doc_id"), F.col("y.doc_id")).alias("doc_b"),
+        try:
+            old_bands = manifest.live(spark, path, m, DEDUP_LAYOUT, "bands")
+            # restrict to buckets the SHARD actually touches before
+            # counting for the cap: buckets absent from new_bands produce
+            # no candidates anyway, and this keeps the append's extra pass
+            # proportional to the touched buckets, not the whole band table
+            new_keys = new_bands.select("band", "bucket").distinct()
+            relevant = old_bands.unionByName(new_bands).join(
+                new_keys, ["band", "bucket"], "left_semi"
             )
-            .distinct()
-        )
-        old_sig = (
-            spark.read.parquet(f"{path}/signatures")
-            .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-            .drop("epoch")
-        )
-        all_sig = old_sig.unionByName(new_sig)
-        _verify_pairs(raw, all_sig, threshold).write.mode("overwrite").parquet(
-            f"{path}/pairs/epoch={nxt}"
-        )
-        new_sig.write.mode("overwrite").parquet(f"{path}/signatures/epoch={nxt}")
-        cluster_for_write(new_bands, "band").write.mode("overwrite").partitionBy(
-            "band"
-        ).parquet(f"{path}/bands/epoch={nxt}")
-        commit_manifest(path, with_txn({**m, "epoch": nxt}, txn))
-        new_bands.unpersist()
-    finally:
-        new_sig.unpersist()
+            all_bands = _filter_hot_buckets(relevant, m.get("max_bucket"))
+            # every candidate with ≥1 new endpoint, canonicalized (a < b)
+            raw = (
+                new_bands.alias("x")
+                .join(all_bands.alias("y"), ["band", "bucket"])
+                .filter(F.col("x.doc_id") != F.col("y.doc_id"))
+                .select(
+                    F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("doc_a"),
+                    F.greatest(F.col("x.doc_id"), F.col("y.doc_id")).alias("doc_b"),
+                )
+                .distinct()
+            )
+            old_sig = manifest.live(spark, path, m, DEDUP_LAYOUT, "signatures")
+            pairs = _verify_pairs(raw, old_sig.unionByName(new_sig), m["threshold"])
+            manifest.write_epoch(pairs, path, DEDUP_LAYOUT, "pairs", nxt)
+            manifest.write_epoch(new_sig, path, DEDUP_LAYOUT, "signatures", nxt)
+            manifest.write_epoch(new_bands, path, DEDUP_LAYOUT, "bands", nxt)
+        finally:
+            new_bands.unpersist()
+
+    # materialized once: the empty probe would otherwise run the shard's
+    # shingle/md5 shuffle, and the write would run it again
+    manifest.append(
+        path,
+        DEDUP_LAYOUT,
+        txn,
+        lambda m: d_minhash_signatures(new_documents, m["shingle_n"]).localCheckpoint(
+            eager=True
+        ),
+        write,
+    )
 
 
 def compact_dedup_index(spark, path: str) -> bool:
     """OPTIMIZE for the pair index: fold every epoch in [base_epoch,
     epoch] of pairs, signatures, AND bands into one new epoch, advancing
-    base_epoch in the same single-manifest commit the appends use —
-    atomic; racing readers see the old chain or the compacted one.
-    Restores the one-dir read shape appends gradually erode. Returns
-    False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        compact_epochs,
-        read_manifest,
-    )
-
-    check_key_format(read_manifest(path), path, DEDUP_KEY_FORMAT, missing_ok=True)
-    return compact_epochs(
-        spark,
-        path,
-        union_dirs={"pairs": [], "signatures": [], "bands": ["band"]},
-    )
+    base_epoch in one manifest commit — atomic; racing readers see the
+    old chain or the compacted one. Restores the one-dir read shape
+    appends gradually erode. Returns False when already compact."""
+    return manifest.compact_epochs(spark, path, DEDUP_LAYOUT)
 
 
 def pr1_doc_pagerank(

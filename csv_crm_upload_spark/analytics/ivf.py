@@ -29,7 +29,16 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
+
+#: cells: epoch-RANGED (vec_id, cell_id) assignments, partitioned BY
+#: cell so a probe reads only its cells' files; centroids: the coarse
+#: quantizer, PINNED by centroid_epoch (it stays fixed on append)
+LAYOUT = Layout(
+    ranged={"cells": Ranged(partition=("cell_id",))},
+    pinned={"centroids": "centroid_epoch"},
+)
 
 
 def fit_centroids(
@@ -133,47 +142,30 @@ def save_index(
     same arithmetic, unlike the md5-derived integer conventions the
     oracle-visible queries use for cross-engine bit-identity.
 
-    Cell files AND centroids are EPOCH-VERSIONED (cells/epoch=K/
-    cell_id=*, centroids/epoch=K) with the shared manifest commit
-    protocol (operators/manifest.py), so update_index can append a
-    corpus shard atomically — and a REBUILD over a live index is atomic
-    too: new centroids+cells land under the next epoch and the
-    manifest's `base_epoch`/`centroid_epoch` advance together in one
-    commit, so a racing probe pairs old centroids with old cells or new
-    with new, never a mix (stale pre-rebuild epochs stay on disk for
-    readers holding the old manifest; harmless garbage)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
+    Cell files AND centroids are EPOCH-VERSIONED (LAYOUT), so
+    update_index can append a corpus shard atomically — and a REBUILD
+    over a live index is atomic too (manifest.rebuild): new
+    centroids+cells land under the next epoch and the manifest's
+    `base_epoch`/`centroid_epoch` advance together in one commit."""
     spark = embeddings.sparkSession
-    new_epoch, prior = rebuild_epoch(path)  # atomic rebuild over a live index
     centroids = fit_centroids(embeddings, n_cells=n_cells, **fit_kwargs)
     if centroids.size == 0:
-        # loud, BEFORE any epoch dir lands (review r9: the empty-matrix
-        # degrade is for query entry points; building an index over a
-        # corpus with zero valid vectors is a caller error)
+        # loud, BEFORE any epoch dir lands (the empty-matrix degrade is
+        # for query entry points; building an index over a corpus with
+        # zero valid vectors is a caller error)
         raise ValueError(
             "save_index: no valid vectors to fit centroids on "
             "(corpus is empty or all embeddings are NULL/empty/zero-norm)"
         )
     cent_rows = [(int(c), [float(v) for v in centroids[c]]) for c in range(len(centroids))]
-    spark.createDataFrame(cent_rows, "cell_id int, centroid array<double>").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids/epoch={new_epoch}")
-    cluster_for_write(
-        assign_cells(embeddings, centroids), "cell_id"
-    ).write.mode("overwrite").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/cells/epoch={new_epoch}")
-    commit_manifest(
-        path,
-        {
-            **prior,  # preserves last_txn across the rebuild
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "centroid_epoch": new_epoch,
-            "n_cells": int(len(centroids)),
-        },
-    )
+
+    def write(e: int) -> None:
+        cents = spark.createDataFrame(cent_rows, "cell_id int, centroid array<double>")
+        manifest.write_epoch(cents, path, LAYOUT, "centroids", e)
+        cells = assign_cells(embeddings, centroids)
+        manifest.write_epoch(cells, path, LAYOUT, "cells", e)
+
+    manifest.rebuild(path, LAYOUT, write, n_cells=int(len(centroids)))
     return centroids
 
 
@@ -184,47 +176,29 @@ def update_index(
     new vectors to the STORED centroids (the coarse quantizer stays
     fixed on append — standard IVF practice; retraining it is a rebuild)
     and commit the assignments as a new epoch. O(new vectors), map-only,
-    atomic via the shared manifest protocol — a racing probe sees the
-    old or the new cell set, never a partial epoch."""
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
+    atomic via manifest.append — a racing probe sees the old or the new
+    cell set, never a partial epoch."""
     spark = new_embeddings.sparkSession
-    m = read_manifest(path)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already folded
-    epoch = m["epoch"]
-    remove_orphan_epochs(path, ["cells"], epoch)
-    if not new_embeddings.limit(1).count():
-        return  # empty append is a clean no-op before any write
-    centroids = _load_centroids(spark, path, m.get("centroid_epoch"))
-    dim = centroids.shape[1]
-    # fail-fast probe (limit 1), not a full shard count: the guard must
-    # be loud, not an extra corpus-shard pass on every healthy append
-    if new_embeddings.filter(F.size("embedding") != dim).limit(1).count():
-        raise ValueError(
-            f"appended vectors have dim != the stored centroids' {dim}"
-        )
-    cluster_for_write(
-        assign_cells(new_embeddings, centroids), "cell_id"
-    ).write.mode("overwrite").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/cells/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**m, "epoch": epoch + 1}, txn))
+
+    def write(emb: DataFrame, m: dict, nxt: int) -> None:
+        centroids = _load_centroids(spark, path, m["centroid_epoch"])
+        dim = centroids.shape[1]
+        # fail-fast probe (limit 1), not a full shard count: the guard
+        # must be loud, not an extra corpus-shard pass on every append
+        if emb.filter(F.size("embedding") != dim).limit(1).count():
+            raise ValueError(
+                f"appended vectors have dim != the stored centroids' {dim}"
+            )
+        manifest.write_epoch(assign_cells(emb, centroids), path, LAYOUT, "cells", nxt)
+
+    manifest.append(path, LAYOUT, txn, lambda m: new_embeddings, write)
 
 
-def _load_centroids(spark, path: str, centroid_epoch: int | None = None) -> np.ndarray:
-    sub_path = (
-        f"{path}/centroids"
-        if centroid_epoch is None  # pre-versioning layout (flat dir)
-        else f"{path}/centroids/epoch={centroid_epoch}"
+def _load_centroids(spark, path: str, centroid_epoch: int) -> np.ndarray:
+    rows = sorted(
+        spark.read.parquet(f"{path}/centroids/epoch={centroid_epoch}").collect(),
+        key=lambda r: r["cell_id"],
     )
-    rows = sorted(spark.read.parquet(sub_path).collect(), key=lambda r: r["cell_id"])
     return np.array([r["centroid"] for r in rows], dtype=np.float64)
 
 
@@ -233,9 +207,7 @@ def compact_index(spark, path: str) -> bool:
     new epoch (still partitioned BY cell_id) and advance base_epoch in
     one manifest commit — atomic, quantizers untouched. Returns False
     when already compact."""
-    from csv_crm_upload_spark.operators.manifest import compact_epochs
-
-    return compact_epochs(spark, path, union_dirs={"cells": ["cell_id"]})
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def load_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
@@ -243,17 +215,9 @@ def load_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
     the union of the committed epochs in [base_epoch, epoch],
     manifest-resolved so a racing update OR rebuild is seen entirely or
     not at all."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    man = read_manifest(path)
-    epoch, base = man["epoch"], man.get("base_epoch", 0)
-    centroids = _load_centroids(spark, path, man.get("centroid_epoch"))
-    cells = (
-        spark.read.parquet(f"{path}/cells")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .drop("epoch")
-    )
-    return centroids, cells
+    m = manifest.read_manifest(path)
+    centroids = _load_centroids(spark, path, m["centroid_epoch"])
+    return centroids, manifest.live(spark, path, m, LAYOUT, "cells")
 
 
 def knn_ivf(

@@ -76,7 +76,15 @@ from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics import ivf as _ivf
 from csv_crm_upload_spark.analytics import pq as _pq
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write as _cfw
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
+
+#: the index layout of the module docstring: ranged cell-partitioned
+#: codes, two quantizers pinned by their manifest keys
+LAYOUT = Layout(
+    ranged={"codes": Ranged(partition=("cell_id",))},
+    pinned={"centroids": "centroid_epoch", "codebooks": "codebook_epoch"},
+)
 
 
 def _assign_and_encode(
@@ -384,14 +392,12 @@ def save_ivfpq_index(
     """Build the composed index once per corpus snapshot: coarse
     centroids + PQ codebooks (both distributed kmeans-discipline fits) and ONE
     corpus map pass producing (vec_id, codes) partitioned BY cell_id.
-    Atomic for both fresh builds and rebuilds over a live index (next
-    epoch + base/centroid/codebook epoch advance in one commit).
-    `residual=True` builds IVFADC-style (see module docstring); the
-    choice is recorded in the manifest and honored by append + probe."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
+    Atomic for both fresh builds and rebuilds over a live index
+    (manifest.rebuild: next epoch + base/centroid/codebook epoch advance
+    in one commit). `residual=True` builds IVFADC-style (see module
+    docstring); the choice is recorded in the manifest and honored by
+    append + probe."""
     spark = embeddings.sparkSession
-    new_epoch, prior = rebuild_epoch(path)  # atomic rebuild over a live index
     centroids = _ivf.fit_centroids(embeddings, n_cells=n_cells, **fit_kwargs)
     if centroids.size == 0:
         # loud, BEFORE any epoch dir lands (see ivf.save_index)
@@ -413,76 +419,52 @@ def save_ivfpq_index(
         )
         for c in range(len(centroids))
     ]
-    spark.createDataFrame(
-        cent_rows, "cell_id int, centroid array<double>, mean_vec array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids/epoch={new_epoch}")
     mm, kk, _sub = books.shape
-    book_rows = [
-        (int(j), int(c), [float(v) for v in books[j, c]])
-        for j in range(mm)
-        for c in range(kk)
-    ]
-    spark.createDataFrame(
-        book_rows, "subspace int, code int, entry array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks/epoch={new_epoch}")
-    _cfw(
-        _assign_and_encode(embeddings, centroids, books, means=means), "cell_id"
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(f"{path}/codes/epoch={new_epoch}")
-    commit_manifest(
+
+    def write(e: int) -> None:
+        cents = spark.createDataFrame(
+            cent_rows, "cell_id int, centroid array<double>, mean_vec array<double>"
+        )
+        manifest.write_epoch(cents, path, LAYOUT, "centroids", e)
+        manifest.write_epoch(
+            _pq._codebook_frame(spark, books), path, LAYOUT, "codebooks", e
+        )
+        codes = _assign_and_encode(embeddings, centroids, books, means=means)
+        manifest.write_epoch(codes, path, LAYOUT, "codes", e)
+
+    manifest.rebuild(
         path,
-        {
-            **prior,  # preserves last_txn across the rebuild
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "centroid_epoch": new_epoch,
-            "codebook_epoch": new_epoch,
-            "n_cells": int(len(centroids)),
-            "m": int(mm),
-            "k": int(kk),
-            "residual": bool(residual),
-        },
+        LAYOUT,
+        write,
+        n_cells=int(len(centroids)),
+        m=int(mm),
+        k=int(kk),
+        residual=bool(residual),
     )
 
 
 def update_ivfpq_index(
     new_embeddings: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
-    """O(new vectors) append: assign + encode ONLY the new vectors with
-    the STORED quantizers (both stay fixed on append — retraining either
-    is a rebuild) and commit as a new epoch. Wrong-width shards fail
-    loudly before any write."""
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
+    """O(new vectors) append (manifest.append): assign + encode ONLY the
+    new vectors with the STORED quantizers (both stay fixed on append —
+    retraining either is a rebuild) and commit as a new epoch.
+    Wrong-width shards fail loudly before any write."""
     spark = new_embeddings.sparkSession
-    man = read_manifest(path)
-    if txn_already_applied(man, txn):
-        return  # replayed streaming batch: already folded
-    epoch = man["epoch"]
-    remove_orphan_epochs(path, ["codes"], epoch)
-    if not new_embeddings.limit(1).count():
-        return  # empty append is a clean no-op before any write
-    centroids, means = _load_quantizer(spark, path, man)
-    books = _pq._load_codebooks(spark, path, man["codebook_epoch"])
-    dim = books.shape[0] * books.shape[2]
-    # fail-fast probe (limit 1), not a full shard count
-    if new_embeddings.filter(F.size("embedding") != dim).limit(1).count():
-        raise ValueError(
-            f"appended vectors have dim != the stored codec's {dim}"
-        )
-    _cfw(
-        _assign_and_encode(new_embeddings, centroids, books, means=means), "cell_id"
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(f"{path}/codes/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**man, "epoch": epoch + 1}, txn))
+
+    def write(emb: DataFrame, man: dict, nxt: int) -> None:
+        centroids, means = _load_quantizer(spark, path, man)
+        books = _pq._load_codebooks(spark, path, man["codebook_epoch"])
+        dim = books.shape[0] * books.shape[2]
+        # fail-fast probe (limit 1), not a full shard count
+        if emb.filter(F.size("embedding") != dim).limit(1).count():
+            raise ValueError(
+                f"appended vectors have dim != the stored codec's {dim}"
+            )
+        codes = _assign_and_encode(emb, centroids, books, means=means)
+        manifest.write_epoch(codes, path, LAYOUT, "codes", nxt)
+
+    manifest.append(path, LAYOUT, txn, lambda man: new_embeddings, write)
 
 
 def _load_quantizer(spark, path: str, man: dict) -> tuple[np.ndarray, np.ndarray | None]:
@@ -517,9 +499,7 @@ def compact_ivfpq_index(spark, path: str) -> bool:
     new epoch (still partitioned BY cell_id, so probes keep their
     pruning) and advance base_epoch in one manifest commit — atomic,
     both quantizers untouched. Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import compact_epochs
-
-    return compact_epochs(spark, path, union_dirs={"codes": ["cell_id"]})
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def ivfpq_search(
@@ -539,18 +519,13 @@ def ivfpq_search(
     the candidate rerank only."""
     if query_ids is None:
         query_ids = list(range(10))
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    man = read_manifest(path)
-    epoch, base = man["epoch"], man["base_epoch"]
+    man = manifest.read_manifest(path)
     centroids, means = _load_quantizer(spark, path, man)  # one read, both halves
     books = _pq._load_codebooks(spark, path, man["codebook_epoch"])
     qvecs, probe_df = _probe_plan(embeddings, centroids, query_ids, nprobe, means=means)
     probed_cells = sorted({r["cell_id"] for r in probe_df.collect()})  # ≤ q·nprobe
     cell_codes = (
-        spark.read.option("basePath", f"{path}/codes")
-        .parquet(f"{path}/codes")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
+        manifest.live(spark, path, man, LAYOUT, "codes")
         .filter(F.col("cell_id").isin(probed_cells))
         .select("vec_id", "codes", "cell_id")
     )

@@ -29,8 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write, fan_out
+from csv_crm_upload_spark.analytics.fanout import fan_out
 from csv_crm_upload_spark.analytics.textstats import norm_tokens
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout
 
 
 def _nonempty(documents: DataFrame) -> DataFrame:
@@ -152,131 +154,111 @@ def nb1_langid_confusion(documents: DataFrame) -> DataFrame:
 # manifest.gc_stale_epochs.
 # ---------------------------------------------------------------------------
 
-NB_SUBDIRS = ["counts", "class_stats", "model_stats"]
+LAYOUT = Layout(
+    snapshots={"counts": ("tok_bucket",), "class_stats": (), "model_stats": ()}
+)
 
 
-def _write_snapshot(base: DataFrame, path: str, epoch: int, n_buckets: int) -> None:
-    """Land one fully-merged model snapshot as epoch dirs (no commit).
-    base is consumed by four jobs (counts, class stats, vocab, docs) —
-    persisted here so the tokenize lineage runs once."""
-    base = base.persist()
-    try:
-        bucket = F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
-        clt = base.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c_lt"))
-        cluster_for_write(
-            clt.select("lang", "tok", "c_lt", bucket), "tok_bucket"
-        ).write.mode("overwrite").partitionBy(
-            "tok_bucket"
-        ).parquet(f"{path}/counts/epoch={epoch}")
+def _counts(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """((lang, tok, c_lt), (lang, n_l, docs_l)) of a token frame."""
+    return (
+        base.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c_lt")),
         base.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_l"), F.countDistinct("doc_id").alias("docs_l")
-        ).write.mode("overwrite").parquet(f"{path}/class_stats/epoch={epoch}")
-        spark = base.sparkSession
-        vocab_n = base.select("tok").distinct().count()
-        n_docs = base.select("doc_id").distinct().count()
-        spark.createDataFrame(
-            [(vocab_n, n_docs)], "vocab_n bigint, n_docs bigint"
-        ).write.mode("overwrite").parquet(f"{path}/model_stats/epoch={epoch}")
-    finally:
-        base.unpersist()
+        ),
+    )
+
+
+def _write_snapshot(
+    clt: DataFrame,
+    class_stats: DataFrame,
+    n_docs: int,
+    path: str,
+    epoch: int,
+    n_buckets: int,
+) -> None:
+    """Land one fully-merged model snapshot as epoch dirs (no commit):
+    (lang, tok) counts, per-class totals and the 1-row vocab/doc stats.
+    The vocab size is read back from the counts just written — one
+    column scan, not a re-run of the counts plan."""
+    spark = clt.sparkSession
+    bucket = F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
+    manifest.write_epoch(
+        clt.select("lang", "tok", "c_lt", bucket), path, LAYOUT, "counts", epoch
+    )
+    manifest.write_epoch(class_stats, path, LAYOUT, "class_stats", epoch)
+    vocab_n = (
+        spark.read.parquet(f"{path}/counts/epoch={epoch}")
+        .select("tok")
+        .distinct()
+        .count()
+    )
+    stats = spark.createDataFrame([(vocab_n, n_docs)], "vocab_n bigint, n_docs bigint")
+    manifest.write_epoch(stats, path, LAYOUT, "model_stats", epoch)
 
 
 def save_nb_model(documents: DataFrame, path: str, n_buckets: int = 64) -> None:
     """Persist the Laplace-smoothed NB model: (lang, tok) counts
     partitioned by a token hash bucket (probes prune to their tokens'
     buckets, the text-index convention), per-class totals, and the
-    1-row vocab/doc stats — all epoch-versioned under the shared
-    manifest protocol (atomic rebuild over a live model included)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
+    1-row vocab/doc stats — all epoch-versioned (atomic rebuild over a
+    live model; manifest.rebuild)."""
 
-    new_epoch, prior = rebuild_epoch(path)
-    _write_snapshot(_base_tokens(documents), path, new_epoch, n_buckets)
-    commit_manifest(
-        path,
-        {**prior, "epoch": new_epoch, "base_epoch": new_epoch, "n_buckets": n_buckets},
-    )
+    def write(e: int) -> None:
+        # the token frame feeds four jobs — persisted so the tokenize
+        # lineage runs once
+        base = _base_tokens(documents).persist()
+        try:
+            clt, class_stats = _counts(base)
+            n_docs = base.select("doc_id").distinct().count()
+            _write_snapshot(clt, class_stats, n_docs, path, e, n_buckets)
+        finally:
+            base.unpersist()
+
+    manifest.rebuild(path, LAYOUT, write, n_buckets=n_buckets)
 
 
 def update_nb_model(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
-    """Fold a corpus APPEND into the model: tokenize ONLY the new docs,
-    merge their counts into the next fully-merged snapshot (an
-    O(vocab x L) pass — never a re-scan of the trained corpus), and
-    commit atomically. `txn` is the streaming replay guard (the batch id
-    commits WITH the epoch — manifest.txn_already_applied; wired through
-    run_index_maintenance_stream's nb_model parameter).
+    """Fold a corpus APPEND into the model (manifest.append): tokenize
+    ONLY the new docs, merge their counts into the next fully-merged
+    snapshot (an O(vocab x L) pass — never a re-scan of the trained
+    corpus), and commit atomically. A delta with no text is a no-op;
+    `txn` is the streaming replay guard.
 
     Precondition (caller's dedup responsibility): new doc_ids are not
     already trained on — double-folding a shard would double its counts.
     """
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
     spark = new_documents.sparkSession
-    m = read_manifest(path)
-    if txn_already_applied(m, txn):
-        return
-    epoch, n_buckets = m["epoch"], m["n_buckets"]
-    remove_orphan_epochs(path, NB_SUBDIRS, epoch)
 
-    base = _base_tokens(new_documents).persist()
-    try:
-        if not base.limit(1).count():
-            return  # nothing with text — clean no-op before any write
-        nxt = epoch + 1
-        bucket = F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
-        delta_clt = base.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c_lt"))
-        merged_clt = (
-            spark.read.parquet(f"{path}/counts/epoch={epoch}")
-            .select("lang", "tok", "c_lt")
-            .unionByName(delta_clt)
-            .groupBy("lang", "tok")
-            .agg(F.sum("c_lt").alias("c_lt"))
-        )
-        merged_clt.select("lang", "tok", "c_lt", bucket).write.mode(
-            "overwrite"
-        ).partitionBy("tok_bucket").parquet(f"{path}/counts/epoch={nxt}")
+    def write(tokens: DataFrame, m: dict, nxt: int) -> None:
+        epoch = m["epoch"]
+        base = tokens.persist()
+        try:
+            delta_clt, delta_cs = _counts(base)
+            clt = (
+                spark.read.parquet(f"{path}/counts/epoch={epoch}")
+                .select("lang", "tok", "c_lt")
+                .unionByName(delta_clt)
+                .groupBy("lang", "tok")
+                .agg(F.sum("c_lt").alias("c_lt"))
+            )
+            class_stats = (
+                spark.read.parquet(f"{path}/class_stats/epoch={epoch}")
+                .unionByName(delta_cs)
+                .groupBy("lang")
+                .agg(F.sum("n_l").alias("n_l"), F.sum("docs_l").alias("docs_l"))
+            )
+            old_ms = spark.read.parquet(f"{path}/model_stats/epoch={epoch}").first()
+            n_docs = old_ms["n_docs"] + base.select("doc_id").distinct().count()
+            _write_snapshot(clt, class_stats, n_docs, path, nxt, m["n_buckets"])
+        finally:
+            base.unpersist()
 
-        delta_cs = base.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_l"), F.countDistinct("doc_id").alias("docs_l")
-        )
-        (
-            spark.read.parquet(f"{path}/class_stats/epoch={epoch}")
-            .unionByName(delta_cs)
-            .groupBy("lang")
-            .agg(F.sum("n_l").alias("n_l"), F.sum("docs_l").alias("docs_l"))
-        ).write.mode("overwrite").parquet(f"{path}/class_stats/epoch={nxt}")
-
-        # vocab from the files just written — NOT a re-run of the merge
-        # plan (re-reading epoch=nxt costs one column scan; recomputing
-        # merged_clt would redo the union+groupBy shuffle)
-        vocab_n = (
-            spark.read.parquet(f"{path}/counts/epoch={nxt}")
-            .select("tok")
-            .distinct()
-            .count()
-        )
-        old_ms = spark.read.parquet(f"{path}/model_stats/epoch={epoch}").first()
-        n_new_docs = base.select("doc_id").distinct().count()
-        spark.createDataFrame(
-            [(vocab_n, old_ms["n_docs"] + n_new_docs)],
-            "vocab_n bigint, n_docs bigint",
-        ).write.mode("overwrite").parquet(f"{path}/model_stats/epoch={nxt}")
-
-        commit_manifest(
-            path,
-            with_txn(
-                {**m, "epoch": nxt, "base_epoch": nxt, "n_buckets": n_buckets}, txn
-            ),
-        )
-    finally:
-        base.unpersist()
+    manifest.append(
+        path, LAYOUT, txn, lambda m: _base_tokens(new_documents), write
+    )
 
 
 def classify_with_nb_model(documents: DataFrame, path: str) -> DataFrame:
@@ -286,10 +268,8 @@ def classify_with_nb_model(documents: DataFrame, path: str) -> DataFrame:
     buckets the docs' tokens hash into (bounded bucket-id collect, the
     indexed-BM25 probe shape). Scoring is _best_class — the same pass
     nb1_langid_confusion runs inline."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
     spark = documents.sparkSession
-    m = read_manifest(path)
+    m = manifest.read_manifest(path)
     epoch, n_buckets = m["epoch"], m["n_buckets"]
 
     doc_toks = _nonempty(documents).select(

@@ -16,7 +16,8 @@ Layout (the substr-index conventions — epoch-RANGED ADDITIVE counts):
                                marginals (c_prev, N1+(prev,*)) and the
                                continuation counts (N1+(*,w)) Kneser-Ney
                                needs are RE-COMBINES of this one table
-  MANIFEST                     epoch / base_epoch / n_buckets (+ last_txn)
+  MANIFEST                     epoch / base_epoch / n_buckets /
+                               key_format (+ last_txn)
 
 Stored keys are 60-bit token/bigram HASHES, not text: 8 bytes per
 distinct type, the substr-index trade — a collision can only MERGE two
@@ -35,7 +36,7 @@ Maintenance contract (shared with every other artifact):
   * build  — save_ngramlm_model: atomic rebuild-over-live
   * append — update_ngramlm_model: O(new docs), additive fold
   * OPTIMIZE — compact_ngramlm_model (sum-merged, not just unioned)
-  * gc     — rides CorpusIndexService.vacuum via INDEX_LAYOUTS
+  * gc     — CorpusIndexService.vacuum, from LAYOUT
 
 Reference: csv-crm-upload has no LM surface; this extends the
 training-ops mandate (SURVEY.md §2 addendum) the way BM25/NB/BPE/PCA do.
@@ -46,34 +47,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write, fan_out
+from csv_crm_upload_spark.analytics.fanout import fan_out
 from csv_crm_upload_spark.analytics.textstats import _word_ngrams, norm_tokens
 from csv_crm_upload_spark.functions.hashing import md5_60
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 DEFAULT_N_BUCKETS = 16
-NGRAMLM_SUBDIRS = ["unigrams", "bigrams"]
 
-#: derived-key format stamp (manifest.check_key_format — the substr
-#: gram_format lesson generalized, r9): tok_h = md5-60 of norm_tokens
-#: tokens; bg_h = md5-60 of the \x01-joined bigram. Bump when the
-#: tokenization, the bigram join byte, or the hash changes.
+#: derived-key format stamp (manifest.check_key_format): tok_h = md5-60
+#: of norm_tokens tokens; bg_h = md5-60 of the \x01-joined bigram. Bump
+#: when the tokenization, the bigram join byte, or the hash changes.
 KEY_FORMAT = "normtok-md560-x01bigram-v1"
 
-#: explicit read schemas (data + partition columns): a corpus of
-#: NULL-text docs (or, for bigrams, all-single-token docs) writes a
-#: data-file-less partitioned dir that schema inference cannot read —
-#: the explicit schema makes it a readable empty model instead (the
-#: substr-index review lesson applied from day one)
-_UNIGRAMS_SCHEMA = "tok_h long, n long, tbucket int, epoch int"
-_BIGRAMS_SCHEMA = "bg_h long, prev_h long, w_h long, n long, bbucket int, epoch int"
-
-
-def _read_unigrams(spark, path: str):
-    return spark.read.schema(_UNIGRAMS_SCHEMA).parquet(f"{path}/unigrams")
-
-
-def _read_bigrams(spark, path: str):
-    return spark.read.schema(_BIGRAMS_SCHEMA).parquet(f"{path}/bigrams")
+#: both tables are epoch-RANGED additive counts — probes and compaction
+#: SUM-merge the live range. prev_h/w_h are functions of bg_h, carried
+#: by max (a no-op merge of identical values — never a cross-type mix
+#: absent a 60-bit collision). The explicit read schemas cover a corpus
+#: of NULL-text docs (or, for bigrams, all-single-token docs), which
+#: writes a data-file-less partitioned dir that schema inference cannot
+#: read.
+LAYOUT = Layout(
+    ranged={
+        "unigrams": Ranged(
+            partition=("tbucket",),
+            schema="tok_h long, n long, tbucket int, epoch int",
+            keys=("tok_h",),
+            sums=("n",),
+        ),
+        "bigrams": Ranged(
+            partition=("bbucket",),
+            schema="bg_h long, prev_h long, w_h long, n long, bbucket int, epoch int",
+            keys=("bg_h",),
+            sums=("n",),
+            carry=("prev_h", "w_h"),
+        ),
+    },
+    key_format=KEY_FORMAT,
+    missing_ok=True,
+)
 
 
 def _lm_counts(
@@ -110,29 +122,15 @@ def _lm_counts(
 def save_ngramlm_model(
     documents: DataFrame, path: str, n_buckets: int = DEFAULT_N_BUCKETS
 ) -> None:
-    """Count the corpus once. Rebuild over a LIVE model is atomic
-    (epoch + base_epoch advance in one manifest commit; prior last_txn
-    preserved — the streaming replay guard)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
+    """Count the corpus once (atomic rebuild over a live model;
+    manifest.rebuild)."""
 
-    new_epoch, prior = rebuild_epoch(path)
-    uni, bi = _lm_counts(documents, n_buckets)
-    cluster_for_write(uni, "tbucket").write.mode("overwrite").partitionBy(
-        "tbucket"
-    ).parquet(f"{path}/unigrams/epoch={new_epoch}")
-    cluster_for_write(bi, "bbucket").write.mode("overwrite").partitionBy(
-        "bbucket"
-    ).parquet(f"{path}/bigrams/epoch={new_epoch}")
-    commit_manifest(
-        path,
-        {
-            **prior,
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "n_buckets": n_buckets,
-            "key_format": KEY_FORMAT,
-        },
-    )
+    def write(e: int) -> None:
+        uni, bi = _lm_counts(documents, n_buckets)
+        manifest.write_epoch(uni, path, LAYOUT, "unigrams", e)
+        manifest.write_epoch(bi, path, LAYOUT, "bigrams", e)
+
+    manifest.rebuild(path, LAYOUT, write, n_buckets=n_buckets)
 
 
 def load_unigram_counts(spark, path: str) -> DataFrame:
@@ -140,76 +138,43 @@ def load_unigram_counts(spark, path: str) -> DataFrame:
     token (additive ⇒ exactly a rebuild's table; manifest-resolved, so a
     racing update or compaction is invisible — old-or-new, never
     partial)."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        _read_unigrams(spark, path)
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .groupBy("tok_h")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    m = manifest.checked_manifest(path, LAYOUT)
+    return manifest.live(spark, path, m, LAYOUT, "unigrams", merged=True)
 
 
 def load_bigram_counts(spark, path: str) -> DataFrame:
     """The corpus-wide (bg_h, prev_h, w_h, n) table, summed over the live
-    epoch range. prev_h/w_h are functions of bg_h (max is a no-op merge
-    of identical values — never a cross-type mix absent a 60-bit
-    collision)."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        _read_bigrams(spark, path)
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .groupBy("bg_h")
-        .agg(
-            F.max("prev_h").alias("prev_h"),
-            F.max("w_h").alias("w_h"),
-            F.sum("n").cast("long").alias("n"),
-        )
-    )
+    epoch range."""
+    m = manifest.checked_manifest(path, LAYOUT)
+    return manifest.live(spark, path, m, LAYOUT, "bigrams", merged=True)
 
 
 def update_ngramlm_model(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
     """Fold a corpus APPEND: count ONLY the new documents and commit the
-    deltas as a new epoch — additivity makes every summed table (and
-    every statistic derived from it) EXACTLY what a rebuild over the
-    full corpus would produce (test-pinned). Precondition (as for any
-    index append): new doc_ids are not already counted."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
+    deltas as a new epoch (manifest.append) — additivity makes every
+    summed table (and every statistic derived from it) EXACTLY what a
+    rebuild over the full corpus would produce (test-pinned). A delta
+    with no non-NULL text is a no-op. Precondition (as for any index
+    append): new doc_ids are not already counted."""
 
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already folded
-    epoch = m["epoch"]
-    remove_orphan_epochs(path, NGRAMLM_SUBDIRS, epoch)
-    uni, bi = _lm_counts(new_documents, m["n_buckets"])
-    uni = uni.localCheckpoint(eager=True)
-    bi = bi.localCheckpoint(eager=True)
-    if not uni.limit(1).count():
-        return  # no non-NULL text in the delta — clean no-op
-    cluster_for_write(uni, "tbucket").write.mode("overwrite").partitionBy(
-        "tbucket"
-    ).parquet(f"{path}/unigrams/epoch={epoch + 1}")
-    cluster_for_write(bi, "bbucket").write.mode("overwrite").partitionBy(
-        "bbucket"
-    ).parquet(f"{path}/bigrams/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**m, "epoch": epoch + 1}, txn))
+    def write(uni: DataFrame, m: dict, e: int) -> None:
+        manifest.write_epoch(uni, path, LAYOUT, "unigrams", e)
+        bi = _lm_counts(new_documents, m["n_buckets"])[1]
+        manifest.write_epoch(bi, path, LAYOUT, "bigrams", e)
+
+    # the unigram delta decides emptiness: a doc with no token has no
+    # bigram either
+    manifest.append(
+        path,
+        LAYOUT,
+        txn,
+        lambda m: _lm_counts(new_documents, m["n_buckets"])[0].localCheckpoint(
+            eager=True
+        ),
+        write,
+    )
 
 
 def compact_ngramlm_model(spark, path: str) -> bool:
@@ -217,47 +182,7 @@ def compact_ngramlm_model(spark, path: str) -> bool:
     (exact by additivity — a union-only compactor would double-store
     types seen in several epochs) in one atomic manifest commit.
     Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-    )
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    if epoch == base:
-        return False
-    remove_orphan_epochs(path, NGRAMLM_SUBDIRS, epoch)
-    live = lambda df: df.filter(
-        (F.col("epoch") >= base) & (F.col("epoch") <= epoch)
-    )
-    nxt = epoch + 1
-    (
-        live(_read_unigrams(spark, path))
-        .groupBy("tok_h")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .withColumn("tbucket", F.pmod(F.col("tok_h"), F.lit(m["n_buckets"])))
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(f"{path}/unigrams/epoch={nxt}")
-    )
-    (
-        live(_read_bigrams(spark, path))
-        .groupBy("bg_h")
-        .agg(
-            F.max("prev_h").alias("prev_h"),
-            F.max("w_h").alias("w_h"),
-            F.sum("n").cast("long").alias("n"),
-        )
-        .withColumn("bbucket", F.pmod(F.col("bg_h"), F.lit(m["n_buckets"])))
-        .write.mode("overwrite")
-        .partitionBy("bbucket")
-        .parquet(f"{path}/bigrams/epoch={nxt}")
-    )
-    commit_manifest(path, {**m, "epoch": nxt, "base_epoch": nxt})
-    return True
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 # ---------------------------------------------------------------------------
@@ -352,7 +277,7 @@ def ppl2_model_logloss(documents: DataFrame, path: str) -> DataFrame:
     coalesced to 0 (a vocab token never seen as a prefix still gets the
     Laplace floor 1/(0+V)) — because add-1 smoothing exists precisely to
     give unseen-but-in-vocab bigrams finite probability; excluding them
-    understated a foreign probe's loss (r8 advice). `n_oov` counts only
+    understated a foreign probe's loss. `n_oov` counts only
     bigrams the model truly cannot score: either token absent from the
     stored vocabulary (V doesn't cover it). On a self-probe every bigram
     is seen and both tokens are in-vocab, so this is value-identical to
@@ -421,7 +346,7 @@ def kn1_model_logloss(documents: DataFrame, path: str) -> DataFrame:
     discounted term floors at 0 via GREATEST, leaving
     λ(prev)·p_cont(w) — the backoff mass KN reserves for exactly these
     bigrams; excluding them discarded the smoothing and understated a
-    foreign probe's loss (r8 advice). `n_oov` counts only bigrams the
+    foreign probe's loss. `n_oov` counts only bigrams the
     model truly cannot score finitely: prev never a prefix (no backoff
     weight) or w never a continuation (p_cont = 0 ⇒ −log2 = ∞). On a
     self-probe every bigram is seen, which implies both joins hit, so

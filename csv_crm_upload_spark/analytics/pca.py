@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout
+
 
 def _v9(col: F.Column) -> F.Column:
     """A component read the ONE way every stage (and the oracle) reads
@@ -371,24 +374,23 @@ def pcarec1_recall_audit(
 # superseded snapshots are reclaimed by CorpusIndexService.vacuum().
 # ---------------------------------------------------------------------------
 
-PCA_SUBDIRS = ["pairsums", "dimsums"]
+LAYOUT = Layout(snapshots={"pairsums": (), "dimsums": ()})
 
 
 def _write_snapshot(pairs: DataFrame, dims: DataFrame, path: str, epoch: int) -> None:
-    pairs.write.mode("overwrite").parquet(f"{path}/pairsums/epoch={epoch}")
-    dims.write.mode("overwrite").parquet(f"{path}/dimsums/epoch={epoch}")
+    manifest.write_epoch(pairs, path, LAYOUT, "pairsums", epoch)
+    manifest.write_epoch(dims, path, LAYOUT, "dimsums", epoch)
 
 
 def save_pca_model(embeddings: DataFrame, path: str, r: int = 16) -> None:
     """Persist the PCA sufficient statistics (and the component count to
-    serve), epoch-versioned under the shared manifest protocol (atomic
-    rebuild-over-live preserving `last_txn` included). The vector
-    dimension is validated up front (≥ 2 valid vectors — a smaller
-    corpus has no covariance) and recorded in the manifest so appends
-    can refuse wrong-dimension shards instead of silently corrupting
-    the additive sums (the ivf/pq dimension-guard convention)."""
+    serve), epoch-versioned (atomic rebuild-over-live preserving
+    `last_txn`; manifest.rebuild). The vector dimension is validated up
+    front (≥ 2 valid vectors — a smaller corpus has no covariance) and
+    recorded in the manifest so appends can refuse wrong-dimension
+    shards instead of silently corrupting the additive sums (the ivf/pq
+    dimension-guard convention)."""
     from csv_crm_upload_spark.analytics.similarity import valid_vectors
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
 
     head = (
         valid_vectors(embeddings)
@@ -401,118 +403,95 @@ def save_pca_model(embeddings: DataFrame, path: str, r: int = 16) -> None:
             "save_pca_model needs at least 2 valid (non-NULL, non-empty) "
             "vectors — the covariance of fewer is undefined"
         )
-    new_epoch, prior = rebuild_epoch(path)
-    pairs, dims = _sufficient_stats(embeddings)
-    _write_snapshot(pairs, dims, path, new_epoch)
-    # a MIXED-dimension initial corpus passes the two-row probe; two
-    # cheap post-write invariants catch it before the commit makes the
-    # snapshot live (the update_pca_model merged-dim guard, applied to
-    # the initial build): the landed dim count must equal the probed d,
-    # and every (i, j) pair must have seen the SAME vector count — a
-    # shorter vector contributes only to its low pairs, so a mix skews
-    # the per-pair counts even when the probe happened to see the max d
     spark = embeddings.sparkSession
-    landed = spark.read.parquet(f"{path}/dimsums/epoch={new_epoch}").count()
-    nstats = (
-        spark.read.parquet(f"{path}/pairsums/epoch={new_epoch}")
-        .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
-        .first()
-    )
-    if landed != head[0]["d"] or nstats["lo"] != nstats["hi"]:
-        raise ValueError(
-            f"save_pca_model: snapshot has {landed} dims (probe saw "
-            f"{head[0]['d']}) with per-pair counts in "
-            f"[{nstats['lo']}, {nstats['hi']}] — mixed-dimension corpus "
-            "refused (uncommitted epoch dir is reclaimed by the next "
-            "rebuild)"
+
+    def write(e: int) -> None:
+        pairs, dims = _sufficient_stats(embeddings)
+        _write_snapshot(pairs, dims, path, e)
+        # a MIXED-dimension initial corpus passes the two-row probe; two
+        # cheap post-write invariants catch it before the commit makes
+        # the snapshot live (the update_pca_model merged-dim guard,
+        # applied to the initial build): the landed dim count must equal
+        # the probed d, and every (i, j) pair must have seen the SAME
+        # vector count — a shorter vector contributes only to its low
+        # pairs, so a mix skews the per-pair counts even when the probe
+        # happened to see the max d
+        landed = spark.read.parquet(f"{path}/dimsums/epoch={e}").count()
+        nstats = (
+            spark.read.parquet(f"{path}/pairsums/epoch={e}")
+            .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
+            .first()
         )
-    commit_manifest(
-        path,
-        {
-            **prior,
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "r": r,
-            "d": head[0]["d"],
-        },
-    )
+        if landed != head[0]["d"] or nstats["lo"] != nstats["hi"]:
+            raise ValueError(
+                f"save_pca_model: snapshot has {landed} dims (probe saw "
+                f"{head[0]['d']}) with per-pair counts in "
+                f"[{nstats['lo']}, {nstats['hi']}] — mixed-dimension corpus "
+                "refused (uncommitted epoch dir is reclaimed by the next "
+                "rebuild)"
+            )
+
+    manifest.rebuild(path, LAYOUT, write, r=r, d=head[0]["d"])
 
 
 def update_pca_model(
     new_embeddings: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
-    """Fold an embedding APPEND into the model: sufficient stats over
-    ONLY the new vectors, exact decimal addition into the next
-    fully-merged snapshot (a d²-bounded pass), atomic commit. `txn` is
-    the streaming replay guard (manifest.txn_already_applied).
+    """Fold an embedding APPEND into the model (manifest.append):
+    sufficient stats over ONLY the new vectors, exact decimal addition
+    into the next fully-merged snapshot (a d²-bounded pass), atomic
+    commit. A shard with no non-empty vector is a no-op; `txn` is the
+    streaming replay guard.
 
     Precondition (caller's dedup responsibility): new vec_ids are not
     already fitted — double-folding a shard double-counts it."""
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
     from csv_crm_upload_spark.analytics.similarity import valid_vectors
 
     spark = new_embeddings.sparkSession
-    m = read_manifest(path)
-    if txn_already_applied(m, txn):
-        return
-    epoch = m["epoch"]
-    remove_orphan_epochs(path, PCA_SUBDIRS, epoch)
 
-    # persisted: the emptiness/dimension probe plus the two merged
-    # writes would otherwise re-derive the delta's explode lineage
-    # three times (the update_nb_model persist discipline)
-    rows = valid_vectors(new_embeddings).persist()
-    try:
-        head = rows.select(F.size("embedding").alias("d")).limit(1).collect()
-        if not head:
-            return  # nothing with a non-empty vector — clean no-op
-        # models saved before the "d" key derive it from the stored sums
-        model_d = m.get("d") or spark.read.parquet(
-            f"{path}/dimsums/epoch={epoch}"
-        ).count()
-        if head[0]["d"] != model_d:
-            raise ValueError(
-                f"update_pca_model: shard dimension {head[0]['d']} != "
-                f"model dimension {model_d} — folding it would silently "
-                "corrupt the additive covariance sums"
+    def write(valid: DataFrame, m: dict, nxt: int) -> None:
+        epoch, model_d = m["epoch"], m["d"]
+        # persisted: the dimension probe plus the two merged writes would
+        # otherwise re-derive the delta's explode lineage each time
+        rows = valid.persist()
+        try:
+            head = rows.select(F.size("embedding").alias("d")).limit(1).collect()
+            if head[0]["d"] != model_d:
+                raise ValueError(
+                    f"update_pca_model: shard dimension {head[0]['d']} != "
+                    f"model dimension {model_d} — folding it would silently "
+                    "corrupt the additive covariance sums"
+                )
+            d_pairs, d_dims = _sufficient_stats(rows)
+            merged_pairs = (
+                spark.read.parquet(f"{path}/pairsums/epoch={epoch}")
+                .unionByName(d_pairs)
+                .groupBy("i", "j")
+                .agg(F.sum("sxy").alias("sxy"), F.sum("n").cast("long").alias("n"))
             )
-        d_pairs, d_dims = _sufficient_stats(rows)
-        nxt = epoch + 1
-        merged_pairs = (
-            spark.read.parquet(f"{path}/pairsums/epoch={epoch}")
-            .unionByName(d_pairs)
-            .groupBy("i", "j")
-            .agg(F.sum("sxy").alias("sxy"), F.sum("n").cast("long").alias("n"))
-        )
-        merged_dims = (
-            spark.read.parquet(f"{path}/dimsums/epoch={epoch}")
-            .unionByName(d_dims)
-            .groupBy("dim")
-            .agg(F.sum("s").alias("s"))
-        )
-        _write_snapshot(merged_pairs, merged_dims, path, nxt)
-        # a MIXED-dimension shard passes the first-row probe; the merged
-        # dim count is the cheap post-write invariant that catches it
-        # before the commit makes it live
-        landed = spark.read.parquet(f"{path}/dimsums/epoch={nxt}").count()
-        if landed != model_d:
-            raise ValueError(
-                f"update_pca_model: merged snapshot has {landed} dims, "
-                f"expected {model_d} — mixed-dimension shard refused "
-                "(uncommitted epoch dir is reclaimed by the next update)"
+            merged_dims = (
+                spark.read.parquet(f"{path}/dimsums/epoch={epoch}")
+                .unionByName(d_dims)
+                .groupBy("dim")
+                .agg(F.sum("s").alias("s"))
             )
-        commit_manifest(
-            path, with_txn({**m, "epoch": nxt, "base_epoch": nxt, "d": model_d}, txn)
-        )
-    finally:
-        rows.unpersist()
+            _write_snapshot(merged_pairs, merged_dims, path, nxt)
+            # a MIXED-dimension shard passes the first-row probe; the
+            # merged dim count is the cheap post-write invariant that
+            # catches it before the commit makes it live
+            landed = spark.read.parquet(f"{path}/dimsums/epoch={nxt}").count()
+            if landed != model_d:
+                raise ValueError(
+                    f"update_pca_model: merged snapshot has {landed} dims, "
+                    f"expected {model_d} — mixed-dimension shard refused "
+                    "(uncommitted epoch dir is reclaimed by the next update)"
+                )
+        finally:
+            rows.unpersist()
+
+    manifest.append(
+        path, LAYOUT, txn, lambda m: valid_vectors(new_embeddings), write
+    )
 
 
 def load_pca_loadings(
@@ -520,9 +499,7 @@ def load_pca_loadings(
 ) -> tuple[list[list[float]], list[float]]:
     """Loadings served from the persisted sums — the bounded d²-row
     collect + eigh, identical to fit_pca over the fitted corpus."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    m = read_manifest(path)
+    m = manifest.read_manifest(path)
     epoch = m["epoch"]
     pairs = spark.read.parquet(f"{path}/pairsums/epoch={epoch}")
     dims = spark.read.parquet(f"{path}/dimsums/epoch={epoch}")

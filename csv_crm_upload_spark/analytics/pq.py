@@ -41,6 +41,16 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
+
+#: codes: epoch-RANGED (vec_id, codes) rows; codebooks: the codec,
+#: PINNED by codebook_epoch (it stays fixed on append)
+LAYOUT = Layout(
+    ranged={"codes": Ranged()},
+    pinned={"codebooks": "codebook_epoch"},
+)
+
 
 def fit_pq_codebooks(
     embeddings: DataFrame, m: int = 8, k: int = 16, iters: int = 2
@@ -418,60 +428,39 @@ def save_pq_index(
     cost) run once per corpus snapshot; every probe afterwards reads
     only m-byte codes.
 
-    Code files AND codebooks are EPOCH-VERSIONED (codes/epoch=K,
-    codebooks/epoch=K) with the shared manifest commit protocol
-    (operators/manifest.py), so update_pq_index can append a corpus
-    shard atomically — and a REBUILD over a live index is atomic too:
-    the new codebooks+codes land under the next epoch and the manifest's
+    Code files AND codebooks are EPOCH-VERSIONED (LAYOUT), so
+    update_pq_index can append a corpus shard atomically — and a
+    REBUILD over a live index is atomic too (manifest.rebuild): the new
+    codebooks+codes land under the next epoch and the manifest's
     `base_epoch`/`codebook_epoch` advance together in one commit, so a
     racing reader pairs old codebooks with old codes or new with new,
-    never a mix (stale pre-rebuild epoch dirs stay on disk for readers
-    still holding the old manifest; they are garbage, not a hazard, and
-    the next rebuild's commit supersedes them the same way).
+    never a mix.
 
     Portability note (same caveat as ivf.save_index): the layout is
     self-describing — codebooks ride the index and probes rebuild their
     ADC tables from them — but code assignment is float argmax,
     consistent for any reader repeating the same arithmetic, unlike the
     md5 integer conventions of the oracle-visible queries."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
     spark = embeddings.sparkSession
-    new_epoch, prior = rebuild_epoch(path)  # atomic rebuild over a live index
     books = fit_pq_codebooks(embeddings, m=m, k=n_codes, **fit_kwargs)
     if books.shape[1] == 0:
-        # loud, BEFORE any epoch dir lands (review r9: the empty-tensor
-        # degrade is for query entry points; an index build over a
-        # corpus with zero valid vectors is a caller error, and letting
-        # it reach the encoder produced a confusing Catalyst crash after
-        # partial writes)
+        # loud, BEFORE any epoch dir lands (the empty-tensor degrade is
+        # for query entry points; an index build over a corpus with zero
+        # valid vectors is a caller error, and letting it reach the
+        # encoder produced a confusing Catalyst crash after partial
+        # writes)
         raise ValueError(
             "save_pq_index: no valid vectors to fit a codebook on "
             "(corpus is empty or all embeddings are NULL/empty/zero-norm)"
         )
     mm, kk, _sub = books.shape
-    book_rows = [
-        (int(j), int(c), [float(v) for v in books[j, c]])
-        for j in range(mm)
-        for c in range(kk)
-    ]
-    spark.createDataFrame(
-        book_rows, "subspace int, code int, entry array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks/epoch={new_epoch}")
-    pq_encode(embeddings, books).write.mode("overwrite").parquet(
-        f"{path}/codes/epoch={new_epoch}"
-    )
-    commit_manifest(
-        path,
-        {
-            **prior,  # preserves last_txn across the rebuild
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "codebook_epoch": new_epoch,
-            "m": int(mm),
-            "k": int(kk),
-        },
-    )
+
+    def write(e: int) -> None:
+        books_df = _codebook_frame(spark, books)
+        manifest.write_epoch(books_df, path, LAYOUT, "codebooks", e)
+        manifest.write_epoch(pq_encode(embeddings, books), path, LAYOUT, "codes", e)
+
+    manifest.rebuild(path, LAYOUT, write, m=int(mm), k=int(kk))
     return books
 
 
@@ -482,47 +471,40 @@ def update_pq_index(
     new vectors with the STORED codebooks (the codec stays fixed on
     append — retraining it is a rebuild, exactly like IVF's coarse
     quantizer) and commit their codes as a new epoch. O(new vectors),
-    map-only, atomic via the shared manifest protocol."""
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
-    )
-
+    map-only, atomic via manifest.append."""
     spark = new_embeddings.sparkSession
-    man = read_manifest(path)
-    if txn_already_applied(man, txn):
-        return  # replayed streaming batch: already folded
-    epoch = man["epoch"]
-    remove_orphan_epochs(path, ["codes"], epoch)
-    if not new_embeddings.limit(1).count():
-        return  # empty append is a clean no-op before any write
-    books = _load_codebooks(spark, path, man.get("codebook_epoch"))
-    dim = books.shape[0] * books.shape[2]
-    # pq_encode's zip_with would silently null-pad a mismatched array, so
-    # a wrong-width shard must fail loudly, mirroring fit's dim % m check
-    # — via a fail-fast probe (limit 1), not a full shard count
-    if new_embeddings.filter(F.size("embedding") != dim).limit(1).count():
-        raise ValueError(
-            f"appended vectors have dim != the stored codec's "
-            f"{dim} (m={books.shape[0]} × sub={books.shape[2]})"
-        )
-    pq_encode(new_embeddings, books).write.mode("overwrite").parquet(
-        f"{path}/codes/epoch={epoch + 1}"
-    )
-    commit_manifest(path, with_txn({**man, "epoch": epoch + 1}, txn))
+
+    def write(emb: DataFrame, man: dict, nxt: int) -> None:
+        books = _load_codebooks(spark, path, man["codebook_epoch"])
+        dim = books.shape[0] * books.shape[2]
+        # pq_encode's zip_with would silently null-pad a mismatched
+        # array, so a wrong-width shard must fail loudly, mirroring fit's
+        # dim % m check — via a fail-fast probe (limit 1), not a full
+        # shard count
+        if emb.filter(F.size("embedding") != dim).limit(1).count():
+            raise ValueError(
+                f"appended vectors have dim != the stored codec's "
+                f"{dim} (m={books.shape[0]} × sub={books.shape[2]})"
+            )
+        manifest.write_epoch(pq_encode(emb, books), path, LAYOUT, "codes", nxt)
+
+    manifest.append(path, LAYOUT, txn, lambda man: new_embeddings, write)
 
 
-def _load_codebooks(spark, path: str, codebook_epoch: int | None = None) -> np.ndarray:
-    sub_path = (
-        f"{path}/codebooks"
-        if codebook_epoch is None  # pre-versioning layout (flat dir)
-        else f"{path}/codebooks/epoch={codebook_epoch}"
-    )
-    rows = spark.read.parquet(sub_path).collect()  # bounded: m·k rows
-    mm = 1 + max(r["subspace"] for r in rows)
+def _codebook_frame(spark, books: np.ndarray) -> DataFrame:
+    """The (subspace, code, entry) rows a codebook tensor persists as."""
+    mm, kk, _sub = books.shape
+    rows = [
+        (int(j), int(c), [float(v) for v in books[j, c]])
+        for j in range(mm)
+        for c in range(kk)
+    ]
+    return spark.createDataFrame(rows, "subspace int, code int, entry array<double>")
+
+
+def _load_codebooks(spark, path: str, codebook_epoch: int) -> np.ndarray:
+    rows = spark.read.parquet(f"{path}/codebooks/epoch={codebook_epoch}").collect()
+    mm = 1 + max(r["subspace"] for r in rows)  # bounded: m·k rows
     kk = 1 + max(r["code"] for r in rows)
     sub = len(rows[0]["entry"])
     books = np.zeros((mm, kk, sub))
@@ -535,26 +517,16 @@ def compact_pq_index(spark, path: str) -> bool:
     """OPTIMIZE for the PQ index: fold the live code epochs into one new
     epoch and advance base_epoch in one manifest commit — atomic, the
     codec untouched. Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import compact_epochs
-
-    return compact_epochs(spark, path, union_dirs={"codes": []})
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def load_pq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
     """(codebook tensor, codes DataFrame) from a saved index — the union
     of the committed epochs in [base_epoch, epoch], manifest-resolved so
     a racing update OR rebuild is seen entirely or not at all."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    man = read_manifest(path)
-    epoch, base = man["epoch"], man.get("base_epoch", 0)
-    books = _load_codebooks(spark, path, man.get("codebook_epoch"))
-    codes = (
-        spark.read.option("basePath", f"{path}/codes")
-        .parquet(f"{path}/codes")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .select("vec_id", "codes")
-    )
+    man = manifest.read_manifest(path)
+    books = _load_codebooks(spark, path, man["codebook_epoch"])
+    codes = manifest.live(spark, path, man, LAYOUT, "codes").select("vec_id", "codes")
     return books, codes
 
 

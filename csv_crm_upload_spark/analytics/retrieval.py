@@ -32,8 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write, fan_out
+from csv_crm_upload_spark.analytics.fanout import fan_out
 from csv_crm_upload_spark.analytics.textstats import _tokens
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 # Deterministic demo query set over the synthetic corpus vocabulary.
 # query_id doubles as the vec_id of the query's embedding for the hybrid
@@ -63,15 +65,18 @@ def _query_toks_df(spark, queries: dict[int, list[str]]) -> DataFrame:
     return spark.createDataFrame([(t,) for t in toks], "tok string")
 
 
+def _has_text() -> F.Column:
+    return F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
+
+
 def _tf_frame(documents: DataFrame) -> DataFrame:
     """Postings frame (doc_id, tok, tf, dl): one explode + one (doc,tok)
     aggregation with map-side combine, then dl = Σ tf per doc via a
     window (re-uses the doc partitioning prefix — no join back to the
     corpus). Not persisted: callers that fan out (index builds) own the
     persist/unpersist lifecycle."""
-    has_text = F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     toks = (
-        fan_out(documents.filter(has_text))
+        fan_out(documents.filter(_has_text()))
         .select("doc_id", F.explode(_tokens()).alias("tok"))
         .withColumn("tok", F.lower(F.col("tok")))
     )
@@ -84,8 +89,7 @@ def _corpus_stats(documents: DataFrame) -> DataFrame:
     avgdl so incremental index maintenance can fold counts
     integer-exactly and re-derive the SAME double avgdl = total/n a
     fresh build computes."""
-    has_text = F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
-    return documents.filter(has_text).select(
+    return documents.filter(_has_text()).select(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(_tokens())).cast("long").alias("total_tokens"),
         (F.sum(F.size(_tokens())) / F.count(F.lit(1))).alias("avgdl"),
@@ -168,32 +172,22 @@ def bm25_search(
     )
 
 
-from csv_crm_upload_spark.operators.manifest import (  # noqa: E402
-    commit_manifest,
-    read_manifest,
-    remove_orphan_epochs,
-)
-
-
-#: derived-key format stamp (manifest.check_key_format — the substr
-#: gram_format lesson generalized, r9): postings/dfreq keys are the
-#: LOWERED _tokens() token STRINGS, bucketed by Spark Murmur3 pmod.
-#: Bump when the tokenization or lowering rule changes (bucket hash
-#: changes are already covered by n_buckets + the Murmur3 portability
-#: note below).
+#: derived-key format stamp (manifest.check_key_format): postings/dfreq
+#: keys are the LOWERED _tokens() token STRINGS, bucketed by Spark
+#: Murmur3 pmod. Bump when the tokenization or lowering rule changes
+#: (bucket hash changes are already covered by n_buckets + the Murmur3
+#: portability note below).
 KEY_FORMAT = "lower-tok-postings-v1"
 
-
-def _read_manifest(path: str) -> dict:
-    return read_manifest(path)
-
-
-def _checked_manifest(path: str) -> dict:
-    from csv_crm_upload_spark.operators.manifest import check_key_format
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    return m
+#: postings: epoch-RANGED (each append adds the new docs' postings);
+#: dfreq/stats: fully-merged per-epoch SNAPSHOTS (only the current
+#: epoch's is read)
+LAYOUT = Layout(
+    ranged={"postings": Ranged(partition=("tok_bucket",))},
+    snapshots={"dfreq": ("tok_bucket",), "stats": ()},
+    key_format=KEY_FORMAT,
+    missing_ok=True,
+)
 
 
 def save_text_index(documents: DataFrame, path: str, n_buckets: int = 64) -> None:
@@ -206,167 +200,117 @@ def save_text_index(documents: DataFrame, path: str, n_buckets: int = 64) -> Non
     into — partition pruning does the candidate selection before any
     row is touched.
 
-    Layout is EPOCH-VERSIONED (postings/epoch=K/tok_bucket=*, dfreq and
-    stats snapshots per epoch) with a MANIFEST file naming the current
-    epoch — see update_text_index for the commit protocol.
+    Layout is EPOCH-VERSIONED (LAYOUT) with a MANIFEST naming the
+    current epoch; a rebuild over a LIVE index is atomic
+    (manifest.rebuild), so a racing probe pairs old postings with old
+    stats or new with new.
 
     Portability note: physical bucket assignment uses F.hash (Spark's
     internal Murmur3). Writer and prober share the function so the
     layout is self-consistent, but unlike the md5-derived arithmetic in
     the oracle-visible queries it is NOT portable across engines — a
     non-Spark reader must re-derive buckets with Spark's Murmur3."""
-    # Rebuild over a LIVE index is atomic (same pattern as the vector
-    # indexes): new epoch + base_epoch advance in one commit, so a
-    # racing probe pairs old postings with old stats or new with new;
-    # the prior manifest's last_txn is PRESERVED so streaming batches
-    # folded before the rebuild still no-op on replay
-    from csv_crm_upload_spark.operators.manifest import rebuild_epoch
 
-    new_epoch, prior = rebuild_epoch(path)
-    tf = _tf_frame(documents).persist()
-    try:
-        bucket = F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
-        cluster_for_write(
-            tf.select("doc_id", "tok", "tf", "dl", bucket), "tok_bucket"
-        ).write.mode("overwrite").partitionBy(
-            "tok_bucket"
-        ).parquet(f"{path}/postings/epoch={new_epoch}")
-        dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        cluster_for_write(
-            dfreq.select("tok", "df", bucket), "tok_bucket"
-        ).write.mode("overwrite").partitionBy(
-            "tok_bucket"
-        ).parquet(f"{path}/dfreq/epoch={new_epoch}")
-        _corpus_stats(documents).write.mode("overwrite").parquet(
-            f"{path}/stats/epoch={new_epoch}"
-        )
-        commit_manifest(
-            path,
-            {
-                **prior,
-                "epoch": new_epoch,
-                "base_epoch": new_epoch,
-                "n_buckets": n_buckets,
-                "key_format": KEY_FORMAT,
-            },
-        )
-    finally:
-        tf.unpersist()
+    def write(e: int) -> None:
+        tf = _tf_frame(documents).persist()
+        try:
+            bucket = F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
+            postings = tf.select("doc_id", "tok", "tf", "dl", bucket)
+            manifest.write_epoch(postings, path, LAYOUT, "postings", e)
+            dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+            manifest.write_epoch(
+                dfreq.select("tok", "df", bucket), path, LAYOUT, "dfreq", e
+            )
+            manifest.write_epoch(_corpus_stats(documents), path, LAYOUT, "stats", e)
+        finally:
+            tf.unpersist()
+
+    manifest.rebuild(path, LAYOUT, write, n_buckets=n_buckets)
 
 
 def update_text_index(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
-    """Incremental index maintenance for a corpus APPEND: tokenize ONLY
-    the new documents, write their postings as a NEW epoch partition,
-    and write fully-merged dfreq/stats snapshots for that epoch.
+    """Incremental index maintenance for a corpus APPEND
+    (manifest.append): tokenize ONLY the new documents, write their
+    postings as a NEW epoch partition, and write fully-merged
+    dfreq/stats snapshots for that epoch. Documents with no text are a
+    no-op.
 
     Cost: O(new docs) tokenize + O(vocab) dfreq merge — never a re-scan
     of the indexed corpus (old postings epochs are untouched; only the
-    vocab-sized dfreq table is rewritten).
-
-    Atomicity: all epoch-K+1 files land BEFORE the manifest swaps to
-    K+1 (single os.replace). A concurrent probe resolves its epoch from
-    the manifest once, so it sees the old snapshot or the new one, never
-    stale df/N against new postings. A crash mid-update leaves the
-    manifest at K and only orphan epoch-K+1 dirs, which the next update
-    removes before writing — no rollback needed.
+    vocab-sized dfreq table is rewritten). A concurrent probe resolves
+    its epoch from the manifest once, so it sees the old snapshot or the
+    new one, never stale df/N against new postings.
 
     Precondition (caller's dedup responsibility, same as any inverted
     index): new_documents' doc_ids are not already indexed — the dedup
     family upstream is exactly the tool for that.
 
     `txn=(app_id, batch_id)`: replay guard for checkpointed streaming
-    folds — the batch id commits atomically WITH the epoch, so a
-    re-delivered foreachBatch batch no-ops instead of double-indexing
-    (see manifest.txn_already_applied).
+    folds — a re-delivered foreachBatch batch no-ops instead of
+    double-indexing.
     """
-    from csv_crm_upload_spark.operators.manifest import txn_already_applied, with_txn
-
     spark = new_documents.sparkSession
-    m = _checked_manifest(path)
-    if txn_already_applied(m, txn):
-        return  # replayed batch: already folded, atomic with its epoch
-    epoch, n_buckets = m["epoch"], m["n_buckets"]
 
-    # self-heal: drop orphan next-epoch dirs left by a crashed update
-    remove_orphan_epochs(path, ["postings", "dfreq", "stats"], epoch)
+    def write(docs: DataFrame, m: dict, nxt: int) -> None:
+        epoch = m["epoch"]
+        tf = _tf_frame(docs).persist()
+        try:
+            delta = _corpus_stats(docs).first()
+            bucket = F.pmod(F.hash("tok"), F.lit(m["n_buckets"])).alias("tok_bucket")
+            postings = tf.select("doc_id", "tok", "tf", "dl", bucket)
+            manifest.write_epoch(postings, path, LAYOUT, "postings", nxt)
+            # merge document frequencies: vocab-sized pass into a new snapshot
+            delta_dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+            merged = (
+                spark.read.parquet(f"{path}/dfreq/epoch={epoch}")
+                .select("tok", "df")
+                .unionByName(delta_dfreq)
+                .groupBy("tok")
+                .agg(F.sum("df").alias("df"))
+                .select("tok", "df", bucket)
+            )
+            manifest.write_epoch(merged, path, LAYOUT, "dfreq", nxt)
+            # fold corpus stats with EXACT integer counts, then re-derive
+            # avgdl the same way a fresh build does (total/n double
+            # division) — the incremental index is bit-identical to a rebuild
+            old_stats = spark.read.parquet(f"{path}/stats/epoch={epoch}").first()
+            n_new = old_stats["n_docs"] + delta["n_docs"]
+            tot_new = old_stats["total_tokens"] + delta["total_tokens"]
+            stats = spark.createDataFrame(
+                [(n_new, tot_new, tot_new / n_new)],
+                "n_docs long, total_tokens long, avgdl double",
+            )
+            manifest.write_epoch(stats, path, LAYOUT, "stats", nxt)
+        finally:
+            tf.unpersist()
 
-    tf = _tf_frame(new_documents).persist()
-    try:
-        delta = _corpus_stats(new_documents).first()
-        if not delta["n_docs"]:
-            # nothing with text to append — a clean no-op, before any write
-            return
-        nxt = epoch + 1
-        bucket = F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
-        cluster_for_write(
-            tf.select("doc_id", "tok", "tf", "dl", bucket), "tok_bucket"
-        ).write.mode("overwrite").partitionBy(
-            "tok_bucket"
-        ).parquet(f"{path}/postings/epoch={nxt}")
-
-        # merge document frequencies: vocab-sized pass into a new snapshot
-        delta_dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        merged = (
-            spark.read.parquet(f"{path}/dfreq/epoch={epoch}")
-            .select("tok", "df")
-            .unionByName(delta_dfreq)
-            .groupBy("tok")
-            .agg(F.sum("df").alias("df"))
-            .select("tok", "df", bucket)
-        )
-        cluster_for_write(merged, "tok_bucket").write.mode("overwrite").partitionBy(
-            "tok_bucket"
-        ).parquet(f"{path}/dfreq/epoch={nxt}")
-
-        # fold corpus stats with EXACT integer counts, then re-derive
-        # avgdl the same way a fresh build does (total/n double division)
-        # — the incremental index is bit-identical to a rebuild
-        old_stats = spark.read.parquet(f"{path}/stats/epoch={epoch}").first()
-        n_new = old_stats["n_docs"] + delta["n_docs"]
-        tot_new = old_stats["total_tokens"] + delta["total_tokens"]
-        spark.createDataFrame(
-            [(n_new, tot_new, tot_new / n_new)],
-            "n_docs long, total_tokens long, avgdl double",
-        ).write.mode("overwrite").parquet(f"{path}/stats/epoch={nxt}")
-
-        # {**m, ...}: preserve base_epoch (compaction floor) and any
-        # recorded txns — a fresh payload here would resurrect stale
-        # pre-compaction epochs for readers
-        commit_manifest(path, with_txn({**m, "epoch": nxt}, txn))
-    finally:
-        tf.unpersist()
+    manifest.append(
+        path, LAYOUT, txn, lambda m: new_documents.filter(_has_text()), write
+    )
 
 
 def read_index_stats(spark, path: str):
     """Corpus-stats Row of the CURRENT index epoch (manifest-resolved)."""
-    epoch = _checked_manifest(path)["epoch"]
+    epoch = manifest.checked_manifest(path, LAYOUT)["epoch"]
     return spark.read.parquet(f"{path}/stats/epoch={epoch}").first()
 
 
 def compact_text_index(spark, path: str) -> bool:
     """OPTIMIZE for the inverted index: fold every postings epoch in
     [base_epoch, epoch] into ONE new epoch and advance base_epoch with
-    the same single-manifest commit the appends use — atomic, racing
-    probes see the old epoch chain or the compacted one, never a mix.
+    one manifest commit — atomic, racing probes see the old epoch chain
+    or the compacted one, never a mix.
 
     Appends are O(new docs) but each leaves an epoch dir; probe cost
     grows with the epoch count (more files under every pruned bucket).
     Compaction restores the one-dir-per-bucket read shape. dfreq/stats
     are already full per-epoch SNAPSHOTS, so they rewrite as-is. Stale
     pre-compaction epochs stay on disk for readers holding the old
-    manifest (harmless garbage, superseded at the next compaction).
-    Returns False (no-op) when the index is already compact."""
-    from csv_crm_upload_spark.operators.manifest import compact_epochs
-
-    _checked_manifest(path)
-    return compact_epochs(
-        spark,
-        path,
-        union_dirs={"postings": ["tok_bucket"]},
-        snapshot_dirs={"dfreq": ["tok_bucket"], "stats": []},
-    )
+    manifest until CorpusIndexService.vacuum. Returns False (no-op)
+    when the index is already compact."""
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def bm25_search_indexed(
@@ -389,22 +333,15 @@ def bm25_search_indexed(
     never mixed."""
     queries = DEFAULT_QUERIES if queries is None else queries
     qdf = _query_terms_df(spark, queries)
-    m = _checked_manifest(index_path)
+    m = manifest.checked_manifest(index_path, LAYOUT)
     epoch, n_buckets = m["epoch"], m["n_buckets"]
-    base = m.get("base_epoch", 0)  # compaction floor (compact_text_index)
     stats = spark.read.parquet(f"{index_path}/stats/epoch={epoch}")
     q_buckets = qdf.select(
         "query_id", "tok", F.pmod(F.hash("tok"), F.lit(n_buckets)).alias("tok_bucket")
     )
     wanted = sorted({r["tok_bucket"] for r in q_buckets.select("tok_bucket").distinct().collect()})
-    postings = (
-        spark.read.parquet(f"{index_path}/postings")
-        .filter(
-            (F.col("epoch") >= base)
-            & (F.col("epoch") <= epoch)
-            & F.col("tok_bucket").isin(wanted)
-        )
-        .drop("epoch")
+    postings = manifest.live(spark, index_path, m, LAYOUT, "postings").filter(
+        F.col("tok_bucket").isin(wanted)
     )
     dfreq = spark.read.parquet(f"{index_path}/dfreq/epoch={epoch}").filter(
         F.col("tok_bucket").isin(wanted)
@@ -620,15 +557,13 @@ def tfidf_indexed_top_terms(spark, index_path: str, k: int = 3) -> DataFrame:
     compaction reads old or new, never a mix. idf = round(log2(N/df),
     9); score stays the raw tf x idf product (the tfidf1 half-way
     lesson); ties break on the term string."""
-    m = _checked_manifest(index_path)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
+    m = manifest.checked_manifest(index_path, LAYOUT)
+    epoch = m["epoch"]
     stats = spark.read.parquet(f"{index_path}/stats/epoch={epoch}").select(
         F.col("n_docs").cast("double").alias("n_docs")
     )
-    postings = (
-        spark.read.parquet(f"{index_path}/postings")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .select("doc_id", "tok", "tf")
+    postings = manifest.live(spark, index_path, m, LAYOUT, "postings").select(
+        "doc_id", "tok", "tf"
     )
     dfreq = spark.read.parquet(f"{index_path}/dfreq/epoch={epoch}").select("tok", "df")
     idf = F.round(F.log2(F.col("n_docs") / F.col("df").cast("double")), 9)

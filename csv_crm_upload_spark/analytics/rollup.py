@@ -32,7 +32,7 @@ Maintenance contract (shared with every artifact):
              rebuild (substr/ngramlm's epoch-RANGED discipline);
              O(new events), days may repeat across epochs
   * OPTIMIZE — compact_daily_rollup SUM-merges the live chain
-  * gc     — rides CorpusIndexService.vacuum via INDEX_LAYOUTS
+  * gc     — CorpusIndexService.vacuum, from LAYOUT
 """
 
 from __future__ import annotations
@@ -40,10 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 DEFAULT_N_BUCKETS = 16
-ROLLUP_SUBDIRS = ["days"]
 
 #: derived-key format stamp (manifest.check_key_format): rows key on the
 #: UTC calendar date of ts with NULL-ts rows dropped; value_micros is
@@ -51,9 +51,25 @@ ROLLUP_SUBDIRS = ["days"]
 #: rule, or the micro-unit scale changes.
 KEY_FORMAT = "utc-day-type-micros-v1"
 
+#: days: epoch-RANGED additive (day, event_type) counts — probes and
+#: compaction SUM-merge the live range. The explicit read schema covers
+#: an all-NULL-ts event batch, which writes a data-file-less epoch dir.
+LAYOUT = Layout(
+    ranged={
+        "days": Ranged(
+            partition=("dbucket",),
+            schema="day date, event_type string, n_events long, n_valued long, "
+            "value_micros long, dbucket int, epoch int",
+            keys=("day", "event_type"),
+            sums=("n_events", "n_valued", "value_micros"),
+        )
+    },
+    key_format=KEY_FORMAT,
+)
+
 #: env-scopable artifact path PREFIX for the self-contained
 #: oracle-paired queries (the pcarec1 discipline): the default is
-#: PID-scoped (r10 advice) so two concurrent unscoped processes (e.g.
+#: PID-scoped so two concurrent unscoped processes (e.g.
 #: parallel pytest + bench) never race save_daily_rollup's rebuild on
 #: one manifest — a probe could read a mid-rebuild epoch layout. The
 #: roll1/roll2 oracles recompute from RAW events, so the path is only
@@ -65,10 +81,9 @@ ROLLUP_QUERY_PATH = "/tmp/spark_graft_rollup_q"
 def rollup_query_path() -> str:
     """Read at CALL time in both the queries() entry and any oracle that
     needs it, so one process's override stays self-consistent. The
-    PID-scoped default registers a best-effort atexit reap (advice r11:
-    nothing else deletes these, so repeated runs would accumulate
-    parquet under /tmp); an env-overridden path is the harness's to
-    manage."""
+    PID-scoped default registers a best-effort atexit reap (nothing else
+    deletes these, so repeated runs would accumulate parquet under
+    /tmp); an env-overridden path is the harness's to manage."""
     import os
 
     override = os.environ.get("SPARK_GRAFT_ROLLUP_DIR")
@@ -108,37 +123,16 @@ def _day_partials(events: DataFrame, n_buckets: int) -> DataFrame:
 def save_daily_rollup(
     events: DataFrame, path: str, n_buckets: int = DEFAULT_N_BUCKETS
 ) -> None:
-    """Materialize the corpus's daily counts once. Rebuild over a LIVE
-    rollup is atomic (epoch + base_epoch advance in one manifest commit;
-    prior last_txn preserved — the streaming replay guard)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
-    new_epoch, prior = rebuild_epoch(path)
-    cluster_for_write(_day_partials(events, n_buckets), "dbucket").write.mode(
-        "overwrite"
-    ).partitionBy("dbucket").parquet(f"{path}/days/epoch={new_epoch}")
-    commit_manifest(
+    """Materialize the corpus's daily counts once (atomic rebuild over a
+    live rollup; manifest.rebuild)."""
+    manifest.rebuild(
         path,
-        {
-            **prior,
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "n_buckets": n_buckets,
-            "key_format": KEY_FORMAT,
-        },
+        LAYOUT,
+        lambda e: manifest.write_epoch(
+            _day_partials(events, n_buckets), path, LAYOUT, "days", e
+        ),
+        n_buckets=n_buckets,
     )
-
-
-#: explicit read schema (the substr lesson): an all-NULL-ts event batch
-#: writes a data-file-less epoch dir that schema inference cannot read
-_DAYS_SCHEMA = (
-    "day date, event_type string, n_events long, n_valued long, "
-    "value_micros long, dbucket int, epoch int"
-)
-
-
-def _read_days(spark, path: str) -> DataFrame:
-    return spark.read.schema(_DAYS_SCHEMA).parquet(f"{path}/days")
 
 
 def daily_rollup_counts(spark, path: str) -> DataFrame:
@@ -147,21 +141,8 @@ def daily_rollup_counts(spark, path: str) -> DataFrame:
     compaction is invisible — old-or-new, never partial). Exact by
     additivity — a day appearing in several epochs folds to the same
     longs a rebuild would store."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        _read_days(spark, path)
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("n_valued").cast("long").alias("n_valued"),
-            F.sum("value_micros").cast("long").alias("value_micros"),
-        )
-    )
+    m = manifest.checked_manifest(path, LAYOUT)
+    return manifest.live(spark, path, m, LAYOUT, "days", merged=True)
 
 
 def daily_totals(spark, path: str) -> DataFrame:
@@ -177,77 +158,29 @@ def update_daily_rollup(
     new_events: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
     """Fold an event APPEND: aggregate ONLY the new events and commit
-    their partials as a new epoch. Counts are additive, so the SUM-merged
-    probe view is EXACTLY what a rebuild over the full history would
-    store (test-pinned) — days already present just gain another partial
-    row. No precondition on days: events are append-only facts, unlike
-    the doc-keyed indexes."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
+    their partials as a new epoch (manifest.append). Counts are
+    additive, so the SUM-merged probe view is EXACTLY what a rebuild
+    over the full history would store (test-pinned) — days already
+    present just gain another partial row. No precondition on days:
+    events are append-only facts, unlike the doc-keyed indexes. A batch
+    with no timestamped event is a no-op."""
+    manifest.append(
+        path,
+        LAYOUT,
+        txn,
+        lambda m: _day_partials(new_events, m["n_buckets"]).localCheckpoint(
+            eager=True
+        ),
+        lambda partials, m, e: manifest.write_epoch(partials, path, LAYOUT, "days", e),
     )
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already folded
-    epoch = m["epoch"]
-    partials = _day_partials(new_events, m["n_buckets"]).localCheckpoint(eager=True)
-    if not partials.limit(1).count():
-        # nothing with a timestamp — clean no-op BEFORE any directory
-        # mutation (r10 advice): orphan self-heal must not run on a
-        # no-op append, or the documented no-op contract silently
-        # deletes an in-flight concurrent writer's epoch dir
-        return
-    remove_orphan_epochs(path, ROLLUP_SUBDIRS, epoch)
-    cluster_for_write(partials, "dbucket").write.mode("overwrite").partitionBy(
-        "dbucket"
-    ).parquet(f"{path}/days/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**m, "epoch": epoch + 1}, txn))
 
 
 def compact_daily_rollup(spark, path: str) -> bool:
-    """OPTIMIZE: SUM-merge the live [base_epoch, epoch] chain into one
-    epoch (bucket partitioning preserved) in one atomic manifest commit
-    — exact by additivity, like the substr/ngramlm compactors (a plain
-    epoch union would double-count days seen in several epochs).
-    Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-    )
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    if epoch == base:
-        return False
-    # self-heal first (the compact_epochs protocol): a crashed update or
-    # compaction leaves a partial epoch>current dir whose truncated
-    # files would otherwise abort the tree scan below
-    remove_orphan_epochs(path, ROLLUP_SUBDIRS, epoch)
-    merged = (
-        _read_days(spark, path)
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .groupBy("day", "event_type", "dbucket")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("n_valued").cast("long").alias("n_valued"),
-            F.sum("value_micros").cast("long").alias("value_micros"),
-        )
-    )
-    nxt = epoch + 1
-    cluster_for_write(merged, "dbucket").write.mode("overwrite").partitionBy(
-        "dbucket"
-    ).parquet(f"{path}/days/epoch={nxt}")
-    commit_manifest(path, {**m, "epoch": nxt, "base_epoch": nxt})
-    return True
+    """OPTIMIZE: SUM-merge the live chain into one epoch (bucket
+    partitioning preserved) in one atomic manifest commit — exact by
+    additivity (a plain epoch union would double-count days seen in
+    several epochs). Returns False when already compact."""
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 # ---------------------------------------------------------------------------
@@ -287,32 +220,19 @@ def cpd1_indexed(spark, path: str) -> DataFrame:
 
 def _ensure_query_rollup(events: DataFrame, p: str) -> None:
     """Build the rollup at `p` once per (corpus, path) per process —
-    fit-memoized (fitmemo.py, r10 verdict ask #2): roll1 and roll2 over
-    the same corpus share one build instead of each query invocation
-    rebuilding the artifact.
-
-    The validate hook re-reads the MANIFEST and requires it to EQUAL
-    the one this build committed (review r11): existence alone is not
-    enough — in an A→B→A corpus alternation at one path, B's rebuild
-    overwrites the artifact while A's memo entry stays live, and a bare
-    existence check would serve B's rollup to A's probe. Any manifest
-    change (epoch advance, rebuild, external delete) misses and
-    re-builds."""
+    fit-memoized (fitmemo.py): roll1 and roll2 over the same corpus
+    share one build instead of each query invocation rebuilding the
+    artifact. The memo hit holds only while the manifest still equals
+    the one this build committed (manifest.still_committed)."""
     from csv_crm_upload_spark.analytics.fitmemo import memo_fit
-    from csv_crm_upload_spark.operators.manifest import read_manifest
 
     def _build():
         save_daily_rollup(events, p)
-        return p, read_manifest(p)
+        return p, manifest.read_manifest(p)
 
-    def _still_mine(built) -> bool:
-        path, stamped = built
-        try:
-            return read_manifest(path) == stamped
-        except Exception:
-            return False
-
-    memo_fit("daily_rollup_build", events, (p,), _build, validate=_still_mine)
+    memo_fit(
+        "daily_rollup_build", events, (p,), _build, validate=manifest.still_committed
+    )
 
 
 def roll1_indexed_acf(spark, events: DataFrame, path: str | None = None) -> DataFrame:

@@ -11,7 +11,7 @@ Layout (the BM25-postings/winnow conventions):
                                  and hash-partitioned by
                                  gbucket = pmod(gram_h, n_buckets)
   MANIFEST                       epoch / base_epoch / min_len /
-                                 n_buckets (+ last_txn)
+                                 n_buckets / gram_format (+ last_txn)
 
 The stored key is the 60-bit gram HASH, not the gram text: 8 bytes per
 distinct gram instead of ~10 tokens, the standard ExactSubstr trade
@@ -31,7 +31,7 @@ Maintenance contract (shared with every other artifact):
   * build  — save_substr_index: atomic rebuild-over-live
   * append — update_substr_index: O(new docs), additive fold
   * OPTIMIZE — compact_substr_index (sum-merged, not just unioned)
-  * gc     — rides CorpusIndexService.vacuum via INDEX_LAYOUTS
+  * gc     — CorpusIndexService.vacuum, from LAYOUT
 """
 
 from __future__ import annotations
@@ -39,16 +39,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write
-
 from csv_crm_upload_spark.analytics.dedup import (
     coverage_spans,
     substr_gram_frame,
 )
 from csv_crm_upload_spark.functions.hashing import md5_60
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 DEFAULT_N_BUCKETS = 16
-SUBSTR_SUBDIRS = ["gramcounts"]
 
 #: Gram-key format version, stamped into the MANIFEST at build time and
 #: checked on every probe/append/compact. The stored keys are md5-60
@@ -56,35 +55,32 @@ SUBSTR_SUBDIRS = ["gramcounts"]
 #: the separator character, the tokenization — silently changes every
 #: hash: a probe against an index built under a different format would
 #: match zero grams, an append would mix incompatible hash spaces, and
-#: nothing downstream could tell (r8 advice). "space-md560-v1" names the
-#: current format: norm_tokens tokenization, ' ' separator (the r8
-#: separator-safe change from \x01), md5-60 hash. Bump it whenever any
-#: of those changes so stale indexes fail LOUDLY instead of matching
-#: nothing.
+#: nothing downstream could tell. "space-md560-v1" names the current
+#: format: norm_tokens tokenization, ' ' separator (the separator-safe
+#: change from \x01), md5-60 hash. Bump it whenever any of those
+#: changes so stale indexes fail LOUDLY instead of matching nothing.
 GRAM_FORMAT = "space-md560-v1"
 
-
-def _check_gram_format(m: dict, path: str) -> None:
-    """Fail loudly when the index's gram format doesn't match this
-    code's (the shared manifest.check_key_format contract; this artifact
-    keeps its original `gram_format` field name). A manifest with NO
-    gram_format field predates the stamp — its keys were built under the
-    old \\x01 separator (or are of unknown vintage), so it is treated as
-    mismatched too: zero silent-miss modes."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format
-
-    check_key_format(m, path, GRAM_FORMAT, field="gram_format")
-
-#: explicit read schema (data + partition columns): an index built over
-#: a corpus where NO document reaches min_len writes a data-file-less
-#: partitioned dir (only _SUCCESS), and schema INFERENCE on that aborts
-#: every later read — the explicit schema makes it a readable empty
-#: index instead (review r7)
-_GRAMCOUNTS_SCHEMA = "gram_h long, n long, gbucket int, epoch int"
-
-
-def _read_gramcounts(spark, path: str):
-    return spark.read.schema(_GRAMCOUNTS_SCHEMA).parquet(f"{path}/gramcounts")
+#: gramcounts: epoch-RANGED additive counts — probes and compaction
+#: SUM-merge the live range. The stamp keeps its original `gram_format`
+#: field and is STRICT: a manifest with no gram_format predates the
+#: stamp, its keys were built under the old \x01 separator (or are of
+#: unknown vintage), so it is refused too — zero silent-miss modes. The
+#: explicit read schema covers an index where NO document reaches
+#: min_len, which writes a data-file-less partitioned dir that schema
+#: inference cannot read.
+LAYOUT = Layout(
+    ranged={
+        "gramcounts": Ranged(
+            partition=("gbucket",),
+            schema="gram_h long, n long, gbucket int, epoch int",
+            keys=("gram_h",),
+            sums=("n",),
+        )
+    },
+    key_format=GRAM_FORMAT,
+    format_field="gram_format",
+)
 
 
 def _gram_counts(documents: DataFrame, min_len: int, n_buckets: int) -> DataFrame:
@@ -107,27 +103,16 @@ def save_substr_index(
     min_len: int = 10,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> None:
-    """Materialize the corpus's gram counts once. Rebuild over a LIVE
-    index is atomic (epoch + base_epoch advance in one manifest commit;
-    prior last_txn preserved — the streaming replay guard)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
-    new_epoch, prior = rebuild_epoch(path)
-    cluster_for_write(
-        _gram_counts(documents, min_len, n_buckets), "gbucket"
-    ).write.mode("overwrite").partitionBy(
-        "gbucket"
-    ).parquet(f"{path}/gramcounts/epoch={new_epoch}")
-    commit_manifest(
+    """Materialize the corpus's gram counts once (atomic rebuild over a
+    live index; manifest.rebuild)."""
+    manifest.rebuild(
         path,
-        {
-            **prior,
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "min_len": min_len,
-            "n_buckets": n_buckets,
-            "gram_format": GRAM_FORMAT,
-        },
+        LAYOUT,
+        lambda e: manifest.write_epoch(
+            _gram_counts(documents, min_len, n_buckets), path, LAYOUT, "gramcounts", e
+        ),
+        min_len=min_len,
+        n_buckets=n_buckets,
     )
 
 
@@ -136,85 +121,35 @@ def load_substr_counts(spark, path: str) -> DataFrame:
     committed [base_epoch, epoch] range SUMMED per gram (additive, so
     this is exactly a rebuild's table; manifest-resolved, so a racing
     update or compaction is invisible — old-or-new, never partial)."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    m = read_manifest(path)
-    _check_gram_format(m, path)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        _read_gramcounts(spark, path)
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .groupBy("gram_h")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    m = manifest.checked_manifest(path, LAYOUT)
+    return manifest.live(spark, path, m, LAYOUT, "gramcounts", merged=True)
 
 
 def update_substr_index(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
     """Fold a corpus APPEND: count ONLY the new documents' grams and
-    commit them as a new epoch — additivity makes the summed table
-    EXACTLY what a rebuild over the full corpus would store
+    commit them as a new epoch (manifest.append) — additivity makes the
+    summed table EXACTLY what a rebuild over the full corpus would store
     (test-pinned). Precondition (as for any index append): new doc_ids
     are not already indexed."""
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
+    manifest.append(
+        path,
+        LAYOUT,
+        txn,
+        lambda m: _gram_counts(
+            new_documents, m["min_len"], m["n_buckets"]
+        ).localCheckpoint(eager=True),
+        lambda delta, m, e: manifest.write_epoch(delta, path, LAYOUT, "gramcounts", e),
     )
-
-    m = read_manifest(path)
-    _check_gram_format(m, path)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already folded
-    epoch = m["epoch"]
-    remove_orphan_epochs(path, SUBSTR_SUBDIRS, epoch)
-    delta = _gram_counts(
-        new_documents, m["min_len"], m["n_buckets"]
-    ).localCheckpoint(eager=True)
-    if not delta.limit(1).count():
-        return  # nothing with >= min_len tokens — clean no-op
-    cluster_for_write(delta, "gbucket").write.mode("overwrite").partitionBy(
-        "gbucket"
-    ).parquet(f"{path}/gramcounts/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**m, "epoch": epoch + 1}, txn))
 
 
 def compact_substr_index(spark, path: str) -> bool:
     """OPTIMIZE: SUM-merge the live [base_epoch, epoch] chain into one
-    epoch (exact by additivity — unlike the union-only compactors, a
-    plain epoch union would double-store grams seen in several epochs)
-    in one atomic manifest commit. Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import (
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-    )
-
-    m = read_manifest(path)
-    _check_gram_format(m, path)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    if epoch == base:
-        return False
-    # self-heal first (the compact_epochs protocol): a crashed update or
-    # compaction leaves a partial epoch>current dir whose truncated
-    # files would otherwise abort the tree scan below
-    remove_orphan_epochs(path, SUBSTR_SUBDIRS, epoch)
-    merged = (
-        _read_gramcounts(spark, path)
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .groupBy("gram_h")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .withColumn("gbucket", F.pmod(F.col("gram_h"), F.lit(m["n_buckets"])))
-    )
-    nxt = epoch + 1
-    cluster_for_write(merged, "gbucket").write.mode("overwrite").partitionBy(
-        "gbucket"
-    ).parquet(f"{path}/gramcounts/epoch={nxt}")
-    commit_manifest(path, {**m, "epoch": nxt, "base_epoch": nxt})
-    return True
+    epoch (exact by additivity — a plain epoch union would double-store
+    grams seen in several epochs) in one atomic manifest commit. Returns
+    False when already compact."""
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def xsd_indexed_dup_spans(documents: DataFrame, path: str) -> DataFrame:
@@ -227,12 +162,8 @@ def xsd_indexed_dup_spans(documents: DataFrame, path: str) -> DataFrame:
     (test-pinned). Note the probe's own occurrences count only if the
     probe docs are indexed — the same "the corpus includes the doc"
     convention the inline operator has."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
     spark = documents.sparkSession
-    m = read_manifest(path)
-    _check_gram_format(m, path)
-    L = m["min_len"]
+    L = manifest.checked_manifest(path, LAYOUT)["min_len"]
     grams = substr_gram_frame(documents, min_len=L).select(
         "doc_id", "n_tokens", "start", md5_60(F.col("gram")).alias("gram_h")
     )

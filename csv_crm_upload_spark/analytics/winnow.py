@@ -10,8 +10,9 @@ Layout (same conventions as the BM25/dedup/vector indexes):
                              prune to the buckets their fingerprints
                              land in (PartitionFilters, like the
                              BM25 token buckets and NB model counts)
-  MANIFEST.json              epoch / base_epoch / k / w / n_buckets
-                             (+ last_txn for streaming exactly-once)
+  MANIFEST                   epoch / base_epoch / k / w / n_buckets /
+                             key_format (+ last_txn for streaming
+                             exactly-once)
 
 Maintenance contract (shared with every other artifact):
   * build  — save_winnow_index: atomic rebuild-over-live
@@ -19,7 +20,7 @@ Maintenance contract (shared with every other artifact):
              functions, so folding ONLY the new docs' prints is
              byte-identical to a rebuild (test-pinned); O(new docs)
   * OPTIMIZE — compact_winnow_index via manifest.compact_epochs
-  * gc     — rides CorpusIndexService.vacuum via INDEX_LAYOUTS
+  * gc     — CorpusIndexService.vacuum, from LAYOUT
 """
 
 from __future__ import annotations
@@ -27,20 +28,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.analytics.fanout import cluster_for_write
-
 from csv_crm_upload_spark.analytics.textstats import (
     shared_print_pairs,
     winnow_prints,
 )
+from csv_crm_upload_spark.operators import manifest
+from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 DEFAULT_N_BUCKETS = 16
 
-#: derived-key format stamp (manifest.check_key_format — the substr
-#: gram_format lesson generalized, r9): fp = window-min of md5-60 over
-#: \x01-joined word k-grams of norm_tokens text. Bump when any of the
-#: tokenization / gram join / hash / selection rule changes.
+#: derived-key format stamp (manifest.check_key_format): fp = window-min
+#: of md5-60 over \x01-joined word k-grams of norm_tokens text. Bump
+#: when any of the tokenization / gram join / hash / selection rule
+#: changes.
 KEY_FORMAT = "normtok-x01gram-md560-winmin-v1"
+
+#: prints: epoch-RANGED per-document facts — probes union the live range
+LAYOUT = Layout(
+    ranged={"prints": Ranged(partition=("bucket",))},
+    key_format=KEY_FORMAT,
+    missing_ok=True,
+)
 
 
 def _bucketed(prints: DataFrame, n_buckets: int) -> DataFrame:
@@ -54,28 +62,21 @@ def save_winnow_index(
     w: int = 5,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> None:
-    """Materialize the corpus's selected fingerprints once. Rebuild over
-    a LIVE index is atomic (epoch + base_epoch advance in one manifest
-    commit; prior last_txn preserved — the streaming replay guard)."""
-    from csv_crm_upload_spark.operators.manifest import commit_manifest, rebuild_epoch
-
-    new_epoch, prior = rebuild_epoch(path)
-    cluster_for_write(
-        _bucketed(winnow_prints(documents, k, w), n_buckets), "bucket"
-    ).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(f"{path}/prints/epoch={new_epoch}")
-    commit_manifest(
+    """Materialize the corpus's selected fingerprints once (atomic
+    rebuild over a live index; manifest.rebuild)."""
+    manifest.rebuild(
         path,
-        {
-            **prior,
-            "epoch": new_epoch,
-            "base_epoch": new_epoch,
-            "k": k,
-            "w": w,
-            "n_buckets": n_buckets,
-            "key_format": KEY_FORMAT,
-        },
+        LAYOUT,
+        lambda e: manifest.write_epoch(
+            _bucketed(winnow_prints(documents, k, w), n_buckets),
+            path,
+            LAYOUT,
+            "prints",
+            e,
+        ),
+        k=k,
+        w=w,
+        n_buckets=n_buckets,
     )
 
 
@@ -83,65 +84,35 @@ def load_winnow_prints(spark, path: str) -> DataFrame:
     """The stored (doc_id, fp) fingerprint table — the union of the
     committed epochs in [base_epoch, epoch] (manifest-resolved: a racing
     update or compaction is invisible — old-or-new, never partial)."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    return (
-        spark.read.parquet(f"{path}/prints")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-        .select("doc_id", "fp")
-    )
+    m = manifest.checked_manifest(path, LAYOUT)
+    return manifest.live(spark, path, m, LAYOUT, "prints").select("doc_id", "fp")
 
 
 def update_winnow_index(
     new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
 ) -> None:
     """Fold a corpus APPEND: fingerprint ONLY the new documents and
-    commit them as a new epoch. Because selection is a pure per-document
-    function, the post-append print table is EXACTLY what a rebuild
-    over the full corpus would store (test-pinned) — no cross-document
-    state to reconcile. Precondition (as for any index append): new
-    doc_ids are not already indexed."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        commit_manifest,
-        read_manifest,
-        remove_orphan_epochs,
-        txn_already_applied,
-        with_txn,
+    commit them as a new epoch (manifest.append). Because selection is a
+    pure per-document function, the post-append print table is EXACTLY
+    what a rebuild over the full corpus would store (test-pinned) — no
+    cross-document state to reconcile. Precondition (as for any index
+    append): new doc_ids are not already indexed."""
+    manifest.append(
+        path,
+        LAYOUT,
+        txn,
+        lambda m: _bucketed(
+            winnow_prints(new_documents, m["k"], m["w"]), m["n_buckets"]
+        ).localCheckpoint(eager=True),
+        lambda prints, m, e: manifest.write_epoch(prints, path, LAYOUT, "prints", e),
     )
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    if txn_already_applied(m, txn):
-        return  # replayed streaming batch: already folded
-    epoch = m["epoch"]
-    remove_orphan_epochs(path, ["prints"], epoch)
-    new_prints = _bucketed(
-        winnow_prints(new_documents, m["k"], m["w"]), m["n_buckets"]
-    ).localCheckpoint(eager=True)
-    if not new_prints.limit(1).count():
-        return  # nothing with content — clean no-op before any write
-    cluster_for_write(new_prints, "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(f"{path}/prints/epoch={epoch + 1}")
-    commit_manifest(path, with_txn({**m, "epoch": epoch + 1}, txn))
 
 
 def compact_winnow_index(spark, path: str) -> bool:
     """OPTIMIZE: fold the live [base_epoch, epoch] chain into one epoch
     (bucket partitioning preserved) in one atomic manifest commit.
     Returns False when already compact."""
-    from csv_crm_upload_spark.operators.manifest import (
-        check_key_format,
-        compact_epochs,
-        read_manifest,
-    )
-
-    check_key_format(read_manifest(path), path, KEY_FORMAT, missing_ok=True)
-    return compact_epochs(spark, path, union_dirs={"prints": ["bucket"]})
+    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def wfp2_indexed_pairs(
@@ -173,18 +144,13 @@ def match_documents(
     O(probe buckets / n_buckets) of the index, not all of it. Hot
     stored fingerprints (df > max_df over the stored table) are dropped
     before the join, same cap as the pair query."""
-    from csv_crm_upload_spark.operators.manifest import check_key_format, read_manifest
-
-    m = read_manifest(path)
-    check_key_format(m, path, KEY_FORMAT, missing_ok=True)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
+    m = manifest.checked_manifest(path, LAYOUT)
     probe = _bucketed(
         winnow_prints(probe_documents, m["k"], m["w"]), m["n_buckets"]
     ).localCheckpoint(eager=True)
     buckets = [r["bucket"] for r in probe.select("bucket").distinct().collect()]
     stored = (
-        spark.read.parquet(f"{path}/prints")
-        .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
+        manifest.live(spark, path, m, LAYOUT, "prints")
         .filter(F.col("bucket").isin(buckets))  # partition-pruned scan
         .select("doc_id", "fp")
     )

@@ -1,13 +1,29 @@
-"""Single-file manifest commit protocol shared by the persisted index
-layouts (BM25 inverted index, LSH near-dup pair index).
+"""The epoch-manifest protocol of the 13 persisted indexes and models
+(BM25 text index, LSH pair index, IVF / PQ / IVF-PQ indexes, NB / BPE /
+PCA models, winnow prints, substr gram counts, n-gram LM, daily event
+rollup, sketch-audit log).
 
-The manifest is the ONLY commit point of an epoch-versioned index: all
-epoch-K+1 files land first, then one atomic os.replace publishes K+1.
-A reader resolves its epoch from the manifest once and reads one fully
-written snapshot — old or new, never a mix; a crash leaves the manifest
-at K and only orphan K+1 dirs, which the next writer removes. On a real
-cluster this pointer is a metastore entry / table-format commit log;
-the fsync'd single-file swap is the local-filesystem equivalent.
+Each artifact module declares its directory layout once (`Layout`) and
+keeps only its own math; this module runs every protocol step from the
+layout:
+
+  rebuild   — `rebuild`: write the next epoch, then one commit that
+              keeps the prior manifest's fields (above all `last_txn`);
+  append    — `append`: stamp check, txn guard, stage the delta from
+              the new input only (empty → return with nothing touched),
+              remove orphans, write epoch+1, one commit with the txn;
+  live read — `live`: the [base_epoch, epoch] range of a ranged subdir;
+  compact   — `compact_epochs`: fold the live range into one epoch;
+  gc        — `gc_stale_epochs`: drop dirs the manifest no longer names.
+
+The manifest is the ONLY commit point of an epoch-versioned artifact:
+all epoch-K+1 files land first, then one atomic os.replace publishes
+K+1. A reader resolves its epoch from the manifest once and reads one
+fully written snapshot — old or new, never a mix; a crash leaves the
+manifest at K and only orphan K+1 dirs, which the next writer removes.
+On a real cluster this pointer is a metastore entry / table-format
+commit log; the fsync'd single-file swap is the local-filesystem
+equivalent.
 """
 
 from __future__ import annotations
@@ -15,6 +31,53 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from dataclasses import dataclass, field
+from typing import Callable
+
+
+@dataclass(frozen=True)
+class Ranged:
+    """An epoch-RANGED subdir: every epoch in [base_epoch, epoch] is
+    live, and appends add one epoch each. `partition` is the physical
+    partition columns; `schema` an explicit read schema (data +
+    partition columns + `epoch int`) for subdirs whose epochs may hold
+    no data file, which schema inference cannot read. Non-empty `keys`
+    declares ADDITIVE counts: the same key may appear in several epochs,
+    so the merged live view and compaction SUM `sums` per key and carry
+    `carry` (functions of the key) by max."""
+
+    partition: tuple[str, ...] = ()
+    schema: str | None = None
+    keys: tuple[str, ...] = ()
+    sums: tuple[str, ...] = ()
+    carry: tuple[str, ...] = ()
+
+
+@dataclass(frozen=True)
+class Layout:
+    """One artifact's directory layout.
+
+    ranged    — subdir → Ranged;
+    snapshots — subdir → partition columns, for tables every epoch
+                rewrites in full (only the current epoch is read). An
+                artifact with no ranged subdir keeps base_epoch == epoch;
+    pinned    — subdir → manifest key naming its one live epoch
+                (quantizers that survive appends, e.g. centroid_epoch);
+    key_format / format_field / missing_ok — the derived-key stamp
+                (see `check_key_format`); None for artifacts whose keys
+                are not derived from text."""
+
+    ranged: dict[str, Ranged] = field(default_factory=dict)
+    snapshots: dict[str, tuple[str, ...]] = field(default_factory=dict)
+    pinned: dict[str, str] = field(default_factory=dict)
+    key_format: str | None = None
+    format_field: str = "key_format"
+    missing_ok: bool = False
+
+    def partition(self, sub: str) -> tuple[str, ...]:
+        if sub in self.ranged:
+            return self.ranged[sub].partition
+        return self.snapshots.get(sub, ())
 
 
 def read_manifest(path: str) -> dict:
@@ -22,7 +85,219 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
-def commit_manifest(path: str, payload: dict) -> None:
+def still_committed(built: tuple[str, dict]) -> bool:
+    """fitmemo validate hook for a memoized artifact build that returned
+    (path, manifest it committed): hit only while the manifest at path
+    still EQUALS it. Existence alone is not enough — in an A→B→A corpus
+    alternation at one path, B's rebuild overwrites the artifact while
+    A's memo entry stays live. Any manifest change (epoch advance,
+    rebuild, external delete) misses and re-builds."""
+    path, stamped = built
+    try:
+        return read_manifest(path) == stamped
+    except Exception:
+        return False
+
+
+def checked_manifest(path: str, layout: Layout) -> dict:
+    """The current manifest, with the layout's key-format stamp checked
+    (and backfilled in place where `missing_ok`)."""
+    m = read_manifest(path)
+    if layout.key_format is not None:
+        check_key_format(
+            m, path, layout.key_format, layout.format_field, layout.missing_ok
+        )
+    return m
+
+
+def rebuild(path: str, layout: Layout, write: Callable[[int], None], **fields) -> None:
+    """Build (or atomically rebuild over a live artifact): `write(epoch)`
+    lands every subdir of the next epoch — 0 on a fresh path, one past
+    the committed epoch otherwise — then one commit advances epoch,
+    base_epoch and every pinned key together, stamps the key format and
+    records `fields` (build parameters). The prior manifest's fields are
+    KEPT, above all `last_txn`, whose loss would void the streaming
+    replay guard for batches folded before the rebuild. A racing reader
+    pairs old data with old quantizers/stats or new with new."""
+    try:
+        prior = read_manifest(path)
+        epoch = prior["epoch"] + 1
+    except FileNotFoundError:
+        prior, epoch = {}, 0
+    write(epoch)
+    stamp = {layout.format_field: layout.key_format} if layout.key_format else {}
+    _commit(
+        path,
+        {
+            **prior,
+            "epoch": epoch,
+            "base_epoch": epoch,
+            **dict.fromkeys(layout.pinned.values(), epoch),
+            **stamp,
+            **fields,
+        },
+    )
+
+
+def append(
+    path: str,
+    layout: Layout,
+    txn: tuple[str, int] | None,
+    stage: Callable,
+    write: Callable,
+) -> None:
+    """Fold an APPEND as epoch+1, in this order:
+
+      1. read the manifest and check the key-format stamp;
+      2. txn guard: a replayed (app_id, batch_id) returns;
+      3. `stage(m)` builds the delta DataFrame from the NEW input only;
+         an empty delta returns with NOTHING touched;
+      4. remove orphan epoch>current dirs a crashed writer left;
+      5. `write(delta, m, epoch + 1)` lands the new epoch (reads of the
+         stored tree belong here, after step 4);
+      6. one commit of epoch+1 with the txn.
+
+    The no-op rule is the point of the order: orphan self-heal must not
+    run on a no-op append, or a no-op deletes an in-flight concurrent
+    writer's epoch dir. The txn rides the SAME atomic commit as the
+    epoch it folded, so a crash either committed both (the replay
+    no-ops) or neither (the replay redoes cleanly) — the txnAppId
+    pattern of lakehouse streaming writers (cf. operators/store.py)."""
+    m = checked_manifest(path, layout)
+    if txn is not None and m.get("last_txn", {}).get(txn[0], -1) >= txn[1]:
+        return
+    delta = stage(m)
+    if not delta.limit(1).count():
+        return
+    nxt = m["epoch"] + 1
+    _remove_orphans(path, layout, m["epoch"])
+    write(delta, m, nxt)
+    payload = {**m, "epoch": nxt}
+    if not layout.ranged:
+        payload["base_epoch"] = nxt
+    if txn is not None:
+        payload["last_txn"] = {**m.get("last_txn", {}), txn[0]: txn[1]}
+    _commit(path, payload)
+
+
+def write_epoch(df, path: str, layout: Layout, sub: str, epoch: int) -> None:
+    """Land `df` as `<path>/<sub>/epoch=<epoch>`, partitioned BY the
+    subdir's declared columns after `cluster_for_write` on them."""
+    from csv_crm_upload_spark.analytics.fanout import cluster_for_write
+
+    cols = layout.partition(sub)
+    if cols:
+        df = cluster_for_write(df, *cols)
+    writer = df.write.mode("overwrite")
+    if cols:
+        writer = writer.partitionBy(*cols)
+    writer.parquet(f"{path}/{sub}/epoch={epoch}")
+
+
+def live(spark, path: str, m: dict, layout: Layout, sub: str, merged: bool = False):
+    """The live [base_epoch, epoch] rows of a ranged subdir under
+    manifest `m` (resolved once by the caller, so a racing append or
+    compaction is invisible), `epoch` column dropped. `merged=True`
+    SUM-merges an additive subdir per key — exactly the table a rebuild
+    would store."""
+    from pyspark.sql import functions as F
+
+    spec = layout.ranged[sub]
+    reader = spark.read.option("basePath", f"{path}/{sub}")
+    if spec.schema is not None:
+        reader = reader.schema(spec.schema)
+    df = (
+        reader.parquet(f"{path}/{sub}")
+        .filter(
+            (F.col("epoch") >= m.get("base_epoch", 0)) & (F.col("epoch") <= m["epoch"])
+        )
+        .drop("epoch")
+    )
+    return _sum_merge(df, spec) if merged else df
+
+
+def _sum_merge(df, spec: Ranged, *extra_keys: str):
+    from pyspark.sql import functions as F
+
+    return df.groupBy(*spec.keys, *extra_keys).agg(
+        *[F.max(c).alias(c) for c in spec.carry],
+        *[F.sum(c).cast("long").alias(c) for c in spec.sums],
+    )
+
+
+def compact_epochs(spark, path: str, layout: Layout) -> bool:
+    """OPTIMIZE: fold every ranged subdir's live [base_epoch, epoch]
+    range into ONE new epoch — a plain union, or a SUM-merge per key for
+    additive subdirs (a union would double-store keys seen in several
+    epochs) — copy the current epoch of each snapshot subdir, then
+    advance epoch AND base_epoch in one atomic commit that keeps every
+    other manifest field (params, last_txn). Pinned quantizers are
+    untouched. Returns False, with nothing touched, when the artifact
+    is already compact."""
+    m = checked_manifest(path, layout)
+    epoch, base = m["epoch"], m.get("base_epoch", 0)
+    if base == epoch:
+        return False
+    # self-heal first: a crashed update or compaction leaves a partial
+    # epoch>current dir whose truncated files would abort the tree scan
+    _remove_orphans(path, layout, epoch)
+    nxt = epoch + 1
+    for sub, spec in layout.ranged.items():
+        df = live(spark, path, m, layout, sub)
+        if spec.keys:
+            df = _sum_merge(df, spec, *spec.partition)
+        write_epoch(df, path, layout, sub, nxt)
+    for sub in layout.snapshots:
+        write_epoch(
+            spark.read.parquet(f"{path}/{sub}/epoch={epoch}"), path, layout, sub, nxt
+        )
+    _commit(path, {**m, "epoch": nxt, "base_epoch": nxt})
+    return True
+
+
+def gc_stale_epochs(path: str, layout: Layout) -> list[str]:
+    """Delete epoch dirs the CURRENT manifest can no longer reference:
+    for ranged and snapshot subdirs anything outside [base_epoch, epoch]
+    (stale pre-compaction/pre-rebuild chains, superseded snapshots,
+    uncommitted orphans); for pinned subdirs anything except the pinned
+    epoch. Returns the removed paths.
+
+    Same contract as store.vacuum: callers assert no reader still holds
+    an OLDER manifest snapshot (readers resolve the manifest once per
+    probe, so the exposure window is one in-flight probe). Keep GC a
+    deliberate maintenance step, not part of every commit."""
+    m = read_manifest(path)
+    base, epoch = m.get("base_epoch", 0), m["epoch"]
+    removed: list[str] = []
+    for sub in [*layout.ranged, *layout.snapshots]:
+        removed += _sweep(path, sub, lambda k: not base <= k <= epoch)
+    for sub, key in layout.pinned.items():
+        removed += _sweep(path, sub, lambda k, pinned=m[key]: k != pinned)
+    return removed
+
+
+def _remove_orphans(path: str, layout: Layout, current_epoch: int) -> None:
+    """Self-heal after a crashed writer: drop epoch dirs newer than the
+    committed epoch (never published; partial files are fine to
+    delete)."""
+    for sub in [*layout.ranged, *layout.snapshots]:
+        _sweep(path, sub, lambda k: k > current_epoch)
+
+
+def _sweep(path: str, sub: str, drop: Callable[[int], bool]) -> list[str]:
+    d = os.path.join(path, sub)
+    if not os.path.isdir(d):
+        return []
+    removed = []
+    for name in sorted(os.listdir(d)):
+        if name.startswith("epoch=") and drop(int(name.split("=", 1)[1])):
+            full = os.path.join(d, name)
+            shutil.rmtree(full)
+            removed.append(full)
+    return removed
+
+
+def _commit(path: str, payload: dict) -> None:
     """Atomically publish `payload` (must contain "epoch") as the
     current manifest: temp file + fsync + os.replace (atomic on POSIX)."""
     tmp = os.path.join(path, f"MANIFEST.tmp.{payload['epoch']}")
@@ -33,151 +308,6 @@ def commit_manifest(path: str, payload: dict) -> None:
     os.replace(tmp, os.path.join(path, "MANIFEST"))
 
 
-def txn_already_applied(manifest: dict, txn: tuple[str, int] | None) -> bool:
-    """True when (app_id, batch_id) is at or below the manifest's last
-    recorded transaction for that app — the replay guard that makes a
-    checkpointed foreachBatch fold EXACTLY-ONCE in effect: the batch id
-    rides the SAME atomic manifest commit as the epoch it folded, so a
-    crash either committed both (replay no-ops) or neither (replay
-    redoes cleanly). The txnAppId pattern of lakehouse streaming writers
-    (cf. operators/store.py merge)."""
-    if txn is None:
-        return False
-    app, batch_id = txn
-    return manifest.get("last_txn", {}).get(app, -1) >= batch_id
-
-
-def with_txn(payload: dict, txn: tuple[str, int] | None) -> dict:
-    """Fold (app_id, batch_id) into a manifest payload about to commit."""
-    if txn is None:
-        return payload
-    app, batch_id = txn
-    last = dict(payload.get("last_txn", {}))
-    last[app] = batch_id
-    return {**payload, "last_txn": last}
-
-
-def rebuild_epoch(path: str) -> tuple[int, dict]:
-    """(next epoch, prior manifest) for a save_* REBUILD over a possibly
-    live index: a fresh path starts at epoch 0 with an empty prior; a
-    live one advances past the committed epoch. The prior manifest is
-    returned so the rebuild's commit can PRESERVE cross-rebuild state —
-    above all `last_txn`, whose loss would void the streaming replay
-    guard for batches folded before the rebuild."""
-    try:
-        m = read_manifest(path)
-        return m["epoch"] + 1, m
-    except FileNotFoundError:
-        return 0, {}
-
-
-def compact_epochs(
-    spark,
-    path: str,
-    union_dirs: dict[str, list[str]],
-    snapshot_dirs: dict[str, list[str]] | None = None,
-) -> bool:
-    """The shared OPTIMIZE protocol all five persisted indexes use: fold
-    every epoch in [base_epoch, epoch] of each `union_dirs` entry
-    (subdir → partition columns to preserve) into ONE new epoch, copy
-    the latest snapshot of each `snapshot_dirs` entry (tables that are
-    already full per-epoch snapshots, e.g. BM25 dfreq/stats), then
-    advance epoch AND base_epoch in one atomic manifest commit that
-    preserves every other manifest field (params, last_txn). Returns
-    False (no write) when the index is already compact.
-
-    One implementation on purpose: protocol changes (epoch GC, txn
-    semantics) land here once instead of five drifting copies."""
-    from pyspark.sql import functions as F  # local: keep module os-only otherwise
-
-    snapshot_dirs = snapshot_dirs or {}
-    m = read_manifest(path)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    remove_orphan_epochs(path, [*union_dirs, *snapshot_dirs], epoch)
-    if base == epoch:
-        return False
-    nxt = epoch + 1
-    for sub, partition_cols in union_dirs.items():
-        df = (
-            spark.read.option("basePath", f"{path}/{sub}")
-            .parquet(f"{path}/{sub}")
-            .filter((F.col("epoch") >= base) & (F.col("epoch") <= epoch))
-            .drop("epoch")
-        )
-        if partition_cols:
-            # cluster on the physical partition cols so the compacted
-            # epoch is one file per partition value, not one sliver per
-            # (value, task) — the guide §6 small-files fix
-            df = df.repartition(*[F.col(c) for c in partition_cols])
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(f"{path}/{sub}/epoch={nxt}")
-    for sub, partition_cols in snapshot_dirs.items():
-        snap = spark.read.parquet(f"{path}/{sub}/epoch={epoch}")
-        if partition_cols:
-            snap = snap.repartition(*[F.col(c) for c in partition_cols])
-        writer = snap.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(f"{path}/{sub}/epoch={nxt}")
-    commit_manifest(path, {**m, "epoch": nxt, "base_epoch": nxt})
-    return True
-
-
-def gc_stale_epochs(
-    path: str,
-    ranged_subdirs: list[str],
-    pinned_subdirs: dict[str, str] | None = None,
-) -> list[str]:
-    """Delete epoch dirs the CURRENT manifest can no longer reference:
-    for `ranged_subdirs` anything outside [base_epoch, epoch] (stale
-    pre-compaction/pre-rebuild chains plus uncommitted orphans); for
-    `pinned_subdirs` (subdir → manifest key, e.g. centroids →
-    centroid_epoch) anything except the pinned epoch. Returns the
-    removed paths.
-
-    Same contract as store.vacuum: callers assert no reader still holds
-    an OLDER manifest snapshot (readers resolve the manifest once per
-    probe, so the exposure window is one in-flight probe). Keep GC a
-    deliberate maintenance step, not part of every commit."""
-    m = read_manifest(path)
-    base, epoch = m.get("base_epoch", 0), m["epoch"]
-    removed: list[str] = []
-
-    def _sweep(sub: str, keep) -> None:
-        d = os.path.join(path, sub)
-        if not os.path.isdir(d):
-            return
-        for name in os.listdir(d):
-            if not name.startswith("epoch="):
-                continue
-            k = int(name.split("=", 1)[1])
-            if not keep(k):
-                full = os.path.join(d, name)
-                shutil.rmtree(full)
-                removed.append(full)
-
-    for sub in ranged_subdirs:
-        _sweep(sub, lambda k: base <= k <= epoch)
-    for sub, key in (pinned_subdirs or {}).items():
-        pinned = m[key]
-        _sweep(sub, lambda k: k == pinned)
-    return removed
-
-
-def remove_orphan_epochs(path: str, subdirs: list[str], current_epoch: int) -> None:
-    """Self-heal after a crashed update: drop epoch dirs newer than the
-    committed epoch (they were never published; partial files are fine
-    to delete)."""
-    for sub in subdirs:
-        base = os.path.join(path, sub)
-        if os.path.isdir(base):
-            for d in os.listdir(base):
-                if d.startswith("epoch=") and int(d.split("=", 1)[1]) > current_epoch:
-                    shutil.rmtree(os.path.join(base, d))
-
-
 def check_key_format(
     m: dict,
     path: str,
@@ -186,8 +316,7 @@ def check_key_format(
     missing_ok: bool = False,
 ) -> None:
     """Fail LOUDLY when a persisted index's derived-key format doesn't
-    match this code's (the substr gram_format lesson, r8 advice,
-    generalized r9): stored keys are hashes/strings of DERIVED text
+    match this code's: stored keys are hashes/strings of DERIVED text
     (tokenization, gram join separator, shingle normalization), so any
     change to the derivation silently changes every key — a probe
     against an older index would match NOTHING and an append would mix
@@ -196,8 +325,8 @@ def check_key_format(
 
     `missing_ok=True` is for artifacts whose key derivation has NEVER
     changed since before the stamp existed (winnow / ngram-LM / text
-    index / dedup pairs — only substr's gram hashes actually changed,
-    in r8): a manifest with no format field there is a known-compatible
+    index / dedup pairs — only substr's gram hashes actually changed):
+    a manifest with no format field there is a known-compatible
     pre-stamp vintage, so it is accepted and the stamp is BACKFILLED
     into `m` in place — the caller's next `{**m, ...}` manifest commit
     persists it, with no forced rebuild of a compatible index. The flag

@@ -25,6 +25,15 @@ from pyspark.sql import functions as F
 
 _RAW_COLS = ["id", "first_name", "last_name", "email", "phone"]
 
+# An email made only of whitespace is empty (V2). F.trim strips ASCII spaces
+# alone, so a tab, newline, the \x1c-\x1f separators or a Unicode space would
+# pass as a real address; this class is exactly the set Python's str.isspace
+# accepts.
+_BLANK_RE = (
+    r"^[\t\n\x0B\f\r\x1C-\x20\x{85}\x{A0}\x{1680}\x{2000}-\x{200A}"
+    r"\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]*$"
+)
+
 
 def validate_split(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a raw CSV batch into (clean, quarantine).
@@ -42,7 +51,7 @@ def validate_split(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         "reason",
         F.when(corrupt_col.isNotNull(), F.lit("malformed_line"))
         .when(F.col("id").try_cast("long").isNull(), F.lit("bad_id"))
-        .when(F.col("email").isNull() | (F.trim(F.col("email")) == ""), F.lit("empty_email"))
+        .when(F.col("email").isNull() | F.col("email").rlike(_BLANK_RE), F.lit("empty_email"))
         .otherwise(F.lit(None)),
     )
 

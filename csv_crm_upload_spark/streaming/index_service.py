@@ -1,9 +1,8 @@
 """Corpus index maintenance riding a service ticker — the production
 shape of incremental indexing: corpus appends land as parquet shards in
 a drop directory, and each service tick folds ONLY the unseen shards
-into every registered persisted index (BM25 inverted index, LSH
-near-dup pair index, IVF cells, PQ codes, IVF-PQ codes) via their
-O(new docs) `update_*` entry points. The build-once artifacts stay
+into every registered persisted index or model (the 13 artifacts of
+INDEXES) via their O(new docs) `update_*` entry points. The build-once artifacts stay
 fresh without a manual rebuild step, exactly the way a lakehouse
 schedules OPTIMIZE/VACUUM alongside the workload (cf.
 pipeline.run_upload_service's auto-compact/vacuum, which this service
@@ -19,8 +18,9 @@ others). A quiet tick costs one directory listing.
 Crash contract — EXACTLY-ONCE per shard batch: before any fold, the
 exact shard list is written to the cursor as a WRITE-AHEAD INTENT
 together with the batch's txn sequence number; every index update then
-commits ("tick-docs"/"tick-emb"/"tick-events", seq) inside its own atomic manifest
-(manifest.txn_already_applied); the final cursor commit marks the
+commits ("tick-docs"/"tick-emb"/"tick-events", seq) inside its own
+atomic manifest (the txn guard of manifest.append); the final cursor
+commit marks the
 batch seen and clears the intent. A crash at ANY point replays
 precisely the intent-logged batch with the same seq on restart —
 updates that already committed no-op, the rest fold — so no index
@@ -33,40 +33,88 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable, NamedTuple
 
-#: Per-index physical layout for maintenance (compaction GC): epoch-
-#: RANGED subdirs live in [base_epoch, epoch]; PINNED subdirs are
-#: referenced by a single manifest key (quantizers survive appends).
-INDEX_LAYOUTS: dict[str, tuple[list[str], dict[str, str]]] = {
-    "text": (["postings", "dfreq", "stats"], {}),
-    "dedup": (["pairs", "signatures", "bands"], {}),
-    "ivf": (["cells"], {"centroids": "centroid_epoch"}),
-    "pq": (["codes"], {"codebooks": "codebook_epoch"}),
-    "ivfpq": (
-        ["codes"],
-        {"centroids": "centroid_epoch", "codebooks": "codebook_epoch"},
+from csv_crm_upload_spark.analytics import (
+    auditlog,
+    bpe,
+    dedup,
+    ivf,
+    ivfpq,
+    nbayes,
+    ngramlm,
+    pca,
+    pq,
+    retrieval,
+    rollup,
+    substr,
+    winnow,
+)
+from csv_crm_upload_spark.operators.manifest import (
+    Layout,
+    gc_stale_epochs,
+    read_manifest,
+)
+
+
+def _append_audit(new_events, path: str, txn: tuple[str, int]) -> None:
+    # batch_key names the fold txn so a log row is traceable to the
+    # exact shard batch (cursor intent / micro-batch) it audits
+    auditlog.append_batch_audit(new_events, path, f"{txn[0]}-{txn[1]}", txn=txn)
+
+
+class Index(NamedTuple):
+    layout: Layout
+    stream: str  # the drop dir that feeds it: "docs" | "embeddings" | "events"
+    update: Callable  # update(new_frame, path, txn=(app, seq))
+    compact: Callable | None  # compact(spark, path); None: snapshot-only model
+
+
+#: Every persisted artifact the service maintains, keyed by the
+#: CorpusIndexService argument that names its path. Folding, auto-
+#: compaction, vacuum and the cursor cross-check all loop over this one
+#: declaration; adding an artifact is one entry here (plus its argument).
+#: The NB/BPE/PCA models keep base_epoch == epoch (every epoch is a
+#: fully-merged snapshot), so they never need compaction.
+INDEXES: dict[str, Index] = {
+    "text_index": Index(
+        retrieval.LAYOUT,
+        "docs",
+        retrieval.update_text_index,
+        retrieval.compact_text_index,
     ),
-    # every NB epoch is a fully-merged snapshot (base_epoch == epoch),
-    # so gc reclaims ALL superseded model copies
-    "nb": (["counts", "class_stats", "model_stats"], {}),
-    "winnow": (["prints"], {}),
-    # BPE model epochs are fully-merged snapshots too (vocab + merges
-    # relearned from it) — gc reclaims all superseded copies
-    "bpe": (["vocab", "merges"], {}),
-    # PCA sufficient-statistic snapshots (additive decimal sums)
-    "pca": (["pairsums", "dimsums"], {}),
-    # ExactSubstr gram counts: epoch-RANGED additive counts (probes sum
-    # the live range; compaction sum-merges)
-    "substr": (["gramcounts"], {}),
-    # n-gram LM: epoch-RANGED additive unigram/bigram counts (probes sum
-    # the live range; compaction sum-merges both tables)
-    "ngramlm": (["unigrams", "bigrams"], {}),
-    # daily event rollup: epoch-RANGED additive (day, event_type) counts
-    # (probes sum the live range; compaction sum-merges)
-    "rollup": (["days"], {}),
-    # per-batch sketch-audit log: epoch-RANGED audit FACTS (probes union
-    # the live range; compaction plain-folds — rows are logged once)
-    "auditlog": (["rows"], {}),
+    "dedup_index": Index(
+        dedup.DEDUP_LAYOUT, "docs", dedup.update_dedup_index, dedup.compact_dedup_index
+    ),
+    "nb_model": Index(nbayes.LAYOUT, "docs", nbayes.update_nb_model, None),
+    "winnow_index": Index(
+        winnow.LAYOUT, "docs", winnow.update_winnow_index, winnow.compact_winnow_index
+    ),
+    "bpe_model": Index(bpe.LAYOUT, "docs", bpe.update_bpe_model, None),
+    "substr_index": Index(
+        substr.LAYOUT, "docs", substr.update_substr_index, substr.compact_substr_index
+    ),
+    "ngram_model": Index(
+        ngramlm.LAYOUT,
+        "docs",
+        ngramlm.update_ngramlm_model,
+        ngramlm.compact_ngramlm_model,
+    ),
+    "ivf_index": Index(ivf.LAYOUT, "embeddings", ivf.update_index, ivf.compact_index),
+    "pq_index": Index(pq.LAYOUT, "embeddings", pq.update_pq_index, pq.compact_pq_index),
+    "ivfpq_index": Index(
+        ivfpq.LAYOUT,
+        "embeddings",
+        ivfpq.update_ivfpq_index,
+        ivfpq.compact_ivfpq_index,
+    ),
+    "pca_model": Index(pca.LAYOUT, "embeddings", pca.update_pca_model, None),
+    "daily_rollup": Index(
+        rollup.LAYOUT, "events", rollup.update_daily_rollup, rollup.compact_daily_rollup
+    ),
+    "audit_log": Index(
+        auditlog.LAYOUT, "events", _append_audit, auditlog.compact_audit_log
+    ),
 }
 
 
@@ -76,16 +124,12 @@ class CorpusIndexService:
 
     Parameters
     ----------
-    docs_dir / emb_dir: drop directories watched for document shards
-        (consumed by the text + dedup indexes) and embedding shards
-        (consumed by the vector indexes). Either may be None.
-    text_index / dedup_index / ivf_index / pq_index / ivfpq_index /
-    nb_model / winnow_index / bpe_model / pca_model / substr_index /
-    ngram_model:
-        paths of already-BUILT indexes/models (save_* must have run);
-        None skips that index. The NB/BPE/PCA models' epochs are fully merged
-        snapshots, so they never need compaction (gc of superseded
-        snapshots is a vacuum concern, not a read-path one).
+    docs_dir / emb_dir / events_dir: drop directories watched for
+        document, embedding and event shards, each consumed by the
+        INDEXES entries of that stream. At least one is required.
+    text_index ... audit_log: one argument per INDEXES entry — the path
+        of an already-BUILT index/model (save_* must have run); None
+        skips it.
     cursor_path: where the processed-shard cursor lives; defaults to
         `<first drop dir>/_index_service_cursor.json`.
     compact_after: auto-OPTIMIZE threshold — after folding, any
@@ -120,6 +164,9 @@ class CorpusIndexService:
         compact_after: int | None = None,
         adopt_artifact_seq: bool = False,
     ) -> None:
+        # the registered artifacts: every INDEXES argument that was given
+        args = locals()
+        self.paths = {k: args[k] for k in INDEXES if args[k] is not None}
         if docs_dir is None and emb_dir is None and events_dir is None:
             raise ValueError(
                 "at least one of docs_dir/emb_dir/events_dir is required"
@@ -128,19 +175,6 @@ class CorpusIndexService:
         self.docs_dir = docs_dir
         self.emb_dir = emb_dir
         self.events_dir = events_dir
-        self.text_index = text_index
-        self.dedup_index = dedup_index
-        self.ivf_index = ivf_index
-        self.pq_index = pq_index
-        self.ivfpq_index = ivfpq_index
-        self.nb_model = nb_model
-        self.winnow_index = winnow_index
-        self.bpe_model = bpe_model
-        self.pca_model = pca_model
-        self.substr_index = substr_index
-        self.ngram_model = ngram_model
-        self.daily_rollup = daily_rollup
-        self.audit_log = audit_log
         self.cursor_path = cursor_path or os.path.join(
             docs_dir or emb_dir or events_dir, "_index_service_cursor.json"
         )
@@ -197,26 +231,8 @@ class CorpusIndexService:
         file running BEHIND the artifacts it coordinates (see __init__).
         Artifacts without a readable manifest are skipped: save_* may
         not have run yet, which the first fold will surface on its own."""
-        from csv_crm_upload_spark.operators.manifest import read_manifest
-
         mx = 0
-        for path in (
-            self.text_index,
-            self.dedup_index,
-            self.ivf_index,
-            self.pq_index,
-            self.ivfpq_index,
-            self.nb_model,
-            self.winnow_index,
-            self.bpe_model,
-            self.pca_model,
-            self.substr_index,
-            self.ngram_model,
-            self.daily_rollup,
-            self.audit_log,
-        ):
-            if path is None:
-                continue
+        for path in self.paths.values():
             try:
                 last = read_manifest(path).get("last_txn", {})
             except Exception:
@@ -275,71 +291,6 @@ class CorpusIndexService:
                 out.append(full)
         return out
 
-    def _fold_docs(self, doc_shards: list[str], txn: tuple[str, int]) -> None:
-        new_docs = self.spark.read.parquet(*doc_shards)
-        if self.text_index is not None:
-            from csv_crm_upload_spark.analytics.retrieval import update_text_index
-
-            update_text_index(new_docs, self.text_index, txn=txn)
-        if self.dedup_index is not None:
-            from csv_crm_upload_spark.analytics.dedup import update_dedup_index
-
-            update_dedup_index(new_docs, self.dedup_index, txn=txn)
-        if self.nb_model is not None:
-            from csv_crm_upload_spark.analytics.nbayes import update_nb_model
-
-            update_nb_model(new_docs, self.nb_model, txn=txn)
-        if self.winnow_index is not None:
-            from csv_crm_upload_spark.analytics.winnow import update_winnow_index
-
-            update_winnow_index(new_docs, self.winnow_index, txn=txn)
-        if self.bpe_model is not None:
-            from csv_crm_upload_spark.analytics.bpe import update_bpe_model
-
-            update_bpe_model(new_docs, self.bpe_model, txn=txn)
-        if self.substr_index is not None:
-            from csv_crm_upload_spark.analytics.substr import update_substr_index
-
-            update_substr_index(new_docs, self.substr_index, txn=txn)
-        if self.ngram_model is not None:
-            from csv_crm_upload_spark.analytics.ngramlm import update_ngramlm_model
-
-            update_ngramlm_model(new_docs, self.ngram_model, txn=txn)
-
-    def _fold_emb(self, emb_shards: list[str], txn: tuple[str, int]) -> None:
-        new_emb = self.spark.read.parquet(*emb_shards)
-        if self.ivf_index is not None:
-            from csv_crm_upload_spark.analytics.ivf import update_index
-
-            update_index(new_emb, self.ivf_index, txn=txn)
-        if self.pq_index is not None:
-            from csv_crm_upload_spark.analytics.pq import update_pq_index
-
-            update_pq_index(new_emb, self.pq_index, txn=txn)
-        if self.ivfpq_index is not None:
-            from csv_crm_upload_spark.analytics.ivfpq import update_ivfpq_index
-
-            update_ivfpq_index(new_emb, self.ivfpq_index, txn=txn)
-        if self.pca_model is not None:
-            from csv_crm_upload_spark.analytics.pca import update_pca_model
-
-            update_pca_model(new_emb, self.pca_model, txn=txn)
-
-    def _fold_events(self, event_shards: list[str], txn: tuple[str, int]) -> None:
-        new_events = self.spark.read.parquet(*event_shards)
-        if self.daily_rollup is not None:
-            from csv_crm_upload_spark.analytics.rollup import update_daily_rollup
-
-            update_daily_rollup(new_events, self.daily_rollup, txn=txn)
-        if self.audit_log is not None:
-            from csv_crm_upload_spark.analytics.auditlog import append_batch_audit
-
-            # batch_key names the fold txn so a log row is traceable to
-            # the exact shard batch the cursor's intent recorded
-            append_batch_audit(
-                new_events, self.audit_log, f"{txn[0]}-{txn[1]}", txn=txn
-            )
-
     def _fold_batch(self, batch: dict) -> None:
         """Fold one intent-logged shard batch into every registered
         index with this batch's txn seq, then commit the cursor with
@@ -350,19 +301,21 @@ class CorpusIndexService:
           3. the cursor commit marks the batch seen and clears intent.
 
         A crash anywhere replays exactly this batch with the same seq
-        on restart: updates that already committed see
-        manifest.txn_already_applied and no-op, the rest fold — so no
-        index ever double-folds a shard and none misses one. This
-        closes the at-least-once window the plain cursor had (where a
-        crash between an index commit and the cursor write re-folded
-        the batch into ADDITIVE models, double-counting it)."""
+        on restart: updates that already committed hit their
+        manifest's txn guard and no-op, the rest fold — so no index
+        ever double-folds a shard (which would double-count the
+        additive models) and none misses one."""
         seq = self._txn_seq + 1
-        if batch.get("docs"):
-            self._fold_docs(batch["docs"], ("tick-docs", seq))
-        if batch.get("embeddings"):
-            self._fold_emb(batch["embeddings"], ("tick-emb", seq))
-        if batch.get("events"):
-            self._fold_events(batch["events"], ("tick-events", seq))
+        for stream, app in (
+            ("docs", "tick-docs"),
+            ("embeddings", "tick-emb"),
+            ("events", "tick-events"),
+        ):
+            if batch.get(stream):
+                frame = self.spark.read.parquet(*batch[stream])
+                for kind, path in self.paths.items():
+                    if INDEXES[kind].stream == stream:
+                        INDEXES[kind].update(frame, path, txn=(app, seq))
         self._seen.update(batch.get("docs", []))
         self._seen.update(batch.get("embeddings", []))
         self._seen.update(batch.get("events", []))
@@ -404,53 +357,11 @@ class CorpusIndexService:
         outgrown `compact_after` appends — each compactor is its own
         atomic manifest commit, so a crash between indexes leaves every
         index individually consistent."""
-        from csv_crm_upload_spark.operators.manifest import read_manifest
-
-        compactors = []
-        if self.text_index is not None:
-            from csv_crm_upload_spark.analytics.retrieval import compact_text_index
-
-            compactors.append((self.text_index, compact_text_index))
-        if self.dedup_index is not None:
-            from csv_crm_upload_spark.analytics.dedup import compact_dedup_index
-
-            compactors.append((self.dedup_index, compact_dedup_index))
-        if self.ivf_index is not None:
-            from csv_crm_upload_spark.analytics.ivf import compact_index
-
-            compactors.append((self.ivf_index, compact_index))
-        if self.pq_index is not None:
-            from csv_crm_upload_spark.analytics.pq import compact_pq_index
-
-            compactors.append((self.pq_index, compact_pq_index))
-        if self.ivfpq_index is not None:
-            from csv_crm_upload_spark.analytics.ivfpq import compact_ivfpq_index
-
-            compactors.append((self.ivfpq_index, compact_ivfpq_index))
-        if self.winnow_index is not None:
-            from csv_crm_upload_spark.analytics.winnow import compact_winnow_index
-
-            compactors.append((self.winnow_index, compact_winnow_index))
-        if self.substr_index is not None:
-            from csv_crm_upload_spark.analytics.substr import compact_substr_index
-
-            compactors.append((self.substr_index, compact_substr_index))
-        if self.ngram_model is not None:
-            from csv_crm_upload_spark.analytics.ngramlm import compact_ngramlm_model
-
-            compactors.append((self.ngram_model, compact_ngramlm_model))
-        if self.daily_rollup is not None:
-            from csv_crm_upload_spark.analytics.rollup import compact_daily_rollup
-
-            compactors.append((self.daily_rollup, compact_daily_rollup))
-        if self.audit_log is not None:
-            from csv_crm_upload_spark.analytics.auditlog import compact_audit_log
-
-            compactors.append((self.audit_log, compact_audit_log))
-        for path, compactor in compactors:
+        for kind, path in self.paths.items():
+            compact = INDEXES[kind].compact
             m = read_manifest(path)
-            if m["epoch"] - m.get("base_epoch", 0) >= self.compact_after:
-                compactor(self.spark, path)
+            if compact and m["epoch"] - m.get("base_epoch", 0) >= self.compact_after:
+                compact(self.spark, path)
 
     def vacuum(self) -> list[str]:
         """Delete stale epoch dirs every registered index's CURRENT
@@ -458,27 +369,9 @@ class CorpusIndexService:
         chains). Deliberately NOT on the tick: like store.vacuum, the
         caller asserts no probe still holds an older manifest. Returns
         the removed paths."""
-        from csv_crm_upload_spark.operators.manifest import gc_stale_epochs
-
         removed: list[str] = []
-        for kind, idx_path in (
-            ("text", self.text_index),
-            ("dedup", self.dedup_index),
-            ("ivf", self.ivf_index),
-            ("pq", self.pq_index),
-            ("ivfpq", self.ivfpq_index),
-            ("nb", self.nb_model),
-            ("winnow", self.winnow_index),
-            ("bpe", self.bpe_model),
-            ("pca", self.pca_model),
-            ("substr", self.substr_index),
-            ("ngramlm", self.ngram_model),
-            ("rollup", self.daily_rollup),
-            ("auditlog", self.audit_log),
-        ):
-            if idx_path is not None:
-                ranged, pinned = INDEX_LAYOUTS[kind]
-                removed.extend(gc_stale_epochs(idx_path, ranged, pinned))
+        for kind, path in self.paths.items():
+            removed += gc_stale_epochs(path, INDEXES[kind].layout)
         return removed
 
 
@@ -511,14 +404,17 @@ def run_index_maintenance_stream(
     Crash contract — strictly stronger than the cursor service:
     foreachBatch re-delivers a batch after a crash (at-least-once), and
     each index's update records (app_id, batch_id) IN the same atomic
-    manifest commit as the epoch it folds (manifest.txn_already_applied)
+    manifest commit as the epoch it folds (manifest.append's txn guard)
     — so a replayed batch no-ops per index and the fold is EXACTLY-ONCE
     in effect, with no cross-commit window at all. `kind` selects the
-    shard schema: "documents" feeds the text/dedup indexes,
-    "embeddings" feeds the vector indexes, "events" feeds the daily
-    rollup."""
+    shard schema: "documents" feeds the text/dedup/NB/winnow/BPE
+    indexes, "embeddings" the vector indexes and the PCA model,
+    "events" the daily rollup and the audit log (each micro-batch logs
+    its own sketch-vs-exact verdict rows)."""
     from csv_crm_upload_spark.schemas import TESTDATA_SCHEMAS
 
+    args = locals()  # the INDEXES arguments given: every batch folds into each
+    paths = {k: args[k] for k in INDEXES if args.get(k) is not None}
     app = app_id or f"index-maint-{kind}"
     # recursiveFileLookup: shards land as bare parquet files OR as
     # directories of part files (df.write.parquet) — pick up both
@@ -529,54 +425,8 @@ def run_index_maintenance_stream(
     )
 
     def process(batch_df, batch_id: int) -> None:
-        txn = (app, batch_id)
-        if text_index is not None:
-            from csv_crm_upload_spark.analytics.retrieval import update_text_index
-
-            update_text_index(batch_df, text_index, txn=txn)
-        if dedup_index is not None:
-            from csv_crm_upload_spark.analytics.dedup import update_dedup_index
-
-            update_dedup_index(batch_df, dedup_index, txn=txn)
-        if nb_model is not None:
-            from csv_crm_upload_spark.analytics.nbayes import update_nb_model
-
-            update_nb_model(batch_df, nb_model, txn=txn)
-        if winnow_index is not None:
-            from csv_crm_upload_spark.analytics.winnow import update_winnow_index
-
-            update_winnow_index(batch_df, winnow_index, txn=txn)
-        if bpe_model is not None:
-            from csv_crm_upload_spark.analytics.bpe import update_bpe_model
-
-            update_bpe_model(batch_df, bpe_model, txn=txn)
-        if ivf_index is not None:
-            from csv_crm_upload_spark.analytics.ivf import update_index
-
-            update_index(batch_df, ivf_index, txn=txn)
-        if pq_index is not None:
-            from csv_crm_upload_spark.analytics.pq import update_pq_index
-
-            update_pq_index(batch_df, pq_index, txn=txn)
-        if ivfpq_index is not None:
-            from csv_crm_upload_spark.analytics.ivfpq import update_ivfpq_index
-
-            update_ivfpq_index(batch_df, ivfpq_index, txn=txn)
-        if pca_model is not None:
-            from csv_crm_upload_spark.analytics.pca import update_pca_model
-
-            update_pca_model(batch_df, pca_model, txn=txn)
-        if daily_rollup is not None:
-            from csv_crm_upload_spark.analytics.rollup import update_daily_rollup
-
-            update_daily_rollup(batch_df, daily_rollup, txn=txn)
-        if audit_log is not None:
-            from csv_crm_upload_spark.analytics.auditlog import append_batch_audit
-
-            # the per-batch audit cadence in runnable form: every event
-            # micro-batch logs its own sketch-vs-exact verdict rows,
-            # exactly-once via the same (app, batch_id) manifest guard
-            append_batch_audit(batch_df, audit_log, f"{app}-{batch_id}", txn=txn)
+        for name, path in paths.items():
+            INDEXES[name].update(batch_df, path, txn=(app, batch_id))
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -39,8 +39,6 @@ _DEEP_FILES = {
     "test_corpus_prep.py",       # 0.9
     "test_cli.py",               # 0.9
     "test_property_merge.py",    # 0.8
-    "test_substr_index.py",      # 0.6
-    "test_winnow_index.py",      # 0.5
     "test_jdbc_store.py",        # 0.5
 }
 

@@ -313,7 +313,7 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
     from csv_crm_upload_spark.analytics.substr import save_substr_index
     from csv_crm_upload_spark.analytics.winnow import save_winnow_index
     from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import INDEX_LAYOUTS
+    from csv_crm_upload_spark.streaming.index_service import INDEXES
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -322,20 +322,22 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
     base_emb = emb.filter(F.col("vec_id") % 12 == 0)
     base_events = events.filter(F.col("event_id") % 12 == 0)
 
-    paths = {k: str(tmp_path / f"{k}_idx") for k in INDEX_LAYOUTS}
-    rtr.save_text_index(base_docs, paths["text"], n_buckets=16)
-    dd.save_dedup_index(base_docs, paths["dedup"])
-    _ivf.save_index(base_emb, paths["ivf"], n_cells=4)
-    _pq.save_pq_index(base_emb, paths["pq"], m=8, n_codes=16)
-    _ivfpq.save_ivfpq_index(base_emb, paths["ivfpq"], n_cells=4, m=8, n_codes=16)
-    save_nb_model(base_docs, paths["nb"])
-    save_winnow_index(base_docs, paths["winnow"])
-    save_bpe_model(base_docs, paths["bpe"], steps=2)
-    save_pca_model(base_emb, paths["pca"], r=4)
-    save_substr_index(base_docs, paths["substr"])
-    save_ngramlm_model(base_docs, paths["ngramlm"])
-    save_daily_rollup(base_events, paths["rollup"])
-    save_audit_log(spark, paths["auditlog"])
+    paths = {k: str(tmp_path / k) for k in INDEXES}
+    rtr.save_text_index(base_docs, paths["text_index"], n_buckets=16)
+    dd.save_dedup_index(base_docs, paths["dedup_index"])
+    _ivf.save_index(base_emb, paths["ivf_index"], n_cells=4)
+    _pq.save_pq_index(base_emb, paths["pq_index"], m=8, n_codes=16)
+    _ivfpq.save_ivfpq_index(
+        base_emb, paths["ivfpq_index"], n_cells=4, m=8, n_codes=16
+    )
+    save_nb_model(base_docs, paths["nb_model"])
+    save_winnow_index(base_docs, paths["winnow_index"])
+    save_bpe_model(base_docs, paths["bpe_model"], steps=2)
+    save_pca_model(base_emb, paths["pca_model"], r=4)
+    save_substr_index(base_docs, paths["substr_index"])
+    save_ngramlm_model(base_docs, paths["ngram_model"])
+    save_daily_rollup(base_events, paths["daily_rollup"])
+    save_audit_log(spark, paths["audit_log"])
 
     docs_drop = str(tmp_path / "docs_drop")
     emb_drop = str(tmp_path / "emb_drop")
@@ -349,20 +351,8 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
         docs_dir=docs_drop,
         emb_dir=emb_drop,
         events_dir=events_drop,
-        text_index=paths["text"],
-        dedup_index=paths["dedup"],
-        ivf_index=paths["ivf"],
-        pq_index=paths["pq"],
-        ivfpq_index=paths["ivfpq"],
-        nb_model=paths["nb"],
-        winnow_index=paths["winnow"],
-        bpe_model=paths["bpe"],
-        pca_model=paths["pca"],
-        substr_index=paths["substr"],
-        ngram_model=paths["ngramlm"],
-        daily_rollup=paths["rollup"],
-        audit_log=paths["auditlog"],
         compact_after=COMPACT_AFTER,
+        **paths,
     )
 
     N_TICKS = 10
@@ -390,7 +380,7 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
     # the audit LOG kept pace with the folds: every tick's event batch
     # logged its verdict rows exactly once, traceable by batch_key, and
     # compaction (a plain fold for facts) never dropped or doubled one
-    audit = read_audit_rows(spark, paths["auditlog"]).collect()
+    audit = read_audit_rows(spark, paths["audit_log"]).collect()
     keys = {r["batch_key"] for r in audit}
     assert len(keys) == N_TICKS, f"expected {N_TICKS} logged batches, got {keys}"
     assert all(k.startswith("tick-events-") for k in keys)
@@ -402,9 +392,9 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
     # post-vacuum disk state == exactly what the manifests reference
     for kind, path in paths.items():
         m = read_manifest(path)
-        ranged, pinned = INDEX_LAYOUTS[kind]
+        layout = INDEXES[kind].layout
         lo, hi = m.get("base_epoch", 0), m["epoch"]
-        for sub in ranged:
+        for sub in [*layout.ranged, *layout.snapshots]:
             on_disk = sorted(
                 int(d.split("=", 1)[1])
                 for d in os.listdir(os.path.join(path, sub))
@@ -414,17 +404,19 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
                 f"{kind}/{sub}: {on_disk} vs manifest [{lo},{hi}]"
             )
             assert len(on_disk) <= COMPACT_AFTER + 1
-        for sub, key in pinned.items():
+        for sub, key in layout.pinned.items():
             on_disk = [
                 d for d in os.listdir(os.path.join(path, sub)) if d.startswith("epoch=")
             ]
             assert on_disk == [f"epoch={m[key]}"], f"{kind}/{sub}: {on_disk}"
 
     # NB snapshots: every superseded copy reclaimed (one live epoch)
-    nb_m = read_manifest(paths["nb"])
-    for sub in INDEX_LAYOUTS["nb"][0]:
+    nb_m = read_manifest(paths["nb_model"])
+    for sub in INDEXES["nb_model"].layout.snapshots:
         dirs = [
-            d for d in os.listdir(os.path.join(paths["nb"], sub)) if d.startswith("epoch=")
+            d
+            for d in os.listdir(os.path.join(paths["nb_model"], sub))
+            if d.startswith("epoch=")
         ]
         assert dirs == [f"epoch={nb_m['epoch']}"], f"nb/{sub}: {dirs}"
 
@@ -437,7 +429,7 @@ def test_soak_sustained_appends_bounded_epochs_and_vacuum(spark, sf_dir, tmp_pat
         key=lambda t: (t[0], t[-1]),
     )
     indexed = sorted(
-        map(tuple, rtr.bm25_search_indexed(spark, paths["text"]).collect()),
+        map(tuple, rtr.bm25_search_indexed(spark, paths["text_index"]).collect()),
         key=lambda t: (t[0], t[-1]),
     )
     assert indexed == inline

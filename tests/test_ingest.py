@@ -10,6 +10,7 @@ from csv_crm_upload_spark.operators.dedup import anti_join_existing, dedupe_batc
 from csv_crm_upload_spark.operators.store import CustomerStore
 from csv_crm_upload_spark.operators.validate import validate_split
 from csv_crm_upload_spark.plans.ingest import ingest_csv
+from csv_crm_upload_spark.schemas import CUSTOMER_CSV_SCHEMA
 from csv_crm_upload_spark.sources.csv_source import read_customers_csv
 
 
@@ -35,6 +36,19 @@ def test_validate_dispositions(spark, bad_csv):
     assert reasons == {("500l", "bad_id"), ("5004", "empty_email")}
     # clean ids are typed long
     assert dict(clean.dtypes)["id"] == "bigint"
+
+
+def test_whitespace_only_email_quarantined(spark):
+    # every str.isspace character counts as blank, not only the ASCII
+    # space F.trim strips
+    blanks = [" ", "\t", "\n", "\x1f", "\x85", "\u3000", " \t\u2028 "]
+    rows = [(str(i), "a", "b", e, "1", None) for i, e in enumerate(blanks)]
+    rows.append(("99", "a", "b", " a@x.com\t", "1", None))
+    raw = spark.createDataFrame(rows, schema=CUSTOMER_CSV_SCHEMA)
+    clean, quarantine = validate_split(raw)
+    assert [r["id"] for r in clean.collect()] == [99]
+    assert {r["reason"] for r in quarantine.collect()} == {"empty_email"}
+    assert quarantine.count() == len(blanks)
 
 
 def test_malformed_line_quarantined(spark, tmp_path):

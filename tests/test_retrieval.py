@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics import retrieval as rtr
+from csv_crm_upload_spark.operators.manifest import read_manifest
 
 
 def _docs(spark, rows):
@@ -78,7 +79,7 @@ def test_update_with_empty_append_is_noop(spark, tmp_path):
 
     after = sorted(map(tuple, rtr.bm25_search_indexed(spark, idx, {0: ["spark"]}).collect()))
     assert before == after
-    assert rtr._read_manifest(idx)["epoch"] == 0, "empty appends must not commit an epoch"
+    assert read_manifest(idx)["epoch"] == 0, "empty appends must not commit an epoch"
 
 
 def test_probe_during_update_sees_old_or_new_snapshot(spark, sf_dir, tmp_path):
