@@ -79,9 +79,7 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def cluster_for_write(
-    df: DataFrame, *cols: str, max_bucket_rows: int | None = None
-) -> DataFrame:
+def cluster_for_write(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-cluster rows on the physical partition column(s) before a
     `partitionBy` write, so each partition value is written by (usually)
     one task instead of every task writing a sliver of every value —
@@ -91,33 +89,7 @@ def cluster_for_write(
     after. At scale the per-bucket file size is governed by the build's
     own n_buckets parameter — the pruning grain and the file grain are
     deliberately the same knob, and AQE partition coalescing keeps the
-    shuffle cheap when the table is small.
-
-    `max_bucket_rows` (round-13 skew guard, guide §2.5): every current
-    call site clusters on a `pmod(hash(...), n_buckets)` column, so
-    values are near-uniform by construction and the default (None, one
-    task/file per value) is right. For a NON-hashed partition column a
-    hot value would otherwise funnel into one straggler task and one
-    giant file; with a threshold, values whose row count exceeds it are
-    salted deterministically (xxhash64 of the whole row — retry-safe)
-    across ceil(n/threshold) sub-tasks, so the hot value gets
-    proportionally many tasks/files while every cold value keeps exactly
-    one. Costs one bucket-grain count pass + a broadcast join; only pay
-    it when the partition column's distribution is not already hashed."""
+    shuffle cheap when the table is small."""
     from pyspark.sql import functions as F
 
-    key_cols = [F.col(c) for c in cols]
-    if max_bucket_rows is None:
-        return df.repartition(*key_cols)
-    counts = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("_cfw_n"))
-    n_salts = F.ceil(F.col("_cfw_n") / F.lit(float(max_bucket_rows))).cast("int")
-    salt = F.when(
-        F.col("_cfw_n") > max_bucket_rows,
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), n_salts),
-    ).otherwise(F.lit(0))
-    return (
-        df.join(F.broadcast(counts), list(cols))
-        .withColumn("_cfw_salt", salt)
-        .repartition(*key_cols, F.col("_cfw_salt"))
-        .drop("_cfw_n", "_cfw_salt")
-    )
+    return df.repartition(*[F.col(c) for c in cols])

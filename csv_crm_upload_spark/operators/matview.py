@@ -41,6 +41,9 @@ from csv_crm_upload_spark.operators.store import CustomerStore
 
 _ADD_TAGS = ("insert", "update_postimage")
 _DEL_TAGS = ("delete", "update_preimage")
+# the refresh cursor lives INSIDE the data dir (Spark skips `_` files), so
+# one rename commits the aggregate and the store version it reflects
+_CURSOR = "_VIEW_META.json"
 
 
 class MaterializedAggregate:
@@ -69,15 +72,12 @@ class MaterializedAggregate:
 
     # -- state -------------------------------------------------------------
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "_VIEW_META.json")
-
     def _data_path(self) -> str:
         return os.path.join(self.root, "data")
 
     def last_refreshed_version(self) -> int:
         try:
-            with open(self._meta_path()) as fh:
+            with open(os.path.join(self._data_path(), _CURSOR)) as fh:
                 return int(json.load(fh)["store_version"])
         except (OSError, ValueError, KeyError):
             return -1
@@ -113,17 +113,14 @@ class MaterializedAggregate:
         return changes.groupBy(*self.group_cols).agg(*self._agg_cols(sign))
 
     def _write(self, df: DataFrame, store_version: int) -> None:
-        # snapshot-swap: stage to a temp dir, then atomically rename over
-        # the old data so concurrent readers never see a half-written view
+        # snapshot-swap: stage the aggregate AND its cursor to a temp dir,
+        # then atomically rename over the old data, so concurrent readers
+        # never see a half-written view and a crash after the swap can
+        # never pair the new aggregate with the old cursor (which would
+        # fold the same delta twice on the next refresh)
         tmp = os.path.join(self.root, f"_stage_{uuid.uuid4().hex}")
         df.repartition(1).write.mode("overwrite").parquet(tmp)
-        old = self._data_path()
-        back = os.path.join(self.root, f"_old_{uuid.uuid4().hex}")
-        if os.path.isdir(old):
-            os.rename(old, back)
-        os.rename(tmp, old)
-        shutil.rmtree(back, ignore_errors=True)
-        with open(self._meta_path(), "w") as fh:
+        with open(os.path.join(tmp, _CURSOR), "w") as fh:
             json.dump(
                 {
                     "store_version": store_version,
@@ -132,6 +129,12 @@ class MaterializedAggregate:
                 },
                 fh,
             )
+        old = self._data_path()
+        back = os.path.join(self.root, f"_old_{uuid.uuid4().hex}")
+        if os.path.isdir(old):
+            os.rename(old, back)
+        os.rename(tmp, old)
+        shutil.rmtree(back, ignore_errors=True)
 
     # -- refresh -----------------------------------------------------------
 

@@ -19,6 +19,25 @@ by `pmod(xxhash64(email), n_buckets)`:
   * the flip count is derived from the (small, broadcast) success set
     joined against the pruned bucket read — never a full-table count.
 
+Physical layout, decided in one place each:
+  * schema — the declared physical schema is CUSTOMER_SCHEMA plus every
+    evolved column under its physical name and `_META` type. Every
+    parquet read (`_scan`: a version, some of its buckets, or a staging
+    dir) passes it, so no read infers from file footers; the bucket
+    column `b` comes from partition discovery, and an evolved column a
+    file lacks reads as NULL. Writes project and cast to the same schema.
+  * staging — `_staged` writes rows to a fresh `staging_*` dir,
+    clustered and partitioned by bucket, and removes the dir afterwards.
+  * commit — `_commit_version` builds version v+1 from a base version
+    (hard-linking every bucket not replaced), the buckets to replace and
+    a staged dir, writes `_COMMIT.json` and swaps `_LATEST`. Every
+    mutation (append, append_unique, merge, mark_uploaded, delete,
+    compact, restore, clone) goes through it.
+  * crash debris — a writer that dies after creating v+1 and before the
+    `_LATEST` swap leaves a version dir above `_LATEST`. The write lock
+    removes such dirs when it is taken, and `versions()` lists only
+    committed versions.
+
 Uniqueness (D1) is enforced with optimistic concurrency: `append_unique`
 stages its anti-joined batch against the snapshot it observed, then
 re-verifies INSIDE the write lock — if another writer committed in
@@ -47,11 +66,11 @@ the minimum of each on plain parquet + hard links):
 
 Schema evolution semantics (add_column): adding a column is an O(1)
 metadata commit — NO data rewrite, matching Delta/Iceberg. Files written
-before the column existed simply lack it; reads merge schemas and fill
-the gap with the column's default. A column added WITH a default behaves
-like SQL `ADD COLUMN ... NOT NULL DEFAULT x` (reads coalesce NULL → x,
-so NULL is not representable in it); a column added without one is
-nullable and old rows read as NULL.
+before the column existed simply lack it; the declared-schema read
+returns NULL there and fills it with the column's default. A column
+added WITH a default behaves like SQL `ADD COLUMN ... NOT NULL DEFAULT x`
+(reads coalesce NULL → x, so NULL is not representable in it); a column
+added without one is nullable and old rows read as NULL.
 Known limit vs a real table format: the advisory pid-liveness write lock
 is single-host; cross-host multi-writer needs a real format's atomic
 log commit (documented, not simulated).
@@ -68,6 +87,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from csv_crm_upload_spark.operators.mutate import mark_uploaded
 from csv_crm_upload_spark.schemas import CUSTOMER_SCHEMA
@@ -90,6 +110,11 @@ def _bucket_col(n_buckets: int):
     """Bucket id for a row: pmod(xxhash64(email), n) — email is the
     reference's upload idempotency key, so success sets prune well."""
     return F.pmod(F.xxhash64(F.col("email")), F.lit(n_buckets)).cast("int")
+
+
+def _physical(e: dict) -> str:
+    """File (physical) name of an evolved column — see rename_column."""
+    return e.get("physical", e["name"])
 
 
 class CustomerStore:
@@ -119,6 +144,16 @@ class CustomerStore:
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path)
+
+    @contextlib.contextmanager
+    def _edit_meta(self):
+        """The one locked read-modify-write of _META: edits to the yielded
+        dict are written back when the block exits normally; an exception
+        leaves _META as it was."""
+        with self._write_lock():
+            meta = self._read_meta()
+            yield meta
+            self._write_meta(meta)
 
     def _load_or_init_meta(self, n_buckets: int) -> int:
         """Bucket count is a table property: fixed at creation, read back
@@ -152,11 +187,10 @@ class CustomerStore:
         "timestamp", ...)."""
         # validate the type string (and default castability) up front so a
         # typo fails here, not in some later read
-        probe = self.spark.createDataFrame([], f"`{name}` {dtype}")
+        T._parse_datatype_string(dtype)
         if default is not None:
-            probe.select(F.lit(default).cast(dtype)).schema  # noqa: B018
-        with self._write_lock():
-            meta = self._read_meta()
+            self.spark.range(1).select(F.lit(default).cast(dtype)).schema  # noqa: B018
+        with self._edit_meta() as meta:
             extras = meta.get("extra_cols", [])
             taken = {f.name for f in CUSTOMER_SCHEMA.fields} | {e["name"] for e in extras}
             if name in taken or name == "b":
@@ -165,10 +199,7 @@ class CustomerStore:
             # physical column (dropped, or freed by a rename), data for it
             # may survive in old files — a fresh physical name keeps that
             # data from resurrecting (Delta column-mapping semantics)
-            used_phys = (
-                set(meta.get("retired_physicals", []))
-                | {e.get("physical", e["name"]) for e in extras}
-            )
+            used_phys = set(meta.get("retired_physicals", [])) | {_physical(e) for e in extras}
             entry = {"name": name, "type": dtype, "default": default}
             if name in used_phys:
                 n = int(meta.get("phys_counter", 0)) + 1
@@ -176,7 +207,6 @@ class CustomerStore:
                 entry["physical"] = f"{name}__p{n}"
             extras.append(entry)
             meta["extra_cols"] = extras
-            self._write_meta(meta)
 
     def rename_column(self, old: str, new: str) -> None:
         """ALTER TABLE RENAME COLUMN — metadata-only, for evolved columns.
@@ -185,8 +215,7 @@ class CustomerStore:
         snapshots read back under the NEW name (Delta column-mapping
         `name` mode). Base schema columns are the reference's contract
         (email is the merge/bucket key) and stay fixed."""
-        with self._write_lock():
-            meta = self._read_meta()
+        with self._edit_meta() as meta:
             extras = meta.get("extra_cols", [])
             match = [e for e in extras if e["name"] == old]
             if not match:
@@ -198,7 +227,6 @@ class CustomerStore:
             e.setdefault("physical", e["name"])
             e["name"] = new
             meta["extra_cols"] = extras
-            self._write_meta(meta)
 
     def drop_column(self, name: str) -> None:
         """ALTER TABLE DROP COLUMN — metadata-only, for evolved columns.
@@ -206,65 +234,65 @@ class CustomerStore:
         bytes are reclaimed lazily as rewrites (compact/merge/delete)
         regenerate the files without it. The physical name is retired so
         a later add_column of the same name cannot resurrect old data."""
-        with self._write_lock():
-            meta = self._read_meta()
+        with self._edit_meta() as meta:
             extras = meta.get("extra_cols", [])
             match = [e for e in extras if e["name"] == name]
             if not match:
                 raise ValueError(f"not an evolved column (only those drop): {name}")
             retired = set(meta.get("retired_physicals", []))
-            retired.add(match[0].get("physical", match[0]["name"]))
+            retired.add(_physical(match[0]))
             meta["retired_physicals"] = sorted(retired)
             meta["extra_cols"] = [e for e in extras if e["name"] != name]
-            self._write_meta(meta)
 
-    def _apply_extras(self, df: DataFrame, extras: list[dict]) -> DataFrame:
-        """Widen a physical scan to the logical schema: evolved columns
-        missing from every scanned file are added as default literals;
-        present ones coalesce NULL → default (files older than the column
-        return NULL for it under mergeSchema). Files store the PHYSICAL
-        name (column mapping — see rename_column); the scan surfaces the
-        current logical name."""
-        for e in extras:
-            phys = e.get("physical", e["name"])
-            d = F.lit(e["default"]).cast(e["type"])
-            # ONLY the physical name is read — every write path stores it,
-            # and falling back to a same-named column from files of a
-            # since-dropped column would resurrect dead data
-            if phys not in df.columns:
-                df = df.withColumn(e["name"], d)
-                continue
-            expr = F.coalesce(F.col(phys), d) if e["default"] is not None else F.col(phys)
-            if phys != e["name"]:
-                df = df.withColumn(e["name"], expr.cast(e["type"])).drop(phys)
-            else:
-                df = df.withColumn(e["name"], expr.cast(e["type"]))
-        return df
+    def _physical_schema(self, extras: list[dict]) -> T.StructType:
+        """The declared schema of every data file: CUSTOMER_SCHEMA plus
+        each evolved column under its physical name and _META type. A
+        physical name that is not listed (a dropped column) is never
+        read, so its old data cannot resurface."""
+        return T.StructType(
+            CUSTOMER_SCHEMA.fields
+            + [T.StructField(_physical(e), T._parse_datatype_string(e["type"])) for e in extras]
+        )
 
-    def _to_physical(self, df: DataFrame, extras: list[dict] | None = None) -> DataFrame:
-        """Map logical column names back to their physical (file) names —
-        the inverse of _apply_extras, applied immediately before any
-        parquet write so files always store physical names."""
+    def _scan(
+        self, vdir: str | None, buckets: list[str] | None = None, extras: list[dict] | None = None
+    ) -> DataFrame:
+        """The one parquet read: a version (or staging) dir, or just the
+        named `b=K` buckets of it (partition pruning by path), always with
+        the declared physical schema — no footer inference, no Spark job.
+        `b` comes from partition discovery; an empty bucket list is an
+        empty frame. Evolved columns surface under their logical names,
+        NULL filled with the column's default."""
         extras = self._extras() if extras is None else extras
+        schema = self._physical_schema(extras)
+        if buckets is None:
+            df = self.spark.read.schema(schema).parquet(vdir)
+        elif buckets:
+            df = (
+                self.spark.read.schema(schema)
+                .option("basePath", vdir)
+                .parquet(*[os.path.join(vdir, b) for b in buckets])
+            )
+        else:
+            df = self.spark.createDataFrame([], schema)
+        evolved = []
         for e in extras:
-            phys = e.get("physical", e["name"])
-            if phys != e["name"] and e["name"] in df.columns:
-                df = df.withColumnRenamed(e["name"], phys)
-        return df
+            c = F.col(_physical(e))
+            if e["default"] is not None:
+                c = F.coalesce(c, F.lit(e["default"]).cast(e["type"]))
+            evolved.append(c.alias(e["name"]))
+        base = [F.col(f.name) for f in CUSTOMER_SCHEMA.fields]
+        return df.select(*base, *evolved, *(["b"] if "b" in df.columns else []))
 
-    def _conform(self, batch: DataFrame, extras: list[dict] | None = None) -> DataFrame:
-        """Project a writer's batch to the full table schema, defaulting
-        evolved columns the batch does not carry."""
-        extras = self._extras() if extras is None else extras
-        out = []
-        for f in CUSTOMER_SCHEMA.fields:
-            out.append(F.col(f.name))
+    def _physical_cols(self, df: DataFrame, extras: list[dict]) -> list:
+        """Project a logical frame onto the declared physical schema: base
+        columns cast to their DDL types, evolved columns under their
+        physical names (the column's default where `df` lacks it)."""
+        out = [F.col(f.name).cast(f.dataType).alias(f.name) for f in CUSTOMER_SCHEMA.fields]
         for e in extras:
-            if e["name"] in batch.columns:
-                out.append(F.col(e["name"]).cast(e["type"]).alias(e["name"]))
-            else:
-                out.append(F.lit(e["default"]).cast(e["type"]).alias(e["name"]))
-        return batch.select(*out)
+            src = F.col(e["name"]) if e["name"] in df.columns else F.lit(e["default"])
+            out.append(src.cast(e["type"]).alias(_physical(e)))
+        return out
 
     def _current_version(self) -> int:
         try:
@@ -276,25 +304,13 @@ class CustomerStore:
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.root, f"v{v:08d}")
 
-    def _commit(self, v: int, op: str = "write", metrics: dict | None = None) -> None:
-        # commit metadata rides inside the version dir (underscore-prefixed
-        # → invisible to Spark's partition discovery) and is written BEFORE
-        # the pointer swap, so a version is never visible without its
-        # history entry
-        info = {
-            "version": v,
-            "operation": op,
-            "timestamp": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
-            "metrics": metrics or {},
-        }
-        vdir = self._version_dir(v)
-        if os.path.isdir(vdir):
-            with open(os.path.join(vdir, "_COMMIT.json"), "w") as f:
-                json.dump(info, f)
-        tmp = self._latest_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._latest_path)  # atomic pointer swap
+    def _version_dirs(self) -> list[int]:
+        """Every `v%08d` dir on disk, committed or not, oldest first."""
+        return sorted(
+            int(name[1:])
+            for name in os.listdir(self.root)
+            if name.startswith("v") and name[1:].isdigit()
+        )
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY: one entry per still-on-disk snapshot, newest
@@ -326,7 +342,11 @@ class CustomerStore:
         lock when its recorded pid is dead or the file exceeds a max age.
         (Tiny race window between the liveness check and the remove —
         acceptable for an advisory CLI lock; a table format's transaction
-        log is the real answer.)"""
+        log is the real answer.)
+
+        Once held, version dirs above `_LATEST` can only be debris of a
+        writer that died before its pointer swap; they are removed, so
+        every writer builds on a root with no uncommitted version."""
         lock = os.path.join(self.root, "_LOCK")
         deadline = time.monotonic() + timeout_s
         while True:
@@ -347,6 +367,10 @@ class CustomerStore:
         try:
             os.write(fd, str(os.getpid()).encode())
             os.close(fd)
+            current = self._current_version()
+            for v in self._version_dirs():
+                if v > current:
+                    shutil.rmtree(self._version_dir(v), ignore_errors=True)
             yield
         finally:
             with contextlib.suppress(FileNotFoundError):
@@ -384,70 +408,70 @@ class CustomerStore:
         """ALTER TABLE ADD CONSTRAINT name CHECK (expr) — Delta-style
         declarative row constraints. EXISTING data is validated first
         (one filter-count scan; the add fails if any row violates), then
-        every staged write is gated (see _stage). SQL CHECK NULL
-        semantics: a row where the expression is NULL passes. Constraints
-        are ingest gates — the reference holds its equivalents (NOT NULL,
-        UNIQUE) in Postgres DDL; flag-flip/delete rewrites of already-
-        accepted rows are not re-validated."""
+        every staged write is gated (see _check_constraints). SQL CHECK
+        NULL semantics: a row where the expression is NULL passes.
+        Constraints are ingest gates — the reference holds its
+        equivalents (NOT NULL, UNIQUE) in Postgres DDL; flag-flip/delete
+        rewrites of already-accepted rows are not re-validated."""
         F.expr(expr)  # syntax-check up front
         bad = self.read().filter(F.expr(expr) == False).count()  # noqa: E712
         if bad:
             raise ConstraintViolation({name: bad})
-        with self._write_lock():
-            meta = self._read_meta()
+        with self._edit_meta() as meta:
             cons = meta.get("constraints", {})
             if name in cons:
                 raise ValueError(f"constraint already exists: {name}")
             cons[name] = expr
             meta["constraints"] = cons
-            self._write_meta(meta)
 
     def drop_constraint(self, name: str) -> None:
-        with self._write_lock():
-            meta = self._read_meta()
+        with self._edit_meta() as meta:
             cons = meta.get("constraints", {})
             if name not in cons:
                 raise KeyError(f"no such constraint: {name}")
             del cons[name]
             meta["constraints"] = cons
-            self._write_meta(meta)
 
-    # -- staging / commit helpers ------------------------------------------
-    def _stage(self, batch: DataFrame) -> str:
-        """Write a batch to a staging dir, partitioned by bucket.
-        Runs OUTSIDE the lock (the expensive part)."""
+    # -- staging / commit ---------------------------------------------------
+    @contextlib.contextmanager
+    def _staged(self, rows: DataFrame, sort_key=None):
+        """Write `rows` (logical column names) to a fresh staging dir in
+        the table's physical layout, yield the dir, and remove it on exit.
+        Rows are clustered by bucket before the `b=K` write: without that
+        every task writes a file into every bucket it touches (tasks ×
+        buckets small files — the classic streaming-sink killer).
+        `sort_key` additionally orders rows within each bucket."""
         staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-        (
-            self._to_physical(self._conform(batch))
-            .withColumn("b", _bucket_col(self.n_buckets))
-            # cluster rows by bucket before the write: without this every
-            # task writes a file into every bucket it touches (tasks ×
-            # buckets small files — the classic streaming-sink killer)
-            .repartition(self.n_buckets, "b")
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(staging)
-        )
+        cols = [*self._physical_cols(rows, self._extras()), _bucket_col(self.n_buckets).alias("b")]
+        if sort_key is not None:
+            cols.append(sort_key.alias("_z"))
+        out = rows.select(*cols).repartition(self.n_buckets, "b")
+        if sort_key is not None:
+            out = out.sortWithinPartitions("b", "_z").drop("_z")
+        try:
+            out.write.mode("overwrite").partitionBy("b").parquet(staging)
+            yield staging
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _check_constraints(self, staging: str) -> None:
+        """Gate a staged write on the CHECK constraints: one agg job over
+        the STAGED files (already materialized — no recompute of the batch
+        plan). sum skips the NULLs of (expr == false) on NULL expr rows,
+        giving SQL CHECK null-passes semantics; rules reference logical
+        column names."""
         cons = self._constraints()
-        if cons and self._bucket_dirs(staging):
-            # validate the STAGED files (already materialized — no
-            # recompute of the batch plan), one agg job for all rules;
-            # sum skips the NULLs of (expr == false) on NULL expr rows,
-            # giving SQL CHECK null-passes semantics. _apply_extras maps
-            # physical file names back to logical so rules reference the
-            # names users know.
-            staged = self._apply_extras(self.spark.read.parquet(staging), self._extras())
-            row = staged.agg(
-                *[
-                    F.sum((F.expr(e) == False).cast("int")).alias(n)  # noqa: E712
-                    for n, e in cons.items()
-                ]
-            ).first()
-            bad = {n: int(v) for n, v in row.asDict().items() if v}
-            if bad:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise ConstraintViolation(bad)
-        return staging
+        if not cons:
+            return
+        row = self._scan(staging).agg(
+            *[
+                F.sum((F.expr(e) == False).cast("int")).alias(n)  # noqa: E712
+                for n, e in cons.items()
+            ]
+        ).first()
+        bad = {n: int(v) for n, v in row.asDict().items() if v}
+        if bad:
+            raise ConstraintViolation(bad)
 
     @staticmethod
     def _bucket_dirs(version_dir: str) -> dict[str, str]:
@@ -472,30 +496,68 @@ class CustomerStore:
             if name.endswith(".parquet"):
                 os.link(os.path.join(src_dir, name), os.path.join(dst_dir, name))
 
-    def _commit_merge(
+    def _commit_version(
         self,
-        staging: str,
-        replace_buckets: set[str] = frozenset(),
+        staged: str | None,
+        replace: set[str] = frozenset(),
+        base: str | None = None,
         op: str = "append",
         metrics: dict | None = None,
     ) -> int:
-        """Create version v+1 = prev version ∪ staged buckets. MUST be
-        called inside the write lock. Buckets named in `replace_buckets`
-        take ONLY the staged files (U1 rewrite); all other prior buckets
-        are hard-linked (no data copy). Returns the new version."""
+        """The one commit routine: version v+1 = every bucket of `base`
+        (a version dir, default the current version) not named in
+        `replace`, hard-linked, plus every bucket of the `staged` dir.
+        Buckets in `replace` thus take ONLY the staged files (U1
+        rewrite); a replaced bucket with nothing staged disappears. MUST
+        be called inside the write lock. Commit metadata rides inside the
+        version dir (underscore-prefixed → invisible to Spark) and is
+        written BEFORE the atomic pointer swap, so a version is never
+        visible without its history entry. Returns the new version."""
         v = self._current_version()
-        new_v = v + 1
-        new_dir = self._version_dir(new_v)
-        os.makedirs(new_dir, exist_ok=True)
-        prev = self._bucket_dirs(self._version_dir(v)) if v >= 0 else {}
-        staged = self._bucket_dirs(staging)
-        for bname, bpath in prev.items():
-            if bname not in replace_buckets:
-                self._link_files(bpath, os.path.join(new_dir, bname))
-        for bname, bpath in staged.items():
+        new_dir = self._version_dir(v + 1)
+        os.makedirs(new_dir)
+        kept = self._bucket_dirs(self._version_dir(v) if base is None else base)
+        buckets = [(b, p) for b, p in kept.items() if b not in replace]
+        if staged is not None:
+            buckets += self._bucket_dirs(staged).items()
+        for bname, bpath in buckets:
             self._link_files(bpath, os.path.join(new_dir, bname))
-        self._commit(new_v, op=op, metrics=metrics)
-        return new_v
+        info = {
+            "version": v + 1,
+            "operation": op,
+            "timestamp": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
+            "metrics": metrics or {},
+        }
+        with open(os.path.join(new_dir, "_COMMIT.json"), "w") as f:
+            json.dump(info, f)
+        tmp = self._latest_path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(v + 1))
+        os.replace(tmp, self._latest_path)  # atomic pointer swap
+        return v + 1
+
+    def _bucket_of(self, email: str) -> str:
+        """`b=K` dir name of one email's bucket, computed with the
+        writer's own expression (one tiny job)."""
+        b = (
+            self.spark.range(1)
+            .select(F.lit(email).alias("email"))
+            .select(_bucket_col(self.n_buckets).alias("b"))
+            .first()["b"]
+        )
+        return f"b={b}"
+
+    def _hit_buckets(self, keys: DataFrame, v: int) -> list[str]:
+        """Buckets of version `v` that can hold an email of `keys` — the
+        pruning probe of every keyed rewrite: one small distinct-collect
+        of bucket ids, intersected with the buckets on disk."""
+        if v < 0:
+            return []
+        hit = {
+            f"b={r['b']}"
+            for r in keys.select(_bucket_col(self.n_buckets).alias("b")).distinct().collect()
+        }
+        return sorted(hit & set(self._bucket_dirs(self._version_dir(v))))
 
     # -- operators ----------------------------------------------------------
     def read(self) -> DataFrame:
@@ -506,28 +568,14 @@ class CustomerStore:
     def read_version(self, version: int) -> DataFrame:
         """Time travel: scan snapshot `version` (every committed version
         is immutable and remains readable until vacuumed) — the
-        `VERSION AS OF` surface of a lakehouse table format."""
-        extras = self._extras()
+        `VERSION AS OF` surface of a lakehouse table format. A snapshot
+        with no bucket dirs (delete() removed every row) reads empty."""
         if version < 0:
-            return self._apply_extras(
-                self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-            )
+            return self._scan(None, [])
         vdir = self._version_dir(version)
         if not os.path.isdir(vdir):
             raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
-        if not self._bucket_dirs(vdir):
-            # a legal empty snapshot (e.g. delete() removed every row)
-            return self._apply_extras(
-                self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-            )
-        reader = self.spark.read
-        if extras:
-            # snapshots can mix files written before/after an add_column —
-            # merge their footers into the widened schema
-            reader = reader.option("mergeSchema", "true")
-        return self._apply_extras(reader.parquet(vdir), extras).select(
-            *self._table_cols(extras)
-        )
+        return self._scan(vdir).drop("b")
 
     def read_as_of(self, ts: str) -> DataFrame:
         """TIMESTAMP AS OF: scan the newest still-on-disk snapshot whose
@@ -545,12 +593,8 @@ class CustomerStore:
 
     def versions(self) -> list[int]:
         """Committed snapshot versions still on disk, oldest first."""
-        out = sorted(
-            int(name[1:])
-            for name in os.listdir(self.root)
-            if name.startswith("v") and name[1:].isdigit()
-        )
-        return out
+        current = self._current_version()
+        return [v for v in self._version_dirs() if v <= current]
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """CDC change feed between two snapshots (the CHANGES/table_changes
@@ -575,34 +619,29 @@ class CustomerStore:
         extras = self._extras()
         cols = self._table_cols(extras)
 
-        def _inodes(vdir: str) -> dict[str, frozenset]:
+        def _inodes(v: int) -> dict[str, frozenset]:
             return {
                 b: frozenset(
                     os.stat(os.path.join(p, f)).st_ino
                     for f in os.listdir(p)
                     if f.endswith(".parquet")
                 )
-                for b, p in self._bucket_dirs(vdir).items()
+                for b, p in self._bucket_dirs(self._version_dir(v)).items()
             }
 
-        old_map = _inodes(self._version_dir(v_from)) if v_from >= 0 else {}
-        new_map = _inodes(self._version_dir(v_to)) if v_to >= 0 else {}
+        old_map, new_map = _inodes(v_from), _inodes(v_to)
         changed = sorted(
             b
             for b in set(old_map) | set(new_map)
             if old_map.get(b) != new_map.get(b)
         )
 
-        def _bucket_rows(vdir: str, present: dict) -> DataFrame:
+        def _bucket_rows(v: int, present: dict) -> DataFrame:
             sel = [b for b in changed if b in present]
-            if not sel:
-                return self._apply_extras(
-                    self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-                )
-            return self._read_buckets(vdir, sel).select(*cols)
+            return self._scan(self._version_dir(v), sel, extras).select(*cols)
 
-        old = _bucket_rows(self._version_dir(v_from), old_map)
-        new = _bucket_rows(self._version_dir(v_to), new_map)
+        old = _bucket_rows(v_from, old_map)
+        new = _bucket_rows(v_to, new_map)
         removed = old.exceptAll(new)
         added = new.exceptAll(old)
         rem_keys = removed.select("email").distinct()
@@ -634,33 +673,18 @@ class CustomerStore:
             if v < 0:
                 return -1
             table = self.read()
-            staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-            sort_cols = ["b"]
+            sort_key = None
             if zorder_by:
                 from csv_crm_upload_spark.operators.layout import _zvalue
 
-                table = table.withColumn("_z", _zvalue(table, zorder_by))
-                sort_cols = ["b", "_z"]
-            try:
-                (
-                    self._to_physical(table)
-                    .withColumn("b", _bucket_col(self.n_buckets))
-                    .repartition(self.n_buckets, "b")
-                    .sortWithinPartitions(*sort_cols)
-                    .drop("_z")
-                    .write.mode("overwrite")
-                    .partitionBy("b")
-                    .parquet(staging)
-                )
-                all_buckets = set(self._bucket_dirs(self._version_dir(v)))
-                return self._commit_merge(
+                sort_key = _zvalue(table, zorder_by)
+            with self._staged(table, sort_key) as staging:
+                return self._commit_version(
                     staging,
-                    replace_buckets=all_buckets,
+                    replace=set(self._bucket_dirs(self._version_dir(v))),
                     op="compact",
                     metrics={"zorder_by": list(zorder_by or [])},
                 )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
 
     def restore(self, version: int) -> int:
         """RESTORE TO VERSION AS OF: re-commit an old snapshot as a NEW
@@ -672,13 +696,9 @@ class CustomerStore:
             vdir = self._version_dir(version)
             if version < 0 or not os.path.isdir(vdir):
                 raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
-            new_v = self._current_version() + 1
-            new_dir = self._version_dir(new_v)
-            os.makedirs(new_dir, exist_ok=True)
-            for bname, bpath in self._bucket_dirs(vdir).items():
-                self._link_files(bpath, os.path.join(new_dir, bname))
-            self._commit(new_v, op="restore", metrics={"restored_version": version})
-        return new_v
+            return self._commit_version(
+                None, base=vdir, op="restore", metrics={"restored_version": version}
+            )
 
     def lookup(self, email: str) -> DataFrame:
         """Bucket-pruned point lookup: compute the email's bucket id
@@ -686,22 +706,15 @@ class CustomerStore:
         that bucket's directory — a 1/n_buckets slice of the table
         regardless of table size, the hash-index point read the
         reference gets from its Postgres UNIQUE index. The residual
-        email filter then pushes into that one parquet scan."""
-        b = self.spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(email)), F.lit(self.n_buckets)).cast("int").alias("b")
-        ).first()["b"]
+        email filter then pushes into that one parquet scan. A bucket
+        that holds no rows at all answers from metadata: provably absent."""
+        b = self._bucket_of(email)
         v = self._current_version()
         if v < 0:
             raise FileNotFoundError("store has no committed version yet")
         vdir = self._version_dir(v)
-        if f"b={b}" not in self._bucket_dirs(vdir):
-            # the email's bucket holds no rows at all → provably absent,
-            # answered from metadata without any scan
-            extras = self._extras()
-            return self._apply_extras(
-                self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-            )
-        return self._read_buckets(vdir, [f"b={b}"]).filter(F.col("email") == email)
+        present = [b] if b in self._bucket_dirs(vdir) else []
+        return self._scan(vdir, present).filter(F.col("email") == email)
 
     def maybe_compact(
         self, max_files_per_bucket: int = 8, zorder_by: list[str] | None = None
@@ -740,13 +753,13 @@ class CustomerStore:
             raise FileExistsError(f"clone destination is already a store: {dest_root}")
         dest = CustomerStore(self.spark, dest_root, n_buckets=self.n_buckets)
         dest._write_meta(self._read_meta())  # n_buckets + evolved columns
-        new_dir = dest._version_dir(0)
-        os.makedirs(new_dir, exist_ok=True)
-        for bname, bpath in self._bucket_dirs(self._version_dir(src_v)).items():
-            self._link_files(bpath, os.path.join(new_dir, bname))
-        dest._commit(
-            0, op="clone", metrics={"source_root": self.root, "source_version": src_v}
-        )
+        with dest._write_lock():
+            dest._commit_version(
+                None,
+                base=self._version_dir(src_v),
+                op="clone",
+                metrics={"source_root": self.root, "source_version": src_v},
+            )
         return dest
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
@@ -762,25 +775,13 @@ class CustomerStore:
                 shutil.rmtree(self._version_dir(v), ignore_errors=True)
         return removed
 
-    def _read_buckets(self, version_dir: str, buckets: list[str]) -> DataFrame:
-        """Pruned scan of selected buckets (partition pruning by path),
-        widened to the evolved schema like any other read."""
-        extras = self._extras()
-        paths = [os.path.join(version_dir, b) for b in buckets]
-        reader = self.spark.read.option("basePath", version_dir)
-        if extras:
-            reader = reader.option("mergeSchema", "true")
-        return self._apply_extras(reader.parquet(*paths), extras)
-
     def append(self, batch: DataFrame) -> None:
         """S5: append a finalized batch as a new snapshot. No uniqueness
         check — callers that need D1 use append_unique."""
-        staging = self._stage(batch)
-        try:
+        with self._staged(batch) as staging:
+            self._check_constraints(staging)
             with self._write_lock():
-                self._commit_merge(staging)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+                self._commit_version(staging)
 
     def append_unique(self, batch: DataFrame, keys: tuple[str, ...] = ("id", "email")) -> int:
         """D1-correct append: stage the anti-joined batch optimistically
@@ -790,41 +791,25 @@ class CustomerStore:
         conflict path pays the recheck. Returns rows inserted."""
         from csv_crm_upload_spark.operators.dedup import anti_join_existing
 
-        cols = self._table_cols()
         v_seen = self._current_version()
-        insertable = anti_join_existing(self._conform(batch), self.read(), keys)
-        staging = self._stage(insertable)
-        try:
+        insertable = anti_join_existing(batch, self.read(), keys)
+        with contextlib.ExitStack() as stack:
+            staging = stack.enter_context(self._staged(insertable))
+            self._check_constraints(staging)
             with self._write_lock():
-                v_now = self._current_version()
-                if v_now != v_seen and v_now >= 0 and self._bucket_dirs(staging):
+                if self._current_version() != v_seen and self._bucket_dirs(staging):
                     # conflict: someone committed since we checked — redo
                     # the anti-join against the fresh snapshot. (An empty
                     # staging dir — every batch row already lost the dup
-                    # race — has no parquet files to re-read; it falls
-                    # straight through to the inserted == 0 path.)
-                    staged_df = self.spark.read.parquet(staging).select(*cols)
-                    rechecked = anti_join_existing(staged_df, self.read(), keys)
-                    restaged = self._stage(rechecked)
-                    shutil.rmtree(staging, ignore_errors=True)
-                    staging = restaged
-                inserted = self.spark.read.parquet(staging).count() if self._bucket_dirs(staging) else 0
+                    # race — has nothing to recheck.)
+                    rechecked = anti_join_existing(self._scan(staging), self.read(), keys)
+                    staging = stack.enter_context(self._staged(rechecked))
+                inserted = self._scan(staging).count() if self._bucket_dirs(staging) else 0
                 if inserted > 0:
-                    self._commit_merge(
+                    self._commit_version(
                         staging, op="append_unique", metrics={"rows_inserted": inserted}
                     )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
         return inserted
-
-    def _record_txn(self, app_id: str, version: int) -> None:
-        """Record an idempotent-writer watermark. MUST be called inside
-        the write lock (read-modify-write of _META)."""
-        meta = self._read_meta()
-        txn = meta.get("txn", {})
-        txn[app_id] = max(int(txn.get(app_id, -1)), int(version))
-        meta["txn"] = txn
-        self._write_meta(meta)
 
     def last_txn(self, app_id: str) -> int:
         """Highest transaction version recorded for an idempotent writer
@@ -858,16 +843,16 @@ class CustomerStore:
         transaction (Delta's txnAppId/txnVersion): if `version` ≤ the
         last recorded version for `app_id`, the merge is a no-op
         ({"applied": False}) — the foreachBatch replay-after-restart
-        guard. The marker is recorded under the same write lock after the
-        data commit; a crash between the two re-applies the batch once,
-        which MERGE absorbs (same keys re-update to the same values, no
-        duplicate inserts) — at-least-once commit, exactly-once effect.
+        guard. The marker is recorded in _META under the same write lock
+        after the data commit; a crash between the two re-applies the
+        batch once, which MERGE absorbs (same keys re-update to the same
+        values, no duplicate inserts) — at-least-once commit,
+        exactly-once effect.
         """
         from csv_crm_upload_spark.operators.dedup import dedupe_batch
         from csv_crm_upload_spark.operators.mutate import finalize_columns
 
-        extras = self._extras()
-        cols = self._table_cols(extras)
+        cols = self._table_cols()
         ts = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
         src = dedupe_batch(source.select(*PENDING_COLUMNS))
         upd = F.broadcast(
@@ -878,61 +863,40 @@ class CustomerStore:
                 F.col("phone").alias("_m_phone"),
             )
         )
-        with self._write_lock():
+        with self._edit_meta() as meta:
             if txn is not None:
                 app_id, txn_v = txn
-                meta = self._read_meta()
-                if int(meta.get("txn", {}).get(app_id, -1)) >= txn_v:
+                seen = meta.setdefault("txn", {})
+                if int(seen.get(app_id, -1)) >= txn_v:
                     return {"updated": 0, "inserted": 0, "skipped": 0, "applied": False}
+                seen[app_id] = txn_v  # written back after the commit below
             v = self._current_version()
-            vdir = self._version_dir(v)
-            if v >= 0:
-                hit_buckets = {
-                    f"b={r['b']}"
-                    for r in src.select(_bucket_col(self.n_buckets).alias("b")).distinct().collect()
-                }
-                affected = sorted(hit_buckets & set(self._bucket_dirs(vdir)))
-            else:
-                affected = []
-            if affected:
-                sub = self._read_buckets(vdir, affected)
-                matched = F.col("_m_email").isNotNull()
-                rewritten = (
-                    sub.join(upd, sub["email"] == F.col("_m_email"), "left")
-                    .withColumn("first_name", F.when(matched, F.col("_m_first")).otherwise(F.col("first_name")))
-                    .withColumn("last_name", F.when(matched, F.col("_m_last")).otherwise(F.col("last_name")))
-                    .withColumn("phone", F.when(matched, F.col("_m_phone")).otherwise(F.col("phone")))
-                    .withColumn("modified_ts", F.when(matched, ts).otherwise(F.col("modified_ts")))
-                    .select(*cols)
-                )
-                n_updated = sub.join(F.broadcast(src.select("email")), "email", "left_semi").count()
-                insert_cand = src.join(sub.select("email"), "email", "left_anti")
-            else:
-                rewritten = None
-                n_updated = 0
-                insert_cand = src
-            existing_ids = (
-                self.read_version(v).select("id") if v >= 0 else None
+            affected = self._hit_buckets(src, v)
+            sub = self._scan(self._version_dir(v), affected)
+            matched = F.col("_m_email").isNotNull()
+            rewritten = (
+                sub.join(upd, sub["email"] == F.col("_m_email"), "left")
+                .withColumn("first_name", F.when(matched, F.col("_m_first")).otherwise(F.col("first_name")))
+                .withColumn("last_name", F.when(matched, F.col("_m_last")).otherwise(F.col("last_name")))
+                .withColumn("phone", F.when(matched, F.col("_m_phone")).otherwise(F.col("phone")))
+                .withColumn("modified_ts", F.when(matched, ts).otherwise(F.col("modified_ts")))
+                .select(*cols)
             )
-            inserts = (
-                insert_cand.join(existing_ids, "id", "left_anti")
-                if existing_ids is not None
-                else insert_cand
-            )
+            n_updated = sub.join(F.broadcast(src.select("email")), "email", "left_semi").count()
+            insert_cand = src.join(sub.select("email"), "email", "left_anti")
+            inserts = insert_cand.join(self.read_version(v).select("id"), "id", "left_anti")
             n_inserted = inserts.count()
             n_skipped = insert_cand.count() - n_inserted
             if n_updated == 0 and n_inserted == 0:
-                if txn is not None:
-                    self._record_txn(*txn)
                 return {"updated": 0, "inserted": 0, "skipped": n_skipped}
-            staged_df = self._conform(finalize_columns(inserts, now=now), extras)
-            if rewritten is not None:
-                staged_df = rewritten.unionByName(staged_df)
-            staging = self._stage(staged_df)
-            try:
-                self._commit_merge(
+            staged_df = rewritten.unionByName(
+                finalize_columns(inserts, now=now), allowMissingColumns=True
+            )
+            with self._staged(staged_df) as staging:
+                self._check_constraints(staging)
+                self._commit_version(
                     staging,
-                    replace_buckets=set(affected),
+                    replace=set(affected),
                     op="merge",
                     metrics={
                         "rows_updated": n_updated,
@@ -940,10 +904,6 @@ class CustomerStore:
                         "rows_skipped": n_skipped,
                     },
                 )
-                if txn is not None:
-                    self._record_txn(*txn)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
         return {"updated": n_updated, "inserted": n_inserted, "skipped": n_skipped}
 
     def delete(self, condition) -> int:
@@ -963,34 +923,24 @@ class CustomerStore:
         is_hit = F.coalesce(cond, F.lit(False))
         with self._write_lock():
             v = self._current_version()
-            if v < 0:
-                return 0
             vdir = self._version_dir(v)
-            all_buckets = sorted(self._bucket_dirs(vdir))
-            if not all_buckets:
+            if not self._bucket_dirs(vdir):
                 return 0
-            full = self._read_buckets(vdir, all_buckets)  # carries b
-            hit_buckets = {
+            affected = sorted(
                 f"b={r['b']}"
-                for r in full.filter(is_hit).select("b").distinct().collect()
-            }
-            affected = sorted(hit_buckets)
+                for r in self._scan(vdir).filter(is_hit).select("b").distinct().collect()
+            )
             if not affected:
                 return 0
-            sub = self._read_buckets(vdir, affected)
+            sub = self._scan(vdir, affected)
             n_deleted = sub.filter(is_hit).count()
-            kept = sub.filter(~is_hit)
-            staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-            try:
-                self._to_physical(kept).write.mode("overwrite").partitionBy("b").parquet(staging)
-                self._commit_merge(
+            with self._staged(sub.filter(~is_hit)) as staging:
+                self._commit_version(
                     staging,
-                    replace_buckets=set(affected),
+                    replace=set(affected),
                     op="delete",
                     metrics={"rows_deleted": n_deleted},
                 )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
         return n_deleted
 
     def forget(self, email: str) -> int:
@@ -1015,10 +965,7 @@ class CustomerStore:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        bucket_id = self.spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(email)), F.lit(self.n_buckets)).cast("int").alias("b")
-        ).first()["b"]
-        b = f"b={bucket_id}"
+        b = self._bucket_of(email)
         erased_current = 0
         with self._write_lock():
             current = self._current_version()
@@ -1057,9 +1004,8 @@ class CustomerStore:
                 else:
                     for bdir, name in links:
                         os.remove(os.path.join(bdir, name))
-            # a bucket left with zero files must disappear entirely — an
-            # empty directory would break the parquet scan's schema
-            # inference (and a legal empty snapshot is "no bucket dirs")
+            # a bucket left with zero files must disappear entirely: a
+            # snapshot's bucket set is its dir listing (lookup, changes)
             for v in self.versions():
                 bdir = os.path.join(self._version_dir(v), b)
                 if os.path.isdir(bdir) and not any(
@@ -1114,17 +1060,10 @@ class CustomerStore:
         emails = succeeded_emails.select("email").distinct()
         with self._write_lock():
             v = self._current_version()
-            if v < 0:
-                return 0
-            vdir = self._version_dir(v)
-            hit_buckets = {
-                f"b={r['b']}"
-                for r in emails.select(_bucket_col(self.n_buckets).alias("b")).distinct().collect()
-            }
-            affected = sorted(hit_buckets & set(self._bucket_dirs(vdir)))
+            affected = self._hit_buckets(emails, v)
             if not affected:
                 return 0
-            sub = self._read_buckets(vdir, affected)  # has partition col b
+            sub = self._scan(self._version_dir(v), affected)
             flipped = (
                 sub.filter(~F.col("uploaded"))
                 .join(F.broadcast(emails), "email", "left_semi")
@@ -1132,16 +1071,11 @@ class CustomerStore:
             )
             if flipped == 0:
                 return 0
-            updated = mark_uploaded(sub, emails, now=now)  # b passes through
-            staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-            try:
-                self._to_physical(updated).write.mode("overwrite").partitionBy("b").parquet(staging)
-                self._commit_merge(
+            with self._staged(mark_uploaded(sub, emails, now=now)) as staging:
+                self._commit_version(
                     staging,
-                    replace_buckets=set(affected),
+                    replace=set(affected),
                     op="update",
                     metrics={"rows_updated": flipped},
                 )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
         return flipped

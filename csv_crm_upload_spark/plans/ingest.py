@@ -45,22 +45,20 @@ def ingest_batch(
     from csv_crm_upload_spark.operators.dedup import rejected_duplicates
 
     clean, quarantine = validate_split(batch)
-    # snapshot for the quarantine audit; uniqueness itself is enforced by
-    # append_unique, which re-verifies the anti-join against the CURRENT
-    # snapshot inside the store's write lock — so two concurrent ingests
-    # can't both pass a check taken against version N (check-then-act race)
-    existing = store.read()
     deduped = dedupe_batch(clean)
     finalized = finalize_columns(deduped, now=now)
 
     n_clean = clean.count()
     n_quarantine = quarantine.count()
     if quarantine_dir is not None:
-        # the duplicate audit MUST evaluate before the append: a JDBC
-        # store's read() is lazy, so deferring this past append_unique
-        # would re-read the table with this batch already inserted and
-        # quarantine every successfully inserted row as a duplicate_key
-        dup_rejects = rejected_duplicates(clean, existing).select(
+        # the store is read for this audit only: uniqueness itself is
+        # enforced by append_unique, which re-verifies the anti-join
+        # against the CURRENT snapshot inside the store's write lock. The
+        # audit MUST evaluate before the append: a JDBC store's read() is
+        # lazy, so deferring this past append_unique would re-read the
+        # table with this batch already inserted and quarantine every
+        # successfully inserted row as a duplicate_key
+        dup_rejects = rejected_duplicates(clean, store.read()).select(
             F.col("id").cast("string").alias("id"),
             "first_name",
             "last_name",
@@ -94,11 +92,6 @@ def ingest_csv(
         quarantine_dir=quarantine_dir,
     )
 
-
-def pending_preview(store: CustomerStore) -> DataFrame:
-    """The reference's one recurring query: who is pending upload?
-    (reference database/database.go:18; SURVEY §7.2 flagship)."""
-    return store.pending().orderBy(F.col("id"))
 
 def ingest_jsonl(
     spark: SparkSession,

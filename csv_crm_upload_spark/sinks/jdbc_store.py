@@ -32,7 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PENDING_COLUMNS = ["id", "first_name", "last_name", "email", "phone"]
+from csv_crm_upload_spark.operators.store import PENDING_COLUMNS
 
 # reference init-db.sh:11-25 — UNIQUE id + email, uploaded flag default
 # false, audit timestamps. ANSI DDL (Derby/Postgres compatible).

@@ -26,15 +26,3 @@ def read_customers_orc(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.schema(CUSTOMER_CSV_SCHEMA).orc(path)
     return df.withColumn("_corrupt_record", F.lit(None).cast("string"))
 
-
-def read_customers_orc_stream(
-    spark: SparkSession, directory: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming ORC scan over a directory (T1's micro-batch source in
-    columnar form)."""
-    reader = spark.readStream.schema(CUSTOMER_CSV_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.orc(directory).withColumn(
-        "_corrupt_record", F.lit(None).cast("string")
-    )

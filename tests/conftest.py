@@ -33,12 +33,10 @@ _DEEP_FILES = {
     "test_index_compaction.py",  # 1.8
     "test_retrieval.py",         # 1.7
     "test_nb_model.py",          # 1.5
-    "test_store_concurrency.py", # 1.1
     "test_index_concurrency.py", # 1.1
     "test_key_format.py",        # 1.1
     "test_corpus_prep.py",       # 0.9
     "test_cli.py",               # 0.9
-    "test_property_merge.py",    # 0.8
     "test_jdbc_store.py",        # 0.5
 }
 

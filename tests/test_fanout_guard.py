@@ -1,13 +1,10 @@
-"""Writer-skew guard for cluster_for_write (round-13 verdict ask #8):
-a hot partition value must be able to split across tasks/files while
-cold values keep exactly one file, and the rows written are unchanged."""
+"""cluster_for_write: every partition value of a skewed frame is
+written as exactly one file."""
 
 from __future__ import annotations
 
 import glob
 import os
-
-from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics.fanout import cluster_for_write
 
@@ -33,32 +30,3 @@ def test_default_one_file_per_bucket(spark, tmp_path):
     assert set(files) == set(range(11))
     assert all(n == 1 for n in files.values()), files
 
-
-def test_salted_hot_bucket_splits_cold_buckets_do_not(spark, tmp_path):
-    df = _mk_skewed(spark)
-    out = str(tmp_path / "salted")
-    # at this toy scale AQE would coalesce the salted sub-partitions
-    # right back into one task (they are bytes-tiny); at 100 TB a hot
-    # value's sub-partitions exceed the advisory size and stay split —
-    # disable coalescing here so the salting itself is observable
-    prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        cluster_for_write(df, "b", max_bucket_rows=100).write.partitionBy(
-            "b"
-        ).parquet(out)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    files = _files_per_bucket(out)
-    assert files[0] > 1, files  # 900-row hot value split across files
-    assert all(files[b] == 1 for b in range(1, 11)), files  # cold untouched
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    assert back.groupBy("b").count().filter("b = 0").collect()[0]["count"] == 900
-    # row set unchanged
-    assert (
-        back.select(F.concat_ws(":", "id", "b")).exceptAll(
-            df.select(F.concat_ws(":", "id", "b"))
-        ).count()
-        == 0
-    )

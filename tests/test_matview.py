@@ -151,3 +151,37 @@ def test_continuous_aggregate_via_streaming_ingest(spark, tmp_path):
     q.awaitTermination(120)
     assert _actual(view) == _expected(store)
     assert view.last_refreshed_version() == store._current_version()
+
+
+def test_crash_after_view_swap_does_not_fold_delta_twice(spark, tmp_path, monkeypatch):
+    """The refresh cursor commits with the aggregate: a crash right after
+    the data-dir swap (injected into the old dir's removal) must not let
+    the next refresh fold the same delta again."""
+    import pytest
+
+    from csv_crm_upload_spark.operators import matview as matview_mod
+
+    def rows(lo, hi):
+        return [(i, f"f{i}", "l", f"u{i}@x.com", str(i)) for i in range(lo, hi)]
+
+    store = CustomerStore(spark, str(tmp_path / "store"))
+    store.append(finalize_columns(spark.createDataFrame(rows(0, 50), COLS)))
+    view = _view(store, tmp_path)
+    assert view.refresh()["mode"] == "full"
+    store.append(finalize_columns(spark.createDataFrame(rows(50, 60), COLS)))
+
+    real_rmtree = matview_mod.shutil.rmtree
+
+    def crashing_rmtree(path, *a, **k):
+        if "_old_" in str(path):
+            raise OSError("injected crash after the view swap")
+        return real_rmtree(path, *a, **k)
+
+    monkeypatch.setattr(matview_mod.shutil, "rmtree", crashing_rmtree)
+    with pytest.raises(OSError, match="injected"):
+        view.refresh()
+    monkeypatch.undo()
+    view.refresh()
+    assert store.read().count() == 60
+    assert sum(r["n_rows"] for r in view.read().collect()) == 60
+    assert _actual(view) == _expected(store)

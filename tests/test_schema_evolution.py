@@ -1,6 +1,6 @@
 """Schema evolution on the versioned store — the ALTER TABLE ADD COLUMN
 surface of a lakehouse table format, realized as metadata-only commits:
-no data rewrite, mixed-schema snapshots read through mergeSchema, old
+no data rewrite, mixed-schema snapshots read with the declared schema, old
 rows fill with the column default (SQL `NOT NULL DEFAULT x` semantics
 when a default is given, nullable/NULL otherwise)."""
 
@@ -226,3 +226,22 @@ def test_renamed_column_survives_rewrite_paths(spark, tmp_path):
     store.delete(F.col("email") == "jon@x.com")
     got = {r["email"]: r["plan"] for r in store.read().collect()}
     assert "jon@x.com" not in got and got["new@x.com"] == "gold"
+
+
+def test_rename_onto_a_physical_name_keeps_columns_apart(spark, tmp_path):
+    """A logical name may equal another column's physical (file) name:
+    renaming `y` to `z` and then `x` to `y` leaves the column called `y`
+    stored as `x` and the column called `z` stored as `y`. Each must
+    still read its own values."""
+    store = _store(spark, tmp_path)
+    store.add_column("x", "string")
+    store.add_column("y", "string")
+    store.append(
+        finalize_columns(
+            spark.createDataFrame([(10, "n", "g", "new@x.com", "9", "X", "Y")], COLS + ["x", "y"])
+        )
+    )
+    store.rename_column("y", "z")
+    store.rename_column("x", "y")
+    row = store.read().filter("email = 'new@x.com'").first()
+    assert (row["y"], row["z"]) == ("X", "Y")

@@ -648,3 +648,37 @@ def test_maybe_compact_threshold(spark, tmp_path):
     # compacted: every bucket back to one file
     for _b, p in store._bucket_dirs(store._version_dir(v)).items():
         assert sum(1 for f in os.listdir(p) if f.endswith(".parquet")) == 1
+
+
+def test_crash_before_pointer_swap_leaves_no_version(spark, tmp_path, monkeypatch):
+    """A writer that dies after building v+1 and before the `_LATEST`
+    swap leaves an uncommitted version dir: no reader may list it, and
+    the next writers must commit over it."""
+    import pytest
+
+    from csv_crm_upload_spark.operators import store as store_mod
+
+    store = _fresh_store(spark, tmp_path)
+    v0 = store._current_version()
+    zed = [(6, "zed", "q", "zed@x.com", "6")]
+
+    def crashing_open(path, mode="r", *a, **k):
+        if str(path).endswith("_LATEST.tmp"):  # the step right before the swap
+            raise OSError("injected crash before the _LATEST swap")
+        return open(path, mode, *a, **k)
+
+    monkeypatch.setattr(store_mod, "open", crashing_open, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        store.append_unique(finalize_columns(spark.createDataFrame(zed, COLS)))
+    monkeypatch.undo()
+    assert os.path.isdir(store._version_dir(v0 + 1))  # the crash's debris
+    assert store.versions()[-1] == v0
+    assert store.history()[0]["version"] == v0
+    assert sorted(r["email"] for r in store.read().collect()) == sorted(r[3] for r in ROWS)
+
+    assert store.append_unique(finalize_columns(spark.createDataFrame(zed, COLS))) == 1
+    assert store.mark_uploaded(spark.createDataFrame([("zed@x.com",)], ["email"])) == 1
+    assert store.versions()[-2:] == [v0 + 1, v0 + 2]
+    assert [h["operation"] for h in store.history()[:2]] == ["update", "append_unique"]
+    got = {r["email"]: r["uploaded"] for r in store.read().collect()}
+    assert got == {**{r[3]: False for r in ROWS}, "zed@x.com": True}
