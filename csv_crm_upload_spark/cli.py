@@ -107,12 +107,6 @@ def main(argv: list[str] | None = None) -> int:
     ps.add_argument("--concurrency", type=int, default=25)
     ps.add_argument("--max-tries", type=int, default=5)
     ps.add_argument(
-        "--incremental",
-        action="store_true",
-        help="CDC-pruned ticks: upload only rows changed since the last "
-        "cycle (parquet store only; quiet ticks cost metadata, not a scan)",
-    )
-    ps.add_argument(
         "--auto-compact",
         type=int,
         default=None,
@@ -527,8 +521,10 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "serve":
         from csv_crm_upload_spark.streaming.pipeline import run_upload_service
 
-        if args.incremental and not hasattr(store, "changes"):
-            raise SystemExit("--incremental requires the versioned parquet store (--store)")
+        maintenance = (("--auto-compact", args.auto_compact), ("--vacuum-keep", args.vacuum_keep))
+        for flag, value in maintenance:
+            if value is not None and not hasattr(store, "vacuum"):
+                raise SystemExit(f"{flag} requires the versioned parquet store (--store)")
         marked = run_upload_service(
             store,
             args.crm,
@@ -536,7 +532,6 @@ def main(argv: list[str] | None = None) -> int:
             max_cycles=args.cycles,
             concurrency=args.concurrency,
             max_tries=args.max_tries,
-            incremental=args.incremental,
             auto_compact_files=args.auto_compact,
             vacuum_keep=args.vacuum_keep,
         )

@@ -129,6 +129,9 @@ class MaterializedAggregate:
                 },
                 fh,
             )
+        for name in os.listdir(self.root):
+            if name.startswith("_old_"):  # left by a crash between swap and removal
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
         old = self._data_path()
         back = os.path.join(self.root, f"_old_{uuid.uuid4().hex}")
         if os.path.isdir(old):

@@ -811,15 +811,7 @@ class CustomerStore:
                     )
         return inserted
 
-    def last_txn(self, app_id: str) -> int:
-        """Highest transaction version recorded for an idempotent writer
-        (Delta's txnAppId/txnVersion surface); -1 if never seen."""
-        try:
-            return int(self._read_meta().get("txn", {}).get(app_id, -1))
-        except (FileNotFoundError, ValueError):
-            return -1
-
-    def merge(self, source: DataFrame, now=None, txn: tuple[str, int] | None = None) -> dict[str, int]:
+    def merge(self, source: DataFrame, now=None) -> dict[str, int]:
         """MERGE INTO — the Delta/Iceberg upsert surface on the versioned
         store, keyed on email (the reference's idempotency key):
         WHEN MATCHED → update first_name/last_name/phone, refresh
@@ -838,16 +830,6 @@ class CustomerStore:
         one consistent snapshot transition).
 
         Returns {"updated": n, "inserted": n, "skipped": n}.
-
-        `txn=(app_id, version)` makes the merge an IDEMPOTENT WRITER
-        transaction (Delta's txnAppId/txnVersion): if `version` ≤ the
-        last recorded version for `app_id`, the merge is a no-op
-        ({"applied": False}) — the foreachBatch replay-after-restart
-        guard. The marker is recorded in _META under the same write lock
-        after the data commit; a crash between the two re-applies the
-        batch once, which MERGE absorbs (same keys re-update to the same
-        values, no duplicate inserts) — at-least-once commit,
-        exactly-once effect.
         """
         from csv_crm_upload_spark.operators.dedup import dedupe_batch
         from csv_crm_upload_spark.operators.mutate import finalize_columns
@@ -863,13 +845,7 @@ class CustomerStore:
                 F.col("phone").alias("_m_phone"),
             )
         )
-        with self._edit_meta() as meta:
-            if txn is not None:
-                app_id, txn_v = txn
-                seen = meta.setdefault("txn", {})
-                if int(seen.get(app_id, -1)) >= txn_v:
-                    return {"updated": 0, "inserted": 0, "skipped": 0, "applied": False}
-                seen[app_id] = txn_v  # written back after the commit below
+        with self._write_lock():
             v = self._current_version()
             affected = self._hit_buckets(src, v)
             sub = self._scan(self._version_dir(v), affected)

@@ -7,8 +7,9 @@ Reference behavior reproduced (crm/upload/uploader.go):
     sink fails; reset after any success (:152-157).
   * T5 (:17-18,47,133-150) — bounded concurrency (channel cap 25). In
     Spark, partition-level parallelism replaces the hand-rolled queue:
-    `repartition(k).foreachPartition(...)` caps in-flight connections at
-    k × (per-partition serial posts).
+    `repartition(k).mapPartitions(...)` makes k partitions that each post
+    serially, so at most min(k, executor task slots) POSTs are in flight
+    at once — on a local[4] session that is 4, not 25.
 
 Delivery semantics (SURVEY §2.9, judge-relevant): POST then flag-flip, so
 a crash between the 201 and the mark leaves `uploaded=false` and the row
@@ -17,8 +18,9 @@ effectively-once via the flag, idempotency key = email. Identical to the
 reference's contract; we do not promise exactly-once to an HTTP sink.
 
 Implementation notes: uses only `urllib` (stdlib) so the container needs
-no extra packages; per-partition code opens one connection pool, posts
-serially, and returns (email, status) rows so the driver-side plan can
+no extra packages; there is no connection pool — `_post_row` opens a new
+connection for every POST attempt. Per-partition code posts serially and
+returns (email, status, attempts) rows so the driver-side plan can
 compute the success set WITHOUT collecting payloads.
 """
 
@@ -118,7 +120,8 @@ def upload_pending(
 ) -> DataFrame:
     """Distributed upload of the pending set; returns (email,status,attempts).
 
-    `repartition(concurrency)` bounds in-flight connections (T5);
+    `repartition(concurrency)` bounds in-flight POSTs at
+    min(concurrency, task slots) (T5);
     `mapPartitions` via DataFrame->RDD keeps the post loop off the driver
     — no collect of the pending set, arbitrarily large pending sets
     stream through executors.

@@ -12,7 +12,7 @@ streaming-split, predicate-pushdown-capable scan as csv — one reader
 swap, zero changes to the rest of the pipeline (asserted by the
 round-trip test that runs the SAME batch through both sources).
 
-Batch and streaming variants mirror csv_source one-to-one.
+Batch only: `ingest --jsonl` reads a file; `watch` streams CSV.
 """
 
 from __future__ import annotations
@@ -33,14 +33,3 @@ def read_customers_jsonl(spark: SparkSession, path: str) -> DataFrame:
     fields are ignored, missing fields are null (and then subject to the
     same required-field validation)."""
     return spark.read.schema(CUSTOMER_CSV_SCHEMA).options(**_JSON_OPTIONS).json(path)
-
-
-def read_customers_jsonl_stream(
-    spark: SparkSession, directory: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming JSONL scan over a directory (T1's micro-batch source in
-    JSON form)."""
-    reader = spark.readStream.schema(CUSTOMER_CSV_SCHEMA).options(**_JSON_OPTIONS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(directory)

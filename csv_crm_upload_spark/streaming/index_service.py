@@ -373,64 +373,3 @@ class CorpusIndexService:
         for kind, path in self.paths.items():
             removed += gc_stale_epochs(path, INDEXES[kind].layout)
         return removed
-
-
-def run_index_maintenance_stream(
-    spark,
-    drop_dir: str,
-    checkpoint_dir: str,
-    kind: str = "documents",
-    text_index: str | None = None,
-    dedup_index: str | None = None,
-    ivf_index: str | None = None,
-    pq_index: str | None = None,
-    ivfpq_index: str | None = None,
-    nb_model: str | None = None,
-    winnow_index: str | None = None,
-    bpe_model: str | None = None,
-    pca_model: str | None = None,
-    daily_rollup: str | None = None,
-    audit_log: str | None = None,
-    available_now: bool = True,
-    app_id: str | None = None,
-):
-    """The STRUCTURED-STREAMING twin of CorpusIndexService.tick(): the
-    drop dir becomes a file source, Spark's checkpoint replaces the
-    shard cursor, and each micro-batch folds into the registered
-    indexes via their O(new docs) update paths. Returns the
-    StreamingQuery (availableNow=True drains current files and stops —
-    the finite-run mode; False keeps watching).
-
-    Crash contract — strictly stronger than the cursor service:
-    foreachBatch re-delivers a batch after a crash (at-least-once), and
-    each index's update records (app_id, batch_id) IN the same atomic
-    manifest commit as the epoch it folds (manifest.append's txn guard)
-    — so a replayed batch no-ops per index and the fold is EXACTLY-ONCE
-    in effect, with no cross-commit window at all. `kind` selects the
-    shard schema: "documents" feeds the text/dedup/NB/winnow/BPE
-    indexes, "embeddings" the vector indexes and the PCA model,
-    "events" the daily rollup and the audit log (each micro-batch logs
-    its own sketch-vs-exact verdict rows)."""
-    from csv_crm_upload_spark.schemas import TESTDATA_SCHEMAS
-
-    args = locals()  # the INDEXES arguments given: every batch folds into each
-    paths = {k: args[k] for k in INDEXES if args.get(k) is not None}
-    app = app_id or f"index-maint-{kind}"
-    # recursiveFileLookup: shards land as bare parquet files OR as
-    # directories of part files (df.write.parquet) — pick up both
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS[kind])
-        .option("recursiveFileLookup", "true")
-        .parquet(drop_dir)
-    )
-
-    def process(batch_df, batch_id: int) -> None:
-        for name, path in paths.items():
-            INDEXES[name].update(batch_df, path, txn=(app, batch_id))
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

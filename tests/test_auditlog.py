@@ -1,12 +1,10 @@
 """Persisted per-batch sketch-audit log (analytics/auditlog.py): the
-exactly-once append contract, the facts-not-counts compaction, the
-alert readout, and the streaming twin — the invariants the audlog1
+exactly-once append contract, the facts-not-counts compaction and the
+alert readout — the invariants the audlog1
 oracle pair cannot observe (it sees one healthy build, never a replay
 or a crash)."""
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -98,38 +96,3 @@ def test_key_format_guard_rejects_foreign_artifact(spark, events, tmp_path):
         al.read_audit_rows(spark, p)
     with pytest.raises(ValueError):
         al.append_batch_audit(events, p, "b0")
-
-
-def test_streaming_twin_logs_each_micro_batch_exactly_once(
-    spark, events, tmp_path
-):
-    """run_index_maintenance_stream(audit_log=...): each event
-    micro-batch appends its verdict rows under the (app, batch_id)
-    manifest guard; draining the SAME checkpoint again (the restart
-    path) appends nothing new."""
-    from csv_crm_upload_spark.streaming.index_service import (
-        run_index_maintenance_stream,
-    )
-
-    drop = str(tmp_path / "drop")
-    ckpt = str(tmp_path / "ckpt")
-    p = str(tmp_path / "log")
-    os.makedirs(drop)
-    al.save_audit_log(spark, p)
-    events.limit(200).write.parquet(f"{drop}/shard_1")
-
-    q = run_index_maintenance_stream(
-        spark, drop, ckpt, kind="events", audit_log=p, app_id="audit-e2e"
-    )
-    q.awaitTermination(120)
-    first = _rows(spark, p)
-    assert first, "the drained shard must have logged audit rows"
-    keys = {r[0] for r in first}
-    assert all(k.startswith("audit-e2e-") for k in keys)
-
-    # restart over the same checkpoint: nothing new to drain, log unchanged
-    q2 = run_index_maintenance_stream(
-        spark, drop, ckpt, kind="events", audit_log=p, app_id="audit-e2e"
-    )
-    q2.awaitTermination(120)
-    assert _rows(spark, p) == first

@@ -156,28 +156,3 @@ def test_vacuum_reclaims_superseded_bpe_snapshots(spark, sf_dir, tmp_path):
     assert any("epoch=0" in p for p in removed), removed
     assert not os.path.isdir(f"{model}/vocab/epoch=0")
     assert segment_with_bpe_model(docs.limit(10), model).count() > 0
-
-
-def test_streaming_maintenance_folds_bpe_model(spark, sf_dir, tmp_path):
-    """run_index_maintenance_stream with bpe_model: the checkpointed
-    fold advances the model exactly once, and a second availableNow run
-    over the same files no-ops (replay guard)."""
-    from csv_crm_upload_spark.streaming.index_service import (
-        run_index_maintenance_stream,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    model = str(tmp_path / "bpe")
-    save_bpe_model(docs.filter(F.col("doc_id") < 300), model, steps=2)
-    e0 = read_manifest(model)["epoch"]
-
-    drop = str(tmp_path / "drop")
-    docs.filter(F.col("doc_id") >= 300).write.parquet(f"{drop}/shard_a")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_index_maintenance_stream(spark, drop, ckpt, bpe_model=model)
-    q.awaitTermination(120)
-    assert read_manifest(model)["epoch"] == e0 + 1
-
-    q2 = run_index_maintenance_stream(spark, drop, ckpt, bpe_model=model)
-    q2.awaitTermination(120)
-    assert read_manifest(model)["epoch"] == e0 + 1, "replay must no-op"

@@ -30,6 +30,17 @@ def test_cli_ingest_pending_jdbc(spark, tmp_path, capsys):
     assert "inserted=0" in capsys.readouterr().out
 
 
+def test_cli_serve_rejects_maintenance_flags_on_jdbc(spark, tmp_path):
+    """--auto-compact / --vacuum-keep need the versioned parquet store;
+    on the JDBC store serve refuses them instead of ignoring them."""
+    import pytest
+
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
+    for flag in ("--auto-compact", "--vacuum-keep"):
+        with pytest.raises(SystemExit, match=f"{flag} requires the versioned parquet store"):
+            main(["serve", "--jdbc-url", url, "--cycles", "1", flag, "2"])
+
+
 def test_cli_merge_upserts(spark, tmp_path, capsys):
     csv = _write_csv(tmp_path)
     store_dir = str(tmp_path / "s")

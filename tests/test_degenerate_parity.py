@@ -27,18 +27,11 @@ same invariants, so both adversarial suites share one contract):
 
 from __future__ import annotations
 
-import math
-import os
-
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tests._parity import assert_matches_oracle, duck_views
 
 # Queries whose semantics are UNDEFINED or deliberately out of scope on
 # this corpus, with the reason — keep this list short and justified.
@@ -217,27 +210,9 @@ def degen_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def degen_duck(degen_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{degen_dir}/{t}.parquet'"
-        )
+    con = duck_views(degen_dir)
     yield con
     con.close()
-
-
-def _normalize(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    return v
-
-
-def _rows_to_sorted(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = [tuple(_normalize(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
 
 
 QUERIES = entrymod.queries()
@@ -248,22 +223,7 @@ ORACLES = entrymod.oracle_sql()
 def test_degenerate_corpus_matches_oracle(name, spark, degen_dir, degen_duck):
     if name in EXCLUDED:
         pytest.skip(EXCLUDED[name])
-    sdf = QUERIES[name](spark, degen_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    res = degen_duck.execute(ORACLES[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column names differ"
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    s = _rows_to_sorted(spark_rows, spark_cols)
-    d = _rows_to_sorted(duck_rows, duck_cols)
-    mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(s, d)) if a != b]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} value mismatches, first 3: {mismatches[:3]}"
-    )
+    assert_matches_oracle(name, QUERIES[name](spark, degen_dir), degen_duck, ORACLES[name])
 
 
 # rows-only queries (no SQL oracle by nature: sketches, learned indexes,

@@ -104,36 +104,6 @@ def test_scale_ingest_upload_converges(spark, tmp_path):
         assert crm.total == first_total  # nothing re-POSTed
 
 
-def test_coupled_ingest_upload_stream(spark, tmp_path):
-    """Data arrival IS the upload trigger: a single streaming query
-    ingests CSVs and drains the pending set in the same micro-batch."""
-    from csv_crm_upload_spark.streaming.pipeline import run_ingest_upload_stream
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    (inp / "a.csv").write_text("1,jon,doe,jon@x.com,1\n2,jane,doe,jane@x.com,2\n")
-    store = CustomerStore(spark, str(tmp_path / "store"))
-    with MockCRM() as crm:
-        q = run_ingest_upload_stream(
-            spark, str(inp), store, str(tmp_path / "ckpt"), crm.url,
-            header=False, sleep=lambda s: None,
-        )
-        q.awaitTermination(120)
-        assert store.pending().count() == 0  # uploaded within the batch
-        assert {p["email"] for p in crm.received} == {"jon@x.com", "jane@x.com"}
-
-        # second wave: new file arrives, service wakes and uploads it too
-        (inp / "b.csv").write_text("3,sam,lee,sam@x.com,3\n")
-        q2 = run_ingest_upload_stream(
-            spark, str(inp), store, str(tmp_path / "ckpt"), crm.url,
-            header=False, sleep=lambda s: None,
-        )
-        q2.awaitTermination(120)
-        assert store.pending().count() == 0
-        assert {p["email"] for p in crm.received} == {"jon@x.com", "jane@x.com", "sam@x.com"}
-    assert store.read().filter(F.col("uploaded")).count() == 3
-
-
 @pytest.mark.race
 def test_readme_demo_two_services_race_under_flaky_sink(spark, tmp_path):
     """The reference's ACTUAL demo semantics (reference README.md:43-87,

@@ -36,26 +36,3 @@ def test_from_json_roundtrip_and_legacy_key(spark):
     assert rows[1]["uploaded"] is False
     assert rows[2]["modified_ts"] == dt.datetime(2026, 8, 13, 2, 0)
     assert rows[2]["first_name"] is None
-
-
-def test_format_roundtrips(spark, tmp_path):
-    """customer rows survive JSON/ORC/CSV/Parquet round-trips with the
-    explicit schema (no inference)."""
-    import datetime as dt
-
-    from csv_crm_upload_spark.operators.mutate import finalize_columns
-    from csv_crm_upload_spark.sources.formats import read_customers, write_customers
-
-    df = finalize_columns(
-        spark.createDataFrame(
-            [(1, "jon", "doe", "jon@x.com", "+1 212"), (2, "jane", None, "jane@x.com", None)],
-            ["id", "first_name", "last_name", "email", "phone"],
-        ),
-        now="2026-08-13 00:00:00",
-    )
-    want = sorted(map(tuple, df.collect()))
-    for fmt in ("json", "parquet", "orc", "csv"):
-        p = str(tmp_path / fmt)
-        write_customers(df, p, fmt)
-        got = sorted(map(tuple, read_customers(spark, p, fmt).collect()))
-        assert got == want, fmt

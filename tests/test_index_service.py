@@ -175,61 +175,6 @@ def test_index_service_rides_upload_service_ticker(spark, sf_dir, tmp_path):
     assert indexed == inline
 
 
-def test_streaming_index_maintenance_exactly_once(spark, sf_dir, tmp_path):
-    """The structured-streaming twin: the drop dir is a file source,
-    the checkpoint replaces the cursor, and each index records the
-    (app, batch) txn IN its epoch commit — so a re-delivered batch
-    no-ops and restarts fold only new files."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import (
-        run_index_maintenance_stream,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1)
-    idx = str(tmp_path / "text_idx")
-    rtr.save_text_index(half_a, idx, n_buckets=16)
-
-    drop = str(tmp_path / "drop")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(drop)
-    half_b.write.parquet(f"{drop}/shard_b")
-
-    q = run_index_maintenance_stream(spark, drop, ckpt, text_index=idx)
-    q.awaitTermination(120)
-    indexed = sorted(
-        map(tuple, rtr.bm25_search_indexed(spark, idx).collect()),
-        key=lambda t: (t[0], t[-1]),
-    )
-    inline = sorted(
-        map(tuple, rtr.bm25_search(docs).collect()), key=lambda t: (t[0], t[-1])
-    )
-    assert indexed == inline
-    epoch_after = read_manifest(idx)["epoch"]
-    assert read_manifest(idx)["last_txn"]["index-maint-documents"] >= 0
-
-    # replayed batch (same app, same batch id): no-op per the manifest txn
-    rtr.update_text_index(half_b, idx, txn=("index-maint-documents", 0))
-    assert read_manifest(idx)["epoch"] == epoch_after
-
-    # checkpointed restart with no new files: nothing re-folds
-    q2 = run_index_maintenance_stream(spark, drop, ckpt, text_index=idx)
-    q2.awaitTermination(120)
-    assert read_manifest(idx)["epoch"] == epoch_after
-
-    # a NEW shard after restart folds exactly once
-    extra = docs.limit(5).withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    extra.write.parquet(f"{drop}/shard_c")
-    q3 = run_index_maintenance_stream(spark, drop, ckpt, text_index=idx)
-    q3.awaitTermination(120)
-    n_indexed = rtr.read_index_stats(spark, idx)["n_docs"]
-    want_docs = docs.filter(F.col("text").isNotNull()).count() + extra.filter(
-        F.col("text").isNotNull()
-    ).count()
-    assert n_indexed == want_docs
-
-
 def test_update_txn_guard_across_index_families(spark, sf_dir, tmp_path):
     """Every update_* is exactly-once per (app, batch): the second call
     with the same txn must not add an epoch, for the vector indexes and

@@ -7,10 +7,7 @@ from __future__ import annotations
 import json
 
 from csv_crm_upload_spark.operators.validate import validate_split
-from csv_crm_upload_spark.sources.jsonl_source import (
-    read_customers_jsonl,
-    read_customers_jsonl_stream,
-)
+from csv_crm_upload_spark.sources.jsonl_source import read_customers_jsonl
 from csv_crm_upload_spark.sources.csv_source import read_customers_csv
 
 
@@ -78,22 +75,6 @@ def test_jsonl_extra_fields_ignored_missing_null(spark, tmp_path):
     row = read_customers_jsonl(spark, p).collect()[0]
     assert row["email"] == "a@x.com"
     assert "unexpected" not in row.asDict()
-
-
-def test_jsonl_stream_reader_is_streaming(spark, tmp_path):
-    d = str(tmp_path / "dir")
-    import os
-
-    os.makedirs(d)
-    _write_jsonl(
-        f"{d}/a.jsonl",
-        [{"id": "1", "first_name": "a", "last_name": "b", "email": "a@x.com", "phone": "1"}],
-    )
-    df = read_customers_jsonl_stream(spark, d, max_files_per_trigger=1)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields][:5] == [
-        "id", "first_name", "last_name", "email", "phone",
-    ]
 
 
 def test_cli_ingest_jsonl_end_to_end(spark, tmp_path, capsys):

@@ -4,6 +4,8 @@ of the same aggregate — exactly (measures ride in decimal)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.operators.matview import MaterializedAggregate
@@ -156,7 +158,8 @@ def test_continuous_aggregate_via_streaming_ingest(spark, tmp_path):
 def test_crash_after_view_swap_does_not_fold_delta_twice(spark, tmp_path, monkeypatch):
     """The refresh cursor commits with the aggregate: a crash right after
     the data-dir swap (injected into the old dir's removal) must not let
-    the next refresh fold the same delta again."""
+    the next refresh fold the same delta again, and the next write
+    removes the old aggregate the crash left behind."""
     import pytest
 
     from csv_crm_upload_spark.operators import matview as matview_mod
@@ -184,4 +187,9 @@ def test_crash_after_view_swap_does_not_fold_delta_twice(spark, tmp_path, monkey
     view.refresh()
     assert store.read().count() == 60
     assert sum(r["n_rows"] for r in view.read().collect()) == 60
+    assert _actual(view) == _expected(store)
+
+    store.append(finalize_columns(spark.createDataFrame(rows(60, 70), COLS)))
+    assert view.refresh()["mode"] == "incremental"
+    assert not [n for n in os.listdir(view.root) if n.startswith("_old_")]
     assert _actual(view) == _expected(store)

@@ -149,29 +149,3 @@ def test_vacuum_reclaims_superseded_nb_snapshots(spark, sf_dir, tmp_path):
     assert not os.path.isdir(f"{model}/counts/epoch=0")
     # the live snapshot still classifies
     assert classify_with_nb_model(docs.limit(10), model).count() > 0
-
-
-def test_streaming_maintenance_folds_nb_model(spark, sf_dir, tmp_path):
-    """run_index_maintenance_stream with nb_model: the checkpointed
-    fold advances the model exactly once, and a second availableNow run
-    over the same files no-ops (replay guard)."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import (
-        run_index_maintenance_stream,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    model = str(tmp_path / "nb")
-    save_nb_model(docs.filter(F.col("doc_id") < 300), model, n_buckets=8)
-    e0 = read_manifest(model)["epoch"]
-
-    drop = str(tmp_path / "drop")
-    docs.filter(F.col("doc_id") >= 300).write.parquet(f"{drop}/shard_a")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_index_maintenance_stream(spark, drop, ckpt, nb_model=model)
-    q.awaitTermination(120)
-    assert read_manifest(model)["epoch"] == e0 + 1
-
-    q2 = run_index_maintenance_stream(spark, drop, ckpt, nb_model=model)
-    q2.awaitTermination(120)
-    assert read_manifest(model)["epoch"] == e0 + 1, "replay must no-op"

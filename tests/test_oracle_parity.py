@@ -9,41 +9,17 @@ Runs at sf0.001 by default (fast); set SPARK_GRAFT_SF_DIR_TEST to
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tests._parity import assert_matches_oracle, duck_views
 
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
     yield con
     con.close()
-
-
-def _normalize(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    return v
-
-
-def _rows_to_sorted(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = [tuple(_normalize(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
 
 
 QUERIES = entrymod.queries()
@@ -54,21 +30,7 @@ ORACLES = entrymod.oracle_sql()
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     if name not in ORACLES:
         pytest.skip("no oracle (rows-only check)")
-    sdf = QUERIES[name](spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(ORACLES[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column names differ"
-    assert len(spark_rows) == len(duck_rows), f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-
-    s = _rows_to_sorted(spark_rows, spark_cols)
-    d = _rows_to_sorted(duck_rows, duck_cols)
-    mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(s, d)) if a != b]
-    assert not mismatches, f"{name}: {len(mismatches)} value mismatches, first 3: {mismatches[:3]}"
+    assert_matches_oracle(name, QUERIES[name](spark, sf_dir), duck, ORACLES[name])
 
 
 def test_entry_smoke(spark):

@@ -267,36 +267,6 @@ def test_pca_model_txn_replay_and_service_fold(spark, sf_dir, tmp_path):
     assert load_pca_loadings(spark, model2) == load_pca_loadings(spark, full)
 
 
-def test_streaming_maintenance_folds_pca_model(spark, sf_dir, tmp_path):
-    """run_index_maintenance_stream with pca_model: checkpointed fold
-    advances exactly once; a second availableNow run no-ops."""
-    from csv_crm_upload_spark.analytics.pca import save_pca_model
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import (
-        run_index_maintenance_stream,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    model = str(tmp_path / "pca")
-    save_pca_model(emb.filter(F.col("vec_id") < 300), model, r=4)
-    e0 = read_manifest(model)["epoch"]
-
-    drop = str(tmp_path / "drop")
-    emb.filter(F.col("vec_id") >= 300).write.parquet(f"{drop}/shard_a")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_index_maintenance_stream(
-        spark, drop, ckpt, kind="embeddings", pca_model=model
-    )
-    q.awaitTermination(120)
-    assert read_manifest(model)["epoch"] == e0 + 1
-
-    q2 = run_index_maintenance_stream(
-        spark, drop, ckpt, kind="embeddings", pca_model=model
-    )
-    q2.awaitTermination(120)
-    assert read_manifest(model)["epoch"] == e0 + 1, "replay must no-op"
-
-
 def test_pca_model_refuses_wrong_dimension_shard(spark, sf_dir, tmp_path):
     """Folding a wrong-dimension shard must raise, not silently corrupt
     the additive sums (the ivf/pq dimension-guard convention); and a

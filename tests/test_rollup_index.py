@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics import rollup as rlp
 from csv_crm_upload_spark.analytics import tpch
@@ -125,47 +124,3 @@ def test_rollup_key_format_is_strict(spark, tmp_path):
         json.dump({**m, "key_format": "someone-elses-v9"}, f)
     with pytest.raises(ValueError, match="key_format"):
         rlp.daily_rollup_counts(spark, p).collect()
-
-
-def test_streaming_rollup_maintenance_exactly_once(spark, sf_dir, tmp_path):
-    """run_index_maintenance_stream with kind="events": the checkpointed
-    stream folds event shards into the rollup exactly once, a replayed
-    batch no-ops via the manifest txn, and the post-fold probe equals
-    the inline operator over the full event history."""
-    import os
-
-    from csv_crm_upload_spark.sources.tables import load_table
-    from csv_crm_upload_spark.streaming.index_service import (
-        run_index_maintenance_stream,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    half_a = events.filter(F.col("event_id") % 2 == 0)
-    half_b = events.filter(F.col("event_id") % 2 == 1)
-    path = str(tmp_path / "roll")
-    rlp.save_daily_rollup(half_a, path)
-
-    drop = str(tmp_path / "drop")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(drop)
-    half_b.write.parquet(f"{drop}/shard_b")
-
-    q = run_index_maintenance_stream(
-        spark, drop, ckpt, kind="events", daily_rollup=path
-    )
-    q.awaitTermination(120)
-    probe = sorted(map(tuple, rlp.dow1_indexed(spark, path).collect()))
-    inline = sorted(map(tuple, tpch.dow1_weekly_profile(events).collect()))
-    assert probe == inline
-
-    epoch_after = read_manifest(path)["epoch"]
-    # replayed batch (same app, same batch id): no-op
-    rlp.update_daily_rollup(half_b, path, txn=("index-maint-events", 0))
-    assert read_manifest(path)["epoch"] == epoch_after
-
-    # checkpointed restart with no new files: nothing re-folds
-    q2 = run_index_maintenance_stream(
-        spark, drop, ckpt, kind="events", daily_rollup=path
-    )
-    q2.awaitTermination(120)
-    assert read_manifest(path)["epoch"] == epoch_after

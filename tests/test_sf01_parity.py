@@ -13,11 +13,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.test_oracle_parity import TABLES, _rows_to_sorted
+from tests._parity import assert_matches_oracle, duck_views
 
 pytestmark = pytest.mark.sf01
 
@@ -51,30 +50,11 @@ finally:
 
 @pytest.fixture(scope="module")
 def duck01():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF01_DIR}/{t}.parquet'")
+    con = duck_views(SF01_DIR)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_sf01_query_matches_oracle(name, spark, duck01):
-    sdf = QUERIES[name](spark, SF01_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    res = duck01.execute(ORACLES[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column names differ"
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    s = _rows_to_sorted(spark_rows, spark_cols)
-    d = _rows_to_sorted(duck_rows, duck_cols)
-    mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(s, d)) if a != b]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} value mismatches, first 3: {mismatches[:3]}"
-    )
+    assert_matches_oracle(name, QUERIES[name](spark, SF01_DIR), duck01, ORACLES[name])

@@ -417,51 +417,6 @@ def test_upload_service_ticks(spark, tmp_path):
     assert store.pending().count() == 0
 
 
-def test_incremental_service_ticks_cdc_pruned(spark, tmp_path):
-    """serve --incremental: tick 1 full (arms the cursor), tick 2 uploads
-    only what changed in between — and nothing is ever re-POSTed."""
-    from csv_crm_upload_spark.streaming.pipeline import run_upload_service
-
-    store = _fresh_store(spark, tmp_path)
-    with MockCRM() as crm:
-        def tick(interval):
-            store.append(finalize_columns(
-                spark.createDataFrame([(7, "late", "comer", "late@x.com", "7")], COLS)
-            ))
-
-        marked = run_upload_service(
-            store, crm.url, interval_s=1.0, max_cycles=3,
-            sleep=lambda s: None, tick_sleep=tick, incremental=True,
-        )
-    assert marked == [5, 1, 1]
-    assert len(crm.received) == 7  # zero duplicate POSTs across ticks
-    assert store.pending().count() == 0
-
-
-def test_incremental_upload_cycle_uploads_only_changes(spark, tmp_path):
-    """CDC-pruned upload: each tick POSTs only rows that changed since
-    the last seen version — a quiet tick POSTs nothing, a new append
-    POSTs exactly the new rows."""
-    from csv_crm_upload_spark.streaming.pipeline import run_upload_cycle_incremental
-
-    store = _fresh_store(spark, tmp_path)  # v0: 5 pending
-    with MockCRM() as crm:
-        nosleep = lambda s: None  # noqa: E731
-        marked, v = run_upload_cycle_incremental(store, crm.url, -1, sleep=nosleep)
-        assert marked == 5 and len(crm.received) == 5
-        # quiet tick: only our own mark commit since v — nothing POSTs
-        marked2, v2 = run_upload_cycle_incremental(store, crm.url, v, sleep=nosleep)
-        assert marked2 == 0 and len(crm.received) == 5
-        # new arrival: only the new row goes out
-        store.append(finalize_columns(
-            spark.createDataFrame([(6, "zed", "q", "z@x.com", "6")], COLS)
-        ))
-        marked3, _ = run_upload_cycle_incremental(store, crm.url, v2, sleep=nosleep)
-        assert marked3 == 1
-        assert [r["email"] for r in crm.received[5:]] == ["z@x.com"]
-        assert store.pending().count() == 0
-
-
 def test_store_compaction_binpacks_buckets(spark, tmp_path):
     """After an append chain, compact() resets every bucket to one file in
     a new snapshot; data identical, old versions still readable."""

@@ -37,50 +37,10 @@ def test_stream_ingest_available_now(spark, tmp_path):
     assert {r["id"] for r in table.collect()} == {10, 11, 12, 14}
 
 
-def test_merge_stream_upserts_with_exactly_once_effect(spark, tmp_path):
-    """Streaming CDC-apply: upsert batches MERGE into the store; a replay
-    of an already-applied batch id is a no-op via the txn marker."""
-    from csv_crm_upload_spark.streaming.pipeline import run_merge_stream
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    _write(inp, "a.csv", "1,jon,doe,jon@x.com,1\n2,jane,doe,jane@x.com,2\n")
-    store = CustomerStore(spark, str(tmp_path / "store"))
-    q = run_merge_stream(spark, str(inp), store, str(tmp_path / "ckpt"), header=False)
-    q.awaitTermination(120)
-    assert store.read().count() == 2
-    assert store.last_txn("merge-stream") == 0
-
-    # second wave: one update (jon's phone), one insert
-    _write(inp, "b.csv", "1,jon,doe,jon@x.com,99\n3,ann,lee,ann@x.com,3\n")
-    q2 = run_merge_stream(spark, str(inp), store, str(tmp_path / "ckpt"), header=False)
-    q2.awaitTermination(120)
-    got = {r["email"]: r["phone"] for r in store.read().collect()}
-    assert got == {"jon@x.com": "99", "jane@x.com": "2", "ann@x.com": "3"}
-    assert store.last_txn("merge-stream") == 1
-
-    # replay batch 1 by hand (the crash-restart path foreachBatch takes):
-    # marker makes it a no-op — no version commit, applied=False
-    v = store._current_version()
-    from csv_crm_upload_spark.sources.csv_source import read_customers_csv
-
-    batch = read_customers_csv(spark, str(inp / "b.csv"), header=False)
-    from csv_crm_upload_spark.operators.validate import validate_split
-
-    clean, _ = validate_split(batch)
-    res = store.merge(clean, txn=("merge-stream", 1))
-    assert res["applied"] is False
-    assert store._current_version() == v
-    # a NEWER txn version applies normally
-    res2 = store.merge(clean, txn=("merge-stream", 2))
-    assert res2.get("applied", True) in (True,) or res2["updated"] >= 0
-    assert store.last_txn("merge-stream") == 2
-
-
 def test_service_maintenance_compacts_and_vacuums_without_reupload(spark, tmp_path):
     """Maintenance riding the ticker: fragmented buckets get compacted,
-    old snapshots vacuumed, and the incremental cursor survives a
-    compaction-only version without re-POSTing anything."""
+    old snapshots vacuumed, and a compaction-only version re-POSTs
+    nothing."""
     from csv_crm_upload_spark.operators.mutate import finalize_columns
     from csv_crm_upload_spark.operators.store import CustomerStore
     from csv_crm_upload_spark.streaming.pipeline import run_upload_service
@@ -102,7 +62,6 @@ def test_service_maintenance_compacts_and_vacuums_without_reupload(spark, tmp_pa
             max_cycles=3,
             sleep=lambda s: None,
             tick_sleep=lambda s: None,
-            incremental=True,
             auto_compact_files=1,
             vacuum_keep=2,
         )
