@@ -3261,7 +3261,7 @@ def decay1_time_decayed_user_value(events: DataFrame, half_life_days: float = 7.
     form of exponential decay scoring (recommendation recency, churn
     risk, curriculum sampling weights).
 
-    Unlike a sequential EWMA (see streaming.stateful), the decay weight
+    Unlike a sequential EWMA, the decay weight
     here is a pure function of each row's timestamp, so the operator is
     ONE map-only weight expression + one groupBy — no order dependence,
     no window state; the 1-row max-ts aggregate broadcasts. Weighted sum
@@ -4651,9 +4651,9 @@ def zord1_zorder_layout(lineitem: DataFrame, n_files: int = 64) -> DataFrame:
     format's file-skipping consults, so `avg_span` IS the expected
     fraction of files a uniform point predicate fails to prune.
     Single-column sorts win their own column and forfeit the other;
-    the z-order rows quantify the two-column compromise. Complements
-    operators/layout.py:cluster_zorder (the WRITER this audits) and
-    store.py compact(zorder_by=...).
+    the z-order rows quantify the two-column compromise. The layouts
+    are built in-plan here; no writer in the package clusters files by
+    z-order.
 
     Scale shape: distributed_ntile passes only (range repartition +
     per-partition windows + bounded driver offsets — never a

@@ -462,18 +462,20 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "ingest":
-        from csv_crm_upload_spark.plans.ingest import ingest_csv, ingest_jsonl, ingest_orc
+        from csv_crm_upload_spark.plans.ingest import ingest_batch
+        from csv_crm_upload_spark.sources.csv_source import read_customers_csv
+        from csv_crm_upload_spark.sources.jsonl_source import read_customers_jsonl
+        from csv_crm_upload_spark.sources.orc_source import read_customers_orc
 
         if sum(map(bool, (args.csv, args.jsonl, args.orc))) != 1:
             raise SystemExit("ingest: exactly one of --csv, --jsonl, or --orc is required")
         if args.jsonl:
-            res = ingest_jsonl(spark, args.jsonl, store, quarantine_dir=args.quarantine)
+            batch = read_customers_jsonl(spark, args.jsonl)
         elif args.orc:
-            res = ingest_orc(spark, args.orc, store, quarantine_dir=args.quarantine)
+            batch = read_customers_orc(spark, args.orc)
         else:
-            res = ingest_csv(
-                spark, args.csv, store, header=not args.noheader, quarantine_dir=args.quarantine
-            )
+            batch = read_customers_csv(spark, args.csv, header=not args.noheader)
+        res = ingest_batch(batch, store, quarantine_dir=args.quarantine)
         print(f"inserted={res.inserted} quarantined={res.quarantined} duplicates={res.duplicates}")
     elif args.cmd == "merge":
         from csv_crm_upload_spark.operators.validate import validate_split

@@ -20,19 +20,17 @@ by `pmod(xxhash64(email), n_buckets)`:
     joined against the pruned bucket read — never a full-table count.
 
 Physical layout, decided in one place each:
-  * schema — the declared physical schema is CUSTOMER_SCHEMA plus every
-    evolved column under its physical name and `_META` type. Every
-    parquet read (`_scan`: a version, some of its buckets, or a staging
-    dir) passes it, so no read infers from file footers; the bucket
-    column `b` comes from partition discovery, and an evolved column a
-    file lacks reads as NULL. Writes project and cast to the same schema.
+  * schema — every parquet read (`_scan`: a version, some of its
+    buckets, or a staging dir) passes CUSTOMER_SCHEMA, so no read infers
+    from file footers; the bucket column `b` comes from partition
+    discovery. Writes cast to the same schema.
   * staging — `_staged` writes rows to a fresh `staging_*` dir,
     clustered and partitioned by bucket, and removes the dir afterwards.
   * commit — `_commit_version` builds version v+1 from a base version
     (hard-linking every bucket not replaced), the buckets to replace and
     a staged dir, writes `_COMMIT.json` and swaps `_LATEST`. Every
     mutation (append, append_unique, merge, mark_uploaded, delete,
-    compact, restore, clone) goes through it.
+    compact, clone) goes through it.
   * crash debris — a writer that dies after creating v+1 and before the
     `_LATEST` swap leaves a version dir above `_LATEST`. The write lock
     removes such dirs when it is taken, and `versions()` lists only
@@ -47,33 +45,22 @@ id/email (the check-then-act race the reference avoids via Postgres
 UNIQUE).
 
 Lakehouse surface mapping (what a Delta/Iceberg table would provide —
-the packages are absent from this environment, so the store implements
-the minimum of each on plain parquet + hard links):
+neither is a dependency, so the store implements the minimum of each
+on plain parquet + hard links):
   MERGE INTO            → merge()            (bucket-pruned upsert)
   UPDATE ... WHERE      → mark_uploaded()    (pruned keyed rewrite)
   DELETE ... WHERE      → delete()           (pruned predicate delete)
   VERSION AS OF         → read_version()
-  TIMESTAMP AS OF       → read_as_of()       (commit-ledger resolution)
-  RESTORE               → restore()
-  CHANGE DATA FEED      → changes()          (inode-pruned diff)
+  DESCRIBE HISTORY      → history()
   VACUUM                → vacuum()
   OPTIMIZE / compaction → compact()
   SHALLOW CLONE         → clone()            (hard-link zero-copy table)
-  ALTER TABLE ADD COLUMN→ add_column()       (metadata-only evolution)
-  RENAME / DROP COLUMN  → rename_column() / drop_column()  (column mapping)
-  ADD CONSTRAINT CHECK  → add_constraint()   (staged writes gated)
   GDPR erase (RTBF)     → forget()           (history-rewriting erasure)
 
-Schema evolution semantics (add_column): adding a column is an O(1)
-metadata commit — NO data rewrite, matching Delta/Iceberg. Files written
-before the column existed simply lack it; the declared-schema read
-returns NULL there and fills it with the column's default. A column
-added WITH a default behaves like SQL `ADD COLUMN ... NOT NULL DEFAULT x`
-(reads coalesce NULL → x, so NULL is not representable in it); a column
-added without one is nullable and old rows read as NULL.
-Known limit vs a real table format: the advisory pid-liveness write lock
-is single-host; cross-host multi-writer needs a real format's atomic
-log commit (documented, not simulated).
+`_META` holds only the bucket count. Known limit vs a real table
+format: the advisory pid-liveness write lock is single-host; cross-host
+multi-writer needs a real format's atomic log commit (documented, not
+simulated).
 """
 
 from __future__ import annotations
@@ -87,7 +74,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from csv_crm_upload_spark.operators.mutate import mark_uploaded
 from csv_crm_upload_spark.schemas import CUSTOMER_SCHEMA
@@ -96,13 +82,6 @@ PENDING_COLUMNS = ["id", "first_name", "last_name", "email", "phone"]
 DEFAULT_BUCKETS = 16
 
 
-class ConstraintViolation(Exception):
-    """A staged write (or an ADD CONSTRAINT over existing data) broke a
-    CHECK constraint; `.violations` maps constraint name → row count."""
-
-    def __init__(self, violations: dict[str, int]):
-        self.violations = violations
-        super().__init__(f"CHECK constraint(s) violated: {violations}")
 _LOCK_MAX_AGE_S = 300.0  # break locks older than this even if pid unreadable
 
 
@@ -110,11 +89,6 @@ def _bucket_col(n_buckets: int):
     """Bucket id for a row: pmod(xxhash64(email), n) — email is the
     reference's upload idempotency key, so success sets prune well."""
     return F.pmod(F.xxhash64(F.col("email")), F.lit(n_buckets)).cast("int")
-
-
-def _physical(e: dict) -> str:
-    """File (physical) name of an evolved column — see rename_column."""
-    return e.get("physical", e["name"])
 
 
 class CustomerStore:
@@ -145,154 +119,41 @@ class CustomerStore:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path)
 
-    @contextlib.contextmanager
-    def _edit_meta(self):
-        """The one locked read-modify-write of _META: edits to the yielded
-        dict are written back when the block exits normally; an exception
-        leaves _META as it was."""
-        with self._write_lock():
-            meta = self._read_meta()
-            yield meta
-            self._write_meta(meta)
-
     def _load_or_init_meta(self, n_buckets: int) -> int:
         """Bucket count is a table property: fixed at creation, read back
-        on open so every writer buckets identically."""
+        on open so every writer buckets identically. A `_META` that
+        declares evolved columns or CHECK constraints is refused: reads
+        and writes use CUSTOMER_SCHEMA only, so the next rewrite would
+        silently drop those columns."""
         try:
-            return int(self._read_meta()["n_buckets"])
-        except (FileNotFoundError, KeyError, ValueError):
+            meta = self._read_meta()
+        except (FileNotFoundError, ValueError):
+            meta = {}
+        for key in ("extra_cols", "constraints"):
+            if meta.get(key):
+                raise ValueError(
+                    f"{self._meta_path} declares {key!r}; this store reads and "
+                    f"writes only the customer schema and would drop them"
+                )
+        try:
+            return int(meta["n_buckets"])
+        except (KeyError, ValueError):
             self._write_meta({"n_buckets": n_buckets})
             return n_buckets
 
-    # -- schema evolution ---------------------------------------------------
-    def _extras(self) -> list[dict]:
-        """Evolved columns [{name, type, default}], oldest first. Read
-        from _META on every call so concurrent processes observe an
-        add_column as soon as it commits."""
-        try:
-            return list(self._read_meta().get("extra_cols", []))
-        except (FileNotFoundError, ValueError):
-            return []
-
-    def _table_cols(self, extras: list[dict] | None = None) -> list[str]:
-        extras = self._extras() if extras is None else extras
-        return [f.name for f in CUSTOMER_SCHEMA.fields] + [e["name"] for e in extras]
-
-    def add_column(self, name: str, dtype: str, default=None) -> None:
-        """ALTER TABLE ADD COLUMN — metadata-only schema evolution.
-        O(1): no version commit, no data rewrite; every snapshot
-        (including time travel) reads with the widened schema, old files
-        fill with `default` (see module docstring for NULL semantics).
-        `dtype` is a Spark DDL type string ("string", "int", "double",
-        "timestamp", ...)."""
-        # validate the type string (and default castability) up front so a
-        # typo fails here, not in some later read
-        T._parse_datatype_string(dtype)
-        if default is not None:
-            self.spark.range(1).select(F.lit(default).cast(dtype)).schema  # noqa: B018
-        with self._edit_meta() as meta:
-            extras = meta.get("extra_cols", [])
-            taken = {f.name for f in CUSTOMER_SCHEMA.fields} | {e["name"] for e in extras}
-            if name in taken or name == "b":
-                raise ValueError(f"column already exists: {name}")
-            # physical-name hygiene: if this logical name ever existed as a
-            # physical column (dropped, or freed by a rename), data for it
-            # may survive in old files — a fresh physical name keeps that
-            # data from resurrecting (Delta column-mapping semantics)
-            used_phys = set(meta.get("retired_physicals", [])) | {_physical(e) for e in extras}
-            entry = {"name": name, "type": dtype, "default": default}
-            if name in used_phys:
-                n = int(meta.get("phys_counter", 0)) + 1
-                meta["phys_counter"] = n
-                entry["physical"] = f"{name}__p{n}"
-            extras.append(entry)
-            meta["extra_cols"] = extras
-
-    def rename_column(self, old: str, new: str) -> None:
-        """ALTER TABLE RENAME COLUMN — metadata-only, for evolved columns.
-        The file (physical) name never changes; only the logical name in
-        _META does, so the rename is O(1) with zero data rewrite and old
-        snapshots read back under the NEW name (Delta column-mapping
-        `name` mode). Base schema columns are the reference's contract
-        (email is the merge/bucket key) and stay fixed."""
-        with self._edit_meta() as meta:
-            extras = meta.get("extra_cols", [])
-            match = [e for e in extras if e["name"] == old]
-            if not match:
-                raise ValueError(f"not an evolved column (only those rename): {old}")
-            taken = {f.name for f in CUSTOMER_SCHEMA.fields} | {e["name"] for e in extras}
-            if new in taken or new == "b":
-                raise ValueError(f"column already exists: {new}")
-            e = match[0]
-            e.setdefault("physical", e["name"])
-            e["name"] = new
-            meta["extra_cols"] = extras
-
-    def drop_column(self, name: str) -> None:
-        """ALTER TABLE DROP COLUMN — metadata-only, for evolved columns.
-        O(1): the column vanishes from the logical schema instantly; file
-        bytes are reclaimed lazily as rewrites (compact/merge/delete)
-        regenerate the files without it. The physical name is retired so
-        a later add_column of the same name cannot resurrect old data."""
-        with self._edit_meta() as meta:
-            extras = meta.get("extra_cols", [])
-            match = [e for e in extras if e["name"] == name]
-            if not match:
-                raise ValueError(f"not an evolved column (only those drop): {name}")
-            retired = set(meta.get("retired_physicals", []))
-            retired.add(_physical(match[0]))
-            meta["retired_physicals"] = sorted(retired)
-            meta["extra_cols"] = [e for e in extras if e["name"] != name]
-
-    def _physical_schema(self, extras: list[dict]) -> T.StructType:
-        """The declared schema of every data file: CUSTOMER_SCHEMA plus
-        each evolved column under its physical name and _META type. A
-        physical name that is not listed (a dropped column) is never
-        read, so its old data cannot resurface."""
-        return T.StructType(
-            CUSTOMER_SCHEMA.fields
-            + [T.StructField(_physical(e), T._parse_datatype_string(e["type"])) for e in extras]
-        )
-
-    def _scan(
-        self, vdir: str | None, buckets: list[str] | None = None, extras: list[dict] | None = None
-    ) -> DataFrame:
+    def _scan(self, vdir: str | None, buckets: list[str] | None = None) -> DataFrame:
         """The one parquet read: a version (or staging) dir, or just the
         named `b=K` buckets of it (partition pruning by path), always with
-        the declared physical schema — no footer inference, no Spark job.
-        `b` comes from partition discovery; an empty bucket list is an
-        empty frame. Evolved columns surface under their logical names,
-        NULL filled with the column's default."""
-        extras = self._extras() if extras is None else extras
-        schema = self._physical_schema(extras)
+        CUSTOMER_SCHEMA — no footer inference, no Spark job. `b` comes
+        from partition discovery; an empty bucket list is an empty frame."""
+        reader = self.spark.read.schema(CUSTOMER_SCHEMA)
         if buckets is None:
-            df = self.spark.read.schema(schema).parquet(vdir)
-        elif buckets:
-            df = (
-                self.spark.read.schema(schema)
-                .option("basePath", vdir)
-                .parquet(*[os.path.join(vdir, b) for b in buckets])
+            return reader.parquet(vdir)
+        if buckets:
+            return reader.option("basePath", vdir).parquet(
+                *[os.path.join(vdir, b) for b in buckets]
             )
-        else:
-            df = self.spark.createDataFrame([], schema)
-        evolved = []
-        for e in extras:
-            c = F.col(_physical(e))
-            if e["default"] is not None:
-                c = F.coalesce(c, F.lit(e["default"]).cast(e["type"]))
-            evolved.append(c.alias(e["name"]))
-        base = [F.col(f.name) for f in CUSTOMER_SCHEMA.fields]
-        return df.select(*base, *evolved, *(["b"] if "b" in df.columns else []))
-
-    def _physical_cols(self, df: DataFrame, extras: list[dict]) -> list:
-        """Project a logical frame onto the declared physical schema: base
-        columns cast to their DDL types, evolved columns under their
-        physical names (the column's default where `df` lacks it)."""
-        out = [F.col(f.name).cast(f.dataType).alias(f.name) for f in CUSTOMER_SCHEMA.fields]
-        for e in extras:
-            src = F.col(e["name"]) if e["name"] in df.columns else F.lit(e["default"])
-            out.append(src.cast(e["type"]).alias(_physical(e)))
-        return out
+        return self.spark.createDataFrame([], CUSTOMER_SCHEMA)
 
     def _current_version(self) -> int:
         try:
@@ -397,81 +258,24 @@ class CustomerStore:
         except OSError:
             return False  # vanished — the open() loop will retry
 
-    # -- CHECK constraints --------------------------------------------------
-    def _constraints(self) -> dict[str, str]:
-        try:
-            return dict(self._read_meta().get("constraints", {}))
-        except (FileNotFoundError, ValueError):
-            return {}
-
-    def add_constraint(self, name: str, expr: str) -> None:
-        """ALTER TABLE ADD CONSTRAINT name CHECK (expr) — Delta-style
-        declarative row constraints. EXISTING data is validated first
-        (one filter-count scan; the add fails if any row violates), then
-        every staged write is gated (see _check_constraints). SQL CHECK
-        NULL semantics: a row where the expression is NULL passes.
-        Constraints are ingest gates — the reference holds its
-        equivalents (NOT NULL, UNIQUE) in Postgres DDL; flag-flip/delete
-        rewrites of already-accepted rows are not re-validated."""
-        F.expr(expr)  # syntax-check up front
-        bad = self.read().filter(F.expr(expr) == False).count()  # noqa: E712
-        if bad:
-            raise ConstraintViolation({name: bad})
-        with self._edit_meta() as meta:
-            cons = meta.get("constraints", {})
-            if name in cons:
-                raise ValueError(f"constraint already exists: {name}")
-            cons[name] = expr
-            meta["constraints"] = cons
-
-    def drop_constraint(self, name: str) -> None:
-        with self._edit_meta() as meta:
-            cons = meta.get("constraints", {})
-            if name not in cons:
-                raise KeyError(f"no such constraint: {name}")
-            del cons[name]
-            meta["constraints"] = cons
-
     # -- staging / commit ---------------------------------------------------
     @contextlib.contextmanager
-    def _staged(self, rows: DataFrame, sort_key=None):
-        """Write `rows` (logical column names) to a fresh staging dir in
-        the table's physical layout, yield the dir, and remove it on exit.
-        Rows are clustered by bucket before the `b=K` write: without that
-        every task writes a file into every bucket it touches (tasks ×
-        buckets small files — the classic streaming-sink killer).
-        `sort_key` additionally orders rows within each bucket."""
+    def _staged(self, rows: DataFrame):
+        """Write `rows` to a fresh staging dir in the table's physical
+        layout, yield the dir, and remove it on exit. Rows are clustered
+        by bucket before the `b=K` write: without that every task writes a
+        file into every bucket it touches (tasks × buckets small files —
+        the classic streaming-sink killer)."""
         staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-        cols = [*self._physical_cols(rows, self._extras()), _bucket_col(self.n_buckets).alias("b")]
-        if sort_key is not None:
-            cols.append(sort_key.alias("_z"))
-        out = rows.select(*cols).repartition(self.n_buckets, "b")
-        if sort_key is not None:
-            out = out.sortWithinPartitions("b", "_z").drop("_z")
+        out = rows.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in CUSTOMER_SCHEMA.fields],
+            _bucket_col(self.n_buckets).alias("b"),
+        ).repartition(self.n_buckets, "b")
         try:
             out.write.mode("overwrite").partitionBy("b").parquet(staging)
             yield staging
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-
-    def _check_constraints(self, staging: str) -> None:
-        """Gate a staged write on the CHECK constraints: one agg job over
-        the STAGED files (already materialized — no recompute of the batch
-        plan). sum skips the NULLs of (expr == false) on NULL expr rows,
-        giving SQL CHECK null-passes semantics; rules reference logical
-        column names."""
-        cons = self._constraints()
-        if not cons:
-            return
-        row = self._scan(staging).agg(
-            *[
-                F.sum((F.expr(e) == False).cast("int")).alias(n)  # noqa: E712
-                for n, e in cons.items()
-            ]
-        ).first()
-        bad = {n: int(v) for n, v in row.asDict().items() if v}
-        if bad:
-            raise ConstraintViolation(bad)
 
     @staticmethod
     def _bucket_dirs(version_dir: str) -> dict[str, str]:
@@ -577,148 +381,29 @@ class CustomerStore:
             raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
         return self._scan(vdir).drop("b")
 
-    def read_as_of(self, ts: str) -> DataFrame:
-        """TIMESTAMP AS OF: scan the newest still-on-disk snapshot whose
-        commit timestamp is at or before `ts` (UTC 'YYYY-MM-DD HH:MM:SS',
-        the format history() records). Pure metadata resolution — one
-        walk of the commit ledger, then a normal read_version scan."""
-        for h in self.history():  # newest first
-            t = h.get("timestamp")
-            if t is not None and t <= ts:
-                return self.read_version(h["version"])
-        raise FileNotFoundError(
-            f"no snapshot committed at or before {ts} (earliest retained: "
-            f"{self.versions()[:1] or None})"
-        )
-
     def versions(self) -> list[int]:
         """Committed snapshot versions still on disk, oldest first."""
         current = self._current_version()
         return [v for v in self._version_dirs() if v <= current]
 
-    def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
-        """CDC change feed between two snapshots (the CHANGES/table_changes
-        surface of a lakehouse format): rows tagged `_change_type` in
-        {insert, update_preimage, update_postimage, delete}.
-
-        Scale shape: versions share unchanged buckets through hard links,
-        so the diff first prunes to buckets whose FILE SETS differ (inode
-        comparison — free, no I/O), then row-diffs only those buckets with
-        exceptAll. An upload cycle's change feed costs O(affected
-        buckets), never O(table)."""
-        if v_to is None:
-            v_to = self._current_version()
-        # a vacuumed endpoint must fail loudly, not read as an empty
-        # snapshot — silently treating missing v_from as {} would emit a
-        # plausible-but-wrong all-insert change feed
-        for v in (v_from, v_to):
-            if v >= 0 and not os.path.isdir(self._version_dir(v)):
-                raise FileNotFoundError(
-                    f"version {v} not found (vacuumed?): {self._version_dir(v)}"
-                )
-        extras = self._extras()
-        cols = self._table_cols(extras)
-
-        def _inodes(v: int) -> dict[str, frozenset]:
-            return {
-                b: frozenset(
-                    os.stat(os.path.join(p, f)).st_ino
-                    for f in os.listdir(p)
-                    if f.endswith(".parquet")
-                )
-                for b, p in self._bucket_dirs(self._version_dir(v)).items()
-            }
-
-        old_map, new_map = _inodes(v_from), _inodes(v_to)
-        changed = sorted(
-            b
-            for b in set(old_map) | set(new_map)
-            if old_map.get(b) != new_map.get(b)
-        )
-
-        def _bucket_rows(v: int, present: dict) -> DataFrame:
-            sel = [b for b in changed if b in present]
-            return self._scan(self._version_dir(v), sel, extras).select(*cols)
-
-        old = _bucket_rows(v_from, old_map)
-        new = _bucket_rows(v_to, new_map)
-        removed = old.exceptAll(new)
-        added = new.exceptAll(old)
-        rem_keys = removed.select("email").distinct()
-        add_keys = added.select("email").distinct()
-        tag = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
-        return (
-            tag(added.join(rem_keys, "email", "left_anti"), "insert")
-            .unionByName(tag(added.join(rem_keys, "email", "left_semi"), "update_postimage"))
-            .unionByName(tag(removed.join(add_keys, "email", "left_semi"), "update_preimage"))
-            .unionByName(tag(removed.join(add_keys, "email", "left_anti"), "delete"))
-            .select("email", "_change_type", *[c for c in cols if c != "email"])
-        )
-
-    def compact(self, zorder_by: list[str] | None = None) -> int:
+    def compact(self) -> int:
         """Bin-pack every bucket to one file in a NEW snapshot (readers of
         older versions are untouched — compaction is just another commit).
         Each append links the prior version's files and adds its own, so
         a long append chain accumulates files per bucket; compaction
-        resets that to one file per bucket. Returns the new version.
-
-        `zorder_by` additionally clusters rows WITHIN each bucket by the
-        interleaved-bit z-value of the given columns (OPTIMIZE ... ZORDER
-        BY): parquet row-group min/max envelopes on those columns become
-        tight, so point/range scans inside a bucket skip row groups —
-        the intra-bucket analog of the zone-map file skipping in
-        operators/layout.py."""
+        resets that to one file per bucket. Returns the new version."""
         with self._write_lock():
             v = self._current_version()
             if v < 0:
                 return -1
-            table = self.read()
-            sort_key = None
-            if zorder_by:
-                from csv_crm_upload_spark.operators.layout import _zvalue
-
-                sort_key = _zvalue(table, zorder_by)
-            with self._staged(table, sort_key) as staging:
+            with self._staged(self.read()) as staging:
                 return self._commit_version(
                     staging,
                     replace=set(self._bucket_dirs(self._version_dir(v))),
                     op="compact",
-                    metrics={"zorder_by": list(zorder_by or [])},
                 )
 
-    def restore(self, version: int) -> int:
-        """RESTORE TO VERSION AS OF: re-commit an old snapshot as a NEW
-        version (the lakehouse rollback surface). History is preserved —
-        restore is just another commit that hard-links the old version's
-        files, so it is O(files) metadata work with zero data copy, and
-        readers of intermediate versions are untouched."""
-        with self._write_lock():
-            vdir = self._version_dir(version)
-            if version < 0 or not os.path.isdir(vdir):
-                raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
-            return self._commit_version(
-                None, base=vdir, op="restore", metrics={"restored_version": version}
-            )
-
-    def lookup(self, email: str) -> DataFrame:
-        """Bucket-pruned point lookup: compute the email's bucket id
-        driver-side (same pmod(xxhash64) as the writer) and read ONLY
-        that bucket's directory — a 1/n_buckets slice of the table
-        regardless of table size, the hash-index point read the
-        reference gets from its Postgres UNIQUE index. The residual
-        email filter then pushes into that one parquet scan. A bucket
-        that holds no rows at all answers from metadata: provably absent."""
-        b = self._bucket_of(email)
-        v = self._current_version()
-        if v < 0:
-            raise FileNotFoundError("store has no committed version yet")
-        vdir = self._version_dir(v)
-        present = [b] if b in self._bucket_dirs(vdir) else []
-        return self._scan(vdir, present).filter(F.col("email") == email)
-
-    def maybe_compact(
-        self, max_files_per_bucket: int = 8, zorder_by: list[str] | None = None
-    ) -> int | None:
+    def maybe_compact(self, max_files_per_bucket: int = 8) -> int | None:
         """Auto-compaction policy: compact only when some bucket has
         accumulated more than `max_files_per_bucket` files. The check is
         pure metadata (os.listdir per bucket, no Spark job), so a
@@ -730,7 +415,7 @@ class CustomerStore:
         for _b, path in self._bucket_dirs(self._version_dir(v)).items():
             n = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
             if n > max_files_per_bucket:
-                return self.compact(zorder_by=zorder_by)
+                return self.compact()
         return None
 
     def clone(self, dest_root: str) -> "CustomerStore":
@@ -740,10 +425,10 @@ class CustomerStore:
         zero bytes copied. Both tables then evolve independently: every
         commit on either side writes new files and re-links untouched
         ones, so the clone is copy-on-write by construction and no write
-        can ever leak through to the other table. Schema (bucket count +
-        evolved columns) carries over; history does NOT (the clone starts
-        at its own v0), matching shallow-clone semantics. Requires the
-        destination on the same filesystem (hard links)."""
+        can ever leak through to the other table. The bucket count carries
+        over; history does NOT (the clone starts at its own v0), matching
+        shallow-clone semantics. Requires the destination on the same
+        filesystem (hard links)."""
         src_v = self._current_version()
         if src_v < 0:
             raise FileNotFoundError("nothing to clone: store has no committed version")
@@ -752,7 +437,6 @@ class CustomerStore:
         ):
             raise FileExistsError(f"clone destination is already a store: {dest_root}")
         dest = CustomerStore(self.spark, dest_root, n_buckets=self.n_buckets)
-        dest._write_meta(self._read_meta())  # n_buckets + evolved columns
         with dest._write_lock():
             dest._commit_version(
                 None,
@@ -779,7 +463,6 @@ class CustomerStore:
         """S5: append a finalized batch as a new snapshot. No uniqueness
         check — callers that need D1 use append_unique."""
         with self._staged(batch) as staging:
-            self._check_constraints(staging)
             with self._write_lock():
                 self._commit_version(staging)
 
@@ -795,7 +478,6 @@ class CustomerStore:
         insertable = anti_join_existing(batch, self.read(), keys)
         with contextlib.ExitStack() as stack:
             staging = stack.enter_context(self._staged(insertable))
-            self._check_constraints(staging)
             with self._write_lock():
                 if self._current_version() != v_seen and self._bucket_dirs(staging):
                     # conflict: someone committed since we checked — redo
@@ -834,7 +516,6 @@ class CustomerStore:
         from csv_crm_upload_spark.operators.dedup import dedupe_batch
         from csv_crm_upload_spark.operators.mutate import finalize_columns
 
-        cols = self._table_cols()
         ts = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
         src = dedupe_batch(source.select(*PENDING_COLUMNS))
         upd = F.broadcast(
@@ -856,7 +537,7 @@ class CustomerStore:
                 .withColumn("last_name", F.when(matched, F.col("_m_last")).otherwise(F.col("last_name")))
                 .withColumn("phone", F.when(matched, F.col("_m_phone")).otherwise(F.col("phone")))
                 .withColumn("modified_ts", F.when(matched, ts).otherwise(F.col("modified_ts")))
-                .select(*cols)
+                .select(*CUSTOMER_SCHEMA.fieldNames())
             )
             n_updated = sub.join(F.broadcast(src.select("email")), "email", "left_semi").count()
             insert_cand = src.join(sub.select("email"), "email", "left_anti")
@@ -869,7 +550,6 @@ class CustomerStore:
                 finalize_columns(inserts, now=now), allowMissingColumns=True
             )
             with self._staged(staged_df) as staging:
-                self._check_constraints(staging)
                 self._commit_version(
                     staging,
                     replace=set(affected),
@@ -892,8 +572,7 @@ class CustomerStore:
         scan finds which buckets contain matches (≤ n_buckets rows
         collected), only those buckets are rewritten without the matching
         rows, the rest hard-link into the new version. A bucket whose
-        rows all match simply disappears from the new snapshot. The CDC
-        feed (changes()) reports the removed rows as `delete`.
+        rows all match simply disappears from the new snapshot.
         Returns the number of rows deleted."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         is_hit = F.coalesce(cond, F.lit(False))
@@ -932,7 +611,7 @@ class CustomerStore:
         rewritten ONCE — the rewritten file is re-linked into every
         version that referenced the original, preserving the sharing.
         Files that do not contain the email are left untouched (their
-        inodes and zone maps survive). Per-file filtering runs
+        inodes survive). Per-file filtering runs
         driver-side via pyarrow — bounded by one bucket's files, 1/n_buckets
         of the table regardless of scale; a cluster deployment would
         distribute the per-file rewrite as a Spark job over file paths.
@@ -967,12 +646,13 @@ class CustomerStore:
                 kept = table.filter(pc.invert(mask))
                 if kept.num_rows:
                     tmp = src + ".forget.tmp"
-                    pq.write_table(kept, tmp)
+                    # INT96, as Spark writes timestamps: pyarrow's default
+                    # INT64 nanos is a type Spark's reader rejects
+                    pq.write_table(kept, tmp, use_deprecated_int96_timestamps=True)
                     # splice the new inode into every version that linked
                     # the old one, keeping filenames (and thus sharing)
-                    first, rest = links[0], links[1:]
                     os.replace(tmp, src)
-                    for bdir, name in rest:
+                    for bdir, name in links[1:]:
                         dst = os.path.join(bdir, name)
                         dtmp = dst + ".forget.tmp"
                         os.link(src, dtmp)
@@ -981,7 +661,7 @@ class CustomerStore:
                     for bdir, name in links:
                         os.remove(os.path.join(bdir, name))
             # a bucket left with zero files must disappear entirely: a
-            # snapshot's bucket set is its dir listing (lookup, changes)
+            # snapshot's bucket set is its dir listing
             for v in self.versions():
                 bdir = os.path.join(self._version_dir(v), b)
                 if os.path.isdir(bdir) and not any(
@@ -989,33 +669,6 @@ class CustomerStore:
                 ):
                     shutil.rmtree(bdir, ignore_errors=True)
         return int(erased_current)
-
-    def analyze(self) -> DataFrame:
-        """ANALYZE TABLE COMPUTE STATISTICS FOR ALL COLUMNS: one pass over
-        the current snapshot producing per-column row count, null count,
-        approx distinct count (HLL), and min/max (rendered as strings so
-        heterogeneous column types share one result schema) — the
-        statistics a cost-based optimizer (or a human sizing a join)
-        wants. Single scan, all aggregates combine map-side; cost is one
-        job regardless of column count."""
-        df = self.read()
-        cols = df.columns
-        aggs: list = [F.count(F.lit(1)).cast("long").alias("_n")]
-        for c in cols:
-            aggs += [
-                F.sum(F.col(c).isNull().cast("long")).cast("long").alias(f"{c}__nulls"),
-                F.approx_count_distinct(c).cast("long").alias(f"{c}__ndv"),
-                F.min(F.col(c).cast("string")).alias(f"{c}__min"),
-                F.max(F.col(c).cast("string")).alias(f"{c}__max"),
-            ]
-        row = df.agg(*aggs).collect()[0]
-        out = [
-            (c, row["_n"], row[f"{c}__nulls"], row[f"{c}__ndv"], row[f"{c}__min"], row[f"{c}__max"])
-            for c in cols
-        ]
-        return self.spark.createDataFrame(
-            out, ["column", "n_rows", "n_nulls", "approx_ndv", "min_value", "max_value"]
-        )
 
     def pending(self) -> DataFrame:
         """F1+P1: `SELECT id, first_name, last_name, email, phone FROM

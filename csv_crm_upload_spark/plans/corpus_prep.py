@@ -136,13 +136,10 @@ def write_training_corpus(
     is a sort, not a shuffle.
 
     The join back to `documents` is on doc_id — one shuffle of the
-    surviving manifest against the corpus scan (or a bucketed-join
-    no-op if both sides land bucketed by doc_id; see layout.py).
+    surviving manifest against the corpus scan.
     Deterministic end to end (every stage is a pure function of
     doc_id/text), so a re-run OVERWRITES to the identical artifact —
     idempotence is asserted in tests."""
-    from csv_crm_upload_spark.operators.layout import write_partitioned
-
     manifest = prepare_training_corpus(
         documents, pairs=pairs, pack_budget=pack_budget, n_shards=n_shards
     )
@@ -152,7 +149,7 @@ def write_training_corpus(
     packed = manifest_back.join(
         documents.select("doc_id", "text"), "doc_id"
     )
-    write_partitioned(packed, f"{path}/corpus", ["split", "source"])
+    packed.write.mode("overwrite").partitionBy("split", "source").parquet(f"{path}/corpus")
 
 
 def prepare_training_corpus_v2(

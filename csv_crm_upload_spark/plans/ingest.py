@@ -91,43 +91,3 @@ def ingest_csv(
         now=now,
         quarantine_dir=quarantine_dir,
     )
-
-
-def ingest_jsonl(
-    spark: SparkSession,
-    path: str,
-    store: CustomerStore,
-    now=None,
-    quarantine_dir: str | None = None,
-) -> IngestResult:
-    """Full-file batch ingest from JSON-lines — the identical pipeline
-    behind a different reader (sources/jsonl_source.py): validate,
-    quarantine, dedup, defaults, and append are all format-agnostic."""
-    from csv_crm_upload_spark.sources.jsonl_source import read_customers_jsonl
-
-    return ingest_batch(
-        read_customers_jsonl(spark, path),
-        store,
-        now=now,
-        quarantine_dir=quarantine_dir,
-    )
-
-
-def ingest_orc(
-    spark: SparkSession,
-    path: str,
-    store: CustomerStore,
-    now=None,
-    quarantine_dir: str | None = None,
-) -> IngestResult:
-    """Full-file batch ingest from ORC — the columnar third format
-    behind the same format-agnostic validate/quarantine/dedup/append
-    pipeline (sources/orc_source.py)."""
-    from csv_crm_upload_spark.sources.orc_source import read_customers_orc
-
-    return ingest_batch(
-        read_customers_orc(spark, path),
-        store,
-        now=now,
-        quarantine_dir=quarantine_dir,
-    )

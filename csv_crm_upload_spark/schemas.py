@@ -1,4 +1,4 @@
-"""Explicit schemas — no inference anywhere.
+"""Explicit schemas for the customer CSV, the store and the testdata tables.
 
 The reference addresses CSV columns positionally (reference
 cmd/csvreader/csvreader.go:120-128) against a fixed Postgres DDL
@@ -67,7 +67,8 @@ QUARANTINE_SCHEMA = StructType(
 
 # ---------------------------------------------------------------------------
 # Driver testdata tables (/root/testdata/sf*/, TESTDATA.md). Explicit so
-# reads never infer; matches the parquet files the driver generated.
+# the declared types match the parquet files the driver generated
+# (sources/tables.py reads footers and uses these for timestamp columns).
 # ---------------------------------------------------------------------------
 TESTDATA_SCHEMAS: dict[str, StructType] = {
     "region": StructType(

@@ -198,76 +198,6 @@ class JdbcCustomerStore:
         finally:
             self._execute(f"DROP TABLE {hits}")
 
-    def apply_changes(self, changes: DataFrame) -> dict:
-        """Replicate a CDC feed (the `store.changes()` shape: rows tagged
-        `_change_type` ∈ insert / update_preimage / update_postimage /
-        delete) into the relational table — the cross-system half of the
-        CDC story: the versioned parquet store is the source of truth and
-        a serving database FOLLOWS it, one version delta at a time.
-
-        Each delta applies as THREE set-based statements (executor-
-        parallel INSERT append, one correlated UPDATE keyed on email, one
-        IN-list DELETE) — never per-row round trips, so the cost scales
-        with the delta, and the statements are ANSI (Derby + Postgres).
-        Source timestamps replicate as-is (a replica must not re-stamp).
-        Preimages are informational and skipped. Returns
-        {"inserted": n, "updated": n, "deleted": n}."""
-        cols = [*PENDING_COLUMNS, "uploaded", "created_ts", "modified_ts"]
-        # one snapshot for three consumers: the feed's lazy plan re-reads
-        # version dirs otherwise
-        rows = changes.localCheckpoint(eager=True)
-        inserts = rows.filter(F.col("_change_type") == "insert").select(*cols)
-        updates = rows.filter(F.col("_change_type") == "update_postimage").select(*cols)
-        deletes = rows.filter(F.col("_change_type") == "delete").select("email")
-        out = {"inserted": inserts.count(), "updated": 0, "deleted": 0}
-        if out["inserted"]:
-            self.append(inserts)
-        staged_types = (
-            "id INT, first_name VARCHAR(255), last_name VARCHAR(255), "
-            "email VARCHAR(255), phone VARCHAR(64)"
-        )
-        if updates.limit(1).count():
-            tmp = f"{self.table}_cdcu_{uuid.uuid4().hex[:8]}"
-            (
-                updates.write.format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", tmp)
-                .option("createTableColumnTypes", staged_types)
-                .mode("overwrite")
-                .save()
-            )
-            try:
-                # staged identifiers are quoted (Spark's JDBC writer
-                # preserves case — see _update_sql's folding note)
-                sets = ", ".join(
-                    f'{c} = (SELECT "{c}" FROM {tmp} h WHERE h."email" = {self.table}.email)'
-                    for c in cols
-                    if c != "email"
-                )
-                out["updated"] = self._execute(
-                    f"UPDATE {self.table} SET {sets} "
-                    f'WHERE email IN (SELECT "email" FROM {tmp})'
-                )
-            finally:
-                self._execute(f"DROP TABLE {tmp}")
-        if deletes.limit(1).count():
-            tmp = f"{self.table}_cdcd_{uuid.uuid4().hex[:8]}"
-            (
-                deletes.write.format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", tmp)
-                .option("createTableColumnTypes", "email VARCHAR(255)")
-                .mode("overwrite")
-                .save()
-            )
-            try:
-                out["deleted"] = self._execute(
-                    f'DELETE FROM {self.table} WHERE email IN (SELECT "email" FROM {tmp})'
-                )
-            finally:
-                self._execute(f"DROP TABLE {tmp}")
-        return out
-
     def delete(self, where_sql: str) -> int:
         """DELETE FROM customers WHERE <where_sql> — one set-based
         server-side statement (the relational store's native verb; the

@@ -1,8 +1,9 @@
 """Parquet table source for the driver testdata (TESTDATA.md).
 
-Explicit schemas (schemas.TESTDATA_SCHEMAS) — reads never infer; column
-pruning and predicate pushdown reach the parquet scan because loads are
-plain `spark.read.parquet` DataFrames that Catalyst can prune.
+Loads are plain `spark.read.parquet` scans with no declared schema: the
+schema comes from the parquet footers, and schemas.TESTDATA_SCHEMAS is
+consulted only to convert timestamp columns that read back as nanosecond
+longs. Column pruning and predicate pushdown reach the parquet scan.
 """
 
 from __future__ import annotations

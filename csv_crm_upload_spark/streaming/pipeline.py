@@ -40,20 +40,12 @@ def run_ingest_stream(
     header: bool = True,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    matview=None,
 ):
     """Streaming CSV-directory → store ingest. Returns the StreamingQuery.
 
     With `available_now=True` the query drains all current input and
     stops (finite-run mode, T2); otherwise it keeps watching the
     directory like the reference's long-running reader.
-
-    Pass a `MaterializedAggregate` as `matview` to maintain a CONTINUOUS
-    AGGREGATE: after each micro-batch commit the view folds just that
-    batch's CDC delta (operators/matview.py) — the streaming refresh is
-    incremental by construction, never a base-table rescan. Refresh is
-    idempotent on replay: a re-run batch advances no version, so the
-    refresh is a noop.
     """
     stream = read_customers_csv_stream(
         spark, input_dir, header=header, max_files_per_trigger=max_files_per_trigger
@@ -61,8 +53,6 @@ def run_ingest_stream(
 
     def process(batch_df, batch_id: int) -> None:
         ingest_batch(batch_df, store)
-        if matview is not None:
-            matview.refresh()
 
     writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
     if available_now:

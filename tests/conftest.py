@@ -17,8 +17,9 @@ from csv_crm_upload_spark.session import get_spark  # noqa: E402
 #: soak / model-loop suites are marked `deep` here and excluded by
 #: pytest.ini's addopts. The default suite keeps the full
 #: oracle+degenerate parity core, every fast unit/contract file and
-#: the store + upload service contract (test_store_upload.py) and the
-#: CLI that fronts both services (test_cli.py) —
+#: the store + upload service contract (test_store_upload.py), its
+#: JDBC backend (test_jdbc_store.py) and the CLI that fronts both
+#: services (test_cli.py) —
 #: ≈15-25 min. Run everything with `-m "not sf01"`;
 #: the close-out ledger must still show the full suite green.
 #: Classification source: one full-suite `--durations=0` run
@@ -37,7 +38,6 @@ _DEEP_FILES = {
     "test_index_concurrency.py", # 1.1
     "test_key_format.py",        # 1.1
     "test_corpus_prep.py",       # 0.9
-    "test_jdbc_store.py",        # 0.5
 }
 
 

@@ -1,96 +1,6 @@
-"""CHECK constraints: existing-data validation at ADD time, staged-write
-gating on every append path, SQL NULL-passes semantics, and clean
-failure (no partial commit, no staging residue)."""
+"""Privacy constraint: l-diversity flags only the homogeneous groups."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
-
-from csv_crm_upload_spark.operators.mutate import finalize_columns
-from csv_crm_upload_spark.operators.store import ConstraintViolation, CustomerStore
-
-COLS = ["id", "first_name", "last_name", "email", "phone"]
-
-
-def _store(spark, tmp_path) -> CustomerStore:
-    store = CustomerStore(spark, str(tmp_path / "store"))
-    store.append(
-        finalize_columns(
-            spark.createDataFrame(
-                [(1, "jon", "doe", "jon@x.com", "1"), (2, "jane", "doe", "jane@y.com", "2")],
-                COLS,
-            )
-        )
-    )
-    return store
-
-
-def test_add_constraint_validates_existing_data(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    with pytest.raises(ConstraintViolation) as e:
-        store.add_constraint("high_ids", "id > 1")  # id=1 violates
-    assert e.value.violations == {"high_ids": 1}
-    assert store._constraints() == {}  # nothing registered on failure
-
-
-def test_violating_append_rejected_atomically(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    store.add_constraint("positive_id", "id > 0")
-    v_before = store._current_version()
-    with pytest.raises(ConstraintViolation) as e:
-        store.append(
-            finalize_columns(
-                spark.createDataFrame(
-                    [(3, "ok", "row", "ok@x.com", "3"), (-4, "bad", "row", "bad@x.com", "4")],
-                    COLS,
-                )
-            )
-        )
-    assert e.value.violations == {"positive_id": 1}
-    assert store._current_version() == v_before  # no partial commit
-    assert store.read().count() == 2
-    assert not [d for d in os.listdir(store.root) if d.startswith("staging_")]
-
-
-def test_passing_append_and_merge_enforced(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    store.add_constraint("positive_id", "id > 0")
-    store.append(
-        finalize_columns(spark.createDataFrame([(3, "ann", "lee", "ann@x.com", "3")], COLS))
-    )
-    assert store.read().count() == 3
-    with pytest.raises(ConstraintViolation):
-        store.merge(
-            finalize_columns(
-                spark.createDataFrame([(-9, "bad", "row", "new@x.com", "9")], COLS)
-            )
-        )
-
-
-def test_null_expression_passes(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    store.add_constraint("phone_digits", "CAST(phone AS INT) >= 0")
-    store.append(  # NULL phone → CHECK expr NULL → passes (SQL semantics)
-        finalize_columns(
-            spark.createDataFrame(
-                [(5, "nu", "ll", "nu@x.com", None)],
-                "id BIGINT, first_name STRING, last_name STRING, email STRING, phone STRING",
-            )
-        )
-    )
-    assert store.read().count() == 3
-
-
-def test_drop_constraint_lifts_gate(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    store.add_constraint("positive_id", "id > 0")
-    store.drop_constraint("positive_id")
-    store.append(
-        finalize_columns(spark.createDataFrame([(-7, "neg", "id", "n@x.com", "7")], COLS))
-    )
-    assert store.read().count() == 3
 
 
 def test_l_diversity_flags_homogeneous_groups_only(spark):

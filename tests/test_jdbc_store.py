@@ -190,41 +190,6 @@ def test_jdbc_delete_where(spark, jdbc_store):
     assert jdbc_store.delete("email = 'nobody@x.com'") == 0
 
 
-def test_apply_changes_replicates_parquet_store(spark, tmp_path, jdbc_store):
-    """The serving-DB replication loop: parquet store is source of truth;
-    every version delta applied via apply_changes keeps the JDBC replica
-    content-identical."""
-    from pyspark.sql import functions as F
-
-    from csv_crm_upload_spark.operators.store import CustomerStore
-
-    src = CustomerStore(spark, str(tmp_path / "src"))
-    src.append(_finalized(spark, ROWS))
-    v0 = src._current_version()
-    n = jdbc_store.apply_changes(src.changes(-1, v0))
-    assert n == {"inserted": 3, "updated": 0, "deleted": 0}
-
-    src.mark_uploaded(spark.createDataFrame([("jon@x.com",)], ["email"]))
-    src.delete(F.col("email") == "ann@x.com")
-    src.append(_finalized(spark, [(4, "bob", "ray", "bob@x.com", "4")]))
-    n = jdbc_store.apply_changes(src.changes(v0))
-    assert n["inserted"] == 1 and n["updated"] == 1 and n["deleted"] == 1
-
-    want = {
-        tuple(r)
-        for r in src.read()
-        .select("id", "email", "uploaded", "modified_ts")
-        .collect()
-    }
-    got = {
-        tuple(r)
-        for r in jdbc_store.read()
-        .select("id", "email", "uploaded", "modified_ts")
-        .collect()
-    }
-    assert got == want
-
-
 def test_forget_erases_row_and_escapes_quotes(spark, jdbc_store):
     jdbc_store.append(_finalized(spark, ROWS))
     jdbc_store.append(_finalized(spark, [(4, "o", "brien", "o'brien@x.com", "4")]))

@@ -101,7 +101,8 @@ def test_orc_ingest_same_dispositions_as_csv(spark, tmp_path):
     """The ORC path runs the identical pipeline: clean rows land, a bad
     id and a missing email quarantine, a duplicate email rejects."""
     from csv_crm_upload_spark.operators.store import CustomerStore
-    from csv_crm_upload_spark.plans.ingest import ingest_orc
+    from csv_crm_upload_spark.plans.ingest import ingest_batch
+    from csv_crm_upload_spark.sources.orc_source import read_customers_orc
 
     rows = [
         ("1", "jon", "doe", "jon@x.com", "111"),
@@ -116,6 +117,6 @@ def test_orc_ingest_same_dispositions_as_csv(spark, tmp_path):
     ).write.orc(src)
 
     store = CustomerStore(spark, str(tmp_path / "store"))
-    res = ingest_orc(spark, src, store)
+    res = ingest_batch(read_customers_orc(spark, src), store)
     assert res.inserted == 2 and res.quarantined == 2 and res.duplicates == 1
     assert sorted(r["id"] for r in store.read().collect()) == [1, 5]

@@ -1,96 +1,14 @@
-"""Model-based property tests.
-
-1. Materialized view: ANY generated sequence of store mutations
-   (append / mark_uploaded / delete), refreshed at arbitrary points,
-   must leave the view equal to a from-scratch aggregate of the final
-   store — the abelian-group delta-fold has no order sensitivity.
-2. Bloom filter: NO false negatives for any key set (the structural
-   guarantee; false positives are allowed and bounded elsewhere).
-"""
+"""Model-based property test: a Bloom filter has NO false negatives for
+any key set (the structural guarantee; false positives are allowed and
+bounded elsewhere)."""
 
 from __future__ import annotations
-
-import itertools
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.operators.bloom import build_bloom
-from csv_crm_upload_spark.operators.matview import MaterializedAggregate
-from csv_crm_upload_spark.operators.mutate import finalize_columns
-from csv_crm_upload_spark.operators.store import CustomerStore
-
-COLS = ["id", "first_name", "last_name", "email", "phone"]
-_counter = itertools.count()
-
-# ops: ("append", id) — id/email derived; ("flip", k) / ("delete", k) —
-# target the k-th known email if one exists; ("refresh",)
-_op = st.one_of(
-    st.tuples(st.just("append"), st.integers(1, 30)),
-    st.tuples(st.just("flip"), st.integers(0, 5)),
-    st.tuples(st.just("delete"), st.integers(0, 5)),
-    st.tuples(st.just("refresh"), st.just(0)),
-)
-
-
-@given(ops=st.lists(_op, min_size=2, max_size=8))
-@settings(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_matview_refresh_matches_full_recompute(spark, tmp_path, ops):
-    tag = next(_counter)
-    store = CustomerStore(spark, str(tmp_path / f"s{tag}"))
-    store.append(
-        finalize_columns(
-            spark.createDataFrame([(100, "seed", "row", "seed@x.com", "0")], COLS)
-        )
-    )
-    view = MaterializedAggregate(
-        store, str(tmp_path / f"v{tag}"), ["uploaded"], {"sum_id": "id"}
-    )
-    view.refresh()
-    known = ["seed@x.com"]
-    used_ids = {100}
-
-    for op, arg in ops:
-        if op == "append" and arg not in used_ids:
-            used_ids.add(arg)
-            email = f"u{arg}@x.com"
-            known.append(email)
-            store.append(
-                finalize_columns(
-                    spark.createDataFrame([(arg, "f", "l", email, str(arg))], COLS)
-                )
-            )
-        elif op == "flip" and known:
-            store.mark_uploaded(
-                spark.createDataFrame([(known[arg % len(known)],)], ["email"])
-            )
-        elif op == "delete" and known:
-            email = known[arg % len(known)]
-            if store.read().count() > 0:
-                store.delete(F.col("email") == email)
-        elif op == "refresh":
-            view.refresh()
-
-    view.refresh()
-    want = {
-        tuple(r)
-        for r in store.read()
-        .groupBy("uploaded")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.col("id").cast("decimal(28,6)"))
-            .cast("decimal(38,6)")
-            .alias("sum_id"),
-        )
-        .collect()
-    }
-    got = {tuple(r) for r in view.read().collect()}
-    assert got == want
 
 
 @given(

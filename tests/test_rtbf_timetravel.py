@@ -1,9 +1,7 @@
-"""GDPR forget() (history-rewriting erasure) and TIMESTAMP AS OF — the
-compliance/time-travel pair: read_as_of resolves a wall-clock instant to
-a snapshot via the commit ledger; forget physically removes a key from
-every retained snapshot, the one mutation that deliberately rewrites
-history (delete() keeps old versions readable until vacuum, which is
-exactly what an erasure request cannot tolerate)."""
+"""GDPR forget() (history-rewriting erasure): forget physically removes a
+key from every retained snapshot, the one mutation that deliberately
+rewrites history (delete() keeps old versions readable until vacuum,
+which is exactly what an erasure request cannot tolerate)."""
 
 from __future__ import annotations
 
@@ -95,19 +93,24 @@ def test_forget_absent_email_is_noop(spark, tmp_path):
     assert after == before
 
 
-def test_read_as_of_resolves_commit_timestamps(spark, tmp_path):
-    store = _store(spark, tmp_path, n=2)
-    hist = store.history()  # newest first
-    newest, oldest = hist[0], hist[-1]
-    # at the newest commit's timestamp → newest snapshot
-    assert store.read_as_of(newest["timestamp"]).count() == 2
-    # just before anything existed → error
-    import pytest
-
-    with pytest.raises(FileNotFoundError):
-        store.read_as_of("1999-01-01 00:00:00")
-    # far future → newest
-    assert store.read_as_of("2999-01-01 00:00:00").count() == 2
+def test_forget_rewritten_file_stays_readable_for_reads_and_upload(spark, tmp_path):
+    """A file that keeps other rows after forget is rewritten; it must keep
+    Spark's timestamp encoding, or every later read of its timestamp
+    columns fails — and with it mark_uploaded on that bucket."""
+    store = CustomerStore(spark, str(tmp_path / "one_bucket"), n_buckets=1)
+    store.append(
+        finalize_columns(
+            spark.createDataFrame(
+                [(i, f"u{i}", "x", f"u{i}@x.com", str(i)) for i in range(5)], COLS
+            )
+        )
+    )
+    created = {r["email"]: r["created_ts"] for r in store.read().collect()}
+    assert store.forget("u0@x.com") == 1
+    del created["u0@x.com"]
+    assert {r["email"]: r["created_ts"] for r in store.read().collect()} == created
+    assert store.mark_uploaded(spark.createDataFrame([("u1@x.com",)], ["email"])) == 1
+    assert [r["email"] for r in store.read().filter("uploaded").collect()] == ["u1@x.com"]
 
 
 def test_forget_row_that_fills_whole_bucket_drops_bucket(spark, tmp_path):

@@ -303,65 +303,6 @@ def test_time_travel_and_vacuum(spark, tmp_path):
         store.read_version(0)
 
 
-def test_changes_feed_between_versions(spark, tmp_path):
-    """CDC surface: per-version change feed with insert/update tags,
-    diffing ONLY buckets whose file sets changed."""
-    store = _fresh_store(spark, tmp_path)                                  # v0
-    store.mark_uploaded(spark.createDataFrame([("jon@x.com",)], ["email"]))  # v1
-    store.append(finalize_columns(spark.createDataFrame([(6, "zed", "q", "z@x.com", "6")], COLS)))  # v2
-
-    c01 = {(r["email"], r["_change_type"]) for r in store.changes(0, 1).collect()}
-    assert c01 == {("jon@x.com", "update_preimage"), ("jon@x.com", "update_postimage")}
-
-    c12 = {(r["email"], r["_change_type"]) for r in store.changes(1, 2).collect()}
-    assert c12 == {("z@x.com", "insert")}
-
-    c02 = {(r["email"], r["_change_type"]) for r in store.changes(0, 2).collect()}
-    assert c02 == {
-        ("jon@x.com", "update_preimage"),
-        ("jon@x.com", "update_postimage"),
-        ("z@x.com", "insert"),
-    }
-    # full-history feed from "before the table existed"
-    assert store.changes(-1, 0).filter("_change_type = 'insert'").count() == 5
-
-
-def test_restore_to_old_version(spark, tmp_path):
-    """RESTORE = re-commit an old snapshot as a NEW version; history and
-    intermediate versions stay readable; vacuumed targets fail loudly."""
-    import pytest as _pytest
-
-    store = _fresh_store(spark, tmp_path)                                  # v0
-    store.mark_uploaded(spark.createDataFrame([("jon@x.com",)], ["email"]))  # v1
-    store.append(finalize_columns(spark.createDataFrame([(6, "zed", "q", "z@x.com", "6")], COLS)))  # v2
-
-    new_v = store.restore(0)
-    assert new_v == 3
-    assert store.versions() == [0, 1, 2, 3]
-    # current state == v0: 5 rows, nothing uploaded
-    assert store.read().count() == 5
-    assert store.read().filter("uploaded").count() == 0
-    # intermediate history untouched
-    assert store.read_version(2).count() == 6
-    with _pytest.raises(FileNotFoundError):
-        store.restore(99)
-
-
-def test_changes_raises_on_vacuumed_version(spark, tmp_path):
-    """A vacuumed endpoint must fail loudly: silently diffing against a
-    missing version dir would emit an all-insert change feed."""
-    import pytest as _pytest
-
-    store = _fresh_store(spark, tmp_path)                                  # v0
-    store.mark_uploaded(spark.createDataFrame([("jon@x.com",)], ["email"]))  # v1
-    store.append(finalize_columns(spark.createDataFrame([(6, "zed", "q", "z@x.com", "6")], COLS)))  # v2
-    store.vacuum(keep_last=1)
-    with _pytest.raises(FileNotFoundError):
-        store.changes(0, 2)
-    with _pytest.raises(FileNotFoundError):
-        store.changes(1)
-
-
 def test_carried_files_keep_original_names_across_commits(spark, tmp_path):
     """Files surviving N commits must keep their original names — a
     rename-per-commit scheme (e.g. stacking a prefix) grows filenames
@@ -446,46 +387,10 @@ def test_store_compaction_binpacks_buckets(spark, tmp_path):
     assert store.read_version(v_before).count() == 20
 
 
-def test_compact_zorder_sorts_within_buckets(spark, tmp_path):
-    """compact(zorder_by=[col]) must preserve the table exactly AND leave
-    each bucket file physically ordered by the z-value (for a single
-    column, z-order degenerates to a plain sort → assert ids ascending
-    per file, which is what makes row-group stats tight)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    store = _fresh_store(spark, tmp_path)
-    # a second append so buckets hold >1 file pre-compaction
-    store.append(
-        finalize_columns(
-            spark.createDataFrame(
-                [(i, f"n{i}", "x", f"u{i}@x.com", str(i)) for i in range(10, 40)], COLS
-            )
-        )
-    )
-    before = sorted(r["id"] for r in store.read().collect())
-    v = store.compact(zorder_by=["id"])
-    assert v == store._current_version()
-    after = sorted(r["id"] for r in store.read().collect())
-    assert after == before
-    vdir = store._version_dir(v)
-    checked = 0
-    for b in os.listdir(vdir):
-        if not b.startswith("b="):
-            continue
-        for f in os.listdir(os.path.join(vdir, b)):
-            if f.endswith(".parquet"):
-                ids = pq.read_table(os.path.join(vdir, b, f), columns=["id"])["id"].to_pylist()
-                assert ids == sorted(ids), f"bucket {b} not z-sorted"
-                checked += 1
-    assert checked > 0
-
-
 def test_delete_where_removes_only_matches(spark, tmp_path):
     """DELETE ... WHERE: matching rows go, NULL-predicate rows stay (SQL
-    semantics), untouched buckets hard-link (inode check), and the CDC
-    feed reports the removals as delete."""
+    semantics), untouched buckets hard-link (inode check), and the rows
+    removed are exactly the old snapshot minus the new one."""
     import os
 
     store = _fresh_store(spark, tmp_path)
@@ -512,9 +417,8 @@ def test_delete_where_removes_only_matches(spark, tmp_path):
     # buckets without a deleted row must carry their files by hard link
     untouched = [b for b in before if b in after and before[b] == after[b]]
     assert untouched, "every bucket rewritten — delete is not pruned"
-    feed = store.changes(v0)
-    dels = {r["id"] for r in feed.filter("_change_type = 'delete'").collect()}
-    assert dels == {4, 5}
+    removed = store.read_version(v0).exceptAll(store.read())
+    assert {r["id"] for r in removed.collect()} == {4, 5}
 
 
 def test_delete_null_predicate_rows_are_kept(spark, tmp_path):
@@ -550,7 +454,7 @@ def test_history_records_operations_and_metrics(spark, tmp_path):
         spark.createDataFrame([(2, "j", "d", "jane@x.com", "2"),
                                (6, "new", "p", "new@x.com", "6")], COLS)
     )                                                          # v3
-    store.compact(zorder_by=["id"])                            # v4
+    store.compact()                                            # v4
     hist = store.history()
     assert [h["version"] for h in hist] == [4, 3, 2, 1, 0]
     ops = {h["version"]: h["operation"] for h in hist}
@@ -559,32 +463,31 @@ def test_history_records_operations_and_metrics(spark, tmp_path):
     assert m[1] == {"rows_updated": 1}
     assert m[2] == {"rows_deleted": 1}
     assert m[3] == {"rows_updated": 1, "rows_inserted": 1, "rows_skipped": 0}
-    assert m[4] == {"zorder_by": ["id"]}
+    assert m[4] == {}
     assert all(h["timestamp"] for h in hist)
     store.vacuum(keep_last=2)
     assert [h["version"] for h in store.history()] == [4, 3]
 
 
-def test_analyze_reports_column_statistics(spark, tmp_path):
-    store = _fresh_store(spark, tmp_path)
-    stats = {r["column"]: r for r in store.analyze().collect()}
-    assert set(stats) == set(store.read().columns)
-    assert stats["id"]["n_rows"] == 5
-    assert stats["id"]["n_nulls"] == 0
-    assert stats["phone"]["approx_ndv"] == 5  # HLL exact at tiny scale
-    assert stats["id"]["min_value"] == "1" and stats["id"]["max_value"] == "5"
-    assert stats["uploaded"]["approx_ndv"] == 1  # all false at ingest
+def test_store_refuses_meta_with_evolved_columns_or_constraints(spark, tmp_path):
+    """Reads and writes use the customer schema only, so a `_META` that
+    declares evolved columns or CHECK constraints must fail on open and
+    name the key; a rewrite would otherwise drop those columns."""
+    import json
 
+    import pytest
 
-def test_lookup_reads_single_bucket(spark, tmp_path):
-    store = _fresh_store(spark, tmp_path)
-    hit = store.lookup("jon@x.com")
-    rows = hit.collect()
-    assert len(rows) == 1 and rows[0]["id"] == 1
-    # pruning: the scan must touch exactly one bucket directory
-    files = hit.inputFiles()
-    assert files and len({f.split("/b=")[1].split("/")[0] for f in files}) == 1
-    assert store.lookup("nobody@x.com").count() == 0
+    root = tmp_path / "store"
+    for key, value in (
+        ("extra_cols", [{"name": "tier", "type": "string", "default": None}]),
+        ("constraints", {"positive_id": "id > 0"}),
+    ):
+        root.mkdir(exist_ok=True)
+        (root / "_META").write_text(json.dumps({"n_buckets": 4, key: value}))
+        with pytest.raises(ValueError, match=key):
+            CustomerStore(spark, str(root))
+    (root / "_META").write_text(json.dumps({"n_buckets": 4, "extra_cols": [], "constraints": {}}))
+    assert CustomerStore(spark, str(root)).n_buckets == 4
 
 
 def test_maybe_compact_threshold(spark, tmp_path):

@@ -1,15 +1,11 @@
 """Streaming operator tests: event-time windows (batch parity + real
-stream run) and the applyInPandasWithState budget tracker across
-micro-batches."""
+stream run) and the socket-source ingest."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.sources.tables import load_table
-from csv_crm_upload_spark.streaming.stateful import user_budget_stream
 from csv_crm_upload_spark.streaming.windows import (
     session_windows,
     sliding_user_activity,
@@ -68,180 +64,6 @@ def test_streaming_tumbling_with_watermark(spark, tmp_path, sf_dir):
     got = spark.sql("select sum(n_events) from tumbling_test").collect()[0][0]
     batch_total = tumbling_counts(events).agg(F.sum("n_events")).collect()[0][0]
     assert got is not None and 0 < got <= batch_total
-
-
-def test_stateful_budget_tracker_across_batches(spark, tmp_path, sf_dir):
-    events = load_table(spark, sf_dir, "events")
-    one_user = events.orderBy("event_id").limit(50).cache()
-    expected_total = one_user.groupBy("user_id").agg(
-        F.sum("value").alias("v"), F.count(F.lit(1)).alias("n")
-    )
-    exp = {r["user_id"]: (r["v"], r["n"]) for r in expected_total.collect()}
-
-    src = str(tmp_path / "stateful_src")
-    # two micro-batches: two separate files, maxFilesPerTrigger=1
-    half = one_user.count() // 2
-    rows = one_user.collect()
-    spark.createDataFrame(rows[:half], one_user.schema).coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(rows[half:], one_user.schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(one_user.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = user_budget_stream(stream, threshold=10.0)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("budget_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # last update per user reflects cumulative totals across micro-batches
-    final = spark.sql(
-        "select user_id, max(n_events) as n, max(total_value) as v from budget_test group by user_id"
-    ).collect()
-    got = {r["user_id"]: (r["v"], r["n"]) for r in final}
-    assert set(got) == set(exp)
-    for uid, (v, n) in exp.items():
-        assert got[uid][1] == n
-        assert got[uid][0] == pytest.approx(v, rel=1e-9)
-
-
-def test_transform_with_state_ewma_across_batches(spark, tmp_path):
-    """transformWithStateInPandas: EWMA state must carry across
-    micro-batches — a spike after a stable warm-up flags as anomalous,
-    and the two-batch stream matches a single-batch run row for row."""
-    from csv_crm_upload_spark.streaming.stateful import (
-        transform_with_state_available,
-        user_ewma_anomaly_stream,
-    )
-
-    if not transform_with_state_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            user_ewma_anomaly_stream(spark.range(1).selectExpr(
-                "id AS event_id", "id AS user_id", "CAST(id AS DOUBLE) AS value"
-            ))
-        pytest.skip("transformWithStateInPandas needs protobuf (absent here); gate asserted")
-
-    rows = [
-        # user 7: stable values then a spike (event 109)
-        *[(100 + i, 7, 10.0 + (i % 2)) for i in range(8)],
-        (109, 7, 500.0),
-        (110, 7, 10.5),
-        # user 8: too few events to warm up — never anomalous
-        (200, 8, 1.0),
-        (201, 8, 999.0),
-    ]
-    df = spark.createDataFrame(rows, "event_id long, user_id long, value double")
-
-    src = str(tmp_path / "ewma_src")
-    first = [r for r in rows if r[0] in (100, 101, 102, 103, 200)]
-    rest = [r for r in rows if r[0] not in (100, 101, 102, 103, 200)]
-    spark.createDataFrame(first, df.schema).coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(rest, df.schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        user_ewma_anomaly_stream(stream)
-        .writeStream.format("memory")
-        .queryName("ewma_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ewma_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["event_id"]: r
-        for r in spark.sql("select * from ewma_test").collect()
-    }
-    assert len(got) == len(rows)
-    assert got[109]["is_anomaly"], "spike after warm-up must flag"
-    assert not any(
-        got[e]["is_anomaly"] for e in got if e != 109
-    ), "only the spike flags; cold keys never do"
-    # state carried across the micro-batch boundary: the streamed result
-    # equals a single-pass fold of the same rows in event_id order
-    mean = var = 0.0
-    alpha = 0.3
-    for i, (_eid, _uid, v) in enumerate(sorted((r for r in rows if r[1] == 7))):
-        if i == 0:
-            mean, var = v, 0.0
-        else:
-            delta = v - mean
-            mean += alpha * delta
-            var = (1.0 - alpha) * (var + delta * alpha * delta)
-    assert got[110]["ewma"] == pytest.approx(mean, abs=1e-6)
-
-
-def test_ewma_processor_logic_with_fake_state(spark):
-    """The EWMA StatefulProcessor's fold is exercised directly against a
-    fake state handle (the streaming runtime needs protobuf, absent
-    here): two handleInputRows calls with persisted state in between must
-    equal one single-pass fold — the exact state-carry contract the
-    runtime provides."""
-    import pandas as pd
-
-    from csv_crm_upload_spark.streaming.stateful import make_ewma_processor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    vals = [10.0, 11.0, 10.0, 11.0, 10.0, 11.0, 500.0, 10.5]
-    rows = pd.DataFrame(
-        {"event_id": range(len(vals)), "user_id": [7] * len(vals), "value": vals}
-    )
-
-    def run(batches):
-        proc = make_ewma_processor()
-        h = FakeHandle()
-        proc.init(h)
-        out = []
-        for b in batches:
-            out.extend(
-                pd.concat(list(proc.handleInputRows((7,), iter([b]), None)))
-                .to_dict("records")
-            )
-        return out
-
-    split = [rows.iloc[:3], rows.iloc[3:]]
-    assert run(split) == run([rows]), "state carry must equal single-pass fold"
-    flags = {r["event_id"]: r["is_anomaly"] for r in run([rows])}
-    assert flags[6] and not any(v for k, v in flags.items() if k != 6)
-
-    # a single micro-batch spanning multiple Arrow chunks must fold in
-    # GLOBAL event_id order even when a later chunk holds earlier ids —
-    # chunks are concatenated before the sort, not sorted per chunk
-    def run_chunks(chunks):
-        proc = make_ewma_processor()
-        h = FakeHandle()
-        proc.init(h)
-        return pd.concat(
-            list(proc.handleInputRows((7,), iter(chunks), None))
-        ).to_dict("records")
-
-    out_of_order = [
-        rows.iloc[4:].reset_index(drop=True),
-        rows.iloc[:4].reset_index(drop=True),
-    ]
-    assert run_chunks(out_of_order) == run([rows]), "chunk-spanning batch must sort globally"
 
 
 def test_socket_source_streaming_ingest(spark, tmp_path):
