@@ -6,9 +6,7 @@ production runs them PER INGEST BATCH and alerts on within_bound=false
 story into code: each event batch appends its own audit rows — the
 HLL++ distinct-users estimate vs the batch's exact COUNT(DISTINCT) per
 event_type, with the adrec1 error readout — to a persisted, epoch-
-manifested audit log (the 13th artifact), exactly-once under the same
-txn protocol as the daily rollup, so a replayed foreachBatch/tick
-never double-logs a batch.
+manifested audit log, one epoch per appended batch.
 
 Shape and scale: the audit runs on ONE micro-batch, not the corpus —
 the exact side is a batch-bounded COUNT(DISTINCT) (the documented
@@ -16,7 +14,7 @@ calibration cost, paid at batch grain where it is cheap), the sketch
 side is the same fixed-memory HLL the monitoring query uses, and each
 append writes ≤|event types| rows. The log itself grows by audit rows
 (facts, not additive counts), so the probe view is a plain union of
-the live epoch range and compaction is a plain fold — no sum-merge.
+the live epoch range — no sum-merge.
 
 Reference parity note: the reference engine (csv-crm-upload) has no
 sketch surface at all; this family extends the engine for the
@@ -47,8 +45,8 @@ _ROW_COLS = (
     "within_bound boolean"
 )
 
-#: rows: epoch-RANGED audit FACTS — probes union the live range and
-#: compaction plain-folds (rows are logged once). The explicit read
+#: rows: epoch-RANGED audit FACTS — probes union the live range (rows
+#: are logged once). The explicit read
 #: schema covers the empty init epoch, whose schema-only part file
 #: inference alone cannot type.
 LAYOUT = Layout(
@@ -115,19 +113,15 @@ def append_batch_audit(
     events_batch: DataFrame,
     path: str,
     batch_key: str,
-    txn: tuple[str, int] | None = None,
     precomputed_rows: DataFrame | None = None,
 ) -> None:
-    """Append one batch's audit rows as a new epoch (manifest.append) —
-    exactly-once: the txn guard no-ops a replayed streaming batch (the
-    rows would be recomputed identically — HLL register merges are
-    order-free — but the log must not carry the batch twice). An empty
-    batch is a clean no-op.
+    """Append one batch's audit rows as a new epoch (manifest.append).
+    An empty batch is a clean no-op.
 
     `precomputed_rows`: a caller that audits SEVERAL batches of one
     corpus (the audlog1 simulation) may aggregate them in one grouped
     pass and hand each batch's already-materialized slice here — the
-    epoch/manifest/txn protocol is unchanged, only the per-batch corpus
+    epoch/manifest protocol is unchanged, only the per-batch corpus
     aggregation is skipped. Rows must be exactly
     `batch_audit_rows(events_batch, batch_key)`'s output (per-group
     HLL/exact aggregates are identical whether the batch is filtered
@@ -135,7 +129,6 @@ def append_batch_audit(
     manifest.append(
         path,
         LAYOUT,
-        txn,
         lambda m: precomputed_rows
         if precomputed_rows is not None
         else batch_audit_rows(events_batch, batch_key).localCheckpoint(eager=True),
@@ -149,13 +142,6 @@ def read_audit_rows(spark, path: str) -> DataFrame:
     the manifest resolved once per probe (old-or-new, never partial)."""
     m = manifest.checked_manifest(path, LAYOUT)
     return manifest.live(spark, path, m, LAYOUT, "rows")
-
-
-def audit_alerts(spark, path: str) -> DataFrame:
-    """The alerting readout the cadence story promises: every logged
-    row whose estimate fell OUTSIDE its published envelope. Empty on a
-    healthy pipeline; each row names the batch and group to re-audit."""
-    return read_audit_rows(spark, path).filter(~F.col("within_bound"))
 
 
 # ---------------------------------------------------------------------------
@@ -255,10 +241,3 @@ def audlog1_batch_audit_log(events: DataFrame, path: str | None = None) -> DataF
     p = path or auditlog_query_path()
     _ensure_query_auditlog(events, p)
     return read_audit_rows(events.sparkSession, p).orderBy("batch_key", "event_type")
-
-
-def compact_audit_log(spark, path: str) -> bool:
-    """OPTIMIZE: fold the live epoch chain into one epoch (plain union
-    — exact because rows are facts logged exactly once) in one atomic
-    manifest commit. Returns False when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)

@@ -172,11 +172,7 @@ def bpe2_segment(
     )
 
 
-def bpe3_vocab_coverage(
-    documents: DataFrame,
-    steps: int = 3,
-    rules: list[tuple[str, str]] | None = None,
-) -> DataFrame:
+def bpe3_vocab_coverage(documents: DataFrame, steps: int = 3) -> DataFrame:
     """Tokenizer coverage readout — the acceptance metric of a tokenizer
     sweep: of all word OCCURRENCES in the corpus, how many are fully
     merged to a single vocabulary symbol by the learned merges
@@ -184,14 +180,12 @@ def bpe3_vocab_coverage(
     whose top merges cover little of the corpus wastes sequence length.
 
     One row: (n_words, n_fully_merged, coverage_rate ROUND 6 — integer
-    ratio, engine-exact). `rules` as in bpe2_segment: pass pre-learned
-    merges to skip the training pass. Application is map-only chained
-    replaces riding the scan; the readout is one 1-row aggregate."""
-    if rules is None:
-        rules = [
-            (r["left"], r["right"])
-            for r in bpe1_merge_steps(documents, steps).orderBy("step").collect()
-        ]
+    ratio, engine-exact). Application is map-only chained replaces
+    riding the scan; the readout is one 1-row aggregate."""
+    rules = [
+        (r["left"], r["right"])
+        for r in bpe1_merge_steps(documents, steps).orderBy("step").collect()
+    ]
     words = fan_out(documents.filter(
         F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     )).select(F.explode(norm_tokens()).alias("word"))
@@ -262,8 +256,9 @@ def bpe4_lang_fertility(
 # vocab-bounded Sennrich loop, ~log-corpus rows). Incremental ≡ rebuild
 # is bit-exact: same summed counts → same vocab → same deterministic
 # merges. Every epoch is a fully-merged snapshot (base_epoch == epoch,
-# the NB-model layout), so compaction is a no-op by construction and
-# superseded snapshots are reclaimed by CorpusIndexService.vacuum().
+# the NB-model layout). Nothing reclaims the snapshots an append (CLI
+# `bpe-train --append`) or a rebuild supersedes;
+# manifest.gc_stale_epochs is the library call that does.
 # ---------------------------------------------------------------------------
 
 LAYOUT = Layout(snapshots={"vocab": (), "merges": ()})
@@ -286,7 +281,7 @@ def save_bpe_model(documents: DataFrame, path: str, steps: int = 3) -> None:
     """Persist the BPE tokenizer: the (word, freq) vocabulary and the
     learned (step, left, right, n_occurrences) merge table, both
     epoch-versioned (atomic rebuild over a live model; manifest.rebuild
-    commits a fresh epoch above the old chain and keeps `last_txn`)."""
+    commits a fresh epoch above the old chain)."""
     spark = documents.sparkSession
     manifest.rebuild(
         path,
@@ -296,14 +291,12 @@ def save_bpe_model(documents: DataFrame, path: str, steps: int = 3) -> None:
     )
 
 
-def update_bpe_model(
-    new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
+def update_bpe_model(new_documents: DataFrame, path: str) -> None:
     """Fold a corpus APPEND into the tokenizer (manifest.append):
     tokenize ONLY the new docs, sum their word counts into the next
     fully-merged vocab snapshot (a vocab-sized pass), relearn the merges
     from the merged vocab, and commit atomically. A delta with no text
-    is a no-op; `txn` is the streaming replay guard.
+    is a no-op.
 
     Precondition (caller's dedup responsibility): new doc_ids are not
     already trained on — double-folding a shard double-counts it.
@@ -319,7 +312,7 @@ def update_bpe_model(
         )
         _write_snapshot(spark, merged, path, nxt, m["steps"])
 
-    manifest.append(path, LAYOUT, txn, lambda m: _word_freqs(new_documents), write)
+    manifest.append(path, LAYOUT, lambda m: _word_freqs(new_documents), write)
 
 
 def load_bpe_rules(spark, path: str) -> list[tuple[str, str]]:
@@ -341,10 +334,3 @@ def segment_with_bpe_model(documents: DataFrame, path: str) -> DataFrame:
     exactly once (map-only chained replaces + one combining groupBy)."""
     spark = documents.sparkSession
     return bpe2_segment(documents, rules=load_bpe_rules(spark, path))
-
-
-def coverage_with_bpe_model(documents: DataFrame, path: str) -> DataFrame:
-    """bpe3_vocab_coverage against the persisted model — the acceptance
-    readout a tokenizer sweep runs per candidate without retraining."""
-    spark = documents.sparkSession
-    return bpe3_vocab_coverage(documents, rules=load_bpe_rules(spark, path))

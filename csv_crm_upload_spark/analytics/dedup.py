@@ -307,7 +307,7 @@ def _verify_pairs(cand: DataFrame, sig: DataFrame, threshold: float) -> DataFram
 
 
 #: Default per-(band, bucket) membership cap for the PERSISTED index
-#: build path (save_dedup_index / update_dedup_index). The in-bucket
+#: build path (save_dedup_index). The in-bucket
 #: self-join is quadratic, so one boilerplate-heavy bucket of B docs
 #: costs B²/2 candidate pairs — at 100 TB a single hot bucket would
 #: dominate the whole build. 1000 members bounds any one bucket's
@@ -545,13 +545,12 @@ def d_simhash(documents: DataFrame) -> DataFrame:
 #: (manifest.check_key_format): signatures/bands derive from md5-60
 #: minhash over ' '-joined word 3-shingles of _norm_text. A
 #: tokenization/shingle/hash change makes stored signatures and band
-#: buckets incompatible with an append's fresh ones — bump this so the
+#: buckets incompatible with freshly derived ones — bump this so the
 #: mismatch fails loudly instead of silently pairing nothing.
 DEDUP_KEY_FORMAT = "normtext-spaceshingle-md560-minhash-v1"
 
-#: pairs / signatures / bands: epoch-RANGED per-document facts (each
-#: append adds the new docs' rows); bands are partitioned BY band so an
-#: incremental probe joins band-partition to band-partition
+#: pairs / signatures / bands: epoch-RANGED per-document facts; bands
+#: are partitioned BY band
 DEDUP_LAYOUT = Layout(
     ranged={
         "pairs": Ranged(),
@@ -583,10 +582,8 @@ def save_dedup_index(
 
     Layout is EPOCH-VERSIONED (DEDUP_LAYOUT, atomic rebuild over a live
     index via manifest.rebuild): per-epoch `pairs`, plus the SIGNATURES
-    and BAND BUCKETS that make `update_dedup_index` an O(new docs)
-    append — a corpus shard folds in without re-hashing the indexed
-    corpus. The manifest records the build parameters so a consumer can
-    detect a mismatched probe.
+    and BAND BUCKETS they were derived from. The manifest records the
+    build parameters so a consumer can detect a mismatched probe.
 
     Unlike the inline oracle query, the PRODUCTION build caps hot
     buckets by default (`max_bucket=INDEX_MAX_BUCKET`): a (band, bucket)
@@ -635,93 +632,10 @@ def save_dedup_index(
 def load_dedup_index(spark, path: str) -> DataFrame:
     """The persisted (doc_a, doc_b, est_jaccard) near-dup pair table —
     the union of the committed epochs in [base_epoch, epoch]
-    (manifest-resolved, so a racing update OR compaction is invisible:
-    old-or-new, never a partial epoch)."""
+    (manifest-resolved, so a racing rebuild is invisible: old-or-new,
+    never a partial epoch)."""
     m = manifest.checked_manifest(path, DEDUP_LAYOUT)
     return manifest.live(spark, path, m, DEDUP_LAYOUT, "pairs")
-
-
-def update_dedup_index(
-    new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """Incremental maintenance for a corpus APPEND (manifest.append):
-    hash and band ONLY the new documents, find every candidate pair with
-    ≥1 new endpoint by joining the new band buckets against ALL band
-    buckets (old epochs included — old↔old pairs are already stored),
-    verify against the stored signatures, and commit
-    pairs/signatures/bands as a new epoch.
-
-    Cost: O(new docs) shingle+minhash + one (band, bucket) join of the
-    NEW bands against the index — never a re-hash of the indexed corpus.
-    Because signatures are pure per-document functions, the incremental
-    pair set is EXACTLY what a full rebuild would produce (asserted in
-    tests). A crash self-heals, a racing reader sees old-or-new.
-
-    The manifest's `max_bucket` cap applies here too, measured over the
-    COMBINED (old + new) bucket membership, so appends can't grow a
-    bucket's candidate join unboundedly. Append caveat (documented, not
-    hidden): if an append pushes a bucket past the cap, earlier epochs'
-    pairs from that bucket remain (append is monotone) while new pairs
-    stop — a full rebuild at that point would drop the bucket entirely.
-    Crossing the cap is precisely the "rebuild or exact-collapse first"
-    signal.
-
-    Precondition (as for any index append): new doc_ids are not already
-    indexed."""
-    spark = new_documents.sparkSession
-
-    def write(new_sig: DataFrame, m: dict, nxt: int) -> None:
-        new_bands = _band_buckets(new_sig).persist()
-        try:
-            old_bands = manifest.live(spark, path, m, DEDUP_LAYOUT, "bands")
-            # restrict to buckets the SHARD actually touches before
-            # counting for the cap: buckets absent from new_bands produce
-            # no candidates anyway, and this keeps the append's extra pass
-            # proportional to the touched buckets, not the whole band table
-            new_keys = new_bands.select("band", "bucket").distinct()
-            relevant = old_bands.unionByName(new_bands).join(
-                new_keys, ["band", "bucket"], "left_semi"
-            )
-            all_bands = _filter_hot_buckets(relevant, m.get("max_bucket"))
-            # every candidate with ≥1 new endpoint, canonicalized (a < b)
-            raw = (
-                new_bands.alias("x")
-                .join(all_bands.alias("y"), ["band", "bucket"])
-                .filter(F.col("x.doc_id") != F.col("y.doc_id"))
-                .select(
-                    F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("doc_a"),
-                    F.greatest(F.col("x.doc_id"), F.col("y.doc_id")).alias("doc_b"),
-                )
-                .distinct()
-            )
-            old_sig = manifest.live(spark, path, m, DEDUP_LAYOUT, "signatures")
-            pairs = _verify_pairs(raw, old_sig.unionByName(new_sig), m["threshold"])
-            manifest.write_epoch(pairs, path, DEDUP_LAYOUT, "pairs", nxt)
-            manifest.write_epoch(new_sig, path, DEDUP_LAYOUT, "signatures", nxt)
-            manifest.write_epoch(new_bands, path, DEDUP_LAYOUT, "bands", nxt)
-        finally:
-            new_bands.unpersist()
-
-    # materialized once: the empty probe would otherwise run the shard's
-    # shingle/md5 shuffle, and the write would run it again
-    manifest.append(
-        path,
-        DEDUP_LAYOUT,
-        txn,
-        lambda m: d_minhash_signatures(new_documents, m["shingle_n"]).localCheckpoint(
-            eager=True
-        ),
-        write,
-    )
-
-
-def compact_dedup_index(spark, path: str) -> bool:
-    """OPTIMIZE for the pair index: fold every epoch in [base_epoch,
-    epoch] of pairs, signatures, AND bands into one new epoch, advancing
-    base_epoch in one manifest commit — atomic; racing readers see the
-    old chain or the compacted one. Restores the one-dir read shape
-    appends gradually erode. Returns False when already compact."""
-    return manifest.compact_epochs(spark, path, DEDUP_LAYOUT)
 
 
 def pr1_doc_pagerank(

@@ -29,17 +29,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.operators import manifest
-from csv_crm_upload_spark.operators.manifest import Layout, Ranged
-
-#: cells: epoch-RANGED (vec_id, cell_id) assignments, partitioned BY
-#: cell so a probe reads only its cells' files; centroids: the coarse
-#: quantizer, PINNED by centroid_epoch (it stays fixed on append)
-LAYOUT = Layout(
-    ranged={"cells": Ranged(partition=("cell_id",))},
-    pinned={"centroids": "centroid_epoch"},
-)
-
 
 def fit_centroids(
     embeddings: DataFrame, n_cells: int = 16, iters: int = 2
@@ -126,111 +115,15 @@ def assign_cells(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
     return cells_arrow(gated, centroids)
 
 
-def save_index(
-    embeddings: DataFrame, path: str, n_cells: int = 16, **fit_kwargs
-) -> np.ndarray:
-    """Persist an IVF index: centroids (one parquet of (cell_id, centroid
-    array)) + the full corpus cell assignment, partitioned BY cell_id so
-    a probe reads only its cells' files. This is the build-once /
-    query-many split of production ANN: the expensive assignment scan
-    runs once per corpus snapshot, then every query costs nprobe
-    partition-pruned reads.
-
-    Portability note: the physical layout is self-describing (centroids
-    ride the index, probes re-derive cell ids from them), but cell
-    assignment is float argmin — consistent for any reader repeating the
-    same arithmetic, unlike the md5-derived integer conventions the
-    oracle-visible queries use for cross-engine bit-identity.
-
-    Cell files AND centroids are EPOCH-VERSIONED (LAYOUT), so
-    update_index can append a corpus shard atomically — and a REBUILD
-    over a live index is atomic too (manifest.rebuild): new
-    centroids+cells land under the next epoch and the manifest's
-    `base_epoch`/`centroid_epoch` advance together in one commit."""
-    spark = embeddings.sparkSession
-    centroids = fit_centroids(embeddings, n_cells=n_cells, **fit_kwargs)
-    if centroids.size == 0:
-        # loud, BEFORE any epoch dir lands (the empty-matrix degrade is
-        # for query entry points; building an index over a corpus with
-        # zero valid vectors is a caller error)
-        raise ValueError(
-            "save_index: no valid vectors to fit centroids on "
-            "(corpus is empty or all embeddings are NULL/empty/zero-norm)"
-        )
-    cent_rows = [(int(c), [float(v) for v in centroids[c]]) for c in range(len(centroids))]
-
-    def write(e: int) -> None:
-        cents = spark.createDataFrame(cent_rows, "cell_id int, centroid array<double>")
-        manifest.write_epoch(cents, path, LAYOUT, "centroids", e)
-        cells = assign_cells(embeddings, centroids)
-        manifest.write_epoch(cells, path, LAYOUT, "cells", e)
-
-    manifest.rebuild(path, LAYOUT, write, n_cells=int(len(centroids)))
-    return centroids
-
-
-def update_index(
-    new_embeddings: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """Incremental IVF maintenance for a corpus APPEND: assign ONLY the
-    new vectors to the STORED centroids (the coarse quantizer stays
-    fixed on append — standard IVF practice; retraining it is a rebuild)
-    and commit the assignments as a new epoch. O(new vectors), map-only,
-    atomic via manifest.append — a racing probe sees the old or the new
-    cell set, never a partial epoch."""
-    spark = new_embeddings.sparkSession
-
-    def write(emb: DataFrame, m: dict, nxt: int) -> None:
-        centroids = _load_centroids(spark, path, m["centroid_epoch"])
-        dim = centroids.shape[1]
-        # fail-fast probe (limit 1), not a full shard count: the guard
-        # must be loud, not an extra corpus-shard pass on every append
-        if emb.filter(F.size("embedding") != dim).limit(1).count():
-            raise ValueError(
-                f"appended vectors have dim != the stored centroids' {dim}"
-            )
-        manifest.write_epoch(assign_cells(emb, centroids), path, LAYOUT, "cells", nxt)
-
-    manifest.append(path, LAYOUT, txn, lambda m: new_embeddings, write)
-
-
-def _load_centroids(spark, path: str, centroid_epoch: int) -> np.ndarray:
-    rows = sorted(
-        spark.read.parquet(f"{path}/centroids/epoch={centroid_epoch}").collect(),
-        key=lambda r: r["cell_id"],
-    )
-    return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-
-def compact_index(spark, path: str) -> bool:
-    """OPTIMIZE for the IVF index: fold the live cell epochs into one
-    new epoch (still partitioned BY cell_id) and advance base_epoch in
-    one manifest commit — atomic, quantizers untouched. Returns False
-    when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
-
-
-def load_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
-    """(centroid matrix, cell-assignment DataFrame) from a saved index —
-    the union of the committed epochs in [base_epoch, epoch],
-    manifest-resolved so a racing update OR rebuild is seen entirely or
-    not at all."""
-    m = manifest.read_manifest(path)
-    centroids = _load_centroids(spark, path, m["centroid_epoch"])
-    return centroids, manifest.live(spark, path, m, LAYOUT, "cells")
-
-
 def knn_ivf(
     embeddings: DataFrame,
     query_ids: list[int] | None = None,
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    index_path: str | None = None,
 ) -> DataFrame:
     """IVF search: per query, exact-rerank members of the nprobe nearest
-    cells only. With `index_path`, centroids and assignments come from
-    the persisted index (no fit, no assignment scan).
+    cells only.
 
     Every ranking is IN THE PLAN with the cross-engine discipline
     (round-9 — this is what makes the op oracle-paired): probe cells
@@ -241,8 +134,7 @@ def knn_ivf(
     ragged/corrupt query degrades to absence (the valid_vectors rule),
     matching the oracle's WHERE. Scale shape: the centroid table is a
     k-row literal broadcast; cells join is one shuffle keyed on
-    cell_id (partition-pruned reads on the persisted path); the rerank
-    touches only probed cells' members."""
+    cell_id; the rerank touches only probed cells' members."""
     from pyspark.sql import Window
 
     from csv_crm_upload_spark.analytics.similarity import _dot, _norm, valid_vectors
@@ -250,32 +142,23 @@ def knn_ivf(
     if query_ids is None:
         query_ids = list(range(10))
     spark = embeddings.sparkSession
-    if index_path is not None:
-        centroids, cells = load_index(spark, index_path)
-    else:
-        centroids = fit_centroids(embeddings, n_cells=n_cells)
-        cells = None
+    centroids = fit_centroids(embeddings, n_cells=n_cells)
     if centroids.size == 0:  # zero valid vectors: the oracle's empty result
         return spark.createDataFrame(
             [], "query_id long, vec_id long, cos_sim double, rank int"
         )
-    if cells is None:
-        # inline path: the corpus cell table is a pure function of
-        # (corpus, centroids) — ride the fit memo as a bounded
-        # localCheckpoint like the pq/ivfpq code tables (round 13).
-        # Replaces a bare per-call persist() that (a) leaked one cached
-        # corpus-scale table per invocation for the life of the session
-        # (the round-5 signature-memo leak class — nothing ever
-        # unpersisted it) and (b) bought nothing within a single call,
-        # since the cell table has exactly one consumer in the plan.
-        from csv_crm_upload_spark.analytics.fitmemo import memo_fit
+    # the corpus cell table is a pure function of (corpus, centroids):
+    # it rides the fit memo as a bounded localCheckpoint like the
+    # pq/ivfpq code tables, so repeat calls reuse it and no per-call
+    # persist() outlives the call (the table has one consumer per plan)
+    from csv_crm_upload_spark.analytics.fitmemo import memo_fit
 
-        cells = memo_fit(
-            "ivf_cells",
-            embeddings,
-            (centroids.shape, centroids.tobytes()),
-            lambda: assign_cells(embeddings, centroids).localCheckpoint(eager=True),
-        )
+    cells = memo_fit(
+        "ivf_cells",
+        embeddings,
+        (centroids.shape, centroids.tobytes()),
+        lambda: assign_cells(embeddings, centroids).localCheckpoint(eager=True),
+    )
     dim = int(centroids.shape[1])
 
     cent_df = spark.createDataFrame(

@@ -34,9 +34,8 @@ the manifest:
     part of the vector the coarse stage didn't already explain; the
     reconstruction gain vs raw PQ is asserted in tests. The means ride
     the centroids parquet as a `mean_vec` column.
-Either way the stored codes remain a pure per-vector function of the
-FIXED quantizers, so `update_ivfpq_index` stays an O(new vectors)
-append for both.
+Either way the stored codes are a pure per-vector function of the
+fitted quantizers.
 
 Index layout (`{path}/`):
   centroids/epoch=K   coarse quantizer (cell_id, centroid)
@@ -46,9 +45,9 @@ Index layout (`{path}/`):
   MANIFEST            single-file atomic commit (operators/manifest.py)
 
 All three artifact families are epoch-versioned under ONE manifest with
-`base_epoch`/`centroid_epoch`/`codebook_epoch`, so appends AND rebuilds
-are atomic: a racing reader pairs old quantizers with old codes or new
-with new, never a mix (same protocol as ivf.save_index/save_pq_index).
+`base_epoch`/`centroid_epoch`/`codebook_epoch`, so rebuilds are atomic:
+a racing reader pairs old quantizers with old codes or new with new,
+never a mix (same protocol as save_pq_index).
 
 BOTH modes are ORACLE-PAIRED since round 9 (all quantizer fits are the
 distributed kmeans-discipline Lloyd's — the residual anchors are
@@ -63,8 +62,7 @@ additionally pinned by
     probed and every member reranked → lossiness can only reorder the
     candidate stage, which the exact rerank then undoes);
   * indexed ≡ inline (same fits, same corpus);
-  * PartitionFilters-asserted cell pruning on the probe's code scan;
-  * incremental append ≡ fixed-codec rebuild.
+  * PartitionFilters-asserted cell pruning on the probe's code scan.
 """
 
 from __future__ import annotations
@@ -396,11 +394,11 @@ def save_ivfpq_index(
     (manifest.rebuild: next epoch + base/centroid/codebook epoch advance
     in one commit). `residual=True` builds IVFADC-style (see module
     docstring); the choice is recorded in the manifest and honored by
-    append + probe."""
+    the probe."""
     spark = embeddings.sparkSession
     centroids = _ivf.fit_centroids(embeddings, n_cells=n_cells, **fit_kwargs)
     if centroids.size == 0:
-        # loud, BEFORE any epoch dir lands (see ivf.save_index)
+        # loud, BEFORE any epoch dir lands (see pq.save_pq_index)
         raise ValueError(
             "save_ivfpq_index: no valid vectors to fit quantizers on "
             "(corpus is empty or all embeddings are NULL/empty/zero-norm)"
@@ -443,30 +441,6 @@ def save_ivfpq_index(
     )
 
 
-def update_ivfpq_index(
-    new_embeddings: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """O(new vectors) append (manifest.append): assign + encode ONLY the
-    new vectors with the STORED quantizers (both stay fixed on append —
-    retraining either is a rebuild) and commit as a new epoch.
-    Wrong-width shards fail loudly before any write."""
-    spark = new_embeddings.sparkSession
-
-    def write(emb: DataFrame, man: dict, nxt: int) -> None:
-        centroids, means = _load_quantizer(spark, path, man)
-        books = _pq._load_codebooks(spark, path, man["codebook_epoch"])
-        dim = books.shape[0] * books.shape[2]
-        # fail-fast probe (limit 1), not a full shard count
-        if emb.filter(F.size("embedding") != dim).limit(1).count():
-            raise ValueError(
-                f"appended vectors have dim != the stored codec's {dim}"
-            )
-        codes = _assign_and_encode(emb, centroids, books, means=means)
-        manifest.write_epoch(codes, path, LAYOUT, "codes", nxt)
-
-    manifest.append(path, LAYOUT, txn, lambda man: new_embeddings, write)
-
-
 def _load_quantizer(spark, path: str, man: dict) -> tuple[np.ndarray, np.ndarray | None]:
     """(centroids, residual means-or-None) in ONE read+collect of the
     n_cells-row centroids parquet — means come back only when the
@@ -482,24 +456,6 @@ def _load_quantizer(spark, path: str, man: dict) -> tuple[np.ndarray, np.ndarray
         return centroids, None
     key = "mean_vec" if "mean_vec" in rows[0].__fields__ else "centroid"
     return centroids, np.array([r[key] for r in rows], dtype=np.float64)
-
-
-def _load_centroids(spark, path: str, centroid_epoch: int) -> np.ndarray:
-    return _load_quantizer(spark, path, {"centroid_epoch": centroid_epoch})[0]
-
-
-def _load_means(spark, path: str, centroid_epoch: int) -> np.ndarray:
-    return _load_quantizer(
-        spark, path, {"centroid_epoch": centroid_epoch, "residual": True}
-    )[1]
-
-
-def compact_ivfpq_index(spark, path: str) -> bool:
-    """OPTIMIZE for the IVF-PQ index: fold the live code epochs into one
-    new epoch (still partitioned BY cell_id, so probes keep their
-    pruning) and advance base_epoch in one manifest commit — atomic,
-    both quantizers untouched. Returns False when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def ivfpq_search(

@@ -149,9 +149,10 @@ def nb1_langid_confusion(documents: DataFrame) -> DataFrame:
 # Counts are ADDITIVE, so the model folds new corpus shards exactly: every
 # epoch is a fully-merged snapshot (unlike the delta-chained postings of
 # the text index, the model IS vocab-sized, so a merged snapshot costs the
-# same O(vocab x L) pass a delta merge would). base_epoch == epoch always;
-# superseded snapshots are reclaimed by CorpusIndexService.vacuum() /
-# manifest.gc_stale_epochs.
+# same O(vocab x L) pass a delta merge would). base_epoch == epoch always.
+# Nothing reclaims the snapshots an append (CLI `nb-train --append`) or a
+# rebuild supersedes; manifest.gc_stale_epochs is the library call that
+# does.
 # ---------------------------------------------------------------------------
 
 LAYOUT = Layout(
@@ -218,14 +219,11 @@ def save_nb_model(documents: DataFrame, path: str, n_buckets: int = 64) -> None:
     manifest.rebuild(path, LAYOUT, write, n_buckets=n_buckets)
 
 
-def update_nb_model(
-    new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
+def update_nb_model(new_documents: DataFrame, path: str) -> None:
     """Fold a corpus APPEND into the model (manifest.append): tokenize
     ONLY the new docs, merge their counts into the next fully-merged
     snapshot (an O(vocab x L) pass — never a re-scan of the trained
-    corpus), and commit atomically. A delta with no text is a no-op;
-    `txn` is the streaming replay guard.
+    corpus), and commit atomically. A delta with no text is a no-op.
 
     Precondition (caller's dedup responsibility): new doc_ids are not
     already trained on — double-folding a shard would double its counts.
@@ -256,9 +254,7 @@ def update_nb_model(
         finally:
             base.unpersist()
 
-    manifest.append(
-        path, LAYOUT, txn, lambda m: _base_tokens(new_documents), write
-    )
+    manifest.append(path, LAYOUT, lambda m: _base_tokens(new_documents), write)
 
 
 def classify_with_nb_model(documents: DataFrame, path: str) -> DataFrame:

@@ -363,15 +363,14 @@ def pcarec1_recall_audit(
 
 
 # ---------------------------------------------------------------------------
-# Persisted PCA model — fit once / project many, with O(new vectors)
-# appends. The persisted state is the ADDITIVE sufficient statistics
-# (decimal pair-term sums, decimal component sums, vector count): a
-# corpus shard folds in by exact decimal addition — never a re-scan of
-# the fitted corpus — and the loadings are recomputed from the merged
-# d²-bounded sums, so incremental ≡ rebuild is bit-exact (same summed
-# decimals → same covariance → same deterministic eigh). Every epoch is
-# a fully-merged snapshot (base_epoch == epoch, the NB/BPE layout);
-# superseded snapshots are reclaimed by CorpusIndexService.vacuum().
+# Persisted PCA model — fit once / project many. The persisted state is
+# the sufficient statistics (decimal pair-term sums, decimal component
+# sums, vector count); the loadings are recomputed from the d²-bounded
+# sums, so serving ≡ the inline fit (same decimals → same covariance →
+# same deterministic eigh). Every epoch is a full snapshot
+# (base_epoch == epoch, the NB/BPE layout); nothing reclaims the
+# snapshots a rebuild supersedes — manifest.gc_stale_epochs is the
+# library call that does.
 # ---------------------------------------------------------------------------
 
 LAYOUT = Layout(snapshots={"pairsums": (), "dimsums": ()})
@@ -384,12 +383,9 @@ def _write_snapshot(pairs: DataFrame, dims: DataFrame, path: str, epoch: int) ->
 
 def save_pca_model(embeddings: DataFrame, path: str, r: int = 16) -> None:
     """Persist the PCA sufficient statistics (and the component count to
-    serve), epoch-versioned (atomic rebuild-over-live preserving
-    `last_txn`; manifest.rebuild). The vector dimension is validated up
-    front (≥ 2 valid vectors — a smaller corpus has no covariance) and
-    recorded in the manifest so appends can refuse wrong-dimension
-    shards instead of silently corrupting the additive sums (the ivf/pq
-    dimension-guard convention)."""
+    serve), epoch-versioned (atomic rebuild-over-live; manifest.rebuild).
+    The vector dimension is validated up front (≥ 2 valid vectors — a
+    smaller corpus has no covariance) and recorded in the manifest."""
     from csv_crm_upload_spark.analytics.similarity import valid_vectors
 
     head = (
@@ -408,10 +404,9 @@ def save_pca_model(embeddings: DataFrame, path: str, r: int = 16) -> None:
     def write(e: int) -> None:
         pairs, dims = _sufficient_stats(embeddings)
         _write_snapshot(pairs, dims, path, e)
-        # a MIXED-dimension initial corpus passes the two-row probe; two
-        # cheap post-write invariants catch it before the commit makes
-        # the snapshot live (the update_pca_model merged-dim guard,
-        # applied to the initial build): the landed dim count must equal
+        # a MIXED-dimension corpus passes the two-row probe; two cheap
+        # post-write invariants catch it before the commit makes the
+        # snapshot live: the landed dim count must equal
         # the probed d, and every (i, j) pair must have seen the SAME
         # vector count — a shorter vector contributes only to its low
         # pairs, so a mix skews the per-pair counts even when the probe
@@ -432,66 +427,6 @@ def save_pca_model(embeddings: DataFrame, path: str, r: int = 16) -> None:
             )
 
     manifest.rebuild(path, LAYOUT, write, r=r, d=head[0]["d"])
-
-
-def update_pca_model(
-    new_embeddings: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """Fold an embedding APPEND into the model (manifest.append):
-    sufficient stats over ONLY the new vectors, exact decimal addition
-    into the next fully-merged snapshot (a d²-bounded pass), atomic
-    commit. A shard with no non-empty vector is a no-op; `txn` is the
-    streaming replay guard.
-
-    Precondition (caller's dedup responsibility): new vec_ids are not
-    already fitted — double-folding a shard double-counts it."""
-    from csv_crm_upload_spark.analytics.similarity import valid_vectors
-
-    spark = new_embeddings.sparkSession
-
-    def write(valid: DataFrame, m: dict, nxt: int) -> None:
-        epoch, model_d = m["epoch"], m["d"]
-        # persisted: the dimension probe plus the two merged writes would
-        # otherwise re-derive the delta's explode lineage each time
-        rows = valid.persist()
-        try:
-            head = rows.select(F.size("embedding").alias("d")).limit(1).collect()
-            if head[0]["d"] != model_d:
-                raise ValueError(
-                    f"update_pca_model: shard dimension {head[0]['d']} != "
-                    f"model dimension {model_d} — folding it would silently "
-                    "corrupt the additive covariance sums"
-                )
-            d_pairs, d_dims = _sufficient_stats(rows)
-            merged_pairs = (
-                spark.read.parquet(f"{path}/pairsums/epoch={epoch}")
-                .unionByName(d_pairs)
-                .groupBy("i", "j")
-                .agg(F.sum("sxy").alias("sxy"), F.sum("n").cast("long").alias("n"))
-            )
-            merged_dims = (
-                spark.read.parquet(f"{path}/dimsums/epoch={epoch}")
-                .unionByName(d_dims)
-                .groupBy("dim")
-                .agg(F.sum("s").alias("s"))
-            )
-            _write_snapshot(merged_pairs, merged_dims, path, nxt)
-            # a MIXED-dimension shard passes the first-row probe; the
-            # merged dim count is the cheap post-write invariant that
-            # catches it before the commit makes it live
-            landed = spark.read.parquet(f"{path}/dimsums/epoch={nxt}").count()
-            if landed != model_d:
-                raise ValueError(
-                    f"update_pca_model: merged snapshot has {landed} dims, "
-                    f"expected {model_d} — mixed-dimension shard refused "
-                    "(uncommitted epoch dir is reclaimed by the next update)"
-                )
-        finally:
-            rows.unpersist()
-
-    manifest.append(
-        path, LAYOUT, txn, lambda m: valid_vectors(new_embeddings), write
-    )
 
 
 def load_pca_loadings(

@@ -45,7 +45,7 @@ from csv_crm_upload_spark.operators import manifest
 from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 #: codes: epoch-RANGED (vec_id, codes) rows; codebooks: the codec,
-#: PINNED by codebook_epoch (it stays fixed on append)
+#: PINNED by codebook_epoch
 LAYOUT = Layout(
     ranged={"codes": Ranged()},
     pinned={"codebooks": "codebook_epoch"},
@@ -428,15 +428,14 @@ def save_pq_index(
     cost) run once per corpus snapshot; every probe afterwards reads
     only m-byte codes.
 
-    Code files AND codebooks are EPOCH-VERSIONED (LAYOUT), so
-    update_pq_index can append a corpus shard atomically — and a
-    REBUILD over a live index is atomic too (manifest.rebuild): the new
+    Code files AND codebooks are EPOCH-VERSIONED (LAYOUT), so a
+    REBUILD over a live index is atomic (manifest.rebuild): the new
     codebooks+codes land under the next epoch and the manifest's
     `base_epoch`/`codebook_epoch` advance together in one commit, so a
     racing reader pairs old codebooks with old codes or new with new,
     never a mix.
 
-    Portability note (same caveat as ivf.save_index): the layout is
+    Portability note: the layout is
     self-describing — codebooks ride the index and probes rebuild their
     ADC tables from them — but code assignment is float argmax,
     consistent for any reader repeating the same arithmetic, unlike the
@@ -464,33 +463,6 @@ def save_pq_index(
     return books
 
 
-def update_pq_index(
-    new_embeddings: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """Incremental PQ maintenance for a corpus APPEND: encode ONLY the
-    new vectors with the STORED codebooks (the codec stays fixed on
-    append — retraining it is a rebuild, exactly like IVF's coarse
-    quantizer) and commit their codes as a new epoch. O(new vectors),
-    map-only, atomic via manifest.append."""
-    spark = new_embeddings.sparkSession
-
-    def write(emb: DataFrame, man: dict, nxt: int) -> None:
-        books = _load_codebooks(spark, path, man["codebook_epoch"])
-        dim = books.shape[0] * books.shape[2]
-        # pq_encode's zip_with would silently null-pad a mismatched
-        # array, so a wrong-width shard must fail loudly, mirroring fit's
-        # dim % m check — via a fail-fast probe (limit 1), not a full
-        # shard count
-        if emb.filter(F.size("embedding") != dim).limit(1).count():
-            raise ValueError(
-                f"appended vectors have dim != the stored codec's "
-                f"{dim} (m={books.shape[0]} × sub={books.shape[2]})"
-            )
-        manifest.write_epoch(pq_encode(emb, books), path, LAYOUT, "codes", nxt)
-
-    manifest.append(path, LAYOUT, txn, lambda man: new_embeddings, write)
-
-
 def _codebook_frame(spark, books: np.ndarray) -> DataFrame:
     """The (subspace, code, entry) rows a codebook tensor persists as."""
     mm, kk, _sub = books.shape
@@ -513,17 +485,10 @@ def _load_codebooks(spark, path: str, codebook_epoch: int) -> np.ndarray:
     return books
 
 
-def compact_pq_index(spark, path: str) -> bool:
-    """OPTIMIZE for the PQ index: fold the live code epochs into one new
-    epoch and advance base_epoch in one manifest commit — atomic, the
-    codec untouched. Returns False when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
-
-
 def load_pq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
     """(codebook tensor, codes DataFrame) from a saved index — the union
     of the committed epochs in [base_epoch, epoch], manifest-resolved so
-    a racing update OR rebuild is seen entirely or not at all."""
+    a racing rebuild is seen entirely or not at all."""
     man = manifest.read_manifest(path)
     books = _load_codebooks(spark, path, man["codebook_epoch"])
     codes = manifest.live(spark, path, man, LAYOUT, "codes").select("vec_id", "codes")

@@ -179,9 +179,9 @@ def bm25_search(
 #: portability note below).
 KEY_FORMAT = "lower-tok-postings-v1"
 
-#: postings: epoch-RANGED (each append adds the new docs' postings);
-#: dfreq/stats: fully-merged per-epoch SNAPSHOTS (only the current
-#: epoch's is read)
+#: postings: epoch-RANGED (probes read the live range, one epoch per
+#: build); dfreq/stats: per-epoch SNAPSHOTS (only the current epoch's
+#: is read)
 LAYOUT = Layout(
     ranged={"postings": Ranged(partition=("tok_bucket",))},
     snapshots={"dfreq": ("tok_bucket",), "stats": ()},
@@ -194,11 +194,10 @@ def save_text_index(documents: DataFrame, path: str, n_buckets: int = 64) -> Non
     """Persist the BM25 inverted index: postings (doc, token, tf, dl)
     partitioned BY a token hash bucket, document frequencies partitioned
     the same way, and the 1-row corpus stats. The build-once /
-    query-many split of production retrieval (the text twin of
-    ivf.save_index): the corpus scan + (doc,token) shuffle run once per
-    snapshot, then every query reads ONLY the partitions its terms hash
-    into — partition pruning does the candidate selection before any
-    row is touched.
+    query-many split of production retrieval: the corpus scan +
+    (doc,token) shuffle run once per snapshot, then every query reads
+    ONLY the partitions its terms hash into — partition pruning does
+    the candidate selection before any row is touched.
 
     Layout is EPOCH-VERSIONED (LAYOUT) with a MANIFEST naming the
     current epoch; a rebuild over a LIVE index is atomic
@@ -228,91 +227,6 @@ def save_text_index(documents: DataFrame, path: str, n_buckets: int = 64) -> Non
     manifest.rebuild(path, LAYOUT, write, n_buckets=n_buckets)
 
 
-def update_text_index(
-    new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """Incremental index maintenance for a corpus APPEND
-    (manifest.append): tokenize ONLY the new documents, write their
-    postings as a NEW epoch partition, and write fully-merged
-    dfreq/stats snapshots for that epoch. Documents with no text are a
-    no-op.
-
-    Cost: O(new docs) tokenize + O(vocab) dfreq merge — never a re-scan
-    of the indexed corpus (old postings epochs are untouched; only the
-    vocab-sized dfreq table is rewritten). A concurrent probe resolves
-    its epoch from the manifest once, so it sees the old snapshot or the
-    new one, never stale df/N against new postings.
-
-    Precondition (caller's dedup responsibility, same as any inverted
-    index): new_documents' doc_ids are not already indexed — the dedup
-    family upstream is exactly the tool for that.
-
-    `txn=(app_id, batch_id)`: replay guard for checkpointed streaming
-    folds — a re-delivered foreachBatch batch no-ops instead of
-    double-indexing.
-    """
-    spark = new_documents.sparkSession
-
-    def write(docs: DataFrame, m: dict, nxt: int) -> None:
-        epoch = m["epoch"]
-        tf = _tf_frame(docs).persist()
-        try:
-            delta = _corpus_stats(docs).first()
-            bucket = F.pmod(F.hash("tok"), F.lit(m["n_buckets"])).alias("tok_bucket")
-            postings = tf.select("doc_id", "tok", "tf", "dl", bucket)
-            manifest.write_epoch(postings, path, LAYOUT, "postings", nxt)
-            # merge document frequencies: vocab-sized pass into a new snapshot
-            delta_dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-            merged = (
-                spark.read.parquet(f"{path}/dfreq/epoch={epoch}")
-                .select("tok", "df")
-                .unionByName(delta_dfreq)
-                .groupBy("tok")
-                .agg(F.sum("df").alias("df"))
-                .select("tok", "df", bucket)
-            )
-            manifest.write_epoch(merged, path, LAYOUT, "dfreq", nxt)
-            # fold corpus stats with EXACT integer counts, then re-derive
-            # avgdl the same way a fresh build does (total/n double
-            # division) — the incremental index is bit-identical to a rebuild
-            old_stats = spark.read.parquet(f"{path}/stats/epoch={epoch}").first()
-            n_new = old_stats["n_docs"] + delta["n_docs"]
-            tot_new = old_stats["total_tokens"] + delta["total_tokens"]
-            stats = spark.createDataFrame(
-                [(n_new, tot_new, tot_new / n_new)],
-                "n_docs long, total_tokens long, avgdl double",
-            )
-            manifest.write_epoch(stats, path, LAYOUT, "stats", nxt)
-        finally:
-            tf.unpersist()
-
-    manifest.append(
-        path, LAYOUT, txn, lambda m: new_documents.filter(_has_text()), write
-    )
-
-
-def read_index_stats(spark, path: str):
-    """Corpus-stats Row of the CURRENT index epoch (manifest-resolved)."""
-    epoch = manifest.checked_manifest(path, LAYOUT)["epoch"]
-    return spark.read.parquet(f"{path}/stats/epoch={epoch}").first()
-
-
-def compact_text_index(spark, path: str) -> bool:
-    """OPTIMIZE for the inverted index: fold every postings epoch in
-    [base_epoch, epoch] into ONE new epoch and advance base_epoch with
-    one manifest commit — atomic, racing probes see the old epoch chain
-    or the compacted one, never a mix.
-
-    Appends are O(new docs) but each leaves an epoch dir; probe cost
-    grows with the epoch count (more files under every pruned bucket).
-    Compaction restores the one-dir-per-bucket read shape. dfreq/stats
-    are already full per-epoch SNAPSHOTS, so they rewrite as-is. Stale
-    pre-compaction epochs stay on disk for readers holding the old
-    manifest until CorpusIndexService.vacuum. Returns False (no-op)
-    when the index is already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
-
-
 def bm25_search_indexed(
     spark,
     index_path: str,
@@ -328,9 +242,8 @@ def bm25_search_indexed(
     the tiny query-term set (bounded collect, ≤ terms rows).
 
     The epoch is resolved from the manifest ONCE up front, so a probe
-    racing a concurrent update_text_index reads one consistent snapshot
-    (all postings epochs ≤ K with epoch-K dfreq/stats) — old or new,
-    never mixed."""
+    racing a rebuild reads one consistent snapshot (epoch-K postings
+    with epoch-K dfreq/stats) — old or new, never mixed."""
     queries = DEFAULT_QUERIES if queries is None else queries
     qdf = _query_terms_df(spark, queries)
     m = manifest.checked_manifest(index_path, LAYOUT)
@@ -553,8 +466,8 @@ def tfidf_indexed_top_terms(spark, index_path: str, k: int = 3) -> DataFrame:
 
     Epoch discipline (bm25_search_indexed's): the manifest resolves ONE
     consistent snapshot up front — postings epochs in [base, epoch]
-    with the SAME epoch's dfreq/stats — so a probe racing an append or
-    compaction reads old or new, never a mix. idf = round(log2(N/df),
+    with the SAME epoch's dfreq/stats — so a probe racing a rebuild
+    reads old or new, never a mix. idf = round(log2(N/df),
     9); score stays the raw tf x idf product (the tfidf1 half-way
     lesson); ties break on the term string."""
     m = manifest.checked_manifest(index_path, LAYOUT)

@@ -1,7 +1,7 @@
-"""Persisted daily event rollup — the TWELFTH artifact under the shared
+"""Persisted daily event rollup — an artifact under the shared
 epoch-manifest protocol (operators/manifest.py): the hypertable /
 continuous-aggregate story for the time-series family. The daily
-readouts (acf1 / dow1 / tsen1 / cpd1) are pure functions of the exact
+readouts (acf1 / dow1) are pure functions of the exact
 per-day counts, so once those counts are stored, every probe runs at
 the calendar-bounded day grain without re-scanning 100 TB of events.
 
@@ -9,9 +9,9 @@ Reference parity note: the reference repo (a CSV→CRM uploader,
 database/database.go) has no time-series surface; this extends the
 engine's widened analytics family (SURVEY §6) with the build/probe
 split the ANN indexes already have (pq.py / ivfpq.py): build once,
-append increments, probe cheap.
+probe cheap.
 
-Layout (same conventions as the other eleven artifacts):
+Layout (same conventions as the other artifacts):
   days/epoch=E/dbucket=B/  (day, event_type, n_events, n_valued,
                            value_micros) — exact additive longs; value
                            is summed in exact integer MICRO-units (the
@@ -22,17 +22,11 @@ Layout (same conventions as the other eleven artifacts):
                            partitions (PartitionFilters, like the BM25
                            token buckets).
   MANIFEST                 epoch / base_epoch / n_buckets / key_format
-                           (+ last_txn for streaming exactly-once)
 
-Maintenance contract (shared with every artifact):
+Maintenance contract:
   * build  — save_daily_rollup: atomic rebuild-over-live
-  * append — update_daily_rollup: counts are ADDITIVE, so committing
-             only the NEW events' (day, event_type) partials and
-             SUM-merging the epoch range at probe time is exactly a
-             rebuild (substr/ngramlm's epoch-RANGED discipline);
-             O(new events), days may repeat across epochs
-  * OPTIMIZE — compact_daily_rollup SUM-merges the live chain
-  * gc     — CorpusIndexService.vacuum, from LAYOUT
+  * gc     — manifest.gc_stale_epochs(path, LAYOUT) reclaims the epochs
+             a rebuild supersedes; nothing calls it on the query path
 """
 
 from __future__ import annotations
@@ -51,8 +45,8 @@ DEFAULT_N_BUCKETS = 16
 #: rule, or the micro-unit scale changes.
 KEY_FORMAT = "utc-day-type-micros-v1"
 
-#: days: epoch-RANGED additive (day, event_type) counts — probes and
-#: compaction SUM-merge the live range. The explicit read schema covers
+#: days: epoch-RANGED additive (day, event_type) counts — probes
+#: SUM-merge the live range. The explicit read schema covers
 #: an all-NULL-ts event batch, which writes a data-file-less epoch dir.
 LAYOUT = Layout(
     ranged={
@@ -137,10 +131,8 @@ def save_daily_rollup(
 
 def daily_rollup_counts(spark, path: str) -> DataFrame:
     """The stored (day, event_type) statistics, SUM-merged over the live
-    [base_epoch, epoch] range (manifest-resolved: a racing update or
-    compaction is invisible — old-or-new, never partial). Exact by
-    additivity — a day appearing in several epochs folds to the same
-    longs a rebuild would store."""
+    [base_epoch, epoch] range (manifest-resolved: a racing rebuild is
+    invisible — old-or-new, never partial)."""
     m = manifest.checked_manifest(path, LAYOUT)
     return manifest.live(spark, path, m, LAYOUT, "days", merged=True)
 
@@ -152,35 +144,6 @@ def daily_totals(spark, path: str) -> DataFrame:
     return daily_rollup_counts(spark, path).groupBy("day").agg(
         F.sum("n_events").cast("long").alias("c")
     )
-
-
-def update_daily_rollup(
-    new_events: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
-    """Fold an event APPEND: aggregate ONLY the new events and commit
-    their partials as a new epoch (manifest.append). Counts are
-    additive, so the SUM-merged probe view is EXACTLY what a rebuild
-    over the full history would store (test-pinned) — days already
-    present just gain another partial row. No precondition on days:
-    events are append-only facts, unlike the doc-keyed indexes. A batch
-    with no timestamped event is a no-op."""
-    manifest.append(
-        path,
-        LAYOUT,
-        txn,
-        lambda m: _day_partials(new_events, m["n_buckets"]).localCheckpoint(
-            eager=True
-        ),
-        lambda partials, m, e: manifest.write_epoch(partials, path, LAYOUT, "days", e),
-    )
-
-
-def compact_daily_rollup(spark, path: str) -> bool:
-    """OPTIMIZE: SUM-merge the live chain into one epoch (bucket
-    partitioning preserved) in one atomic manifest commit — exact by
-    additivity (a plain epoch union would double-count days seen in
-    several epochs). Returns False when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 # ---------------------------------------------------------------------------
@@ -202,13 +165,6 @@ def dow1_indexed(spark, path: str) -> DataFrame:
     from csv_crm_upload_spark.analytics import tpch
 
     return tpch.dow1_weekly_profile(daily_totals(spark, path))
-
-
-def cpd1_indexed(spark, path: str) -> DataFrame:
-    """cpd1 over the PERSISTED daily counts (see acf1_indexed)."""
-    from csv_crm_upload_spark.analytics import tpch
-
-    return tpch.cpd1_mean_shift(daily_totals(spark, path))
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Persisted ExactSubstr gram-count index — the eleventh artifact under
+"""Persisted ExactSubstr gram-count index — an artifact under
 the shared epoch-manifest protocol (operators/manifest.py): Lee et al.
 2021's duplicated-substring pass at corpus scale, "mark every >=L-token
 repeat against everything ever indexed" without re-scoring the corpus
@@ -11,7 +11,7 @@ Layout (the BM25-postings/winnow conventions):
                                  and hash-partitioned by
                                  gbucket = pmod(gram_h, n_buckets)
   MANIFEST                       epoch / base_epoch / min_len /
-                                 n_buckets / gram_format (+ last_txn)
+                                 n_buckets / gram_format
 
 The stored key is the 60-bit gram HASH, not the gram text: 8 bytes per
 distinct gram instead of ~10 tokens, the standard ExactSubstr trade
@@ -24,14 +24,14 @@ what makes the append O(new docs) — the delta's counts land as a new
 epoch partition, nothing already indexed is rewritten (a gram becomes
 "duplicated" the moment its summed count crosses 1, even when the two
 occurrences live in different epochs). Probes aggregate the live
-[base_epoch, epoch] range; OPTIMIZE folds the chain back to one epoch
-(sum-merge — exact by additivity).
+[base_epoch, epoch] range.
 
-Maintenance contract (shared with every other artifact):
+Maintenance contract:
   * build  — save_substr_index: atomic rebuild-over-live
-  * append — update_substr_index: O(new docs), additive fold
-  * OPTIMIZE — compact_substr_index (sum-merged, not just unioned)
-  * gc     — CorpusIndexService.vacuum, from LAYOUT
+  * append — update_substr_index (CLI `substr-build --append`): O(new
+             docs), additive fold, one epoch per append
+  * gc     — nothing reclaims epochs a rebuild supersedes on that path;
+             manifest.gc_stale_epochs(path, LAYOUT) is the library call
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 DEFAULT_N_BUCKETS = 16
 
 #: Gram-key format version, stamped into the MANIFEST at build time and
-#: checked on every probe/append/compact. The stored keys are md5-60
+#: checked on every probe/append. The stored keys are md5-60
 #: hashes of the JOINED gram text, so anything that changes the join —
 #: the separator character, the tokenization — silently changes every
 #: hash: a probe against an index built under a different format would
@@ -61,8 +61,8 @@ DEFAULT_N_BUCKETS = 16
 #: changes so stale indexes fail LOUDLY instead of matching nothing.
 GRAM_FORMAT = "space-md560-v1"
 
-#: gramcounts: epoch-RANGED additive counts — probes and compaction
-#: SUM-merge the live range. The stamp keeps its original `gram_format`
+#: gramcounts: epoch-RANGED additive counts — probes SUM-merge the
+#: live range. The stamp keeps its original `gram_format`
 #: field and is STRICT: a manifest with no gram_format predates the
 #: stamp, its keys were built under the old \x01 separator (or are of
 #: unknown vintage), so it is refused too — zero silent-miss modes. The
@@ -120,14 +120,12 @@ def load_substr_counts(spark, path: str) -> DataFrame:
     """The corpus-wide (gram_h, n) table — per-epoch counts of the
     committed [base_epoch, epoch] range SUMMED per gram (additive, so
     this is exactly a rebuild's table; manifest-resolved, so a racing
-    update or compaction is invisible — old-or-new, never partial)."""
+    append or rebuild is invisible — old-or-new, never partial)."""
     m = manifest.checked_manifest(path, LAYOUT)
     return manifest.live(spark, path, m, LAYOUT, "gramcounts", merged=True)
 
 
-def update_substr_index(
-    new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
+def update_substr_index(new_documents: DataFrame, path: str) -> None:
     """Fold a corpus APPEND: count ONLY the new documents' grams and
     commit them as a new epoch (manifest.append) — additivity makes the
     summed table EXACTLY what a rebuild over the full corpus would store
@@ -136,20 +134,11 @@ def update_substr_index(
     manifest.append(
         path,
         LAYOUT,
-        txn,
         lambda m: _gram_counts(
             new_documents, m["min_len"], m["n_buckets"]
         ).localCheckpoint(eager=True),
         lambda delta, m, e: manifest.write_epoch(delta, path, LAYOUT, "gramcounts", e),
     )
-
-
-def compact_substr_index(spark, path: str) -> bool:
-    """OPTIMIZE: SUM-merge the live [base_epoch, epoch] chain into one
-    epoch (exact by additivity — a plain epoch union would double-store
-    grams seen in several epochs) in one atomic manifest commit. Returns
-    False when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def xsd_indexed_dup_spans(documents: DataFrame, path: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Persisted winnowing fingerprint index — the eighth artifact under
+"""Persisted winnowing fingerprint index — an artifact under
 the shared epoch-manifest protocol (operators/manifest.py): the MOSS
 use case at corpus scale, "check any document against everything ever
 indexed for shared content" without re-fingerprinting the corpus.
@@ -11,16 +11,16 @@ Layout (same conventions as the BM25/dedup/vector indexes):
                              land in (PartitionFilters, like the
                              BM25 token buckets and NB model counts)
   MANIFEST                   epoch / base_epoch / k / w / n_buckets /
-                             key_format (+ last_txn for streaming
-                             exactly-once)
+                             key_format
 
-Maintenance contract (shared with every other artifact):
+Maintenance contract:
   * build  — save_winnow_index: atomic rebuild-over-live
-  * append — update_winnow_index: fingerprints are pure per-document
-             functions, so folding ONLY the new docs' prints is
-             byte-identical to a rebuild (test-pinned); O(new docs)
-  * OPTIMIZE — compact_winnow_index via manifest.compact_epochs
-  * gc     — CorpusIndexService.vacuum, from LAYOUT
+  * append — update_winnow_index (CLI `winnow-build --append`):
+             fingerprints are pure per-document functions, so folding
+             ONLY the new docs' prints is byte-identical to a rebuild
+             (test-pinned); O(new docs), one epoch per append
+  * gc     — nothing reclaims epochs a rebuild supersedes on that path;
+             manifest.gc_stale_epochs(path, LAYOUT) is the library call
 """
 
 from __future__ import annotations
@@ -83,14 +83,12 @@ def save_winnow_index(
 def load_winnow_prints(spark, path: str) -> DataFrame:
     """The stored (doc_id, fp) fingerprint table — the union of the
     committed epochs in [base_epoch, epoch] (manifest-resolved: a racing
-    update or compaction is invisible — old-or-new, never partial)."""
+    append or rebuild is invisible — old-or-new, never partial)."""
     m = manifest.checked_manifest(path, LAYOUT)
     return manifest.live(spark, path, m, LAYOUT, "prints").select("doc_id", "fp")
 
 
-def update_winnow_index(
-    new_documents: DataFrame, path: str, txn: tuple[str, int] | None = None
-) -> None:
+def update_winnow_index(new_documents: DataFrame, path: str) -> None:
     """Fold a corpus APPEND: fingerprint ONLY the new documents and
     commit them as a new epoch (manifest.append). Because selection is a
     pure per-document function, the post-append print table is EXACTLY
@@ -100,19 +98,11 @@ def update_winnow_index(
     manifest.append(
         path,
         LAYOUT,
-        txn,
         lambda m: _bucketed(
             winnow_prints(new_documents, m["k"], m["w"]), m["n_buckets"]
         ).localCheckpoint(eager=True),
         lambda prints, m, e: manifest.write_epoch(prints, path, LAYOUT, "prints", e),
     )
-
-
-def compact_winnow_index(spark, path: str) -> bool:
-    """OPTIMIZE: fold the live [base_epoch, epoch] chain into one epoch
-    (bucket partitioning preserved) in one atomic manifest commit.
-    Returns False when already compact."""
-    return manifest.compact_epochs(spark, path, LAYOUT)
 
 
 def wfp2_indexed_pairs(

@@ -58,11 +58,12 @@ def anti_join_existing(
 def rejected_duplicates(
     batch: DataFrame, existing: DataFrame, keys: tuple[str, ...] = ("id", "email")
 ) -> DataFrame:
-    """Complement of anti_join_existing ∪ in-batch losers, with reasons —
-    the quarantine feed for duplicate rows (replaces the reference's
-    per-row-retry error log, csvreader.go:90-101)."""
+    """The batch minus its surviving rows, with reasons — the quarantine
+    feed for duplicate rows (replaces the reference's per-row-retry
+    error log, csvreader.go:90-101). A multiset difference, so an exact
+    in-batch copy of a survivor is quarantined once per extra copy; a
+    key-based anti-join would drop every copy of the survivor's key."""
     surviving = anti_join_existing(dedupe_batch(batch, keys), existing, keys)
-    return (
-        batch.join(surviving.select("id", "email"), on=["id", "email"], how="left_anti")
-        .withColumn("reason", F.lit("duplicate_key"))
+    return batch.exceptAll(surviving.select(*batch.columns)).withColumn(
+        "reason", F.lit("duplicate_key")
     )

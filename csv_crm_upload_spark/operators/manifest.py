@@ -1,19 +1,18 @@
-"""The epoch-manifest protocol of the 13 persisted indexes and models
-(BM25 text index, LSH pair index, IVF / PQ / IVF-PQ indexes, NB / BPE /
-PCA models, winnow prints, substr gram counts, n-gram LM, daily event
-rollup, sketch-audit log).
+"""The epoch-manifest protocol of the 11 persisted indexes and models
+(BM25 text index, LSH pair index, PQ / IVF-PQ indexes, NB / BPE / PCA
+models, winnow prints, substr gram counts, daily event rollup,
+sketch-audit log).
 
 Each artifact module declares its directory layout once (`Layout`) and
 keeps only its own math; this module runs every protocol step from the
 layout:
 
-  rebuild   — `rebuild`: write the next epoch, then one commit that
-              keeps the prior manifest's fields (above all `last_txn`);
-  append    — `append`: stamp check, txn guard, stage the delta from
-              the new input only (empty → return with nothing touched),
-              remove orphans, write epoch+1, one commit with the txn;
+  rebuild   — `rebuild`: write the next epoch, then one commit of a
+              fresh manifest (epoch, pinned keys, stamp, build params);
+  append    — `append`: stamp check, stage the delta from the new input
+              only (empty → return with nothing touched), remove
+              orphans, write epoch+1, one commit;
   live read — `live`: the [base_epoch, epoch] range of a ranged subdir;
-  compact   — `compact_epochs`: fold the live range into one epoch;
   gc        — `gc_stale_epochs`: drop dirs the manifest no longer names.
 
 The manifest is the ONLY commit point of an epoch-versioned artifact:
@@ -43,14 +42,12 @@ class Ranged:
     partition columns + `epoch int`) for subdirs whose epochs may hold
     no data file, which schema inference cannot read. Non-empty `keys`
     declares ADDITIVE counts: the same key may appear in several epochs,
-    so the merged live view and compaction SUM `sums` per key and carry
-    `carry` (functions of the key) by max."""
+    so the merged live view SUMs `sums` per key."""
 
     partition: tuple[str, ...] = ()
     schema: str | None = None
     keys: tuple[str, ...] = ()
     sums: tuple[str, ...] = ()
-    carry: tuple[str, ...] = ()
 
 
 @dataclass(frozen=True)
@@ -113,23 +110,21 @@ def checked_manifest(path: str, layout: Layout) -> dict:
 def rebuild(path: str, layout: Layout, write: Callable[[int], None], **fields) -> None:
     """Build (or atomically rebuild over a live artifact): `write(epoch)`
     lands every subdir of the next epoch — 0 on a fresh path, one past
-    the committed epoch otherwise — then one commit advances epoch,
-    base_epoch and every pinned key together, stamps the key format and
-    records `fields` (build parameters). The prior manifest's fields are
-    KEPT, above all `last_txn`, whose loss would void the streaming
-    replay guard for batches folded before the rebuild. A racing reader
-    pairs old data with old quantizers/stats or new with new."""
+    the committed epoch otherwise — then one commit of a FRESH manifest
+    advances epoch, base_epoch and every pinned key together, stamps the
+    key format and records `fields` (build parameters). Nothing of the
+    prior manifest but its epoch carries over: every caller passes its
+    parameters explicitly. A racing reader pairs old data with old
+    quantizers/stats or new with new."""
     try:
-        prior = read_manifest(path)
-        epoch = prior["epoch"] + 1
+        epoch = read_manifest(path)["epoch"] + 1
     except FileNotFoundError:
-        prior, epoch = {}, 0
+        epoch = 0
     write(epoch)
     stamp = {layout.format_field: layout.key_format} if layout.key_format else {}
     _commit(
         path,
         {
-            **prior,
             "epoch": epoch,
             "base_epoch": epoch,
             **dict.fromkeys(layout.pinned.values(), epoch),
@@ -139,33 +134,21 @@ def rebuild(path: str, layout: Layout, write: Callable[[int], None], **fields) -
     )
 
 
-def append(
-    path: str,
-    layout: Layout,
-    txn: tuple[str, int] | None,
-    stage: Callable,
-    write: Callable,
-) -> None:
+def append(path: str, layout: Layout, stage: Callable, write: Callable) -> None:
     """Fold an APPEND as epoch+1, in this order:
 
       1. read the manifest and check the key-format stamp;
-      2. txn guard: a replayed (app_id, batch_id) returns;
-      3. `stage(m)` builds the delta DataFrame from the NEW input only;
+      2. `stage(m)` builds the delta DataFrame from the NEW input only;
          an empty delta returns with NOTHING touched;
-      4. remove orphan epoch>current dirs a crashed writer left;
-      5. `write(delta, m, epoch + 1)` lands the new epoch (reads of the
-         stored tree belong here, after step 4);
-      6. one commit of epoch+1 with the txn.
+      3. remove orphan epoch>current dirs a crashed writer left;
+      4. `write(delta, m, epoch + 1)` lands the new epoch (reads of the
+         stored tree belong here, after step 3);
+      5. one commit of epoch+1.
 
     The no-op rule is the point of the order: orphan self-heal must not
     run on a no-op append, or a no-op deletes an in-flight concurrent
-    writer's epoch dir. The txn rides the SAME atomic commit as the
-    epoch it folded, so a crash either committed both (the replay
-    no-ops) or neither (the replay redoes cleanly) — the txnAppId
-    pattern of lakehouse streaming writers (cf. operators/store.py)."""
+    writer's epoch dir."""
     m = checked_manifest(path, layout)
-    if txn is not None and m.get("last_txn", {}).get(txn[0], -1) >= txn[1]:
-        return
     delta = stage(m)
     if not delta.limit(1).count():
         return
@@ -175,8 +158,6 @@ def append(
     payload = {**m, "epoch": nxt}
     if not layout.ranged:
         payload["base_epoch"] = nxt
-    if txn is not None:
-        payload["last_txn"] = {**m.get("last_txn", {}), txn[0]: txn[1]}
     _commit(path, payload)
 
 
@@ -197,7 +178,7 @@ def write_epoch(df, path: str, layout: Layout, sub: str, epoch: int) -> None:
 def live(spark, path: str, m: dict, layout: Layout, sub: str, merged: bool = False):
     """The live [base_epoch, epoch] rows of a ranged subdir under
     manifest `m` (resolved once by the caller, so a racing append or
-    compaction is invisible), `epoch` column dropped. `merged=True`
+    rebuild is invisible), `epoch` column dropped. `merged=True`
     SUM-merges an additive subdir per key — exactly the table a rebuild
     would store."""
     from pyspark.sql import functions as F
@@ -213,53 +194,18 @@ def live(spark, path: str, m: dict, layout: Layout, sub: str, merged: bool = Fal
         )
         .drop("epoch")
     )
-    return _sum_merge(df, spec) if merged else df
-
-
-def _sum_merge(df, spec: Ranged, *extra_keys: str):
-    from pyspark.sql import functions as F
-
-    return df.groupBy(*spec.keys, *extra_keys).agg(
-        *[F.max(c).alias(c) for c in spec.carry],
-        *[F.sum(c).cast("long").alias(c) for c in spec.sums],
+    if not merged:
+        return df
+    return df.groupBy(*spec.keys).agg(
+        *[F.sum(c).cast("long").alias(c) for c in spec.sums]
     )
-
-
-def compact_epochs(spark, path: str, layout: Layout) -> bool:
-    """OPTIMIZE: fold every ranged subdir's live [base_epoch, epoch]
-    range into ONE new epoch — a plain union, or a SUM-merge per key for
-    additive subdirs (a union would double-store keys seen in several
-    epochs) — copy the current epoch of each snapshot subdir, then
-    advance epoch AND base_epoch in one atomic commit that keeps every
-    other manifest field (params, last_txn). Pinned quantizers are
-    untouched. Returns False, with nothing touched, when the artifact
-    is already compact."""
-    m = checked_manifest(path, layout)
-    epoch, base = m["epoch"], m.get("base_epoch", 0)
-    if base == epoch:
-        return False
-    # self-heal first: a crashed update or compaction leaves a partial
-    # epoch>current dir whose truncated files would abort the tree scan
-    _remove_orphans(path, layout, epoch)
-    nxt = epoch + 1
-    for sub, spec in layout.ranged.items():
-        df = live(spark, path, m, layout, sub)
-        if spec.keys:
-            df = _sum_merge(df, spec, *spec.partition)
-        write_epoch(df, path, layout, sub, nxt)
-    for sub in layout.snapshots:
-        write_epoch(
-            spark.read.parquet(f"{path}/{sub}/epoch={epoch}"), path, layout, sub, nxt
-        )
-    _commit(path, {**m, "epoch": nxt, "base_epoch": nxt})
-    return True
 
 
 def gc_stale_epochs(path: str, layout: Layout) -> list[str]:
     """Delete epoch dirs the CURRENT manifest can no longer reference:
     for ranged and snapshot subdirs anything outside [base_epoch, epoch]
-    (stale pre-compaction/pre-rebuild chains, superseded snapshots,
-    uncommitted orphans); for pinned subdirs anything except the pinned
+    (stale pre-rebuild chains, superseded snapshots, uncommitted
+    orphans); for pinned subdirs anything except the pinned
     epoch. Returns the removed paths.
 
     Same contract as store.vacuum: callers assert no reader still holds
@@ -324,12 +270,12 @@ def check_key_format(
     artifact's KEY_FORMAT whenever its key derivation changes.
 
     `missing_ok=True` is for artifacts whose key derivation has NEVER
-    changed since before the stamp existed (winnow / ngram-LM / text
-    index / dedup pairs — only substr's gram hashes actually changed):
-    a manifest with no format field there is a known-compatible
-    pre-stamp vintage, so it is accepted and the stamp is BACKFILLED
-    into `m` in place — the caller's next `{**m, ...}` manifest commit
-    persists it, with no forced rebuild of a compatible index. The flag
+    changed since before the stamp existed (winnow / text index / dedup
+    pairs — only substr's gram hashes actually changed): a manifest
+    with no format field there is a known-compatible pre-stamp vintage,
+    so it is accepted and the stamp is BACKFILLED into `m` in place —
+    the next append's `{**m, ...}` manifest commit persists it, with no
+    forced rebuild of a compatible index. The flag
     is ONLY valid while `expected` is the artifact's FIRST (v1) stamp;
     the moment a derivation change bumps the format, drop it — a
     missing field can then no longer prove v1. Artifacts whose keys

@@ -101,7 +101,6 @@ def run_upload_service(
     tick_sleep=None,
     auto_compact_files: int | None = None,
     vacuum_keep: int | None = None,
-    index_service=None,
 ) -> list[int]:
     """The crmIntegrator as a long-running service: `run_upload_cycle` on
     a poll ticker (reference crm service loop — a 30 s timer re-selecting
@@ -115,13 +114,7 @@ def run_upload_service(
     maybe_compact() check and bin-packs only when some bucket exceeds
     the threshold; `vacuum_keep` then drops all but the newest
     snapshots. A compaction rewrites no uploaded flag, so it never
-    causes a re-upload.
-
-    `index_service` (a streaming.index_service.CorpusIndexService) also
-    rides the ticker: each cycle folds newly landed corpus shards into
-    the registered persisted indexes via their O(new docs) update paths,
-    so the build-once artifacts stay fresh without a manual step — a
-    quiet tick costs one listing."""
+    causes a re-upload."""
     tick = tick_sleep or time.sleep
     marked: list[int] = []
     cycle = 0
@@ -135,8 +128,6 @@ def run_upload_service(
             store.maybe_compact(max_files_per_bucket=auto_compact_files)
         if vacuum_keep is not None:
             store.vacuum(keep_last=vacuum_keep)
-        if index_service is not None:
-            index_service.tick()
         cycle += 1
         if max_cycles is None or cycle < max_cycles:
             tick(interval_s)

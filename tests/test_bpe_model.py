@@ -1,6 +1,6 @@
 """Persisted BPE tokenizer model: incremental ≡ rebuild (bit-exact),
-apply ≡ inline bpe2/bpe3, streaming replay guard, service-tick fold,
-atomic rebuild-over-live, vacuum of superseded snapshots."""
+apply ≡ inline bpe2, atomic rebuild-over-live, gc of superseded
+snapshots."""
 
 from __future__ import annotations
 
@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 from csv_crm_upload_spark.analytics.bpe import (
     bpe1_merge_steps,
     bpe2_segment,
-    bpe3_vocab_coverage,
-    coverage_with_bpe_model,
     load_bpe_rules,
     save_bpe_model,
     segment_with_bpe_model,
@@ -52,8 +50,8 @@ def test_incremental_update_equals_rebuild(spark, sf_dir, tmp_path):
 
 
 def test_model_apply_matches_inline(spark, sf_dir, tmp_path):
-    """segment/coverage against the persisted model equal the inline
-    self-trained bpe2/bpe3 on the same corpus, and the stored rules are
+    """segment against the persisted model equals the inline
+    self-trained bpe2 on the same corpus, and the stored rules are
     exactly bpe1's merge steps."""
     docs = load_table(spark, sf_dir, "documents")
     path = str(tmp_path / "bpe")
@@ -68,79 +66,39 @@ def test_model_apply_matches_inline(spark, sf_dir, tmp_path):
     assert _rows(segment_with_bpe_model(docs, path)) == _rows(
         bpe2_segment(docs, steps=3)
     )
-    assert _rows(coverage_with_bpe_model(docs, path)) == _rows(
-        bpe3_vocab_coverage(docs, steps=3)
-    )
-
-
-def test_update_txn_replay_noops(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "bpe")
-    save_bpe_model(docs.filter(F.col("doc_id") < 100), path, steps=2)
-    shard = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
-    update_bpe_model(shard, path, txn=("svc", 7))
-    e1 = read_manifest(path)["epoch"]
-    update_bpe_model(shard, path, txn=("svc", 7))  # replayed batch
-    assert read_manifest(path)["epoch"] == e1, "replay must not double-fold"
 
 
 def test_rebuild_over_live_is_atomic(spark, sf_dir, tmp_path):
     """save_bpe_model over an existing model commits a FRESH epoch above
     the old chain (readers holding the old manifest keep resolving their
-    epoch dirs) and preserves the streaming cursor (`last_txn`)."""
+    epoch dirs) and a fresh manifest carrying only the new build's
+    fields: a field an older manifest carried (here the `last_txn` of
+    earlier releases) does not survive the rebuild."""
+    import json
+
     docs = load_table(spark, sf_dir, "documents")
     path = str(tmp_path / "bpe")
     save_bpe_model(docs.filter(F.col("doc_id") < 200), path, steps=2)
     update_bpe_model(
-        docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 300)),
-        path,
-        txn=("svc", 3),
+        docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 300)), path
     )
     m1 = read_manifest(path)
-    save_bpe_model(docs, path, steps=2)  # rebuild over live
+    with open(os.path.join(path, "MANIFEST"), "w") as f:
+        json.dump({**m1, "last_txn": {"svc": 3}}, f)
+    save_bpe_model(docs, path, steps=3)  # rebuild over live
     m2 = read_manifest(path)
-    assert m2["epoch"] > m1["epoch"]
-    assert m2["base_epoch"] == m2["epoch"]
-    assert m2.get("last_txn") == m1.get("last_txn"), "rebuild must keep the cursor"
+    assert m2 == {"epoch": m1["epoch"] + 1, "base_epoch": m1["epoch"] + 1, "steps": 3}
     assert os.path.isdir(f"{path}/merges/epoch={m1['epoch']}"), (
         "old epoch dirs live until vacuum"
     )
 
 
-def test_bpe_model_folds_on_service_tick(spark, sf_dir, tmp_path):
-    """A dropped doc shard folds into the persisted tokenizer on the
-    next CorpusIndexService tick — epoch advances and the refreshed
-    rules equal a rebuild over the union corpus."""
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
-
-    docs = load_table(spark, sf_dir, "documents")
-    first = docs.filter(F.col("doc_id") < 400)
-    shard = docs.filter(F.col("doc_id") >= 400)
-
-    model = str(tmp_path / "bpe_model")
-    save_bpe_model(first, model, steps=3)
-    e0 = read_manifest(model)["epoch"]
-
-    drop = str(tmp_path / "docs_drop")
-    os.makedirs(drop)
-    svc = CorpusIndexService(spark, docs_dir=drop, bpe_model=model)
-    assert svc.tick() == {"docs": [], "embeddings": [], "events": []}  # quiet tick
-
-    shard.write.parquet(f"{drop}/shard_a")
-    folded = svc.tick()
-    assert folded["docs"], "shard must fold on the tick after landing"
-    assert read_manifest(model)["epoch"] == e0 + 1
-
-    full = str(tmp_path / "bpe_full")
-    save_bpe_model(docs, full, steps=3)
-    assert load_bpe_rules(spark, model) == load_bpe_rules(spark, full)
-
-
 def test_vacuum_reclaims_superseded_bpe_snapshots(spark, sf_dir, tmp_path):
-    """Every BPE epoch is a full snapshot, so after an append vacuum()
-    must reclaim the superseded epoch dirs and the live model still
-    tokenizes."""
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
+    """Every BPE epoch is a full snapshot, so after an append
+    gc_stale_epochs must reclaim the superseded epoch dirs and the live
+    model still tokenizes."""
+    from csv_crm_upload_spark.analytics.bpe import LAYOUT
+    from csv_crm_upload_spark.operators.manifest import gc_stale_epochs
 
     docs = load_table(spark, sf_dir, "documents")
     model = str(tmp_path / "bpe")
@@ -149,10 +107,7 @@ def test_vacuum_reclaims_superseded_bpe_snapshots(spark, sf_dir, tmp_path):
     assert os.path.isdir(f"{model}/vocab/epoch=0")
     assert os.path.isdir(f"{model}/vocab/epoch=1")
 
-    drop = str(tmp_path / "drop")
-    os.makedirs(drop)
-    svc = CorpusIndexService(spark, docs_dir=drop, bpe_model=model)
-    removed = svc.vacuum()
+    removed = gc_stale_epochs(model, LAYOUT)
     assert any("epoch=0" in p for p in removed), removed
     assert not os.path.isdir(f"{model}/vocab/epoch=0")
     assert segment_with_bpe_model(docs.limit(10), model).count() > 0

@@ -1,8 +1,7 @@
 """Persisted LSH candidate-pair index: the graph-family queries consume
 one materialized pair table (built once per corpus snapshot) instead of
 each re-deriving the shingle→minhash→band pipeline — the build-once
-pattern of retrieval.save_text_index / ivf.save_index applied to the
-near-dup graph. Index-fed results must be IDENTICAL to the inline path.
+pattern of retrieval.save_text_index applied to the near-dup graph. Index-fed results must be IDENTICAL to the inline path.
 """
 
 from __future__ import annotations
@@ -48,53 +47,12 @@ def test_index_manifest_records_params(spark, sf_dir, tmp_path):
     assert (m["minhash_k"], m["lsh_bands"]) == (dd.MINHASH_K, dd.LSH_BANDS)
 
 
-def test_incremental_pair_index_equals_rebuild(spark, sf_dir, tmp_path):
-    """Append half the corpus to an index built on the other half: the
-    loaded pair table must EQUAL a full one-shot rebuild (signatures are
-    pure per-doc functions, so the incremental candidate join loses
-    nothing), and graph consumers fed from it must match inline."""
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents")
-    part_a = docs.filter(F.col("doc_id") % 2 == 0)
-    part_b = docs.filter(F.col("doc_id") % 2 == 1)
-
-    inc = str(tmp_path / "inc_idx")
-    full = str(tmp_path / "full_idx")
-    dd.save_dedup_index(part_a, inc)
-    dd.update_dedup_index(part_b, inc)
-    dd.save_dedup_index(docs, full)
-
-    got = sorted(map(tuple, dd.load_dedup_index(spark, inc).collect()))
-    want = sorted(map(tuple, dd.load_dedup_index(spark, full).collect()))
-    assert got == want
-    assert got == sorted(map(tuple, dd.d_minhash_lsh_pairs(docs).collect()))
-
-    # a graph consumer fed from the incrementally-built index == inline
-    fed = sorted(
-        map(
-            tuple,
-            dd.d_dup_clusters(docs, pairs=dd.load_dedup_index(spark, inc)).collect(),
-        )
-    )
-    inline = sorted(map(tuple, dd.d_dup_clusters(docs).collect()))
-    assert fed == inline
-
-    # empty append is a committed no-op
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    before = read_manifest(inc)["epoch"]
-    dd.update_dedup_index(docs.filter("doc_id < 0"), inc)
-    assert read_manifest(inc)["epoch"] == before
-
-
 def test_index_build_caps_hot_buckets(spark, tmp_path):
     """One planted mega-bucket (a template cluster far larger than the
     cap) must NOT go quadratic in the index build: with max_bucket below
     the cluster size, none of its intra-cluster pairs reach the artifact
     — while an honest small near-dup pair elsewhere in the corpus is
-    still found. The cap rides the manifest; appends respect it measured
-    over COMBINED bucket size."""
+    still found. The cap rides the manifest."""
     from csv_crm_upload_spark.operators.manifest import read_manifest
 
     # 40 near-identical template docs (same text => same band buckets)
@@ -120,16 +78,6 @@ def test_index_build_caps_hot_buckets(spark, tmp_path):
     assert (100, 101) in pairs  # honest pair survives
     assert not any(p[0] < 40 and p[1] < 40 for p in pairs)  # mega-bucket dropped
 
-    # append growing the combined bucket past the cap: still no template
-    # pairs are generated (cap measured over old + new membership)
-    extra = spark.createDataFrame(
-        [(300 + i, template, "en", "tmpl", len(template)) for i in range(5)],
-        ["doc_id", "text", "lang", "source", "n_chars"],
-    )
-    dd.update_dedup_index(extra, idx)
-    pairs2 = {(r["doc_a"], r["doc_b"]) for r in dd.load_dedup_index(spark, idx).collect()}
-    assert not any({p[0], p[1]} <= set(range(40)) | set(range(300, 305)) for p in pairs2 if p != (100, 101))
-
     # uncapped build at the same path would have found the template pairs
     # (sanity that the test corpus really is a mega-bucket)
     uncapped = dd.d_minhash_lsh_pairs(docs)
@@ -137,9 +85,9 @@ def test_index_build_caps_hot_buckets(spark, tmp_path):
 
 
 def test_crashed_update_self_heals(spark, sf_dir, tmp_path):
-    """Orphan epoch dirs (a crash AFTER data writes but BEFORE the
-    manifest swap) must be invisible to readers and removed by the next
-    update, which then commits cleanly."""
+    """Orphan epoch dirs (a crashed rebuild: data written, manifest not
+    swapped) must be invisible to readers and overwritten by the next
+    rebuild, which then commits cleanly."""
     import os
 
     from pyspark.sql import functions as F
@@ -148,7 +96,6 @@ def test_crashed_update_self_heals(spark, sf_dir, tmp_path):
 
     docs = load_table(spark, sf_dir, "documents")
     part_a = docs.filter(F.col("doc_id") % 2 == 0)
-    part_b = docs.filter(F.col("doc_id") % 2 == 1)
     idx = str(tmp_path / "crash_idx")
     dd.save_dedup_index(part_a, idx)
     baseline = sorted(map(tuple, dd.load_dedup_index(spark, idx).collect()))
@@ -162,23 +109,22 @@ def test_crashed_update_self_heals(spark, sf_dir, tmp_path):
     # readers resolve through the manifest: orphans invisible
     assert sorted(map(tuple, dd.load_dedup_index(spark, idx).collect())) == baseline
 
-    # the next update removes the orphans and commits epoch 1 for real
-    dd.update_dedup_index(part_b, idx)
+    # the next rebuild overwrites the orphans and commits epoch 1 for real
+    dd.save_dedup_index(docs, idx)
     assert read_manifest(idx)["epoch"] == 1
     healed = sorted(map(tuple, dd.load_dedup_index(spark, idx).collect()))
     assert healed == sorted(map(tuple, dd.d_minhash_lsh_pairs(docs).collect()))
 
 
 def test_probe_during_pair_index_update_sees_old_or_new(spark, sf_dir, tmp_path):
-    """A reader racing update_dedup_index must see the pre-append or the
-    post-append pair set, never a partial epoch (manifest-resolved)."""
+    """A reader racing a rebuild of the pair index must see the old or
+    the new pair set, never a partial epoch (manifest-resolved)."""
     import threading
 
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
     part_a = docs.filter(F.col("doc_id") % 2 == 0)
-    part_b = docs.filter(F.col("doc_id") % 2 == 1)
     idx = str(tmp_path / "race_idx")
     dd.save_dedup_index(part_a, idx)
     old = sorted(map(tuple, dd.load_dedup_index(spark, idx).collect()))
@@ -187,7 +133,7 @@ def test_probe_during_pair_index_update_sees_old_or_new(spark, sf_dir, tmp_path)
 
     def updater():
         try:
-            dd.update_dedup_index(part_b, idx)
+            dd.save_dedup_index(docs, idx)
         except Exception as e:
             errs.append(e)
 

@@ -123,3 +123,23 @@ def test_quarantine_persistence(spark, bad_csv, tmp_path):
         ("5004", "empty_email"),
         ("5005", "duplicate_key"),
     }
+
+
+def test_quarantine_keeps_exact_in_batch_copy(spark, tmp_path):
+    """An exact second copy of a surviving row is a duplicate_key
+    loser too: the quarantine holds one duplicate_key row per counted
+    duplicate, so no row is in neither the store nor the quarantine."""
+    csv = tmp_path / "dups.csv"
+    csv.write_text(
+        "1,a,b,a@x.com,1\n1,a,b,a@x.com,1\n2,c,d,c@x.com,2\n3,e,f,c@x.com,3\n"
+    )
+    store = CustomerStore(spark, str(tmp_path / "store"))
+    qdir = str(tmp_path / "quarantine")
+    res = ingest_csv(spark, str(csv), store, header=False, quarantine_dir=qdir)
+    assert (res.inserted, res.duplicates) == (2, 2)
+    dups = spark.read.parquet(qdir).filter(F.col("reason") == "duplicate_key")
+    assert sorted((r["id"], r["email"]) for r in dups.collect()) == [
+        ("1", "a@x.com"),
+        ("3", "c@x.com"),
+    ]
+    assert dups.count() == res.duplicates

@@ -2,13 +2,12 @@
 ranks within them, exact cosine decides. Oracle-free (both quantizers
 are learned), so pinned by the same property pattern as the IVF and PQ
 suites — recall floor, full-probe exactness, indexed ≡ inline,
-partition-pruned probes, incremental append ≡ fixed-codec rebuild."""
+partition-pruned probes, atomic rebuild over a live index."""
 
 from __future__ import annotations
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics import ivfpq
@@ -73,68 +72,6 @@ def test_ivfpq_indexed_matches_inline_and_prunes_cells(spark, sf_dir, tmp_path):
     assert len(cells) <= 2, f"probe read {len(cells)} cells, wanted ≤ nprobe=2"
 
 
-def test_ivfpq_incremental_append_equals_rebuild_with_fixed_quantizers(
-    spark, sf_dir, tmp_path
-):
-    """Appending a shard assigns+encodes ONLY the new vectors against
-    the stored quantizers; the loaded index must then answer exactly
-    like an index whose codes were built in one shot from the same
-    quantizers (signatures of both stages are pure per-vector
-    functions). Wrong-width appends fail loudly; empty appends no-op."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    part_a = emb.filter(F.col("vec_id") % 2 == 0)
-    part_b = emb.filter(F.col("vec_id") % 2 == 1)
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    # identical quantizer fits: both indexes sample from the SAME rows
-    # (fit samples are the first N by vec_id, and part_a ∪ part_b = emb,
-    # but fit on part_a alone differs — so fit both from the full corpus
-    # by building `full` first and reusing its sampled quantizers via a
-    # one-shot build, then building `inc` from the same fit inputs).
-    ivfpq.save_ivfpq_index(part_a, inc, n_cells=8, m=8, n_codes=16)
-    ivfpq.update_ivfpq_index(part_b, inc)
-    assert read_manifest(inc)["epoch"] == 1
-
-    # the incremental index answers identically to re-encoding the full
-    # corpus against the SAME stored quantizers
-    man = read_manifest(inc)
-    from csv_crm_upload_spark.analytics import ivf as _ivf
-    from csv_crm_upload_spark.analytics import pq as _pq
-
-    centroids = ivfpq._load_centroids(spark, inc, man["centroid_epoch"])
-    books = _pq._load_codebooks(spark, inc, man["codebook_epoch"])
-    want_codes = {
-        (r["vec_id"], r["cell_id"], tuple(r["codes"]))
-        for r in _ivf.assign_cells(emb, centroids)
-        .join(_pq.pq_encode(emb, books), "vec_id")
-        .collect()
-    }
-    got_codes = {
-        (r["vec_id"], r["cell_id"], tuple(r["codes"]))
-        for r in spark.read.option("basePath", f"{inc}/codes")
-        .parquet(f"{inc}/codes")
-        .select("vec_id", "cell_id", "codes")
-        .collect()
-    }
-    assert got_codes == want_codes
-
-    # append of appended ids is searchable
-    hits = ivfpq.ivfpq_search(spark, inc, emb, k=5, nprobe=8)
-    assert hits.filter(F.col("vec_id") % 2 == 1).count() > 0
-
-    narrow = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.slice("embedding", 1, 32).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="dim"):
-        ivfpq.update_ivfpq_index(narrow, inc)
-    before = read_manifest(inc)["epoch"]
-    ivfpq.update_ivfpq_index(emb.filter("vec_id < 0"), inc)
-    assert read_manifest(inc)["epoch"] == before
-
-
 def test_residual_encoding_reconstructs_better_than_raw(spark, sf_dir):
     """The point of IVFADC residual encoding: quantizing x − mean[cell]
     spends the same (m, k) bit budget on the unexplained part of the
@@ -182,7 +119,7 @@ def test_residual_full_probe_equals_bruteforce_and_indexed_matches_inline(
     """Residual mode keeps both invariants of the raw path: full probe +
     full candidate budget reproduces exact brute force (rerank undoes
     lossiness), and the persisted-index probe equals the self-contained
-    search. The manifest records the mode; appends honor it."""
+    search. The manifest records the mode; the probe honors it."""
     from csv_crm_upload_spark.operators.manifest import read_manifest
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -209,33 +146,6 @@ def test_residual_full_probe_equals_bruteforce_and_indexed_matches_inline(
         tuple(r) for r in ivfpq.ivfpq_search(spark, path, emb, k=5, nprobe=4).collect()
     }
     assert indexed == inline and len(indexed) > 0
-
-    # append in residual mode: codes follow the manifest's encoding
-    part_b = emb.filter(F.col("vec_id") % 2 == 1)
-    path2 = str(tmp_path / "ivfpq_res_inc")
-    ivfpq.save_ivfpq_index(
-        emb.filter(F.col("vec_id") % 2 == 0), path2, n_cells=8, m=8, n_codes=16,
-        residual=True,
-    )
-    ivfpq.update_ivfpq_index(part_b, path2)
-    man = read_manifest(path2)
-    from csv_crm_upload_spark.analytics import pq as _pq
-
-    cents = ivfpq._load_centroids(spark, path2, man["centroid_epoch"])
-    books = _pq._load_codebooks(spark, path2, man["codebook_epoch"])
-    means = ivfpq._load_means(spark, path2, man["centroid_epoch"])
-    want_codes = {
-        (r["vec_id"], r["cell_id"], tuple(r["codes"]))
-        for r in ivfpq._assign_and_encode(emb, cents, books, means=means).collect()
-    }
-    got_codes = {
-        (r["vec_id"], r["cell_id"], tuple(r["codes"]))
-        for r in spark.read.option("basePath", f"{path2}/codes")
-        .parquet(f"{path2}/codes")
-        .select("vec_id", "cell_id", "codes")
-        .collect()
-    }
-    assert got_codes == want_codes
 
 
 def test_ivfpq_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):

@@ -1,15 +1,15 @@
 """Derived-key format stamps (manifest.check_key_format — the substr
 gram_format lesson of r8 advice, generalized in r9): every persisted
 artifact whose stored keys are hashes/strings of DERIVED text (grams,
-tokens, shingles, bigrams) stamps its KEY_FORMAT into the MANIFEST at
-build time, and every probe / append / compact REFUSES a mismatched
-index instead of silently matching nothing or mixing key spaces. A
-MISSING stamp is accepted (and backfilled on the next commit) for the
-four artifacts here, whose derivation never changed — a pre-stamp
-manifest there is a known-compatible v1 vintage (r9 advice). The
-substr index — whose grams DID change in r8 — stays strict on missing;
-covered in test_substr_index.py. This file pins the other four
-text-keyed artifacts under one parametrized contract."""
+tokens, shingles) stamps its KEY_FORMAT into the MANIFEST at build
+time, and every probe and append REFUSES a mismatched index instead of
+silently matching nothing or mixing key spaces. A MISSING stamp is
+accepted for the three artifacts here, whose derivation never changed
+— a pre-stamp manifest there is a known-compatible v1 vintage (r9
+advice) — and backfilled by the next append where one exists
+(winnow). The substr index — whose grams DID change in r8 — stays
+strict on missing; covered in test_substr_index.py. This file pins the
+other three text-keyed artifacts under one parametrized contract."""
 
 from __future__ import annotations
 
@@ -19,7 +19,6 @@ import os
 import pytest
 
 from csv_crm_upload_spark.analytics import dedup as dd
-from csv_crm_upload_spark.analytics import ngramlm as lm
 from csv_crm_upload_spark.analytics import retrieval as rtr
 from csv_crm_upload_spark.analytics import winnow as wn
 from csv_crm_upload_spark.operators.manifest import read_manifest
@@ -45,7 +44,7 @@ def _new_docs(spark):
 
 
 ARTIFACTS = {
-    # name -> (expected format, build, probes, append, compact)
+    # name -> (expected format, build, probes, append or None)
     "winnow": (
         wn.KEY_FORMAT,
         lambda docs, p: wn.save_winnow_index(docs, p),
@@ -54,17 +53,6 @@ ARTIFACTS = {
             lambda spark, docs, p: wn.match_documents(spark, p, docs).collect(),
         ],
         lambda spark, docs, p: wn.update_winnow_index(docs, p),
-        lambda spark, p: wn.compact_winnow_index(spark, p),
-    ),
-    "ngramlm": (
-        lm.KEY_FORMAT,
-        lambda docs, p: lm.save_ngramlm_model(docs, p),
-        [
-            lambda spark, docs, p: lm.load_unigram_counts(spark, p).collect(),
-            lambda spark, docs, p: lm.load_bigram_counts(spark, p).collect(),
-        ],
-        lambda spark, docs, p: lm.update_ngramlm_model(docs, p),
-        lambda spark, p: lm.compact_ngramlm_model(spark, p),
     ),
     "textindex": (
         rtr.KEY_FORMAT,
@@ -75,8 +63,7 @@ ARTIFACTS = {
             ).collect(),
             lambda spark, docs, p: rtr.tfidf_indexed_top_terms(spark, p).collect(),
         ],
-        lambda spark, docs, p: rtr.update_text_index(docs, p),
-        lambda spark, p: rtr.compact_text_index(spark, p),
+        None,
     ),
     "dedup_pairs": (
         dd.DEDUP_KEY_FORMAT,
@@ -84,15 +71,14 @@ ARTIFACTS = {
         [
             lambda spark, docs, p: dd.load_dedup_index(spark, p).collect(),
         ],
-        lambda spark, docs, p: dd.update_dedup_index(docs, p),
-        lambda spark, p: dd.compact_dedup_index(spark, p),
+        None,
     ),
 }
 
 
 @pytest.mark.parametrize("name", sorted(ARTIFACTS))
 def test_key_format_stamped_and_enforced(name, spark, tmp_path):
-    expected, build, probes, append, compact = ARTIFACTS[name]
+    expected, build, probes, append = ARTIFACTS[name]
     path = str(tmp_path / name)
     docs = _docs(spark)
     build(docs, path)
@@ -106,28 +92,28 @@ def test_key_format_stamped_and_enforced(name, spark, tmp_path):
     for probe in probes:
         with pytest.raises(ValueError, match="key_format"):
             probe(spark, docs, path)
-    with pytest.raises(ValueError, match="key_format"):
-        append(spark, _new_docs(spark), path)
-    with pytest.raises(ValueError, match="key_format"):
-        compact(spark, path)
+    if append is not None:
+        with pytest.raises(ValueError, match="key_format"):
+            append(spark, _new_docs(spark), path)
 
     # restore: the artifact is usable again
     with open(os.path.join(path, "MANIFEST"), "w") as f:
         json.dump(m, f)
     for probe in probes:
         probe(spark, docs, path)
-    append(spark, _new_docs(spark), path)
+    if append is not None:
+        append(spark, _new_docs(spark), path)
 
 
 @pytest.mark.parametrize("name", sorted(ARTIFACTS))
 def test_missing_stamp_accepted_and_backfilled(name, spark, tmp_path):
-    """These four artifacts' key derivation has NEVER changed, so a
+    """These three artifacts' key derivation has NEVER changed, so a
     pre-stamp manifest (no key_format field) is a known-compatible v1
     vintage: probes must keep working (r9 advice — the stamp must not
-    brick older-but-identical indexes), and the next manifest commit
-    (an append) must BACKFILL the stamp. Substr — whose derivation DID
-    change in r8 — stays strict; pinned in test_substr_index.py."""
-    expected, build, probes, append, _compact = ARTIFACTS[name]
+    brick older-but-identical indexes), and where an append exists its
+    manifest commit must BACKFILL the stamp. Substr — whose derivation
+    DID change in r8 — stays strict; pinned in test_substr_index.py."""
+    expected, build, probes, append = ARTIFACTS[name]
     path = str(tmp_path / name)
     docs = _docs(spark)
     build(docs, path)
@@ -138,5 +124,6 @@ def test_missing_stamp_accepted_and_backfilled(name, spark, tmp_path):
         json.dump(pre_stamp, f)
     for probe in probes:
         probe(spark, docs, path)  # accepted, no rebuild forced
-    append(spark, _new_docs(spark), path)
-    assert read_manifest(path)["key_format"] == expected  # backfilled
+    if append is not None:
+        append(spark, _new_docs(spark), path)
+        assert read_manifest(path)["key_format"] == expected  # backfilled

@@ -1,5 +1,5 @@
 """Persisted NB model: incremental ≡ rebuild, classify ≡ inline nb1,
-streaming replay guard, probe-side partition pruning."""
+probe-side partition pruning, gc of superseded snapshots."""
 
 from __future__ import annotations
 
@@ -65,19 +65,6 @@ def test_classify_matches_inline_confusion(spark, sf_dir, tmp_path):
     )
 
 
-def test_update_txn_replay_noops(spark, sf_dir, tmp_path):
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "nb")
-    save_nb_model(docs.filter(F.col("doc_id") < 100), path, n_buckets=8)
-    shard = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
-    update_nb_model(shard, path, txn=("svc", 7))
-    e1 = read_manifest(path)["epoch"]
-    update_nb_model(shard, path, txn=("svc", 7))  # replayed batch
-    assert read_manifest(path)["epoch"] == e1, "replay must not double-fold"
-
-
 def test_classify_prunes_count_partitions(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     path = str(tmp_path / "nb")
@@ -90,49 +77,13 @@ def test_classify_prunes_count_partitions(spark, sf_dir, tmp_path):
     assert m, f"no partition filter on tok_bucket:\n{plan[:1500]}"
 
 
-def test_nb_model_folds_on_service_tick(spark, sf_dir, tmp_path):
-    """A dropped doc shard is folded into the persisted NB model on the
-    next CorpusIndexService tick — epoch advances, doc totals grow, and
-    the shard's docs classify against the refreshed model."""
-    import os
-
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
-
-    docs = load_table(spark, sf_dir, "documents")
-    first = docs.filter(F.col("doc_id") < 400)
-    shard = docs.filter(F.col("doc_id") >= 400)
-
-    model = str(tmp_path / "nb_model")
-    save_nb_model(first, model, n_buckets=8)
-    e0 = read_manifest(model)["epoch"]
-
-    drop = str(tmp_path / "docs_drop")
-    os.makedirs(drop)
-    svc = CorpusIndexService(spark, docs_dir=drop, nb_model=model)
-    assert svc.tick() == {"docs": [], "embeddings": [], "events": []}  # quiet tick
-
-    shard.write.parquet(f"{drop}/shard_a")
-    folded = svc.tick()
-    assert folded["docs"], "shard must fold on the tick after landing"
-    assert read_manifest(model)["epoch"] == e0 + 1
-
-    n_docs = spark.read.parquet(
-        f"{model}/model_stats/epoch={e0 + 1}"
-    ).first()["n_docs"]
-    assert n_docs == docs.filter(F.col("text").isNotNull()).filter(
-        F.trim(F.col("text")) != ""
-    ).count()
-    preds = classify_with_nb_model(shard, model).collect()
-    assert len(preds) == shard.filter(F.col("text").isNotNull()).count()
-
-
 def test_vacuum_reclaims_superseded_nb_snapshots(spark, sf_dir, tmp_path):
-    """Every NB epoch is a full snapshot, so after an append the
-    service's vacuum() must reclaim the superseded epoch dirs."""
+    """Every NB epoch is a full snapshot, so after an append
+    gc_stale_epochs must reclaim the superseded epoch dirs."""
     import os
 
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
+    from csv_crm_upload_spark.analytics.nbayes import LAYOUT
+    from csv_crm_upload_spark.operators.manifest import gc_stale_epochs
 
     docs = load_table(spark, sf_dir, "documents")
     model = str(tmp_path / "nb")
@@ -141,10 +92,7 @@ def test_vacuum_reclaims_superseded_nb_snapshots(spark, sf_dir, tmp_path):
     assert os.path.isdir(f"{model}/counts/epoch=0")
     assert os.path.isdir(f"{model}/counts/epoch=1")
 
-    drop = str(tmp_path / "drop")
-    os.makedirs(drop)
-    svc = CorpusIndexService(spark, docs_dir=drop, nb_model=model)
-    removed = svc.vacuum()
+    removed = gc_stale_epochs(model, LAYOUT)
     assert any("epoch=0" in p for p in removed), removed
     assert not os.path.isdir(f"{model}/counts/epoch=0")
     # the live snapshot still classifies

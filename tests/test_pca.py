@@ -9,8 +9,6 @@ import re
 
 import numpy as np
 
-from pyspark.sql import functions as F
-
 from csv_crm_upload_spark.analytics.pca import (
     fit_pca,
     pca1_covariance,
@@ -172,35 +170,6 @@ def _rows(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
-def test_pca_model_incremental_equals_rebuild(spark, sf_dir, tmp_path):
-    """Folding an embedding shard lands the SAME model a rebuild would:
-    the sufficient statistics are exact decimal sums, so the stored
-    tables AND the served loadings are bit-equal."""
-    from csv_crm_upload_spark.analytics.pca import (
-        load_pca_loadings,
-        save_pca_model,
-        update_pca_model,
-    )
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    first = emb.filter(F.col("vec_id") % 2 == 0)
-    second = emb.filter(F.col("vec_id") % 2 == 1)
-
-    inc = str(tmp_path / "pca_inc")
-    full = str(tmp_path / "pca_full")
-    save_pca_model(first, inc, r=8)
-    update_pca_model(second, inc)
-    save_pca_model(emb, full, r=8)
-
-    for sub in ["pairsums", "dimsums"]:
-        ea, eb = read_manifest(inc)["epoch"], read_manifest(full)["epoch"]
-        ta = _rows(spark.read.parquet(f"{inc}/{sub}/epoch={ea}"))
-        tb = _rows(spark.read.parquet(f"{full}/{sub}/epoch={eb}"))
-        assert ta == tb, sub
-    assert load_pca_loadings(spark, inc) == load_pca_loadings(spark, full)
-
-
 def test_pca_model_serves_inline_fit(spark, sf_dir, tmp_path):
     """Loadings served from the persisted sums equal fit_pca over the
     same corpus, and project_with_pca_model equals the inline
@@ -221,73 +190,6 @@ def test_pca_model_serves_inline_fit(spark, sf_dir, tmp_path):
     assert _rows(project_with_pca_model(emb.limit(20), path)) == _rows(
         pca_project(emb.limit(20), inline_loadings)
     )
-
-
-def test_pca_model_txn_replay_and_service_fold(spark, sf_dir, tmp_path):
-    """Streaming replay guard no-ops; a dropped embedding shard folds on
-    the next service tick and the refreshed loadings equal a rebuild
-    over the union; vacuum reclaims the superseded snapshot."""
-    import os
-
-    from csv_crm_upload_spark.analytics.pca import (
-        load_pca_loadings,
-        save_pca_model,
-        update_pca_model,
-    )
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    first = emb.filter(F.col("vec_id") < 300)
-    shard = emb.filter(F.col("vec_id") >= 300)
-
-    model = str(tmp_path / "pca_model")
-    save_pca_model(first, model, r=4)
-    update_pca_model(shard.limit(0), model, txn=("svc", 1))  # empty → no-op
-    e0 = read_manifest(model)["epoch"]
-    update_pca_model(shard, model, txn=("svc", 7))
-    assert read_manifest(model)["epoch"] == e0 + 1
-    update_pca_model(shard, model, txn=("svc", 7))  # replayed batch
-    assert read_manifest(model)["epoch"] == e0 + 1, "replay must not double-fold"
-
-    # service tick over a fresh model + drop dir
-    model2 = str(tmp_path / "pca2_model")
-    save_pca_model(first, model2, r=4)
-    drop = str(tmp_path / "emb_drop")
-    os.makedirs(drop)
-    svc = CorpusIndexService(spark, emb_dir=drop, pca_model=model2)
-    shard.write.parquet(f"{drop}/shard_a")
-    assert svc.tick()["embeddings"], "shard must fold on the tick after landing"
-    full = str(tmp_path / "pca_full")
-    save_pca_model(emb, full, r=4)
-    assert load_pca_loadings(spark, model2) == load_pca_loadings(spark, full)
-
-    removed = svc.vacuum()
-    assert any("epoch=0" in p for p in removed), removed
-    assert load_pca_loadings(spark, model2) == load_pca_loadings(spark, full)
-
-
-def test_pca_model_refuses_wrong_dimension_shard(spark, sf_dir, tmp_path):
-    """Folding a wrong-dimension shard must raise, not silently corrupt
-    the additive sums (the ivf/pq dimension-guard convention); and a
-    sub-2-vector corpus must fail at SAVE time with a clear message."""
-    import pytest as _pytest
-
-    from csv_crm_upload_spark.analytics.pca import save_pca_model, update_pca_model
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "pca")
-    save_pca_model(emb, path, r=4)
-    assert read_manifest(path)["d"] == 64
-
-    wrong = _emb_df(spark, np.ones((5, 8)))
-    with _pytest.raises(ValueError, match="dimension"):
-        update_pca_model(wrong, path)
-    assert read_manifest(path)["epoch"] == 0, "refused fold must not commit"
-
-    with _pytest.raises(ValueError, match="at least 2"):
-        save_pca_model(emb.limit(1), str(tmp_path / "tiny"), r=4)
 
 
 def test_save_pca_model_refuses_mixed_dimension_corpus(spark, tmp_path):
@@ -315,6 +217,10 @@ def test_save_pca_model_refuses_mixed_dimension_corpus(spark, tmp_path):
         save_pca_model(mixed, path, r=2)
     with _pytest.raises(FileNotFoundError):
         read_manifest(path)
+
+    # a sub-2-vector corpus has no covariance: refused with a clear message
+    with _pytest.raises(ValueError, match="at least 2"):
+        save_pca_model(mixed.limit(1), str(tmp_path / "tiny"), r=2)
 
 
 def test_pca_project_skips_corrupt_rows(spark):

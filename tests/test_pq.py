@@ -89,33 +89,6 @@ def test_pq_indexed_search_matches_direct(spark, sf_dir, tmp_path):
     assert indexed == direct and len(indexed) > 0
 
 
-def test_pq_index_incremental_append(spark, sf_dir, tmp_path):
-    """Appending a corpus shard as a new epoch must yield the same codes
-    the stored codebooks would assign directly, with the old epoch's
-    codes untouched; an empty append is a no-op."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import functions as F
-
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    delta = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "pq_idx")
-    books = pq.save_pq_index(base, path, m=8, n_codes=16)
-    pq.update_pq_index(delta, path)
-    assert read_manifest(path)["epoch"] == 1
-
-    _books2, codes = pq.load_pq_index(spark, path)
-    got = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
-    want = {
-        r["vec_id"]: list(r["codes"]) for r in pq.pq_encode(emb, books).collect()
-    }
-    assert got == want
-
-    pq.update_pq_index(delta.limit(0), path)
-    assert read_manifest(path)["epoch"] == 1  # empty append: clean no-op
-
-
 def test_pq_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
     """Rebuilding over a LIVE index (save again at the same path) must be
     one manifest commit: the new codebooks+codes land under the next
@@ -146,24 +119,33 @@ def test_pq_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
     assert got == want  # no epoch-0 rows leak in, every row is 4-wide
 
 
-def test_pq_update_rejects_dim_mismatch(spark, sf_dir, tmp_path):
-    """pq_encode's zip_with would silently null-pad a mismatched array,
-    so update_pq_index must fail loudly on a wrong-width shard instead
-    of committing garbage codes."""
+def test_gc_after_rebuild_keeps_live_and_pinned_epochs(spark, sf_dir, tmp_path):
+    """After a rebuild over a live index, gc_stale_epochs deletes the
+    superseded epoch of the ranged codes AND of the pinned codebooks but
+    keeps the live ones — probe results unchanged, a second gc removes
+    nothing."""
+    import os
+
     from pyspark.sql import functions as F
+
+    from csv_crm_upload_spark.operators.manifest import gc_stale_epochs, read_manifest
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "pq_idx")
-    pq.save_pq_index(emb, path, m=8, n_codes=16)  # codec width 64
-    narrow = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.slice("embedding", 1, 32).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="dim"):
-        pq.update_pq_index(narrow, path)
-    from csv_crm_upload_spark.operators.manifest import read_manifest
+    pq.save_pq_index(emb.filter(F.col("vec_id") % 2 == 0), path, m=8, n_codes=16)
+    pq.save_pq_index(emb, path, m=8, n_codes=16)
+    before = sorted(map(tuple, pq.pq_search_indexed(spark, path, emb).collect()))
 
-    assert read_manifest(path)["epoch"] == 0  # nothing was committed
+    removed = gc_stale_epochs(path, pq.LAYOUT)
+    assert sorted(os.path.relpath(r, path) for r in removed) == [
+        "codebooks/epoch=0",
+        "codes/epoch=0",
+    ]
+    man = read_manifest(path)
+    assert os.path.isdir(f"{path}/codebooks/epoch={man['codebook_epoch']}")
+    assert os.path.isdir(f"{path}/codes/epoch={man['epoch']}")
+    assert sorted(map(tuple, pq.pq_search_indexed(spark, path, emb).collect())) == before
+    assert gc_stale_epochs(path, pq.LAYOUT) == []
 
 
 def test_empty_corpus_build_raises_and_empty_query_set_skips(spark, tmp_path):

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics import retrieval as rtr
-from csv_crm_upload_spark.operators.manifest import read_manifest
 
 
 def _docs(spark, rows):
@@ -65,34 +64,16 @@ def test_query_terms_case_insensitive(spark):
     assert sorted(r.doc_id for r in out) == [0, 1]
 
 
-def test_update_with_empty_append_is_noop(spark, tmp_path):
-    """An append with zero usable rows (no rows at all, or only
-    empty/null text) must leave the index untouched — no new epoch, no
-    TypeError from folding NULL aggregate sums."""
-    docs = _docs(spark, ["spark join", "table scan"])
-    idx = str(tmp_path / "idx")
-    rtr.save_text_index(docs, idx, n_buckets=4)
-    before = sorted(map(tuple, rtr.bm25_search_indexed(spark, idx, {0: ["spark"]}).collect()))
-
-    rtr.update_text_index(_docs(spark, ["x"]).filter("doc_id < 0"), idx)  # 0 rows
-    rtr.update_text_index(_docs(spark, ["", "   "]), idx)  # rows, no text
-
-    after = sorted(map(tuple, rtr.bm25_search_indexed(spark, idx, {0: ["spark"]}).collect()))
-    assert before == after
-    assert read_manifest(idx)["epoch"] == 0, "empty appends must not commit an epoch"
-
-
 def test_probe_during_update_sees_old_or_new_snapshot(spark, sf_dir, tmp_path):
-    """A probe racing a concurrent update_text_index must always see ONE
-    consistent epoch — results equal to the pre-append index or the
-    post-append index, never new postings scored with stale df/N."""
+    """A probe racing a rebuild over the live index must always see ONE
+    consistent epoch — results equal to the old index or the new one,
+    never new postings scored with stale df/N."""
     import threading
 
     from csv_crm_upload_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     part_a = docs.filter(F.col("doc_id") % 2 == 0)
-    part_b = docs.filter(F.col("doc_id") % 2 == 1)
     idx = str(tmp_path / "race_idx")
     rtr.save_text_index(part_a, idx, n_buckets=8)
 
@@ -102,7 +83,7 @@ def test_probe_during_update_sees_old_or_new_snapshot(spark, sf_dir, tmp_path):
 
     def updater():
         try:
-            rtr.update_text_index(part_b, idx)
+            rtr.save_text_index(docs, idx, n_buckets=8)
         except Exception as e:  # surfaced below — a thread must not die silently
             errs.append(e)
 
@@ -114,11 +95,30 @@ def test_probe_during_update_sees_old_or_new_snapshot(spark, sf_dir, tmp_path):
     t.join()
     assert not errs, errs
     new = sorted(map(tuple, rtr.bm25_search_indexed(spark, idx).collect()))
-    assert new != old, "append must change results for this corpus split"
+    assert new != old, "the rebuild must change results for this corpus split"
     bad = [i for i, s in enumerate(seen) if s != old and s != new]
     assert not bad, f"{len(bad)} probes saw a mixed snapshot (of {len(seen)})"
-    # at least one probe ran while the update was in flight
+    # at least one probe ran while the rebuild was in flight
     assert len(seen) >= 1
+
+
+def test_text_index_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
+    """save_text_index over a LIVE index advances epoch + base_epoch in
+    one commit: pre-rebuild postings become invisible and results equal
+    a fresh build."""
+    from csv_crm_upload_spark.operators.manifest import read_manifest
+    from csv_crm_upload_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    idx = str(tmp_path / "text")
+    rtr.save_text_index(docs.filter(F.col("doc_id") % 2 == 0), idx, n_buckets=16)
+    rtr.save_text_index(docs, idx, n_buckets=16)  # rebuild over live
+    m = read_manifest(idx)
+    assert m["epoch"] == 1 and m["base_epoch"] == 1
+    got = sorted(map(tuple, rtr.bm25_search_indexed(spark, idx).collect()))
+    assert got == sorted(map(tuple, rtr.bm25_search(docs).collect()))
+    stats = spark.read.parquet(f"{idx}/stats/epoch=1").first()
+    assert stats["n_docs"] == docs.filter(F.col("text").isNotNull()).count()
 
 
 def test_hybrid_blend_bounded_and_ranked(spark):
@@ -177,42 +177,10 @@ def test_indexed_bm25_matches_inline_and_prunes_partitions(spark, sf_dir, tmp_pa
     assert len(m.group(1).split(",")) < 16, "probe read every bucket — pruning failed"
 
 
-def test_incremental_index_update_equals_rebuild(spark, sf_dir, tmp_path):
-    """Append half the corpus to an index built on the other half: search
-    results must be IDENTICAL to an index built on the full corpus in one
-    shot (integer-exact stats folding, merged dfreq, appended postings)."""
-    from csv_crm_upload_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    part_a = docs.filter(F.col("doc_id") % 2 == 0)
-    part_b = docs.filter(F.col("doc_id") % 2 == 1)
-
-    inc = str(tmp_path / "inc_idx")
-    full = str(tmp_path / "full_idx")
-    rtr.save_text_index(part_a, inc, n_buckets=16)
-    rtr.update_text_index(part_b, inc)
-    rtr.save_text_index(docs, full, n_buckets=16)
-
-    got = sorted(map(tuple, rtr.bm25_search_indexed(spark, inc).collect()))
-    want = sorted(map(tuple, rtr.bm25_search_indexed(spark, full).collect()))
-    assert got == want
-    # and both equal the inline corpus pass
-    inline = sorted(map(tuple, rtr.bm25_search(docs).collect()))
-    assert got == inline
-    # folded stats are integer-exact
-    si = rtr.read_index_stats(spark, inc)
-    sf = rtr.read_index_stats(spark, full)
-    assert (si["n_docs"], si["total_tokens"], si["avgdl"]) == (
-        sf["n_docs"], sf["total_tokens"], sf["avgdl"],
-    )
-
-
-def test_tfidf_indexed_equals_fresh_recomputation_and_append(spark, sf_dir, tmp_path):
+def test_tfidf_indexed_equals_fresh_recomputation(spark, sf_dir, tmp_path):
     """tfidf_indexed_top_terms over a built index must equal recomputing
     tf·round(log2(N/df),9) from the index's own frame builders on the
-    same corpus — and an incremental append must land the SAME readout
-    as a full rebuild over the union (dfreq/stats snapshots + new-epoch
-    postings)."""
+    same corpus."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -247,15 +215,6 @@ def test_tfidf_indexed_equals_fresh_recomputation_and_append(spark, sf_dir, tmp_
     got = sorted(tuple(r) for r in rtr.tfidf_indexed_top_terms(spark, full).collect())
     want = sorted(tuple(r) for r in expected(docs).collect())
     assert got == want
-
-    # incremental: half the corpus indexed, the rest appended
-    part_a = docs.filter(F.col("doc_id") % 2 == 0)
-    part_b = docs.filter(F.col("doc_id") % 2 == 1)
-    inc = str(tmp_path / "tfidf_inc")
-    rtr.save_text_index(part_a, inc, n_buckets=16)
-    rtr.update_text_index(part_b, inc)
-    got_inc = sorted(tuple(r) for r in rtr.tfidf_indexed_top_terms(spark, inc).collect())
-    assert got_inc == want
 
 
 def test_ndcg1_perfect_ranking_scores_one(spark):

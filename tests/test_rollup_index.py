@@ -1,6 +1,5 @@
 """Daily-rollup artifact semantics: build/probe identity with the inline
-operators, append≡rebuild by additivity, exactly-once replay, SUM-merge
-compaction, micro-unit NULL handling, and the key-format stamp."""
+operators, micro-unit NULL handling, and the key-format stamp."""
 
 from __future__ import annotations
 
@@ -30,7 +29,7 @@ def _events(spark, rows):
 
 
 def test_rollup_probe_identity_with_inline_ops(spark, sf_dir, tmp_path):
-    """acf1/dow1/cpd1 served from the artifact are value-identical to
+    """acf1/dow1 served from the artifact are value-identical to
     the inline operators over the raw events — the continuous-aggregate
     contract."""
     from csv_crm_upload_spark.sources.tables import load_table
@@ -41,60 +40,10 @@ def test_rollup_probe_identity_with_inline_ops(spark, sf_dir, tmp_path):
     for inline, indexed in [
         (tpch.acf1_daily_autocorrelation(events), rlp.acf1_indexed(spark, path)),
         (tpch.dow1_weekly_profile(events), rlp.dow1_indexed(spark, path)),
-        (tpch.cpd1_mean_shift(events), rlp.cpd1_indexed(spark, path)),
     ]:
         assert sorted(map(tuple, inline.collect())) == sorted(
             map(tuple, indexed.collect())
         )
-
-
-def test_rollup_append_equals_rebuild_and_replay_noops(spark, tmp_path):
-    """Additivity: save(half1) + update(half2) stores the same merged
-    counts a full rebuild does, a day split across epochs included; a
-    replayed txn folds exactly once; an all-NULL-ts batch is a clean
-    no-op that does not advance the epoch."""
-    rows = [
-        (1, 0, "view", 1.0),
-        (2, 0, "view", 2.0),
-        (3, 1, "buy", None),
-        (4, 2, "view", 4.0),
-    ]
-    full, h1, h2 = (
-        _events(spark, rows),
-        _events(spark, rows[:2]),
-        _events(spark, rows[2:]),
-    )
-    p_ref, p_inc = str(tmp_path / "ref"), str(tmp_path / "inc")
-    rlp.save_daily_rollup(full, p_ref)
-    rlp.save_daily_rollup(h1, p_inc)
-    rlp.update_daily_rollup(h2, p_inc, txn=("t", 1))
-    ref = sorted(map(tuple, rlp.daily_rollup_counts(spark, p_ref).collect()))
-    inc = sorted(map(tuple, rlp.daily_rollup_counts(spark, p_inc).collect()))
-    assert ref == inc
-
-    rlp.update_daily_rollup(h2, p_inc, txn=("t", 1))  # replay
-    assert sorted(map(tuple, rlp.daily_rollup_counts(spark, p_inc).collect())) == ref
-
-    epoch_before = read_manifest(p_inc)["epoch"]
-    rlp.update_daily_rollup(
-        _events(spark, [(9, None, "view", 1.0)]), p_inc, txn=("t", 2)
-    )
-    assert read_manifest(p_inc)["epoch"] == epoch_before
-
-
-def test_rollup_compaction_sum_merges(spark, tmp_path):
-    """Compaction folds the chain to ONE epoch with identical merged
-    counts (a union-only compactor would double-count split days)."""
-    p = str(tmp_path / "roll")
-    rlp.save_daily_rollup(_events(spark, [(1, 0, "view", 1.0)]), p)
-    rlp.update_daily_rollup(_events(spark, [(2, 0, "view", 2.5)]), p, txn=("t", 1))
-    rlp.update_daily_rollup(_events(spark, [(3, 1, "buy", 3.0)]), p, txn=("t", 2))
-    before = sorted(map(tuple, rlp.daily_rollup_counts(spark, p).collect()))
-    assert rlp.compact_daily_rollup(spark, p) is True
-    m = read_manifest(p)
-    assert m["epoch"] == m["base_epoch"]
-    assert sorted(map(tuple, rlp.daily_rollup_counts(spark, p).collect())) == before
-    assert rlp.compact_daily_rollup(spark, p) is False  # already compact
 
 
 def test_rollup_micro_units_and_null_values(spark, tmp_path):

@@ -1,7 +1,6 @@
 """Persisted ExactSubstr gram-count index (analytics/substr.py):
-indexed probe ≡ inline operator, additive incremental ≡ rebuild,
-streaming txn replay no-op, sum-merge compaction identity, service-tick
-fold. The contracts every other artifact pins, applied to the 11th."""
+indexed probe ≡ inline operator, additive incremental ≡ rebuild, the
+strict gram-format stamp and the empty-corpus build."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics.dedup import xsd1_exact_substring_dedup
 from csv_crm_upload_spark.analytics.substr import (
-    compact_substr_index,
     load_substr_counts,
     save_substr_index,
     update_substr_index,
@@ -65,79 +63,6 @@ def test_incremental_append_equals_rebuild(spark, sf_dir, tmp_path):
     )
 
 
-def test_txn_replay_noop_and_empty_delta(spark, sf_dir, tmp_path):
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-    path = str(tmp_path / "substr")
-    save_substr_index(a, path)
-    update_substr_index(b, path, txn=("stream", 7))
-    assert read_manifest(path)["epoch"] == 1
-    before = _counts(spark, path)
-    # replayed batch: same (app, batch) no-ops
-    update_substr_index(b, path, txn=("stream", 7))
-    assert read_manifest(path)["epoch"] == 1
-    assert _counts(spark, path) == before
-    # empty delta: clean no-op before any write
-    update_substr_index(docs.filter(F.lit(False)), path)
-    assert read_manifest(path)["epoch"] == 1
-
-
-def test_compaction_sum_merges_and_preserves_counts(spark, sf_dir, tmp_path):
-    """OPTIMIZE must SUM-merge (a union-only compactor would double-count
-    grams seen in several epochs): post-compact the chain is one epoch,
-    the summed table is unchanged, and the probe still equals inline."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = docs.filter(F.col("doc_id") % 3 == 0)
-    b = docs.filter(F.col("doc_id") % 3 == 1)
-    c = docs.filter(F.col("doc_id") % 3 == 2)
-    path = str(tmp_path / "substr")
-    save_substr_index(a, path)
-    update_substr_index(b, path)
-    update_substr_index(c, path)
-    before = _counts(spark, path)
-
-    assert compact_substr_index(spark, path) is True
-    m = read_manifest(path)
-    assert m["epoch"] == m["base_epoch"] == 3
-    assert _counts(spark, path) == before
-    assert _rows(xsd_indexed_dup_spans(docs, path)) == _rows(
-        xsd1_exact_substring_dedup(docs)
-    )
-    assert compact_substr_index(spark, path) is False  # already compact
-
-
-def test_service_tick_folds_substr_index(spark, sf_dir, tmp_path):
-    """A shard dropped into the watch dir is substr-indexed on the next
-    tick (txn-guarded), after which the probe sees cross-shard repeats
-    exactly like a rebuild."""
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-    path = str(tmp_path / "substr")
-    save_substr_index(a, path)
-
-    drop = str(tmp_path / "drop")
-    os.makedirs(drop)
-    b.write.parquet(f"{drop}/shard_b")
-    svc = CorpusIndexService(spark, docs_dir=drop, substr_index=path)
-    assert svc.tick()["docs"] == [f"{drop}/shard_b"]
-    assert read_manifest(path)["last_txn"]["tick-docs"] == 1
-    assert _rows(xsd_indexed_dup_spans(docs, path)) == _rows(
-        xsd1_exact_substring_dedup(docs)
-    )
-    # quiet tick: no re-fold
-    assert svc.tick() == {"docs": [], "embeddings": [], "events": []}
-    assert read_manifest(path)["epoch"] == 1
-
-
 def test_empty_corpus_build_yields_readable_empty_index(spark, tmp_path):
     """A corpus where NO document reaches min_len writes a data-file-less
     partitioned dir; the explicit read schema must make that a readable
@@ -165,10 +90,10 @@ def test_empty_corpus_build_yields_readable_empty_index(spark, tmp_path):
 
 def test_gram_format_mismatch_fails_loudly(spark, tmp_path):
     """The r8 separator change (\\x01 -> ' ') changed every stored gram
-    hash; the MANIFEST now carries gram_format and every probe / append /
-    compact must REFUSE a mismatched (or missing — pre-stamp vintage)
-    format instead of silently matching zero grams or mixing hash spaces
-    (r8 advice)."""
+    hash; the MANIFEST now carries gram_format and every probe and append
+    must REFUSE a mismatched (or missing — pre-stamp vintage) format
+    instead of silently matching zero grams or mixing hash spaces (r8
+    advice)."""
     import json
 
     import pytest
@@ -202,8 +127,6 @@ def test_gram_format_mismatch_fails_loudly(spark, tmp_path):
             xsd_indexed_dup_spans(docs, path)
         with pytest.raises(ValueError, match="gram_format"):
             update_substr_index(docs, path)
-        with pytest.raises(ValueError, match="gram_format"):
-            compact_substr_index(spark, path)
 
     # restore the true manifest: the index is usable again
     with open(os.path.join(path, "MANIFEST"), "w") as f:

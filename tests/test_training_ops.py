@@ -198,24 +198,6 @@ def test_ivf_full_probe_equals_bruteforce(spark, sf_dir):
     assert full == exact
 
 
-def test_ivf_persisted_index_matches_inline_fit(spark, sf_dir, tmp_path):
-    """Build-once/query-many: a persisted index must give the same
-    results as the inline fit (same seed → same centroids), and the
-    saved cell layout must be partitioned by cell_id."""
-    import os
-
-    from csv_crm_upload_spark.analytics.ivf import knn_ivf, save_index
-    from csv_crm_upload_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    save_index(emb, idx, n_cells=8)
-    inline = {(r["query_id"], r["vec_id"]) for r in knn_ivf(emb, k=5, n_cells=8, nprobe=8).collect()}
-    saved = {(r["query_id"], r["vec_id"]) for r in knn_ivf(emb, k=5, nprobe=8, index_path=idx).collect()}
-    assert saved == inline
-    assert any(n.startswith("cell_id=") for n in os.listdir(f"{idx}/cells/epoch=0"))
-
-
 def test_ivf_partial_probe_recall(spark, sf_dir):
     from csv_crm_upload_spark.analytics.ivf import knn_ivf
     from csv_crm_upload_spark.sources.tables import load_table
@@ -406,95 +388,6 @@ def test_hll_sketch_estimates_within_error(spark, sf_dir):
         if day == "all_days":
             continue
         assert abs(e - exact_day[day]) <= max(2, 0.05 * exact_day[day])
-
-
-def test_ivf_incremental_append_equals_fixed_centroid_assignment(spark, sf_dir, tmp_path):
-    """Appending a corpus shard assigns ONLY the new vectors to the
-    stored centroids; the loaded cell set must equal a one-shot
-    assignment of the whole corpus against those same centroids, and a
-    FULL-probe search over the incrementally built index must equal
-    exact brute force (all cells probed → every vector a candidate)."""
-    from pyspark.sql import functions as F
-
-    from csv_crm_upload_spark.analytics.ivf import (
-        assign_cells,
-        knn_ivf,
-        load_index,
-        save_index,
-        update_index,
-    )
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    part_a = emb.filter(F.col("vec_id") % 2 == 0)
-    part_b = emb.filter(F.col("vec_id") % 2 == 1)
-    idx = str(tmp_path / "ivf_inc")
-    save_index(part_a, idx, n_cells=8)
-    update_index(part_b, idx)
-
-    cents, cells = load_index(spark, idx)
-    got = {(r["vec_id"], r["cell_id"]) for r in cells.collect()}
-    want = {(r["vec_id"], r["cell_id"]) for r in assign_cells(emb, cents).collect()}
-    assert got == want
-
-    full_probe = {
-        (r["query_id"], r["vec_id"])
-        for r in knn_ivf(emb, k=5, nprobe=8, index_path=idx).collect()
-    }
-    exact = {
-        (r["query_id"], r["vec_id"]) for r in sim.knn_bruteforce(emb, k=5).collect()
-    }
-    assert full_probe == exact
-
-    # empty append: no epoch committed
-    before = read_manifest(idx)["epoch"]
-    update_index(emb.filter("vec_id < 0"), idx)
-    assert read_manifest(idx)["epoch"] == before
-
-
-def test_ivf_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
-    """Rebuilding over a LIVE IVF index must be one manifest commit:
-    new centroids+cells under the next epoch, base_epoch/centroid_epoch
-    advancing together — a racing probe never pairs new centroids with
-    old cells. Pre-rebuild epochs become invisible; a wrong-width append
-    against the stored centroids fails loudly."""
-    from pyspark.sql import functions as F
-
-    from csv_crm_upload_spark.analytics.ivf import (
-        assign_cells,
-        load_index,
-        save_index,
-        update_index,
-    )
-    from csv_crm_upload_spark.operators.manifest import read_manifest
-    from csv_crm_upload_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    idx = str(tmp_path / "ivf_rebuild")
-    save_index(base, idx, n_cells=8)
-    cents2 = save_index(emb, idx, n_cells=4)  # rebuild over the live index
-    man = read_manifest(idx)
-    assert man["epoch"] == 1
-    assert man["base_epoch"] == 1 and man["centroid_epoch"] == 1
-    assert man["n_cells"] == 4
-
-    loaded_cents, cells = load_index(spark, idx)
-    assert loaded_cents.shape == cents2.shape
-    got = {(r["vec_id"], r["cell_id"]) for r in cells.collect()}
-    want = {(r["vec_id"], r["cell_id"]) for r in assign_cells(emb, cents2).collect()}
-    assert got == want  # no epoch-0 assignments leak in
-
-    narrow = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.slice("embedding", 1, 32).alias("embedding"),
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="dim"):
-        update_index(narrow, idx)
-    assert read_manifest(idx)["epoch"] == 1  # nothing was committed
 
 
 def test_containment_catches_subdocument_duplication(spark):

@@ -1,18 +1,16 @@
 """Persisted winnowing fingerprint index: indexed ≡ inline, incremental
-append ≡ rebuild (fingerprints are pure per-doc functions), compaction
-identity, bucket-pruned probes, txn replay no-op, service-tick fold."""
+append ≡ rebuild (fingerprints are pure per-doc functions),
+bucket-pruned probes, a probe racing an append."""
 
 from __future__ import annotations
 
-import io
-import os
 import contextlib
+import io
 
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics import winnow as wn
 from csv_crm_upload_spark.analytics.textstats import wfp2_shared_fingerprint_pairs
-from csv_crm_upload_spark.operators.manifest import read_manifest
 from csv_crm_upload_spark.sources.tables import load_table
 
 
@@ -48,32 +46,6 @@ def test_incremental_append_equals_rebuild(spark, sf_dir, tmp_path):
     )
 
 
-def test_txn_replay_noops(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    idx = str(tmp_path / "wn")
-    wn.save_winnow_index(docs.filter(F.col("doc_id") % 2 == 0), idx)
-    shard = docs.filter(F.col("doc_id") % 2 == 1)
-    wn.update_winnow_index(shard, idx, txn=("app", 7))
-    e1 = read_manifest(idx)["epoch"]
-    wn.update_winnow_index(shard, idx, txn=("app", 7))  # replay
-    assert read_manifest(idx)["epoch"] == e1
-
-
-def test_compaction_identity_and_single_epoch(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    idx = str(tmp_path / "wn")
-    thirds = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    wn.save_winnow_index(thirds[0], idx)
-    wn.update_winnow_index(thirds[1], idx)
-    wn.update_winnow_index(thirds[2], idx)
-    before = _rows(wn.wfp2_indexed_pairs(spark, idx))
-    assert wn.compact_winnow_index(spark, idx) is True
-    m = read_manifest(idx)
-    assert m["base_epoch"] == m["epoch"]
-    assert _rows(wn.wfp2_indexed_pairs(spark, idx)) == before
-    assert wn.compact_winnow_index(spark, idx) is False  # already compact
-
-
 def test_probe_matches_and_prunes_buckets(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     idx = str(tmp_path / "wn")
@@ -95,26 +67,6 @@ def test_probe_matches_and_prunes_buckets(spark, sf_dir, tmp_path):
         plan_df.explain("formatted")
     assert "PartitionFilters: [" in buf.getvalue()
     assert "bucket" in buf.getvalue().split("PartitionFilters:")[1][:400]
-
-
-def test_service_tick_folds_winnow_index(spark, sf_dir, tmp_path):
-    from csv_crm_upload_spark.streaming.index_service import CorpusIndexService
-
-    docs = load_table(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    idx = str(tmp_path / "wn")
-    wn.save_winnow_index(old, idx)
-    drop = str(tmp_path / "drop")
-    os.makedirs(drop)
-    svc = CorpusIndexService(spark, docs_dir=drop, winnow_index=idx)
-    new.write.parquet(f"{drop}/shard_1")
-    folded = svc.tick()
-    assert folded["docs"]
-    assert read_manifest(idx)["epoch"] == 1
-    assert _rows(wn.wfp2_indexed_pairs(spark, idx)) == _rows(
-        wfp2_shared_fingerprint_pairs(docs)
-    )
 
 
 def test_probe_during_winnow_update_sees_old_or_new(spark, sf_dir, tmp_path):
