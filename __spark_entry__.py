@@ -16,8 +16,12 @@ docstrings in csv_crm_upload_spark.analytics):
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -86,6 +90,23 @@ def _t(name):
         return load_table(spark, sf_dir, name)
 
     return get
+
+
+@functools.cache
+def _scratch_root(pid: int) -> str:
+    # keyed by pid: a forked child gets its own root and its own exit hook
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{pid}")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch(name: str) -> str:
+    """`<tempdir>/spark_graft_<pid>/<name>`: where a query that writes an
+    artifact and reads it back keeps it, and where its oracle reads it.
+    One root per process, so concurrent processes never share a file;
+    the root is removed at interpreter exit. Nothing is created here —
+    the query's own write makes the directory."""
+    return os.path.join(_scratch_root(os.getpid()), name)
 
 
 def q_s1_scan_customer(spark, sf):
@@ -706,14 +727,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-10 second batch: the persisted daily-rollup artifact's
         # build→probe chain, audited against the inline operators' own
         # oracles (a hash match proves store→sum-merge→probe preserves
-        # the semantics). Path baked at BUILD time (pcarec1 discipline)
-        # so concurrent harnesses roll up into separate artifacts.
-        "roll1_indexed_acf": (
-            lambda p: lambda s, sf: rlp.roll1_indexed_acf(s, _t("events")(s, sf), p)
-        )(rlp.rollup_query_path()),
-        "roll2_indexed_dow": (
-            lambda p: lambda s, sf: rlp.roll2_indexed_dow(s, _t("events")(s, sf), p)
-        )(rlp.rollup_query_path()),
+        # the semantics). The artifact lives under _scratch.
+        "roll1_indexed_acf": lambda s, sf: rlp.roll1_indexed_acf(
+            s, _t("events")(s, sf), _scratch("rollup")
+        ),
+        "roll2_indexed_dow": lambda s, sf: rlp.roll2_indexed_dow(
+            s, _t("events")(s, sf), _scratch("rollup")
+        ),
         "ben1_benford_audit": lambda s, sf: tpch.ben1_benford_audit(
             _t("orders")(s, sf)
         ),
@@ -1004,38 +1024,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-10: the eigen-projection's driver-visible quality floor —
         # the audit (top-k overlap of PCA-space vs exact kNN) is ORACLE-
         # PAIRED via one self-consistent Spark-written snapshot both
-        # engines read (see pca.pcarec1_recall_audit's oracle mechanics)
-        # NOTE: the snapshot path is baked at queries()-BUILD time (not
-        # call time), exactly as oracle_sql() bakes it into its SQL
-        # literal — a queries()/oracle_sql() pair built together is
-        # always self-consistent, however the env changes afterwards.
-        "pcarec1_pca_recall_audit": (
-            lambda p: lambda s, sf: pca.pcarec1_recall_audit(
-                _t("embeddings")(s, sf), p
-            )
-        )(pca.pcarec1_snapshot_path()),
+        # engines read (see pca.pcarec1_recall_audit's oracle mechanics);
+        # the query and its oracle both name the _scratch path
+        "pcarec1_pca_recall_audit": lambda s, sf: pca.pcarec1_recall_audit(
+            _t("embeddings")(s, sf), _scratch("pcarec1.parquet")
+        ),
         # round-11: the sketch family's driver-visible error audits
         # (r10 verdict ask #1) — the pcarec1 snapshot pattern applied to
         # approx_count_distinct / percentile_approx / hll_sketch_agg:
         # Spark persists the estimates once, then BOTH engines join them
         # against exact ground truth from raw events and hash-compare
-        # the error readout (see analytics/sketch_audit.py). Paths baked
-        # at queries()-BUILD time, the pcarec1 discipline.
-        "adrec1_distinct_error_audit": (
-            lambda p: lambda s, sf: ska.adrec1_distinct_error_audit(
-                _t("events")(s, sf), p
-            )
-        )(ska.adrec1_snapshot_path()),
-        "pxrec1_percentile_rank_audit": (
-            lambda p: lambda s, sf: ska.pxrec1_percentile_rank_audit(
-                _t("events")(s, sf), p
-            )
-        )(ska.pxrec1_snapshot_path()),
-        "hllrec1_merge_error_audit": (
-            lambda p: lambda s, sf: ska.hllrec1_merge_error_audit(
-                _t("events")(s, sf), p
-            )
-        )(ska.hllrec1_snapshot_path()),
+        # the error readout (see analytics/sketch_audit.py).
+        "adrec1_distinct_error_audit": lambda s, sf: ska.adrec1_distinct_error_audit(
+            _t("events")(s, sf), _scratch("adrec1.parquet")
+        ),
+        "pxrec1_percentile_rank_audit": lambda s, sf: ska.pxrec1_percentile_rank_audit(
+            _t("events")(s, sf), _scratch("pxrec1.parquet")
+        ),
+        "hllrec1_merge_error_audit": lambda s, sf: ska.hllrec1_merge_error_audit(
+            _t("events")(s, sf), _scratch("hllrec1.parquet")
+        ),
         # round-11 operator batch: basket affinity, traffic burstiness,
         # seasonal anomaly days, intrinsic dimension, and the MG
         # heavy-hitter audit (the fourth snapshot-audited sketch)
@@ -1051,11 +1059,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "id1_intrinsic_dimension": lambda s, sf: sim.id1_intrinsic_dimension(
             _t("embeddings")(s, sf)
         ),
-        "mgrec1_heavy_hitter_audit": (
-            lambda p: lambda s, sf: ska.mgrec1_heavy_hitter_audit(
-                _t("documents")(s, sf), p
-            )
-        )(ska.mgrec1_snapshot_path()),
+        "mgrec1_heavy_hitter_audit": lambda s, sf: ska.mgrec1_heavy_hitter_audit(
+            _t("documents")(s, sf), _scratch("mgrec1.parquet")
+        ),
         # round-11 second batch: Kaplan-Meier conversion survival and
         # the kmeans external-quality (purity) audit
         "surv1_conversion_survival": lambda s, sf: tpch.surv1_conversion_survival(
@@ -1073,9 +1079,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # round-11 fourth batch: sketch-ALGEBRA audit (inclusion-
         # exclusion overlap) and the forward-retention curve
-        "hll2_overlap_audit": (
-            lambda p: lambda s, sf: ska.hll2_overlap_audit(_t("events")(s, sf), p)
-        )(ska.hll2_snapshot_path()),
+        "hll2_overlap_audit": lambda s, sf: ska.hll2_overlap_audit(
+            _t("events")(s, sf), _scratch("hll2.parquet")
+        ),
         "ret1_rolling_retention": lambda s, sf: tpch.ret1_rolling_retention(
             _t("events")(s, sf)
         ),
@@ -1085,20 +1091,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # epoch-manifested audit log; the probe unions the stored rows
         # and the oracle recomputes every derived column from raw
         # events against the SAME stored estimates
-        "audlog1_batch_audit_log": (
-            lambda p: lambda s, sf: alog.audlog1_batch_audit_log(
-                _t("events")(s, sf), p
-            )
-        )(alog.auditlog_query_path()),
+        "audlog1_batch_audit_log": lambda s, sf: alog.audlog1_batch_audit_log(
+            _t("events")(s, sf), _scratch("auditlog")
+        ),
         # round-12 operator batch
         # cms1: the Count-Min OVERCOUNT audit — the complement of
         # mgrec1's Misra-Gries undercount (the monitoring stack wants
         # upper and lower bounds); the ≤1024-cell groupBy IS the sketch
-        "cms1_countmin_audit": (
-            lambda p: lambda s, sf: ska.cms1_countmin_audit(
-                _t("documents")(s, sf), p
-            )
-        )(ska.cms1_snapshot_path()),
+        "cms1_countmin_audit": lambda s, sf: ska.cms1_countmin_audit(
+            _t("documents")(s, sf), _scratch("cms1.parquet")
+        ),
         # fun1: ordered min-time-cascade conversion funnel
         "fun1_ordered_funnel": lambda s, sf: tpch.fun1_ordered_funnel(
             _t("events")(s, sf)
@@ -2166,7 +2168,7 @@ def oracle_sql() -> dict[str, str]:
     q["pcarec1_pca_recall_audit"] = f"""
         WITH snap AS (
           SELECT vec_id, embedding, proj
-          FROM read_parquet('{pca.pcarec1_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("pcarec1.parquet")}/*.parquet')
         ),
         exact AS ({_snap_knn("embedding")}),
         prj AS ({_snap_knn("proj")})
@@ -2181,7 +2183,7 @@ def oracle_sql() -> dict[str, str]:
 
     # --- round-11 sketch-error audits (r10 verdict ask #1): every
     # estimate below comes from the Spark-written snapshot parquet
-    # (paths baked at build time, the pcarec1 discipline); exact ground
+    # (under _scratch, the path the paired query writes); exact ground
     # truth is recomputed from raw events in BOTH engines, so the whole
     # error readout — abs/rel error, rank distance, the within-bound
     # verdict — is hash-comparable. Bounds are the module constants
@@ -2189,7 +2191,7 @@ def oracle_sql() -> dict[str, str]:
     q["adrec1_distinct_error_audit"] = f"""
         WITH snap AS (
           SELECT event_type, approx_users
-          FROM read_parquet('{ska.adrec1_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("adrec1.parquet")}/*.parquet')
         ),
         exact AS (
           SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users
@@ -2209,7 +2211,7 @@ def oracle_sql() -> dict[str, str]:
     q["pxrec1_percentile_rank_audit"] = f"""
         WITH snap AS (
           SELECT event_type, p50, p95, p99
-          FROM read_parquet('{ska.pxrec1_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("pxrec1.parquet")}/*.parquet')
         ),
         vals AS (
           SELECT e.event_type, e.value, s.p50, s.p95, s.p99
@@ -2250,7 +2252,7 @@ def oracle_sql() -> dict[str, str]:
     q["hllrec1_merge_error_audit"] = f"""
         WITH snap AS (
           SELECT day, est_unique_users
-          FROM read_parquet('{ska.hllrec1_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("hllrec1.parquet")}/*.parquet')
           WHERE est_unique_users IS NOT NULL
         ),
         per_day AS (
@@ -6903,7 +6905,7 @@ def oracle_sql() -> dict[str, str]:
     q["hll2_overlap_audit"] = f"""
         WITH snap AS (
           SELECT type_a, type_b, est_a, est_b, est_union
-          FROM read_parquet('{ska.hll2_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("hll2.parquet")}/*.parquet')
         ),
         tu AS (
           SELECT DISTINCT event_type, user_id FROM events
@@ -6965,7 +6967,7 @@ def oracle_sql() -> dict[str, str]:
     q["mgrec1_heavy_hitter_audit"] = f"""
         WITH snap AS (
           SELECT tok, est_count, n_total
-          FROM read_parquet('{ska.mgrec1_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("mgrec1.parquet")}/*.parquet')
         ),
         toks AS (
           -- no trim: split unstripped lowered text on the EXPLICIT
@@ -7004,7 +7006,7 @@ def oracle_sql() -> dict[str, str]:
     q["audlog1_batch_audit_log"] = f"""
         WITH snap AS (
           SELECT batch_key, event_type, approx_users
-          FROM read_parquet('{alog.auditlog_query_path()}/rows/*/*.parquet')
+          FROM read_parquet('{_scratch("auditlog")}/rows/*/*.parquet')
         ),
         ev AS (
           SELECT 'b' || CAST(coalesce(((event_id % {alog.AUDLOG1_N_BATCHES})
@@ -7038,7 +7040,7 @@ def oracle_sql() -> dict[str, str]:
     q["cms1_countmin_audit"] = f"""
         WITH snap AS (
           SELECT tok, est_count, n_total
-          FROM read_parquet('{ska.cms1_snapshot_path()}/*.parquet')
+          FROM read_parquet('{_scratch("cms1.parquet")}/*.parquet')
         ),
         toks AS (
           SELECT tok FROM (

@@ -293,15 +293,6 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # bench-scoped pcarec1 snapshot: the default path is the driver's
-    # correctness surface — a bench run at sf0.1 must not leave stale
-    # sf0.1 content there (queries()/oracle_sql() bake the path at
-    # build time, so setting it before the build scopes it fully)
-    os.environ.setdefault(
-        "SPARK_GRAFT_PCAREC1_SNAPSHOT", "/tmp/spark_graft_pcarec1_snapshot_bench.parquet"
-    )
-    # same scoping for the daily-rollup artifact roll1/roll2 build
-    os.environ.setdefault("SPARK_GRAFT_ROLLUP_DIR", "/tmp/spark_graft_rollup_bench")
     queries = entrymod.queries()
 
     # warm-up (not counted): the scan-count primes the JVM and parquet

@@ -16,7 +16,7 @@ Layout:
                mutation/defaults (U1-U3), store append + pending scan (S4-S5)
   sinks/     — HTTP REST sink with fibonacci backoff (S6, T4, T5)
   streaming/ — Structured Streaming pipeline (T1-T3, T6)
-  functions/ — JSON codec (X2-X3), text + vector column functions
+  functions/ — the canonical 60-bit md5 hash every oracle shares
   analytics/ — widened surface: TPC-H-style queries, dedup family,
                similarity search, text stats, multimodal plumbing
 """

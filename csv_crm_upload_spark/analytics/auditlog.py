@@ -154,28 +154,10 @@ def read_audit_rows(spark, path: str) -> DataFrame:
 # append→store→union-probe chain preserves the adrec1 semantics.
 # ---------------------------------------------------------------------------
 
-AUDITLOG_QUERY_PATH = "/tmp/spark_graft_auditlog_q"
-
 #: deterministic batch count for the audlog1 simulation — batch i holds
 #: the events with pmod(event_id, 3) == i (NULL event_id → batch 0),
 #: a rule both engines state identically
 AUDLOG1_N_BATCHES = 3
-
-
-def auditlog_query_path() -> str:
-    """Artifact path for the audlog1 oracle entry — PID-scoped default
-    with the atexit reap, env-overridable (SPARK_GRAFT_AUDITLOG_DIR);
-    read at call time so one process's override stays self-consistent."""
-    import os
-
-    override = os.environ.get("SPARK_GRAFT_AUDITLOG_DIR")
-    if override is not None:
-        return override
-    from csv_crm_upload_spark.analytics.sketch_audit import _reap_at_exit
-
-    path = f"{AUDITLOG_QUERY_PATH}_{os.getpid()}"
-    _reap_at_exit(path)
-    return path
 
 
 def _batch_of(events: DataFrame, i: int) -> DataFrame:
@@ -191,8 +173,9 @@ def _ensure_query_auditlog(events: DataFrame, p: str) -> None:
     corpus alternation at one path must miss and rebuild, never serve
     B's log to A's probe). After the build, stale pre-rebuild epochs
     are GC'd so the oracle's file glob reads exactly the live range —
-    safe here because the path is process-scoped by construction (no
-    concurrent probe can hold an older manifest)."""
+    safe because the caller owns `p` (the query entry passes a path
+    under its own process's scratch root, so no concurrent probe can
+    hold an older manifest)."""
     from csv_crm_upload_spark.analytics.fitmemo import memo_fit
 
     spark = events.sparkSession
@@ -232,12 +215,11 @@ def _ensure_query_auditlog(events: DataFrame, p: str) -> None:
     memo_fit("auditlog_build", events, (p,), _build, validate=manifest.still_committed)
 
 
-def audlog1_batch_audit_log(events: DataFrame, path: str | None = None) -> DataFrame:
+def audlog1_batch_audit_log(events: DataFrame, path: str) -> DataFrame:
     """The streaming audit cadence as an oracle-paired batch query:
     build the per-batch audit log over the three-way event_id split,
     then return every stored row. NULL event_type groups are kept (the
     oracle joins NULL-safely), so the readout covers exactly the groups
     the batches audited."""
-    p = path or auditlog_query_path()
-    _ensure_query_auditlog(events, p)
-    return read_audit_rows(events.sparkSession, p).orderBy("batch_key", "event_type")
+    _ensure_query_auditlog(events, path)
+    return read_audit_rows(events.sparkSession, path).orderBy("batch_key", "event_type")

@@ -542,21 +542,16 @@ def d_simhash(documents: DataFrame) -> DataFrame:
 
 
 #: derived-key format stamp for the persisted pair index
-#: (manifest.check_key_format): signatures/bands derive from md5-60
-#: minhash over ' '-joined word 3-shingles of _norm_text. A
-#: tokenization/shingle/hash change makes stored signatures and band
-#: buckets incompatible with freshly derived ones — bump this so the
-#: mismatch fails loudly instead of silently pairing nothing.
+#: (manifest.check_key_format): the pairs derive from md5-60 minhash
+#: signatures over ' '-joined word 3-shingles of _norm_text. A
+#: tokenization/shingle/hash change makes stored pairs incompatible
+#: with freshly derived signatures — bump this so the mismatch fails
+#: loudly instead of silently pairing nothing.
 DEDUP_KEY_FORMAT = "normtext-spaceshingle-md560-minhash-v1"
 
-#: pairs / signatures / bands: epoch-RANGED per-document facts; bands
-#: are partitioned BY band
+#: pairs: epoch-RANGED (doc_a, doc_b, est_jaccard) rows
 DEDUP_LAYOUT = Layout(
-    ranged={
-        "pairs": Ranged(),
-        "signatures": Ranged(),
-        "bands": Ranged(partition=("band",)),
-    },
+    ranged={"pairs": Ranged()},
     key_format=DEDUP_KEY_FORMAT,
     missing_ok=True,
 )
@@ -581,9 +576,8 @@ def save_dedup_index(
     and four.
 
     Layout is EPOCH-VERSIONED (DEDUP_LAYOUT, atomic rebuild over a live
-    index via manifest.rebuild): per-epoch `pairs`, plus the SIGNATURES
-    and BAND BUCKETS they were derived from. The manifest records the
-    build parameters so a consumer can detect a mismatched probe.
+    index via manifest.rebuild): per-epoch `pairs`. The manifest records
+    the build parameters so a consumer can detect a mismatched probe.
 
     Unlike the inline oracle query, the PRODUCTION build caps hot
     buckets by default (`max_bucket=INDEX_MAX_BUCKET`): a (band, bucket)
@@ -610,10 +604,6 @@ def save_dedup_index(
             )
             pairs = _verify_pairs(cand, sig, threshold)
             manifest.write_epoch(pairs, path, DEDUP_LAYOUT, "pairs", e)
-            manifest.write_epoch(sig, path, DEDUP_LAYOUT, "signatures", e)
-            # UNCAPPED: the stored band table is the full truth; the cap
-            # is a candidate-time filter
-            manifest.write_epoch(bands, path, DEDUP_LAYOUT, "bands", e)
         finally:
             sig.unpersist()
 

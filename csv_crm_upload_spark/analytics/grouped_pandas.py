@@ -1,7 +1,6 @@
-"""Grouped-map Pandas operator (applyInPandas) — the third Arrow surface
-after mapInPandas (multimodal) and applyInPandasWithState (streaming
-stateful): whole-group computations that genuinely need a dataframe in
-hand (quantile fits, per-group models).
+"""Grouped-map Pandas operator (applyInPandas) — the Arrow surface next
+to mapInPandas (multimodal): whole-group computations that genuinely
+need a dataframe in hand (quantile fits, per-group models).
 
 Kept OUT of hot relational paths on purpose (UDFs are the slow path);
 this demonstrates the correct shape: one shuffle on the group key, Arrow

@@ -44,8 +44,8 @@ Index layout (`{path}/`):
                       probe's scan is partition-pruned to its cells
   MANIFEST            single-file atomic commit (operators/manifest.py)
 
-All three artifact families are epoch-versioned under ONE manifest with
-`base_epoch`/`centroid_epoch`/`codebook_epoch`, so rebuilds are atomic:
+All three artifact families are epoch-versioned under ONE manifest
+(`epoch`/`base_epoch`), so rebuilds are atomic:
 a racing reader pairs old quantizers with old codes or new with new,
 never a mix (same protocol as save_pq_index).
 
@@ -78,10 +78,10 @@ from csv_crm_upload_spark.operators import manifest
 from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
 #: the index layout of the module docstring: ranged cell-partitioned
-#: codes, two quantizers pinned by their manifest keys
+#: codes, the two quantizers one snapshot per epoch
 LAYOUT = Layout(
     ranged={"codes": Ranged(partition=("cell_id",))},
-    pinned={"centroids": "centroid_epoch", "codebooks": "codebook_epoch"},
+    snapshots={"centroids": (), "codebooks": ()},
 )
 
 
@@ -448,7 +448,7 @@ def _load_quantizer(spark, path: str, man: dict) -> tuple[np.ndarray, np.ndarray
     in _assign_and_encode/_probe_plan). Falls back to the centroid
     column for pre-mean_vec layouts."""
     rows = sorted(
-        spark.read.parquet(f"{path}/centroids/epoch={man['centroid_epoch']}").collect(),
+        spark.read.parquet(f"{path}/centroids/epoch={man['epoch']}").collect(),
         key=lambda r: r["cell_id"],
     )  # bounded: n_cells rows
     centroids = np.array([r["centroid"] for r in rows], dtype=np.float64)
@@ -477,7 +477,7 @@ def ivfpq_search(
         query_ids = list(range(10))
     man = manifest.read_manifest(path)
     centroids, means = _load_quantizer(spark, path, man)  # one read, both halves
-    books = _pq._load_codebooks(spark, path, man["codebook_epoch"])
+    books = _pq._load_codebooks(spark, path, man["epoch"])
     qvecs, probe_df = _probe_plan(embeddings, centroids, query_ids, nprobe, means=means)
     probed_cells = sorted({r["cell_id"] for r in probe_df.collect()})  # ≤ q·nprobe
     cell_codes = (

@@ -39,16 +39,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("features", ArrayType(DoubleType()), True),
-    ]
-)
-
-
 def media_table(documents: DataFrame) -> DataFrame:
     """Synthesize a media table from documents: payload = utf-8 bytes of
     text (a deterministic opaque blob), kind cycles image/audio/video,
@@ -166,39 +156,6 @@ def decode_media(payload: bytes, kind: str) -> list[float]:
     )
 
 
-def _fake_features(payload: bytes, k: int = 4) -> list[float]:
-    """Deterministic stand-in features so the distributed path is testable:
-    simple byte statistics (NOT a real embedding — see decode_media)."""
-    if payload is None or len(payload) == 0:
-        return [0.0] * k
-    n = len(payload)
-    return [
-        float(n),
-        float(sum(payload[:256]) % 997),
-        float(payload[0]),
-        float(payload[-1]),
-    ]
-
-
-def extract_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads — the real
-    distributed shape of a decode stage: Arrow batches in, Arrow batches
-    out, payload column dropped on output so only small features shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(lambda b: 0 if b is None else len(b)),
-                    "features": pdf["payload"].map(_fake_features),
-                }
-            )
-
-    return media.mapInPandas(run, MEDIA_FEATURE_SCHEMA)
-
-
 REAL_MEDIA_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -248,8 +205,8 @@ def extract_real_features(media: DataFrame) -> DataFrame:
     WAV/BMP rows produce genuine signal features; rows in codec-bound
     formats are QUARANTINED (decode_ok=false, features null) instead of
     failing the job — the per-row error isolation a production media
-    pipeline needs. Same Arrow-batched distributed shape as
-    extract_features."""
+    pipeline needs. Arrow batches in, Arrow batches out; the payload
+    column is dropped on output so only small features shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -362,101 +319,3 @@ def resize_images(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFrame
             )
 
     return media.mapInPandas(run, RESIZED_SCHEMA)
-
-
-def synthesize_anim(seed: int, n_frames: int = 6, width: int = 8, height: int = 8) -> bytes:
-    """A REAL multi-frame container: N concatenated BMP files. Frame
-    boundaries are recovered from each BMP's file-size header field —
-    genuine container walking, no codec library required."""
-    return b"".join(
-        synthesize_bmp(seed * 100 + i, width, height) for i in range(n_frames)
-    )
-
-
-def split_bmp_frames(payload: bytes) -> list[bytes]:
-    """Walk a concatenated-BMP container into its frames via the
-    file-size field at bytes 2:6 of each BMP header."""
-    import struct
-
-    if payload is None or len(payload) < 6:
-        raise NotImplementedError("frame walk: empty or truncated container")
-    frames: list[bytes] = []
-    pos = 0
-    while pos < len(payload):
-        if payload[pos : pos + 2] != b"BM":
-            raise NotImplementedError("frame walk: not a BMP frame boundary")
-        size = struct.unpack_from("<I", payload, pos + 2)[0]
-        if size <= 0 or pos + size > len(payload):
-            raise NotImplementedError("frame walk: truncated frame")
-        frames.append(payload[pos : pos + size])
-        pos += size
-    return frames
-
-
-def anim_table(documents: DataFrame) -> DataFrame:
-    """Animation payload per document (executor-side synthesis, like
-    media_table_real): doc_id-seeded multi-frame BMP containers."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "kind": "anim",
-                    "payload": [synthesize_anim(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(
-        run, "media_id long, kind string, payload binary"
-    )
-
-
-FRAMES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("frame_idx", IntegerType(), True),
-        StructField("frame", BinaryType(), True),
-        StructField("frame_ok", BooleanType(), False),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame sampling, distributed: one OUTPUT row per kept frame
-    (frame_idx % every_n == 0) — the explode-shaped decode stage a video
-    pipeline runs (mapInPandas may emit more rows than it consumes).
-    Unwalkable payloads quarantine as one row (frame_idx null,
-    frame_ok=false)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, idxs, frames, oks = [], [], [], [], []
-            for mid, kind, b in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                try:
-                    fs = split_bmp_frames(None if b is None else bytes(b))
-                except NotImplementedError:
-                    ids.append(mid)
-                    kinds.append(kind)
-                    idxs.append(None)
-                    frames.append(None)
-                    oks.append(False)
-                    continue
-                for i in range(0, len(fs), every_n):
-                    ids.append(mid)
-                    kinds.append(kind)
-                    idxs.append(i)
-                    frames.append(fs[i])
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": kinds,
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "frame": frames,
-                    "frame_ok": oks,
-                }
-            )
-
-    return media.mapInPandas(run, FRAMES_SCHEMA)

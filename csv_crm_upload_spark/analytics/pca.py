@@ -268,26 +268,6 @@ def pca2_projected_knn(
     return knn_bruteforce(proj, query_ids=query_ids, k=k)
 
 
-#: Default snapshot location for the pcarec1 queries()/oracle pair —
-#: the ONE path both engines read (the Spark side rewrites it per call;
-#: the DuckDB oracle's read_parquet carries it as a literal). /tmp
-#: because the audit's scratch state is not an artifact: it is
-#: regenerated on every invocation and never read across sessions.
-PCAREC1_SNAPSHOT_PATH = "/tmp/spark_graft_pcarec1_snapshot.parquet"
-
-
-def pcarec1_snapshot_path() -> str:
-    """The snapshot path, env-overridable (SPARK_GRAFT_PCAREC1_SNAPSHOT)
-    so CONCURRENT harnesses (the full pytest suite and the sf0.1 sweep
-    run as separate processes) audit against separate snapshots instead
-    of racing on one file between a Spark write and the paired DuckDB
-    read. Read at CALL time in both the queries() entry and
-    oracle_sql(), so one process's override stays self-consistent."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_PCAREC1_SNAPSHOT", PCAREC1_SNAPSHOT_PATH)
-
-
 def pcarec1_recall_audit(
     embeddings: DataFrame,
     snapshot_path: str,

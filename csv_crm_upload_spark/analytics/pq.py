@@ -44,11 +44,11 @@ from pyspark.sql import functions as F
 from csv_crm_upload_spark.operators import manifest
 from csv_crm_upload_spark.operators.manifest import Layout, Ranged
 
-#: codes: epoch-RANGED (vec_id, codes) rows; codebooks: the codec,
-#: PINNED by codebook_epoch
+#: codes: epoch-RANGED (vec_id, codes) rows; codebooks: the codec, one
+#: snapshot per epoch
 LAYOUT = Layout(
     ranged={"codes": Ranged()},
-    pinned={"codebooks": "codebook_epoch"},
+    snapshots={"codebooks": ()},
 )
 
 
@@ -431,7 +431,7 @@ def save_pq_index(
     Code files AND codebooks are EPOCH-VERSIONED (LAYOUT), so a
     REBUILD over a live index is atomic (manifest.rebuild): the new
     codebooks+codes land under the next epoch and the manifest's
-    `base_epoch`/`codebook_epoch` advance together in one commit, so a
+    `epoch`/`base_epoch` advance together in one commit, so a
     racing reader pairs old codebooks with old codes or new with new,
     never a mix.
 
@@ -474,8 +474,8 @@ def _codebook_frame(spark, books: np.ndarray) -> DataFrame:
     return spark.createDataFrame(rows, "subspace int, code int, entry array<double>")
 
 
-def _load_codebooks(spark, path: str, codebook_epoch: int) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/codebooks/epoch={codebook_epoch}").collect()
+def _load_codebooks(spark, path: str, epoch: int) -> np.ndarray:
+    rows = spark.read.parquet(f"{path}/codebooks/epoch={epoch}").collect()
     mm = 1 + max(r["subspace"] for r in rows)  # bounded: m·k rows
     kk = 1 + max(r["code"] for r in rows)
     sub = len(rows[0]["entry"])
@@ -490,7 +490,7 @@ def load_pq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
     of the committed epochs in [base_epoch, epoch], manifest-resolved so
     a racing rebuild is seen entirely or not at all."""
     man = manifest.read_manifest(path)
-    books = _load_codebooks(spark, path, man["codebook_epoch"])
+    books = _load_codebooks(spark, path, man["epoch"])
     codes = manifest.live(spark, path, man, LAYOUT, "codes").select("vec_id", "codes")
     return books, codes
 

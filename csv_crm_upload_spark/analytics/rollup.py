@@ -61,35 +61,6 @@ LAYOUT = Layout(
     key_format=KEY_FORMAT,
 )
 
-#: env-scopable artifact path PREFIX for the self-contained
-#: oracle-paired queries (the pcarec1 discipline): the default is
-#: PID-scoped so two concurrent unscoped processes (e.g.
-#: parallel pytest + bench) never race save_daily_rollup's rebuild on
-#: one manifest — a probe could read a mid-rebuild epoch layout. The
-#: roll1/roll2 oracles recompute from RAW events, so the path is only
-#: ever read by the process that wrote it; env override kept for
-#: harnesses that want an explicit scope.
-ROLLUP_QUERY_PATH = "/tmp/spark_graft_rollup_q"
-
-
-def rollup_query_path() -> str:
-    """Read at CALL time in both the queries() entry and any oracle that
-    needs it, so one process's override stays self-consistent. The
-    PID-scoped default registers a best-effort atexit reap (nothing else
-    deletes these, so repeated runs would accumulate parquet under
-    /tmp); an env-overridden path is the harness's to manage."""
-    import os
-
-    override = os.environ.get("SPARK_GRAFT_ROLLUP_DIR")
-    if override is not None:
-        return override
-    from csv_crm_upload_spark.analytics.sketch_audit import _reap_at_exit
-
-    path = f"{ROLLUP_QUERY_PATH}_{os.getpid()}"
-    _reap_at_exit(path)
-    return path
-
-
 def _day_partials(events: DataFrame, n_buckets: int) -> DataFrame:
     """Map-side-combining (day, event_type) partials of an event batch —
     ONE agg collapses the batch to its calendar-bounded grain."""
@@ -169,7 +140,7 @@ def dow1_indexed(spark, path: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Self-contained oracle-paired entries (the pq1 fit-per-call discipline:
-# build at the env-scoped path, then probe — the DuckDB oracle recomputes
+# build at the caller's path, then probe — the DuckDB oracle recomputes
 # from RAW events with the inline operator's own SQL, so a hash match
 # proves the artifact's store→merge→probe chain preserves the semantics)
 # ---------------------------------------------------------------------------
@@ -191,13 +162,11 @@ def _ensure_query_rollup(events: DataFrame, p: str) -> None:
     )
 
 
-def roll1_indexed_acf(spark, events: DataFrame, path: str | None = None) -> DataFrame:
-    p = path or rollup_query_path()
-    _ensure_query_rollup(events, p)
-    return acf1_indexed(spark, p)
+def roll1_indexed_acf(spark, events: DataFrame, path: str) -> DataFrame:
+    _ensure_query_rollup(events, path)
+    return acf1_indexed(spark, path)
 
 
-def roll2_indexed_dow(spark, events: DataFrame, path: str | None = None) -> DataFrame:
-    p = path or rollup_query_path()
-    _ensure_query_rollup(events, p)
-    return dow1_indexed(spark, p)
+def roll2_indexed_dow(spark, events: DataFrame, path: str) -> DataFrame:
+    _ensure_query_rollup(events, path)
+    return dow1_indexed(spark, path)

@@ -31,12 +31,8 @@ the recorded estimates sit inside their published envelopes on the
 corpus under test (each audit also carries a pytest pinning the
 within_bound column TRUE on the clean fixtures).
 
-Snapshot paths are PID-scoped by default (the rollup_query_path
-discipline): concurrent unscoped harnesses (full suite / sf0.1 sweep /
-bench) audit separate snapshots instead of racing one file between a
-Spark write and a paired DuckDB read. Env overrides keep explicit
-scoping possible; both queries() and oracle_sql() read the path at
-dict-BUILD time, so one process stays self-consistent.
+The caller owns the snapshot path: every audit takes it as a required
+argument, and the query entry and its oracle name the same file.
 
 Reference parity note: the reference repo (csv-crm-upload,
 database/database.go) has no sketch surface; this is part of the
@@ -51,8 +47,6 @@ it), and a broadcast join of the ≤|groups|-row snapshot.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -72,53 +66,7 @@ PXREC1_EPS = 1.0 / 10000.0
 #: merged register array is exactly the sketch of the union).
 HLLREC1_BOUND = 0.05
 
-_SNAPSHOT_DIR = "/tmp/spark_graft_sketch_snapshots"
-
-
-def _reap_at_exit(path: str) -> None:
-    """Best-effort atexit removal of a PID-scoped default dir (advice
-    r11): nothing else ever deletes them, so repeated suite/bench runs
-    would accumulate unbounded parquet under /tmp. Only the PID-scoped
-    DEFAULTS are registered — an env-overridden path is the harness's
-    to manage. Idempotent per path per process."""
-    import atexit
-    import shutil
-
-    if path in _REAP_REGISTERED:
-        return
-    _REAP_REGISTERED.add(path)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-
-
-_REAP_REGISTERED: set[str] = set()
-
-
-def sketch_snapshot_dir() -> str:
-    """Base directory for the three audit snapshots — PID-scoped
-    default, env-overridable (SPARK_GRAFT_SKETCH_SNAPSHOT_DIR)."""
-    override = os.environ.get("SPARK_GRAFT_SKETCH_SNAPSHOT_DIR")
-    if override is not None:
-        return override
-    path = f"{_SNAPSHOT_DIR}_{os.getpid()}"
-    _reap_at_exit(path)
-    return path
-
-
-def adrec1_snapshot_path() -> str:
-    return f"{sketch_snapshot_dir()}/adrec1.parquet"
-
-
-def pxrec1_snapshot_path() -> str:
-    return f"{sketch_snapshot_dir()}/pxrec1.parquet"
-
-
-def hllrec1_snapshot_path() -> str:
-    return f"{sketch_snapshot_dir()}/hllrec1.parquet"
-
-
-def adrec1_distinct_error_audit(
-    events: DataFrame, snapshot_path: str | None = None
-) -> DataFrame:
+def adrec1_distinct_error_audit(events: DataFrame, path: str) -> DataFrame:
     """Relative error of the HLL++ per-type user cardinalities against
     exact COUNT(DISTINCT), with the 3-sigma verdict column.
 
@@ -128,7 +76,6 @@ def adrec1_distinct_error_audit(
     of NULL/NaN (the zipf1 divergence class)."""
     from csv_crm_upload_spark.analytics.tpch import approx_distinct_users
 
-    path = snapshot_path or adrec1_snapshot_path()
     spark = events.sparkSession
     approx_distinct_users(events).select("event_type", "approx_users").write.mode(
         "overwrite"
@@ -158,9 +105,7 @@ def adrec1_distinct_error_audit(
     )
 
 
-def pxrec1_percentile_rank_audit(
-    events: DataFrame, snapshot_path: str | None = None
-) -> DataFrame:
+def pxrec1_percentile_rank_audit(events: DataFrame, path: str) -> DataFrame:
     """Rank error of percentile_approx's p50/p95/p99 against the exact
     order statistics — the KLL/GK audit in the guarantee's own terms:
     the sketch promises a returned ELEMENT whose rank is within
@@ -175,7 +120,6 @@ def pxrec1_percentile_rank_audit(
     sketch returns NULL there and exact has no row — both engines)."""
     from csv_crm_upload_spark.analytics.tpch import approx_value_percentiles
 
-    path = snapshot_path or pxrec1_snapshot_path()
     spark = events.sparkSession
     approx_value_percentiles(events).select("event_type", "p50", "p95", "p99").write.mode(
         "overwrite"
@@ -242,9 +186,7 @@ def pxrec1_percentile_rank_audit(
     ).orderBy("event_type", "quantile")
 
 
-def hllrec1_merge_error_audit(
-    events: DataFrame, snapshot_path: str | None = None
-) -> DataFrame:
+def hllrec1_merge_error_audit(events: DataFrame, path: str) -> DataFrame:
     """Relative error of the persisted daily HLL estimates AND of the
     union-of-sketches all-days estimate against exact distinct counts —
     the mergeability contract made driver-visible: the `all_days` row's
@@ -255,7 +197,6 @@ def hllrec1_merge_error_audit(
     in pytest, where both sketch binaries are visible)."""
     from csv_crm_upload_spark.analytics.tpch import hll1_mergeable_daily_uniques
 
-    path = snapshot_path or hllrec1_snapshot_path()
     spark = events.sparkSession
     hll1_mergeable_daily_uniques(events).write.mode("overwrite").parquet(path)
     # a zero-row corpus records ('all_days', NULL) — hll_union_agg over
@@ -293,10 +234,6 @@ def hllrec1_merge_error_audit(
     )
 
 
-def mgrec1_snapshot_path() -> str:
-    return f"{sketch_snapshot_dir()}/mgrec1.parquet"
-
-
 #: hh1's Misra-Gries parameters, repeated here because the WITHIN-BOUND
 #: verdict is stated in their terms: merged lower bounds undercount by
 #: at most N/MGREC1_K total (Agarwal et al. 2012 mergeability).
@@ -310,9 +247,7 @@ MGREC1_THRESHOLD_K = 100
 MGREC1_WS_SQL = r"[ \t\n\x0B\f\r]+"
 
 
-def mgrec1_heavy_hitter_audit(
-    documents: DataFrame, snapshot_path: str | None = None
-) -> DataFrame:
+def mgrec1_heavy_hitter_audit(documents: DataFrame, path: str) -> DataFrame:
     """Error audit for the Misra-Gries heavy-hitter sketch
     (textstats.hh1_heavy_hitter_tokens) — the fourth sketch under the
     snapshot-audit pattern, and the one whose ESTIMATES are not even
@@ -334,7 +269,6 @@ def mgrec1_heavy_hitter_audit(
     tests the sketch against exactly the stream it saw."""
     from csv_crm_upload_spark.analytics.textstats import MG_WS, hh1_heavy_hitter_tokens
 
-    path = snapshot_path or mgrec1_snapshot_path()
     spark = documents.sparkSession
     hh1_heavy_hitter_tokens(
         documents, k=MGREC1_K, threshold_k=MGREC1_THRESHOLD_K
@@ -367,10 +301,6 @@ def mgrec1_heavy_hitter_audit(
     )
 
 
-def cms1_snapshot_path() -> str:
-    return f"{sketch_snapshot_dir()}/cms1.parquet"
-
-
 #: Count-Min table shape: CMS1_D independent hash rows of CMS1_W
 #: counters (4 KiB of longs — fixed memory regardless of vocabulary).
 CMS1_D = 4
@@ -388,9 +318,7 @@ CMS1_W = 256
 CMS1_SLACK = 8
 
 
-def cms1_countmin_audit(
-    documents: DataFrame, snapshot_path: str | None = None
-) -> DataFrame:
+def cms1_countmin_audit(documents: DataFrame, path: str) -> DataFrame:
     """Error audit for a Count-Min sketch over the corpus token stream —
     the OVERCOUNT complement to mgrec1's undercount audit (Misra-Gries
     lower-bounds, Count-Min upper-bounds; a monitoring stack wants
@@ -413,7 +341,6 @@ def cms1_countmin_audit(
     MGREC1_WS_SQL) on all three surfaces."""
     from csv_crm_upload_spark.analytics.textstats import MG_WS, hh1_heavy_hitter_tokens
 
-    path = snapshot_path or cms1_snapshot_path()
     spark = documents.sparkSession
     toks = (
         documents.filter(F.col("text").isNotNull())
@@ -469,10 +396,6 @@ def cms1_countmin_audit(
     )
 
 
-def hll2_snapshot_path() -> str:
-    return f"{sketch_snapshot_dir()}/hll2.parquet"
-
-
 #: 3-sigma-ish envelope for the inclusion-exclusion INTERSECTION
 #: estimate: each of the three HLL cardinalities (|A|, |B|, |A∪B|)
 #: carries rsd ≈ 1.63% at the default lgConfigK=12, and the estimator
@@ -517,9 +440,7 @@ def hll2_overlap_estimates(events: DataFrame) -> DataFrame:
     )
 
 
-def hll2_overlap_audit(
-    events: DataFrame, snapshot_path: str | None = None
-) -> DataFrame:
+def hll2_overlap_audit(events: DataFrame, path: str) -> DataFrame:
     """Error audit for the inclusion-exclusion overlap estimator — the
     sketch-ALGEBRA audit (adrec1 checks one sketch; THIS checks a
     composition of three): the per-pair estimates freeze to the
@@ -529,7 +450,6 @@ def hll2_overlap_audit(
     legitimately be negative on near-disjoint segments — it is
     reported raw, never clamped, so the driver sees the estimator's
     true behavior."""
-    path = snapshot_path or hll2_snapshot_path()
     spark = events.sparkSession
     hll2_overlap_estimates(events).write.mode("overwrite").parquet(path)
     snap = spark.read.schema(

@@ -732,28 +732,6 @@ def fh1_feature_hash_embed(documents: DataFrame, dim: int = 64) -> DataFrame:
     )
 
 
-def feature_hash_vectors(documents: DataFrame, dim: int = 64) -> DataFrame:
-    """fh1's sparse long form densified to (vec_id, embedding
-    array<double>) — the bridge into the ANN family (knn_bruteforce /
-    LSH / IVF / PQ / IVF-PQ all take this shape), so text→vector→
-    similarity-search runs end-to-end inside the engine with no model.
-    One extra combining agg (map per doc) + a map-only transform."""
-    long_form = fh1_feature_hash_embed(documents, dim=dim)
-    m = F.map_from_entries(F.collect_list(F.struct("dim", "weight")))
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        # try_element_at: ANSI mode errors on missing map keys
-        lambda d: F.coalesce(
-            F.try_element_at(F.col("m"), d.cast("long")), F.lit(0)
-        ).cast("double"),
-    )
-    return (
-        long_form.groupBy("doc_id")
-        .agg(m.alias("m"))
-        .select(F.col("doc_id").alias("vec_id"), dense.alias("embedding"))
-    )
-
-
 def drift1_source_token_kl(documents: DataFrame) -> DataFrame:
     """Per-source KL divergence (bits) of the source's unigram token
     distribution from the whole corpus's — the mixture-drift diagnostic

@@ -4,9 +4,11 @@
   crmIntegrator (reference crm/main.go) → `upload`: pending → CRM → mark
   plus `pending` (the recurring query) and `watch` (streaming ingest).
 
-Either store backend works for every subcommand: `--store <dir>` (the
-versioned-parquet table) or `--jdbc-url <url>` / $DATABASE_URL (any JDBC
-database — the reference's actual Postgres story, database/database.go).
+Every store subcommand takes `--store <dir>` (the versioned-parquet
+table) or `--jdbc-url <url>` / $DATABASE_URL (any JDBC database — the
+reference's actual Postgres story, database/database.go). `merge`,
+`clone`, `history` and `serve --auto-compact/--vacuum-keep` need the
+versioned-parquet store and exit with an error on JDBC.
 
 Flags mirror the reference CLI/env surface: -noheader (cmd/main.go:29),
 buffer size (cmd/main.go:30 — Spark manages batching; kept for interface
@@ -462,20 +464,23 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "ingest":
-        from csv_crm_upload_spark.plans.ingest import ingest_batch
-        from csv_crm_upload_spark.sources.csv_source import read_customers_csv
+        from csv_crm_upload_spark.plans.ingest import ingest_batch, ingest_csv
         from csv_crm_upload_spark.sources.jsonl_source import read_customers_jsonl
         from csv_crm_upload_spark.sources.orc_source import read_customers_orc
 
         if sum(map(bool, (args.csv, args.jsonl, args.orc))) != 1:
             raise SystemExit("ingest: exactly one of --csv, --jsonl, or --orc is required")
-        if args.jsonl:
-            batch = read_customers_jsonl(spark, args.jsonl)
-        elif args.orc:
-            batch = read_customers_orc(spark, args.orc)
+        if args.csv:
+            res = ingest_csv(
+                spark, args.csv, store, header=not args.noheader, quarantine_dir=args.quarantine
+            )
         else:
-            batch = read_customers_csv(spark, args.csv, header=not args.noheader)
-        res = ingest_batch(batch, store, quarantine_dir=args.quarantine)
+            batch = (
+                read_customers_jsonl(spark, args.jsonl)
+                if args.jsonl
+                else read_customers_orc(spark, args.orc)
+            )
+            res = ingest_batch(batch, store, quarantine_dir=args.quarantine)
         print(f"inserted={res.inserted} quarantined={res.quarantined} duplicates={res.duplicates}")
     elif args.cmd == "merge":
         from csv_crm_upload_spark.operators.validate import validate_split
@@ -492,8 +497,6 @@ def main(argv: list[str] | None = None) -> int:
         n = store.delete(args.where)
         print(f"deleted={n}")
     elif args.cmd == "forget":
-        if not hasattr(store, "forget"):
-            raise SystemExit("forget requires the versioned parquet store (--store)")
         n = store.forget(args.email)
         print(f"forgotten={n}")
     elif args.cmd == "clone":

@@ -1,106 +1,19 @@
-"""Data-quality expectations — the `expect / expect_or_drop /
-expect_or_fail` contract of Delta Live Tables, engine-side.
+"""Data-quality expectations as a batch audit: `dq1_order_expectations`
+counts each declarative row rule's violations over the orders table
+("how dirty is this feed?").
 
-A training-data pipeline gates every ingest on declarative row
-constraints ("email present", "price positive", "doc length sane") and
-needs per-rule violation METRICS without paying a second scan. The
-Spark-first realization:
-
-  * rules are plain Column predicates — they ride the scan, stay inside
-    whole-stage codegen, and push down where the source allows;
-  * metrics use `pyspark.sql.Observation` — violation counters are
-    collected as accumulators DURING the one job that materializes the
-    output, zero extra jobs (the DLT event-log trick, minus the UI);
-  * `on_violation="drop"` filters failing rows; "fail" raises after the
-    action if any rule was violated; "warn" keeps rows and just counts.
-  * `quarantine_violations` splits failing rows WITH the list of rule
-    names they broke — same shape as the ingest quarantine
-    (operators/validate.py), so rejected rows stay auditable.
-
-At 100 TB: expectations add no shuffle and no extra pass; the only cost
-is the predicate evaluation itself. (Reference parity: the reference
-hard-codes its two row rules in Go — upload/customers.go's id/email
-checks; this generalizes them to declarative, metered rules.)
+Rules are plain Column predicates, so they ride the scan and stay
+inside whole-stage codegen; all counters come from one scalar
+aggregate, so the audit adds no shuffle beyond a single 1-row exchange.
+(Reference parity: the reference hard-codes its two row rules in Go —
+upload/customers.go's id/email checks; this generalizes them to
+declarative, metered rules.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-class ExpectationViolation(Exception):
-    """Raised by check() when a rule with on_violation='fail' was broken."""
-
-    def __init__(self, metrics: dict[str, int]):
-        self.metrics = metrics
-        super().__init__(f"expectations violated: {metrics}")
-
-
-def expect_all(
-    df: DataFrame,
-    rules: dict[str, Column],
-    on_violation: str = "drop",
-) -> tuple[DataFrame, Observation, "Checker"]:
-    """Attach expectation rules to `df`.
-
-    Returns (gated_df, observation, checker):
-      * gated_df — rows passing every rule ("drop"/"fail") or all rows
-        ("warn"); run exactly ONE action on it;
-      * observation — per-rule violation counts, readable after that
-        action via `observation.get`;
-      * checker — call `checker()` after the action; raises
-        ExpectationViolation when on_violation == "fail" and any rule
-        tripped, else returns the metrics dict.
-    """
-    if on_violation not in ("drop", "fail", "warn"):
-        raise ValueError(f"unknown on_violation: {on_violation!r}")
-    obs = Observation("expectations")
-    metrics = [
-        F.sum(F.when(~cond, F.lit(1)).otherwise(F.lit(0))).cast("long").alias(name)
-        for name, cond in rules.items()
-    ]
-    metrics.append(F.count(F.lit(1)).cast("long").alias("_rows_seen"))
-    observed = df.observe(obs, *metrics)
-    if on_violation in ("drop", "fail"):
-        keep = F.lit(True)
-        for cond in rules.values():
-            keep = keep & cond
-        gated = observed.filter(keep)
-    else:
-        gated = observed
-
-    def checker() -> dict[str, int]:
-        got = dict(obs.get)
-        got.pop("_rows_seen", None)
-        if on_violation == "fail" and any(v for v in got.values()):
-            raise ExpectationViolation(got)
-        return got
-
-    return gated, obs, checker
-
-
-def quarantine_violations(
-    df: DataFrame, rules: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """Split df into (clean, quarantined) where quarantined rows carry a
-    `violated_rules` array of every rule name they broke — the auditable
-    reject path (mirrors the ingest quarantine's reason column)."""
-    tagged = df.withColumn(
-        "violated_rules",
-        F.filter(
-            F.array(
-                *[
-                    F.when(~cond, F.lit(name)).otherwise(F.lit(None))
-                    for name, cond in rules.items()
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    )
-    clean = tagged.filter(F.size("violated_rules") == 0).drop("violated_rules")
-    bad = tagged.filter(F.size("violated_rules") > 0)
-    return clean, bad
 
 
 def dq1_order_expectations(orders: DataFrame) -> DataFrame:

@@ -8,7 +8,7 @@ keeps only its own math; this module runs every protocol step from the
 layout:
 
   rebuild   — `rebuild`: write the next epoch, then one commit of a
-              fresh manifest (epoch, pinned keys, stamp, build params);
+              fresh manifest (epoch, stamp, build params);
   append    — `append`: stamp check, stage the delta from the new input
               only (empty → return with nothing touched), remove
               orphans, write epoch+1, one commit;
@@ -58,15 +58,12 @@ class Layout:
     snapshots — subdir → partition columns, for tables every epoch
                 rewrites in full (only the current epoch is read). An
                 artifact with no ranged subdir keeps base_epoch == epoch;
-    pinned    — subdir → manifest key naming its one live epoch
-                (quantizers that survive appends, e.g. centroid_epoch);
     key_format / format_field / missing_ok — the derived-key stamp
                 (see `check_key_format`); None for artifacts whose keys
                 are not derived from text."""
 
     ranged: dict[str, Ranged] = field(default_factory=dict)
     snapshots: dict[str, tuple[str, ...]] = field(default_factory=dict)
-    pinned: dict[str, str] = field(default_factory=dict)
     key_format: str | None = None
     format_field: str = "key_format"
     missing_ok: bool = False
@@ -111,8 +108,8 @@ def rebuild(path: str, layout: Layout, write: Callable[[int], None], **fields) -
     """Build (or atomically rebuild over a live artifact): `write(epoch)`
     lands every subdir of the next epoch — 0 on a fresh path, one past
     the committed epoch otherwise — then one commit of a FRESH manifest
-    advances epoch, base_epoch and every pinned key together, stamps the
-    key format and records `fields` (build parameters). Nothing of the
+    advances epoch and base_epoch together, stamps the key format and
+    records `fields` (build parameters). Nothing of the
     prior manifest but its epoch carries over: every caller passes its
     parameters explicitly. A racing reader pairs old data with old
     quantizers/stats or new with new."""
@@ -127,7 +124,6 @@ def rebuild(path: str, layout: Layout, write: Callable[[int], None], **fields) -
         {
             "epoch": epoch,
             "base_epoch": epoch,
-            **dict.fromkeys(layout.pinned.values(), epoch),
             **stamp,
             **fields,
         },
@@ -205,8 +201,7 @@ def gc_stale_epochs(path: str, layout: Layout) -> list[str]:
     """Delete epoch dirs the CURRENT manifest can no longer reference:
     for ranged and snapshot subdirs anything outside [base_epoch, epoch]
     (stale pre-rebuild chains, superseded snapshots, uncommitted
-    orphans); for pinned subdirs anything except the pinned
-    epoch. Returns the removed paths.
+    orphans). Returns the removed paths.
 
     Same contract as store.vacuum: callers assert no reader still holds
     an OLDER manifest snapshot (readers resolve the manifest once per
@@ -217,8 +212,6 @@ def gc_stale_epochs(path: str, layout: Layout) -> list[str]:
     removed: list[str] = []
     for sub in [*layout.ranged, *layout.snapshots]:
         removed += _sweep(path, sub, lambda k: not base <= k <= epoch)
-    for sub, key in layout.pinned.items():
-        removed += _sweep(path, sub, lambda k, pinned=m[key]: k != pinned)
     return removed
 
 

@@ -81,13 +81,11 @@ def ingest_csv(
     path: str,
     store: CustomerStore,
     header: bool = True,
-    now=None,
     quarantine_dir: str | None = None,
 ) -> IngestResult:
     """Full-file batch ingest (the finite-run mode of the reference CLI)."""
     return ingest_batch(
         read_customers_csv(spark, path, header=header),
         store,
-        now=now,
         quarantine_dir=quarantine_dir,
     )

@@ -12,13 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     FloatType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -49,19 +47,6 @@ CUSTOMER_SCHEMA = StructType(
         StructField("uploaded", BooleanType(), True),
         StructField("created_ts", TimestampType(), True),
         StructField("modified_ts", TimestampType(), True),
-    ]
-)
-
-# Quarantine rows: original raw fields + reject reason
-# (reference logs-and-continues: csvreader.go:80-82,120-127; we keep the rows).
-QUARANTINE_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), True),
-        StructField("first_name", StringType(), True),
-        StructField("last_name", StringType(), True),
-        StructField("email", StringType(), True),
-        StructField("phone", StringType(), True),
-        StructField("reason", StringType(), False),
     ]
 )
 
@@ -163,16 +148,3 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
         ]
     ),
 }
-
-# Multimodal: opaque binary payload + typed metadata (the image/audio libs
-# aren't in this container — decode is stubbed; plumbing is real).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("meta", MapType(StringType(), StringType()), True),
-    ]
-)
-
-TABLE_NAMES = list(TESTDATA_SCHEMAS)

@@ -10,6 +10,7 @@ engines (the DuckDB correctness oracle runs timezone-naive).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -52,7 +53,10 @@ def get_spark(
         # static conf: managed (bucketed) tables live outside the repo
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
+            os.environ.get(
+                "SPARK_GRAFT_WAREHOUSE",
+                os.path.join(tempfile.gettempdir(), "spark_graft_warehouse"),
+            ),
         )
     )
     return builder.getOrCreate()

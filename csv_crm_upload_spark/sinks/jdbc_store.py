@@ -6,8 +6,7 @@ surface as the parquet `CustomerStore`.
 Spark-first realization:
   * reads go through `spark.read.jdbc` — the pending scan's predicate and
     projection push into the generated WHERE/SELECT (the JDBC source is a
-    pushdown-capable DataSource), and large tables read partitioned on a
-    numeric column so every executor pulls its own key range;
+    pushdown-capable DataSource);
   * appends are `df.write.jdbc(mode="append")` — executor-parallel batch
     INSERTs; the DB's UNIQUE constraints stay the final uniqueness guard
     exactly as in the reference (the declarative anti-join just avoids
@@ -102,27 +101,14 @@ class JdbcCustomerStore:
                 raise
 
     # -- operators ----------------------------------------------------------
-    def read(self, num_partitions: int | None = None) -> DataFrame:
-        """S4: table scan. With `num_partitions`, the scan is split into
-        id-range slices so each executor reads its own chunk — the only
-        way a JDBC read parallelizes."""
-        reader = self.spark.read.format("jdbc").option("url", self.url)
-        if num_partitions and num_partitions > 1:
-            bounds = (
-                self.spark.read.format("jdbc")
-                .option("url", self.url)
-                .option("query", f"SELECT MIN(id) AS lo, MAX(id) AS hi FROM {self.table}")
-                .load()
-                .first()
-            )
-            if bounds[0] is not None:  # positional: DBs fold the alias case
-                reader = (
-                    reader.option("partitionColumn", "id")
-                    .option("lowerBound", int(bounds[0]))
-                    .option("upperBound", int(bounds[1]) + 1)
-                    .option("numPartitions", num_partitions)
-                )
-        df = reader.option("dbtable", self.table).load()
+    def read(self) -> DataFrame:
+        """S4: table scan (one JDBC partition)."""
+        df = (
+            self.spark.read.format("jdbc")
+            .option("url", self.url)
+            .option("dbtable", self.table)
+            .load()
+        )
         # DBs that fold unquoted identifiers (Derby/Oracle upper-case,
         # Postgres lower-case) must come back in the engine's schema
         return df.toDF(*[c.lower() for c in df.columns])

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
+from csv_crm_upload_spark.schemas import TESTDATA_SCHEMAS
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -33,13 +33,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             if field.dataType.typeName() == "timestamp" and actual.get(field.name) == "bigint":
                 df = df.withColumn(field.name, F.expr(f"timestamp_micros({field.name} DIV 1000)"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -100,11 +100,10 @@ def test_crashed_update_self_heals(spark, sf_dir, tmp_path):
     dd.save_dedup_index(part_a, idx)
     baseline = sorted(map(tuple, dd.load_dedup_index(spark, idx).collect()))
 
-    # simulate the crash: garbage epoch-1 dirs exist, manifest still at 0
-    for sub in ("pairs", "signatures", "bands"):
-        os.makedirs(f"{idx}/{sub}/epoch=1", exist_ok=True)
-        with open(f"{idx}/{sub}/epoch=1/part-00000.parquet", "w") as f:
-            f.write("not parquet")
+    # simulate the crash: a garbage epoch-1 dir exists, manifest still at 0
+    os.makedirs(f"{idx}/pairs/epoch=1", exist_ok=True)
+    with open(f"{idx}/pairs/epoch=1/part-00000.parquet", "w") as f:
+        f.write("not parquet")
 
     # readers resolve through the manifest: orphans invisible
     assert sorted(map(tuple, dd.load_dedup_index(spark, idx).collect())) == baseline

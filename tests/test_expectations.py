@@ -1,74 +1,7 @@
-"""Expectations: DLT-style gate semantics (warn / drop / fail), one-pass
-Observation metrics, and the auditable quarantine split."""
+"""Row-rule audits over the testdata tables: referential integrity with
+a planted orphan."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from csv_crm_upload_spark.operators.expectations import (
-    ExpectationViolation,
-    expect_all,
-    quarantine_violations,
-)
-
-ROWS = [
-    (1, "a@x.com", 10.0),
-    (2, None, 20.0),       # breaks has_email
-    (3, "c@x.com", -5.0),  # breaks positive_amount
-    (4, None, -1.0),       # breaks both
-    (5, "e@x.com", 0.5),
-]
-COLS = ["id", "email", "amount"]
-
-RULES = lambda: {  # noqa: E731 — fresh Columns per test
-    "has_email": F.col("email").isNotNull(),
-    "positive_amount": F.col("amount") > 0,
-}
-
-
-def test_drop_filters_and_counts_in_one_action(spark):
-    df = spark.createDataFrame(ROWS, COLS)
-    gated, obs, check = expect_all(df, RULES(), on_violation="drop")
-    kept = gated.collect()  # the ONE action; metrics ride this job
-    # drop removes rows failing ANY rule → ids 1 and 5 survive
-    assert sorted(r["id"] for r in kept) == [1, 5]
-    assert check() == {"has_email": 2, "positive_amount": 2}
-
-
-def test_warn_keeps_rows_but_meters(spark):
-    df = spark.createDataFrame(ROWS, COLS)
-    gated, obs, check = expect_all(df, RULES(), on_violation="warn")
-    assert gated.count() == 5
-    assert check() == {"has_email": 2, "positive_amount": 2}
-
-
-def test_fail_raises_with_metrics(spark):
-    df = spark.createDataFrame(ROWS, COLS)
-    gated, obs, check = expect_all(df, RULES(), on_violation="fail")
-    gated.count()
-    with pytest.raises(ExpectationViolation) as e:
-        check()
-    assert e.value.metrics == {"has_email": 2, "positive_amount": 2}
-
-
-def test_fail_passes_clean_input(spark):
-    df = spark.createDataFrame([(1, "a@x.com", 1.0)], COLS)
-    gated, obs, check = expect_all(df, RULES(), on_violation="fail")
-    assert gated.count() == 1
-    assert check() == {"has_email": 0, "positive_amount": 0}
-
-
-def test_quarantine_carries_rule_names(spark):
-    df = spark.createDataFrame(ROWS, COLS)
-    clean, bad = quarantine_violations(df, RULES())
-    assert sorted(r["id"] for r in clean.collect()) == [1, 5]
-    reasons = {r["id"]: sorted(r["violated_rules"]) for r in bad.collect()}
-    assert reasons == {
-        2: ["has_email"],
-        3: ["positive_amount"],
-        4: ["has_email", "positive_amount"],
-    }
 
 
 def test_referential_integrity_flags_planted_orphans(spark, sf_dir):

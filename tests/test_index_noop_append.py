@@ -113,7 +113,7 @@ def test_empty_append_touches_nothing(kind, spark, sf_dir, tmp_path):
 
     # the layout declaration is the whole on-disk shape
     appended = [*layout.ranged, *layout.snapshots]
-    assert sorted(os.listdir(path)) == sorted(["MANIFEST", *appended, *layout.pinned])
+    assert sorted(os.listdir(path)) == sorted(["MANIFEST", *appended])
     before = read_manifest(path)
     e = before["epoch"]
     for sub in appended:

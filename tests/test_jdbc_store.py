@@ -143,13 +143,6 @@ def test_jdbc_ingest_quarantines_only_real_duplicates(spark, jdbc_store, tmp_pat
     assert spark.read.parquet(qdir).filter("reason = 'duplicate_key'").count() == 2
 
 
-def test_partitioned_read_splits_by_id_range(spark, jdbc_store):
-    jdbc_store.append(_finalized(spark, [(i, "n", "m", f"u{i}@x.com", str(i)) for i in range(1, 21)]))
-    df = jdbc_store.read(num_partitions=4)
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 20
-
-
 def test_upload_cycle_against_jdbc_store(spark, jdbc_store):
     """The store interface is swappable: the reference's full loop
     (pending -> POST -> flag flip) runs unchanged against JDBC."""

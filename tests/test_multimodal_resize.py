@@ -1,6 +1,5 @@
-"""Resize and frame-sampling plumbing: REAL pixel-level verification on
-hand-parseable BMP payloads, quarantine semantics for codec-bound rows,
-and the explode-shaped distributed path."""
+"""Resize plumbing: REAL pixel-level verification on hand-parseable BMP
+payloads and quarantine semantics for codec-bound rows."""
 
 from __future__ import annotations
 
@@ -45,30 +44,3 @@ def test_resize_images_distributed_with_quarantine(spark, sf_dir):
         assert mm.decode_media(bytes(r["resized"]), "")[:2] == [4.0, 4.0]
     for kind in ("audio", "video"):
         assert all(not r["resize_ok"] and r["resized"] is None for r in by_kind.get(kind, []))
-
-
-def test_frame_walk_and_sampling_exact():
-    anim = mm.synthesize_anim(3, n_frames=6)
-    frames = mm.split_bmp_frames(anim)
-    assert len(frames) == 6
-    # byte-identical frame recovery from the container
-    for i, f in enumerate(frames):
-        assert f == mm.synthesize_bmp(3 * 100 + i)
-
-
-def test_sample_frames_distributed(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(12)
-    anims = mm.anim_table(docs)
-    out = mm.sample_frames(anims, every_n=2).collect()
-    # 6 frames per container, every 2nd kept → 3 rows per doc
-    assert len(out) == 12 * 3
-    assert {r["frame_idx"] for r in out} == {0, 2, 4}
-    assert all(r["frame_ok"] for r in out)
-    one = next(r for r in out if r["frame_idx"] == 2)
-    assert bytes(one["frame"]) == mm.synthesize_bmp(int(one["media_id"]) * 100 + 2)
-
-    # unwalkable payloads quarantine as a single row
-    media = mm.media_table_real(docs)  # audio/video payloads are not BMP containers
-    q = mm.sample_frames(media, every_n=2)
-    bad = [r for r in q.collect() if not r["frame_ok"]]
-    assert bad and all(r["frame_idx"] is None and r["frame"] is None for r in bad)

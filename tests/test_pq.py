@@ -92,7 +92,7 @@ def test_pq_indexed_search_matches_direct(spark, sf_dir, tmp_path):
 def test_pq_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
     """Rebuilding over a LIVE index (save again at the same path) must be
     one manifest commit: the new codebooks+codes land under the next
-    epoch and base_epoch/codebook_epoch advance together, so a reader
+    epoch and epoch/base_epoch advance together, so a reader
     never pairs new codebooks with old codes. After the rebuild the
     loaded codes are exactly a fresh encode of the rebuild corpus — the
     pre-rebuild epochs are invisible."""
@@ -109,7 +109,7 @@ def test_pq_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
     books2 = pq.save_pq_index(emb, path, m=4, n_codes=8)
     man = read_manifest(path)
     assert man["epoch"] == 1
-    assert man["base_epoch"] == 1 and man["codebook_epoch"] == 1
+    assert man["base_epoch"] == 1
     assert man["m"] == 4 and man["k"] == 8
 
     loaded_books, codes = pq.load_pq_index(spark, path)
@@ -121,8 +121,8 @@ def test_pq_rebuild_over_live_index_is_atomic(spark, sf_dir, tmp_path):
 
 def test_gc_after_rebuild_keeps_live_and_pinned_epochs(spark, sf_dir, tmp_path):
     """After a rebuild over a live index, gc_stale_epochs deletes the
-    superseded epoch of the ranged codes AND of the pinned codebooks but
-    keeps the live ones — probe results unchanged, a second gc removes
+    superseded epoch of the ranged codes AND of the codebook snapshots
+    but keeps the live ones — probe results unchanged, a second gc removes
     nothing."""
     import os
 
@@ -142,7 +142,7 @@ def test_gc_after_rebuild_keeps_live_and_pinned_epochs(spark, sf_dir, tmp_path):
         "codes/epoch=0",
     ]
     man = read_manifest(path)
-    assert os.path.isdir(f"{path}/codebooks/epoch={man['codebook_epoch']}")
+    assert os.path.isdir(f"{path}/codebooks/epoch={man['epoch']}")
     assert os.path.isdir(f"{path}/codes/epoch={man['epoch']}")
     assert sorted(map(tuple, pq.pq_search_indexed(spark, path, emb).collect())) == before
     assert gc_stale_epochs(path, pq.LAYOUT) == []

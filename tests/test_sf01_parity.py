@@ -11,8 +11,6 @@ normal suite's wall time is unchanged).
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 import __spark_entry__ as entrymod
@@ -22,30 +20,8 @@ pytestmark = pytest.mark.sf01
 
 SF01_DIR = "/root/testdata/sf0.1"
 
-# Own pcarec1 snapshot for THIS module's query/oracle pair: the sweep
-# often runs CONCURRENTLY with the full suite as a separate process —
-# a shared snapshot path would race between one process's Spark write
-# and the other's paired DuckDB read. Both queries() and oracle_sql()
-# bake the path at build time, so the override is scoped to exactly
-# these two dicts and restored immediately (modules built earlier or
-# later in the same process keep the default, themselves consistent).
-_SCOPED = {
-    "SPARK_GRAFT_PCAREC1_SNAPSHOT": "/tmp/spark_graft_pcarec1_snapshot_sf01.parquet",
-    # same reasoning for the daily-rollup artifact the roll1/roll2
-    # entries build at call time
-    "SPARK_GRAFT_ROLLUP_DIR": "/tmp/spark_graft_rollup_sf01",
-}
-_prev = {k: os.environ.get(k) for k in _SCOPED}
-os.environ.update(_SCOPED)
-try:
-    QUERIES = entrymod.queries()
-    ORACLES = entrymod.oracle_sql()
-finally:
-    for k, v in _prev.items():
-        if v is None:
-            del os.environ[k]
-        else:
-            os.environ[k] = v
+QUERIES = entrymod.queries()
+ORACLES = entrymod.oracle_sql()
 
 
 @pytest.fixture(scope="module")

@@ -91,15 +91,6 @@ def test_hll_union_of_sketches_is_sketch_of_union(spark, events):
     assert merged == oneshot
 
 
-def test_snapshot_paths_are_pid_scoped(monkeypatch):
-    import os
-
-    monkeypatch.delenv("SPARK_GRAFT_SKETCH_SNAPSHOT_DIR", raising=False)
-    assert str(os.getpid()) in sa.sketch_snapshot_dir()
-    monkeypatch.setenv("SPARK_GRAFT_SKETCH_SNAPSHOT_DIR", "/tmp/explicit")
-    assert sa.adrec1_snapshot_path() == "/tmp/explicit/adrec1.parquet"
-
-
 def test_mgrec1_within_bound_on_clean_fixture(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = sa.mgrec1_heavy_hitter_audit(docs, str(tmp_path / "mg.parquet")).collect()

@@ -94,19 +94,6 @@ def test_quality_score_ranges(docs):
     assert rows[1]["stopword_ratio"] > rows[4]["stopword_ratio"]  # 'the'-heavy text
 
 
-def test_media_features_batch_shape(docs):
-    media = mm.media_table(docs)
-    feats = mm.extract_features(media)
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert set(rows) == {1, 2, 3, 4, 5}
-    for media_id, r in rows.items():
-        assert r["n_bytes"] > 0
-        assert len(r["features"]) == 4
-        assert r["features"][0] == float(r["n_bytes"])
-    # payload column must NOT survive into the feature output
-    assert "payload" not in feats.columns
-
-
 def test_media_decode_wav_roundtrip():
     """REAL decode: a synthesized PCM WAV parses back to its true sample
     rate, channel count, duration, and a nonzero RMS for a sine tone."""
@@ -432,34 +419,6 @@ def test_lsh_hot_bucket_cap(spark):
     capped_pairs = {(r["doc_a"], r["doc_b"]) for r in capped}
     assert (100, 101) in capped_pairs  # small bucket unaffected
     assert not any(a < 100 and b < 100 for a, b in capped_pairs)  # hot clique dropped
-
-
-def test_feature_hashed_vectors_feed_ann_end_to_end(spark, sf_dir):
-    """text→vector→similarity-search with no model: densified fh1
-    vectors drive knn_bruteforce, and ground truth comes from the dedup
-    family — a doc with an EXACT duplicate has an identical hashed
-    vector, so its duplicate must surface as a cos≈1.0 neighbor."""
-    from csv_crm_upload_spark.analytics.textstats import feature_hash_vectors
-    from csv_crm_upload_spark.sources.tables import load_table
-
-    base = load_table(spark, sf_dir, "documents")
-    # plant an exact duplicate of doc 0 under a fresh id: identical text
-    # ⇒ identical hashed vector ⇒ must surface as a cos=1.0 neighbor
-    clone = base.filter(F.col("doc_id") == 0).select(
-        F.lit(999_999).alias("doc_id"), *[c for c in base.columns if c != "doc_id"]
-    )
-    docs = base.unionByName(clone)
-    vecs = feature_hash_vectors(docs).persist()
-    try:
-        n_docs = docs.filter(F.col("text").isNotNull()).count()
-        assert vecs.count() == n_docs  # every doc with text gets a vector
-        assert vecs.select(F.size("embedding")).distinct().collect()[0][0] == 64
-
-        hits = sim.knn_bruteforce(vecs, query_ids=[0], k=3).collect()
-        by_vec = {r["vec_id"]: r["cos_sim"] for r in hits}
-        assert by_vec.get(999_999) == 1.0, by_vec
-    finally:
-        vecs.unpersist()
 
 
 def test_span_dedup_excises_repeated_boilerplate(spark):

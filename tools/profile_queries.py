@@ -35,11 +35,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="profile")
     spark.sparkContext.setLogLevel("ERROR")
-    os.environ.setdefault(
-        "SPARK_GRAFT_PCAREC1_SNAPSHOT",
-        "/tmp/spark_graft_pcarec1_snapshot_prof.parquet",
-    )
-    os.environ.setdefault("SPARK_GRAFT_ROLLUP_DIR", "/tmp/spark_graft_rollup_prof")
     queries = entrymod.queries()
     # warm-up: prime JVM/codegen/parquet footers like bench.py does
     queries["a1_count"](spark, sf_dir).collect()
