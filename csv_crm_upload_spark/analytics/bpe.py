@@ -256,9 +256,10 @@ def bpe4_lang_fertility(
 # vocab-bounded Sennrich loop, ~log-corpus rows). Incremental ≡ rebuild
 # is bit-exact: same summed counts → same vocab → same deterministic
 # merges. Every epoch is a fully-merged snapshot (base_epoch == epoch,
-# the NB-model layout). Nothing reclaims the snapshots an append (CLI
-# `bpe-train --append`) or a rebuild supersedes;
-# manifest.gc_stale_epochs is the library call that does.
+# the NB-model layout). CLI `bpe-train` (build or `--append`) reclaims
+# the snapshots it supersedes with manifest.gc_stale_epochs after its
+# commit; library callers of save_bpe_model/update_bpe_model call it
+# themselves.
 # ---------------------------------------------------------------------------
 
 LAYOUT = Layout(snapshots={"vocab": (), "merges": ()})

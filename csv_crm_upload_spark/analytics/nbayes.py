@@ -150,9 +150,9 @@ def nb1_langid_confusion(documents: DataFrame) -> DataFrame:
 # epoch is a fully-merged snapshot (unlike the delta-chained postings of
 # the text index, the model IS vocab-sized, so a merged snapshot costs the
 # same O(vocab x L) pass a delta merge would). base_epoch == epoch always.
-# Nothing reclaims the snapshots an append (CLI `nb-train --append`) or a
-# rebuild supersedes; manifest.gc_stale_epochs is the library call that
-# does.
+# CLI `nb-train` (build or `--append`) reclaims the snapshots it
+# supersedes with manifest.gc_stale_epochs after its commit; library
+# callers of save_nb_model/update_nb_model call it themselves.
 # ---------------------------------------------------------------------------
 
 LAYOUT = Layout(

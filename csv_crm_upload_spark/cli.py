@@ -375,7 +375,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{r['probe_doc_id']}\t{r['indexed_doc_id']}\t{r['n_shared']}")
         return 0
     if args.cmd == "bpe-train":
-        from csv_crm_upload_spark.analytics.bpe import save_bpe_model, update_bpe_model
+        from csv_crm_upload_spark.analytics.bpe import LAYOUT, save_bpe_model, update_bpe_model
+        from csv_crm_upload_spark.operators.manifest import gc_stale_epochs
 
         docs = spark.read.parquet(args.docs)
         if args.append:
@@ -392,6 +393,7 @@ def main(argv: list[str] | None = None) -> int:
             save_bpe_model(
                 docs, args.out, steps=args.steps if args.steps is not None else 3
             )
+        gc_stale_epochs(args.out, LAYOUT)  # every epoch is a full snapshot
         print(f"model={args.out}")
         return 0
     if args.cmd == "bpe-apply":
@@ -404,7 +406,8 @@ def main(argv: list[str] | None = None) -> int:
             )
         return 0
     if args.cmd == "nb-train":
-        from csv_crm_upload_spark.analytics.nbayes import save_nb_model, update_nb_model
+        from csv_crm_upload_spark.analytics.nbayes import LAYOUT, save_nb_model, update_nb_model
+        from csv_crm_upload_spark.operators.manifest import gc_stale_epochs
 
         docs = spark.read.parquet(args.docs)
         if args.append:
@@ -422,6 +425,7 @@ def main(argv: list[str] | None = None) -> int:
                 docs, args.out,
                 n_buckets=args.buckets if args.buckets is not None else 64,
             )
+        gc_stale_epochs(args.out, LAYOUT)  # every epoch is a full snapshot
         print(f"model={args.out}")
         return 0
     if args.cmd == "nb-classify":

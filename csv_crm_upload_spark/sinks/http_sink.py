@@ -5,11 +5,20 @@ Reference behavior reproduced (crm/upload/uploader.go):
     exactly HTTP 201, client timeout 30 s (:20-21).
   * T4 (:161-170,77-97) — fibonacci backoff (1,2,3,5,8,… s) while the
     sink fails; reset after any success (:152-157).
-  * T5 (:17-18,47,133-150) — bounded concurrency (channel cap 25). In
-    Spark, partition-level parallelism replaces the hand-rolled queue:
-    `repartition(k).mapPartitions(...)` makes k partitions that each post
-    serially, so at most min(k, executor task slots) POSTs are in flight
-    at once — on a local[4] session that is 4, not 25.
+  * T5 (:17-18,47,133-150) — at most `concurrency` POSTs in flight
+    (channel cap 25). `upload_pending` splits the pending set into
+    min(concurrency, defaultParallelism) partitions, so all of them can
+    hold a task slot at once, and each partition posts from a thread
+    pool; the pool widths sum to exactly `concurrency`. Task slots do not
+    cap the in-flight count: on local[4] the 25 POSTs run as pools of
+    7, 6, 6 and 6.
+
+Retry policy: 5xx, 408 (request timeout), 429 (too many requests) and
+connection errors are transient and get the fib backoff up to
+`max_tries`. Any other 4xx means the sink refused this row as sent; a
+resend carries the same payload and gets the same answer, so it is final
+after one attempt with no sleep, and does not hold a pool slot through a
+backoff. The row stays pending, as every non-201 row does.
 
 Delivery semantics (SURVEY §2.9, judge-relevant): POST then flag-flip, so
 a crash between the 201 and the mark leaves `uploaded=false` and the row
@@ -19,9 +28,12 @@ reference's contract; we do not promise exactly-once to an HTTP sink.
 
 Implementation notes: uses only `urllib` (stdlib) so the container needs
 no extra packages; there is no connection pool — `_post_row` opens a new
-connection for every POST attempt. Per-partition code posts serially and
-returns (email, status, attempts) rows so the driver-side plan can
-compute the success set WITHOUT collecting payloads.
+connection for every POST attempt. A partition keeps at most two pool
+widths of rows submitted and streams each (email, status, attempts) row
+out as the row's last attempt finishes, so it never holds the whole
+partition; the driver-side plan computes the success set WITHOUT
+collecting payloads. An exception inside a POST thread fails the task,
+and with it the upload job, so no row's result goes missing silently.
 """
 
 from __future__ import annotations
@@ -31,6 +43,7 @@ import time
 import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -72,43 +85,69 @@ def _post_row(url: str, payload: dict, timeout: float) -> int:
         return -1  # connection-level failure
 
 
+def _is_final(status: int) -> bool:
+    """A 4xx other than 408/429: the sink refused the row itself, and a
+    resend of the same payload gets the same answer."""
+    return 400 <= status < 500 and status not in (408, 429)
+
+
+def _attempt(url: str, payload: dict, timeout: float, sleep, wait_s: float) -> int:
+    """One POST of a row, after `wait_s` of backoff (0 on a first attempt)."""
+    if wait_s:
+        sleep(wait_s)
+    return _post_row(url, payload, timeout)
+
+
 def upload_partition(
     rows: Iterable,
     crm_url: str,
     max_tries: int = 5,
     timeout: float = DEFAULT_TIMEOUT_S,
     sleep=time.sleep,
+    width: int = 1,
 ) -> Iterator[tuple[str, int, int]]:
-    """Serial POST loop for one partition; retries with fib backoff.
+    """POST one partition's rows from a pool of `width` threads.
 
-    Yields (email, final_status, attempts). Backoff resets after any
-    success, mirroring the reference's success-signal reset
-    (uploader.go:152-157).
+    Yields one (email, final_status, attempts) per input row, in
+    completion order. At most 2 × `width` rows are submitted and not yet
+    yielded, so the partition streams through. Each row runs its own fib
+    backoff (reset per row, as the reference resets after any success,
+    uploader.go:152-157); a retry joins the back of the pool's queue, so
+    a row's attempts do not all land at one thread's place in the sink's
+    arrival order. A POST thread's exception is re-raised here.
     """
     url = crm_url.rstrip("/") + "/customers"
-    for row in rows:
-        payload = {
-            "id": row["id"],
-            "first_name": row["first_name"],
-            "last_name": row["last_name"],
-            "email": row["email"],
-            "phone": row["phone"],
-        }
-        attempts = 0
-        status = -1
-        backoff = fibonacci_backoff(max_tries)
-        while attempts < max_tries:
-            attempts += 1
-            status = _post_row(url, payload, timeout)
-            if status == SUCCESS_STATUS or attempts >= max_tries:
-                # no backoff sleep after the FINAL failed attempt — a dead
-                # sink otherwise wastes an extra max-backoff per row
-                break
-            try:
-                sleep(next(backoff))
-            except StopIteration:  # pragma: no cover
-                break
-        yield (row["email"], status, attempts)
+    pool = ThreadPoolExecutor(max_workers=width)
+    live: dict = {}  # future -> (payload, attempts, backoff)
+
+    def submit(payload: dict, attempts: int, backoff: Iterator[float], wait_s: float) -> None:
+        live[pool.submit(_attempt, url, payload, timeout, sleep, wait_s)] = (payload, attempts, backoff)
+
+    rows = iter(rows)
+    more = True
+    try:
+        while True:
+            while more and len(live) < 2 * width:
+                row = next(rows, None)
+                more = row is not None
+                if more:
+                    payload = {c: row[c] for c in ("id", "first_name", "last_name", "email", "phone")}
+                    submit(payload, 1, fibonacci_backoff(max_tries), 0.0)
+            if not live:
+                return
+            done, _ = wait(live, return_when=FIRST_COMPLETED)
+            for f in done:
+                payload, attempts, backoff = live.pop(f)
+                status = f.result()
+                if status == SUCCESS_STATUS or _is_final(status) or attempts >= max_tries:
+                    # no backoff sleep after the FINAL failed attempt — a dead
+                    # sink otherwise wastes an extra max-backoff per row
+                    yield (payload["email"], status, attempts)
+                else:
+                    submit(payload, attempts + 1, backoff, next(backoff))
+    finally:
+        # on failure, drop the rows not yet started; wait out the POSTs in flight
+        pool.shutdown(cancel_futures=True)
 
 
 def upload_pending(
@@ -120,21 +159,25 @@ def upload_pending(
 ) -> DataFrame:
     """Distributed upload of the pending set; returns (email,status,attempts).
 
-    `repartition(concurrency)` bounds in-flight POSTs at
-    min(concurrency, task slots) (T5);
-    `mapPartitions` via DataFrame->RDD keeps the post loop off the driver
-    — no collect of the pending set, arbitrarily large pending sets
-    stream through executors.
+    At most `concurrency` POSTs are in flight (T5). The pending set is
+    repartitioned into `parts` = min(concurrency, defaultParallelism)
+    partitions, which can all hold a task slot at once; partition i posts
+    from a pool of `concurrency // parts + (i < concurrency % parts)`
+    threads, so the widths sum to exactly `concurrency`.
+    `mapPartitionsWithIndex` via DataFrame->RDD keeps the post loop off
+    the driver — no collect of the pending set, arbitrarily large
+    pending sets stream through executors.
     """
     spark = pending.sparkSession
     k = max(1, concurrency)
+    parts = min(k, spark.sparkContext.defaultParallelism)
 
-    def run(it):
-        return upload_partition(it, crm_url, max_tries=max_tries, sleep=sleep)
+    def run(i, it):
+        width = k // parts + (i < k % parts)
+        return upload_partition(it, crm_url, max_tries=max_tries, sleep=sleep, width=width)
 
-    result_rdd = pending.repartition(k).rdd.mapPartitions(run)
-    results = spark.createDataFrame(result_rdd, UPLOAD_RESULT_SCHEMA)
-    return results
+    result_rdd = pending.repartition(parts).rdd.mapPartitionsWithIndex(run)
+    return spark.createDataFrame(result_rdd, UPLOAD_RESULT_SCHEMA)
 
 
 def successes(results: DataFrame) -> DataFrame:

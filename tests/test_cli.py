@@ -135,8 +135,12 @@ def test_cli_nb_train_append_classify(spark, tmp_path, capsys, sf_dir):
 
     assert main(["nb-train", "--docs", half_a, "--out", model, "--buckets", "8"]) == 0
     e0 = read_manifest(model)["epoch"]
+    assert os.path.isdir(f"{model}/counts/epoch={e0}")
     assert main(["nb-train", "--docs", half_b, "--out", model, "--append"]) == 0
     assert read_manifest(model)["epoch"] == e0 + 1
+    # the superseded snapshot is reclaimed; the live one stays
+    assert not os.path.isdir(f"{model}/counts/epoch={e0}")
+    assert os.path.isdir(f"{model}/counts/epoch={e0 + 1}")
 
     assert main(["nb-classify", "--docs", half_b, "--model", model, "--limit", "5"]) == 0
     printed = [l for l in capsys.readouterr().out.splitlines() if "\t" in l]
@@ -147,6 +151,8 @@ def test_cli_nb_train_append_classify(spark, tmp_path, capsys, sf_dir):
 def test_cli_bpe_train_append_apply(spark, tmp_path, capsys, sf_dir):
     """bpe-train builds the tokenizer, --append folds a second shard
     (epoch advances), bpe-apply prints segmentation stats against it."""
+    import os
+
     from csv_crm_upload_spark.operators.manifest import read_manifest
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -158,8 +164,13 @@ def test_cli_bpe_train_append_apply(spark, tmp_path, capsys, sf_dir):
 
     assert main(["bpe-train", "--docs", half_a, "--out", model, "--steps", "2"]) == 0
     e0 = read_manifest(model)["epoch"]
+    assert os.path.isdir(f"{model}/vocab/epoch={e0}")
     assert main(["bpe-train", "--docs", half_b, "--out", model, "--append"]) == 0
     assert read_manifest(model)["epoch"] == e0 + 1
+    # the superseded snapshot is reclaimed; the live one stays
+    assert not os.path.isdir(f"{model}/vocab/epoch={e0}")
+    assert not os.path.isdir(f"{model}/merges/epoch={e0}")
+    assert os.path.isdir(f"{model}/vocab/epoch={e0 + 1}")
 
     assert main(["bpe-apply", "--docs", half_b, "--model", model, "--limit", "5"]) == 0
     printed = [l for l in capsys.readouterr().out.splitlines() if "\t" in l]

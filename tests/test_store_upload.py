@@ -5,12 +5,14 @@ with retry, SURVEY §2.9) and the FIXTURES.md §5 invariants."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.operators.mutate import finalize_columns
 from csv_crm_upload_spark.operators.store import CustomerStore
-from csv_crm_upload_spark.sinks.http_sink import fibonacci_backoff
+from csv_crm_upload_spark.sinks.http_sink import fibonacci_backoff, upload_partition, upload_pending
 from csv_crm_upload_spark.streaming.pipeline import run_upload_cycle
 from tests.mock_crm import MockCRM
 
@@ -93,6 +95,106 @@ def test_failed_only_rows_stay_pending(spark, tmp_path):
         marked = run_upload_cycle(store, crm.url, concurrency=1, max_tries=2, sleep=lambda s: None)
     assert marked == 0
     assert store.pending().count() == 5  # at-least-once: re-sent next cycle
+
+
+def _customers(n):
+    return [(100 + i, "f", "l", f"c{i}@x.com", str(i)) for i in range(n)]
+
+
+@pytest.mark.parametrize("concurrency,n_rows", [(1, 10), (8, 40)])
+def test_concurrency_bounds_posts_in_flight(spark, concurrency, n_rows):
+    """T5: `concurrency` caps the POSTs in flight at the sink. Above the
+    task-slot count the cap is still `concurrency`, not the slots."""
+    slots = spark.sparkContext.defaultParallelism
+    pending = spark.createDataFrame(_customers(n_rows), COLS)
+    with MockCRM(delay_s=0.2) as crm:
+        results = upload_pending(pending, crm.url, concurrency=concurrency, sleep=lambda s: None).collect()
+    assert len(results) == n_rows
+    if concurrency == 1:
+        assert crm.max_in_flight == 1
+    else:
+        assert crm.max_in_flight <= concurrency
+    if concurrency > slots:
+        assert crm.max_in_flight > slots
+
+
+def test_pool_yields_one_result_per_row_on_flaky_sink(spark):
+    rows = _customers(40)
+    with MockCRM(fail_every=3) as crm:
+        results = upload_pending(
+            spark.createDataFrame(rows, COLS), crm.url, concurrency=8, max_tries=10, sleep=lambda s: None
+        ).collect()
+    assert crm.failed > 0
+    assert sorted(r["email"] for r in results) == sorted(r[3] for r in rows)
+    assert {r["status"] for r in results} <= {201, 503}
+    # every 201 the sink sent is in the results, once
+    assert sorted(r["email"] for r in results if r["status"] == 201) == sorted(p["email"] for p in crm.received)
+
+
+def test_post_thread_exception_fails_cycle_and_marks_nothing(spark, tmp_path):
+    store = _fresh_store(spark, tmp_path)
+    version = store._current_version()
+
+    def exploding_sleep(s):
+        raise RuntimeError("injected failure inside a POST thread")
+
+    with MockCRM(fail_every=2) as crm:
+        with pytest.raises(Exception, match="injected failure inside a POST thread"):
+            run_upload_cycle(store, crm.url, concurrency=4, sleep=exploding_sleep)
+    assert store._current_version() == version
+    assert store.pending().count() == 5
+
+
+@pytest.mark.parametrize("status,final", [(400, True), (404, True), (408, False), (429, False), (503, False)])
+def test_4xx_other_than_408_429_is_final(status, final):
+    """A refused row (4xx but 408/429) gets one attempt and no backoff;
+    5xx, 408 and 429 keep the fib backoff up to max_tries."""
+    rows = [dict(zip(COLS, r)) for r in ROWS]
+    slept = []
+    with MockCRM(answer={"ann@x.com": status}) as crm:
+        results = {e: (s, a) for e, s, a in upload_partition(rows, crm.url, max_tries=4, sleep=slept.append, width=2)}
+    assert results.pop("ann@x.com") == (status, 1 if final else 4)
+    assert slept == ([] if final else [1.0, 2.0, 3.0])
+    assert results == {r[3]: (201, 1) for r in ROWS if r[3] != "ann@x.com"}
+    assert crm.total == len(ROWS) + (0 if final else 3)
+
+
+def test_refused_row_is_posted_once_and_stays_pending(spark, tmp_path):
+    store = _fresh_store(spark, tmp_path)
+    with MockCRM(answer={"ann@x.com": 400}) as crm:
+        marked = run_upload_cycle(store, crm.url, max_tries=5, sleep=lambda s: None)
+    assert marked == 4
+    assert crm.total == 5
+    assert [r["email"] for r in store.pending().collect()] == ["ann@x.com"]
+
+
+def test_crash_between_post_and_mark_resends_only_pending(spark, tmp_path, monkeypatch):
+    """A failure after the POSTs and before the flag flip leaves the rows
+    pending: the next cycle re-POSTs them, and only them."""
+    store = _fresh_store(spark, tmp_path)
+    late = [(6 + i, "late", "row", f"late{i}@x.com", str(6 + i)) for i in range(3)]
+    real_mark = store.mark_uploaded
+    calls = []
+
+    def mark_crashing_once(*a, **k):
+        calls.append(1)
+        if len(calls) == 2:  # the second cycle's mark
+            raise OSError("injected crash between POST and mark")
+        return real_mark(*a, **k)
+
+    monkeypatch.setattr(store, "mark_uploaded", mark_crashing_once)
+    with MockCRM() as crm:
+        assert run_upload_cycle(store, crm.url, sleep=lambda s: None) == 5
+        store.append(finalize_columns(spark.createDataFrame(late, COLS)))
+        with pytest.raises(OSError, match="injected crash"):
+            run_upload_cycle(store, crm.url, sleep=lambda s: None)
+        assert sorted(r["email"] for r in store.pending().collect()) == sorted(r[3] for r in late)
+        assert run_upload_cycle(store, crm.url, sleep=lambda s: None) == 3
+    posts = Counter(p["email"] for p in crm.received)
+    assert posts == {**{r[3]: 1 for r in ROWS}, **{r[3]: 2 for r in late}}
+    assert store.pending().count() == 0
+    flips = [h["metrics"]["rows_updated"] for h in store.history() if h["operation"] == "update"]
+    assert sorted(flips) == [3, 5]  # every email marked exactly once
 
 
 def test_write_lock_blocks_then_releases(spark, tmp_path):
