@@ -455,7 +455,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mmr1_diversified_topk": lambda s, sf: sim.mmr1_diversified_topk(
             _t("embeddings")(s, sf)
         ),
-        # exact rank-sum ROC-AUC of the lr1 gate (distributed_rank over
+        # exact rank-sum ROC-AUC of the lr1 gate (ordered.running over
         # the (p, doc_id) total order — never a single-task sort)
         "auc1_classifier_auc": lambda s, sf: logreg.auc1_classifier_auc(
             _t("documents")(s, sf)
@@ -544,7 +544,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # two-sample Kolmogorov-Smirnov drift on event values
         "ks1_value_drift": lambda s, sf: tpch.ks1_value_drift(_t("events")(s, sf)),
         # Wasserstein-1 drift (round 9): ks1's integral-norm cousin from
-        # the SAME distributed_prefix_sums CDF pass
+        # the SAME ordered.running CDF pass
         "w1d1_value_drift": lambda s, sf: tpch.w1d1_value_drift(_t("events")(s, sf)),
         "cvm1_value_drift": lambda s, sf: tpch.cvm1_value_drift(_t("events")(s, sf)),
         # round-10: PSI bins — the scorecard drift metric over exact
@@ -6130,7 +6130,7 @@ def oracle_sql() -> dict[str, str]:
         FROM s ORDER BY doc_id
     """
     # shard1: snake packing over the (tokens DESC, doc_id) total order —
-    # the rank is the same total order distributed_rank produces
+    # the rank is the same total order ordered.running produces
     q["shard1_balanced_shards"] = f"""
         WITH t AS (
           SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_toks

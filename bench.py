@@ -246,6 +246,17 @@ TABLES = [
 ]
 
 
+def warm_up(spark, sf_dir: str, queries: dict) -> None:
+    """Untimed warm-up: the scan-count primes the JVM and parquet
+    footers; one join+agg and one window query prime the shuffle
+    machinery and the codegen compiler, so the first timed queries
+    (q1/q3/q5 in run order) don't absorb session warm-up that the later
+    ones skip. Neither warm-up query is in HEADLINE or EXTRA."""
+    queries["a1_count"](spark, sf_dir).collect()
+    for wname in ("j1_brand_margin", "w5_order_gaps"):
+        queries[wname](spark, sf_dir).agg({"*": "count"}).collect()
+
+
 def _duckdb_timings(
     sf_dir: str, oracle: dict[str, str], prime: bool = False
 ) -> dict[str, float]:
@@ -295,14 +306,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
 
-    # warm-up (not counted): the scan-count primes the JVM and parquet
-    # footers; one join+agg and one window query prime the shuffle
-    # machinery and the codegen compiler, so the first timed queries
-    # (q1/q3/q5 in run order) don't absorb session warm-up that the later
-    # ones skip. Neither warm-up query is in HEADLINE or EXTRA.
-    queries["a1_count"](spark, sf_dir).collect()
-    for wname in ("j1_brand_margin", "w5_order_gaps"):
-        queries[wname](spark, sf_dir).agg({"*": "count"}).collect()
+    warm_up(spark, sf_dir, queries)
 
     # DuckDB anchor IMMEDIATELY BEFORE the headline pass (r12 verdict
     # ask #5): with the pre-extras and post anchors below, the HEADLINE

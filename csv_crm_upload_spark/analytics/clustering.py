@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csv_crm_upload_spark.analytics.ordered import running
+
 
 def kmeans_assignments(
     embeddings: DataFrame, k: int = 8, iters: int = 2
@@ -610,18 +612,16 @@ def prune1_prototype_pruning(
     cosine is one combining agg keyed by vec_id. The ranking strategy is
     CARDINALITY-ADAPTIVE (advice r7 — nothing bounds |labels| for a real
     corpus): a cheap label-count scan picks between
-    distributed_grouped_rank (few labels: group-prefixed range
+    a grouped `ordered.running` count (few labels: group-prefixed range
     partitioning + per-cell offsets — no per-label single-task window,
-    driver data n_parts · |labels| cells) and the plain hash-partitioned
+    driver data partitions · |labels| cells) and the plain hash-partitioned
     window (many labels: each partition is small, Spark's own windowing
     is the scale-correct plan, and neither the broadcast prototype join
     nor the cell-count collect would survive |labels| → corpus-order).
     The two plans are value-identical — same order keys, same tiebreak.
     Reference has no embedding surface; this extends the training-ops
     mandate (SURVEY.md §2 addendum)."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_grouped_rank
-
-    # one-column scan; the 1024 cut matches distributed_grouped_rank's
+    # one-column scan; the 1024 cut matches a grouped running count's
     # own contract (low-cardinality groups) and keeps the prototype
     # broadcast (|labels| · dims rows) comfortably under task memory
     n_labels = embeddings.select("label").distinct().count()
@@ -667,13 +667,13 @@ def prune1_prototype_pruning(
         .select("vec_id", "label", (cos6 + F.lit(0.0)).alias("cos_to_prototype"))
     )
     if low_card:
-        ranked = distributed_grouped_rank(
+        ranked, _ = running(
             scored,
-            ["label"],
             ["cos_to_prototype", "vec_id"],
-            "prune_rank",
-            count_col="n_label",
+            {"prune_rank": ("count", None)},
+            ["label"],
         )
+        ranked = ranked.withColumnRenamed("prune_rank_total", "n_label")
     else:
         from pyspark.sql import Window
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.analytics.fanout import fan_out
+from csv_crm_upload_spark.analytics.ordered import running
 from csv_crm_upload_spark.analytics.textstats import EN_STOPWORDS, norm_tokens
 
 FEATURES = ["intercept", "stopword_ratio", "len_capped", "avg_tok_len"]
@@ -180,14 +181,12 @@ def auc1_classifier_auc(documents: DataFrame, iters: int = 2) -> DataFrame:
     convention is bit-reproducible at any scale).
 
     Scale shape: map-only scoring (weights as plan literals), the
-    two-phase `distributed_rank` for the global rank (range-repartition
+    running count of `ordered.running` for the global rank (range-repartition
     + per-partition offsets — never a single-task sort over the
     corpus), then ONE 1-row aggregate; rank sums run in DECIMAL(38,0)
     because Σ rank ~ n²/2 overflows int64 past ~4·10⁹ rows. Output one
     row (n_pos, n_neg, auc), empty when either class is absent (0/0 is
     engine-divergent; both engines exclude identically)."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_rank
-
     # ONE tokenization pass: the persisted feature frame feeds training
     # AND scoring; the bounded result is pinned before the unpersist so
     # evaluation never re-derives the features (review r7)
@@ -202,7 +201,7 @@ def auc1_classifier_auc(documents: DataFrame, iters: int = 2) -> DataFrame:
     )
     p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 9)
     scored = feats.select("doc_id", "y", p.alias("p"))
-    ranked = distributed_rank(scored, ["p", "doc_id"], "rnk")
+    ranked, _ = running(scored, ["p", "doc_id"], {"rnk": ("count", None)})
     d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = ranked.agg(
         F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0)).cast("long").alias("n_pos"),

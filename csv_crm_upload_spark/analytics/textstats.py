@@ -15,6 +15,13 @@ from pyspark.sql import functions as F
 
 from csv_crm_upload_spark.functions.hashing import md5_60, md5_60_id
 from csv_crm_upload_spark.analytics.fanout import fan_out
+from csv_crm_upload_spark.analytics.ordered import (
+    grouped_ntile_expr,
+    ntile,
+    rank2x,
+    running,
+    value_counts,
+)
 
 # deterministic English stopword markers for the lang-ID heuristic
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -982,16 +989,14 @@ def batch1_length_buckets(documents: DataFrame, n_buckets: int = 16) -> DataFram
     sequences is what keeps padding waste low; this query quantifies it.
 
     All-integer arithmetic → engine-exact. The global NTILE runs as
-    distributed_ntile (range-repartition on (n_tokens, doc_id) +
+    ordered.ntile (range-repartition on (n_tokens, doc_id) +
     per-partition offset rank + closed-form bucket assignment) — no
     single-partition global sort at any scale; only per-partition counts
     reach the driver."""
-    from .tpch import distributed_ntile
-
     toks = fan_out(documents.filter(F.col("text").isNotNull())).select(
         "doc_id", F.size(_tokens()).alias("n_tokens")
     )
-    b = distributed_ntile(toks, ["n_tokens", "doc_id"], n_buckets, "bucket")
+    b = ntile(toks, ["n_tokens", "doc_id"], n_buckets, "bucket")
     return (
         b.groupBy("bucket")
         .agg(
@@ -1147,17 +1152,15 @@ def cur1_curriculum_phases(documents: DataFrame, q: int = 4) -> DataFrame:
     Composes the round-6 machinery: the per-doc key is ppl1's
     decimal-exact total_bits divided by the integer token count (one
     identical double division, rounded 9 dp), and the global NTILE runs
-    as distributed_ntile — range-repartitioned, never a single-task
+    as ordered.ntile — range-repartitioned, never a single-task
     sort. The (bpt, doc_id) order makes every phase boundary
     deterministic in both engines."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_ntile
-
     base = ppl1_unigram_logloss(documents)
     scored = base.select(
         "doc_id",
         F.round(F.col("total_bits") / F.col("n_tokens"), 9).alias("bpt"),
     )
-    phased = distributed_ntile(scored, ["bpt", "doc_id"], q, "phase")
+    phased = ntile(scored, ["bpt", "doc_id"], q, "phase")
     return (
         phased.groupBy("phase")
         .agg(
@@ -1864,11 +1867,10 @@ def heaps1_vocab_growth(documents: DataFrame, buckets: int = 10) -> DataFrame:
     first appears (min doc_id per 60-bit token hash — one keyed combining
     agg), so cum_types at a checkpoint is a plain SUM of per-bucket
     new-type counts: two keyed shuffles + a 10-row cumsum, nothing
-    corpus-sized ordered. Bucketing is distributed_ntile (range
+    corpus-sized ordered. Bucketing is ordered.ntile (range
     repartition — never a single-task global window); the final window
     orders `buckets` rollup rows, bounded by the parameter, not the
     corpus."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_ntile
     from pyspark.sql import Window
 
     live = fan_out(documents.filter(F.col("text").isNotNull()))
@@ -1882,7 +1884,7 @@ def heaps1_vocab_growth(documents: DataFrame, buckets: int = 10) -> DataFrame:
     per_doc = live.select(
         "doc_id", F.size(_norm_tokens()).cast("long").alias("n_toks")
     ).join(new_types, "doc_id", "left")
-    bucketed = distributed_ntile(per_doc, ["doc_id"], buckets, "bucket")
+    bucketed = ntile(per_doc, ["doc_id"], buckets, "bucket")
     g = bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_toks").alias("s_t"),
@@ -1909,7 +1911,7 @@ def cov1_vocab_coverage(
     (coverage(V) near 1 says a V-type vocab OOVs almost nothing).
 
     Scale shape: one combining token-count agg (keys are 60-bit
-    hashes), then the two-phase distributed_rank for the frequency
+    hashes), then a running count for the frequency
     rank — range-repartitioned, never a single-task sort over the
     vocabulary — a map-only checkpoint-bucket assignment, and a
     ≤len(checkpoints)-row cumsum. Types ranked past the last
@@ -1917,7 +1919,6 @@ def cov1_vocab_coverage(
     Checkpoints with no types in their rank band (vocab smaller than
     the previous checkpoint) are absent in BOTH engines — the curve is
     data-derived, not padded."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_rank
     from pyspark.sql import Window
 
     toks = fan_out(documents.filter(F.col("text").isNotNull())).select(
@@ -1927,8 +1928,10 @@ def cov1_vocab_coverage(
         F.count(F.lit(1)).alias("n")
     )
     total = counts.agg(F.sum("n").alias("n_total"))
-    ranked = distributed_rank(
-        counts.withColumn("neg_n", -F.col("n")), ["neg_n", "th"], "rnk"
+    ranked, _ = running(
+        counts.withColumn("neg_n", -F.col("n")),
+        ["neg_n", "th"],
+        {"rnk": ("count", None)},
     )
     bucket = F.lit(None).cast("int")
     for cp in sorted(checkpoints, reverse=True):
@@ -2096,15 +2099,10 @@ def ccnet1_perplexity_buckets(documents: DataFrame, q: int = 3) -> DataFrame:
 
     Composes the round-7 per-group machinery: bits-per-token is ppl1's
     decimal-exact sum divided once (9 dp), ranking is
-    distributed_grouped_rank (group-prefixed range partitioning — a
+    a grouped running count (group-prefixed range partitioning — a
     handful of languages never funnel through single tasks), the bucket
     is the closed-form grouped_ntile_expr, and NULL langs form their own
     group on both engines (the window's NULL-partition semantics)."""
-    from csv_crm_upload_spark.analytics.tpch import (
-        distributed_grouped_rank,
-        grouped_ntile_expr,
-    )
-
     base = ppl1_unigram_logloss(documents)
     scored = base.join(
         documents.select("doc_id", "lang"), "doc_id"
@@ -2115,10 +2113,8 @@ def ccnet1_perplexity_buckets(documents: DataFrame, q: int = 3) -> DataFrame:
             "bpt"
         ),
     )
-    ranked = distributed_grouped_rank(
-        scored, ["lang"], ["bpt", "doc_id"], "_rn", count_col="_gn"
-    )
-    phase = grouped_ntile_expr("_rn", "_gn", q)
+    ranked, _ = running(scored, ["bpt", "doc_id"], {"_rn": ("count", None)}, ["lang"])
+    phase = grouped_ntile_expr("_rn", "_rn_total", q)
     named = F.when(phase == 1, F.lit("head")).when(
         phase == q, F.lit("tail")
     ).otherwise(F.lit("middle"))
@@ -2179,18 +2175,18 @@ def shard1_balanced_shards(documents: DataFrame, n_shards: int = 8) -> DataFrame
     document of the same rank-stratum mix, with NO driver-side greedy
     loop to serialize.
 
-    Scale: ranking is distributed_rank (range repartition — never a
+    Scale: ranking is a running count (range repartition — never a
     single-task global sort); the shard id is a pure integer expression
     of the rank; the readout is one ≤n_shards-group agg. Returns the
     per-shard manifest (doc/token totals) — the writer would
     repartition on shard_id and write partitionBy the same column."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_rank
-
     sized = fan_out(documents.filter(F.col("text").isNotNull())).select(
         "doc_id", F.size(_norm_tokens()).cast("long").alias("n_toks")
     )
-    ranked = distributed_rank(
-        sized.withColumn("_neg", -F.col("n_toks")), ["_neg", "doc_id"], "rnk"
+    ranked, _ = running(
+        sized.withColumn("_neg", -F.col("n_toks")),
+        ["_neg", "doc_id"],
+        {"rnk": ("count", None)},
     )
     pos = (F.col("rnk") - 1) % (2 * n_shards)
     shard = F.when(pos < n_shards, pos).otherwise(2 * n_shards - 1 - pos).cast("int")
@@ -3122,8 +3118,8 @@ def mwu1_mann_whitney(documents: DataFrame) -> DataFrame:
     ("what fraction of cross-source doc pairs go the expected way").
 
     Scale shape: kw1's discipline on the two-source pool — one
-    value-grain combining agg + one distributed_prefix_sums pass for
-    the 2x ranks (tie sum rides the same pin), a rank join back, one
+    rank2x pass for the 2x ranks (tie sum rides the same pin), a rank
+    join back, one
     per-source agg checkpointed at 2 rows.
 
     Cross-engine exactness: doubled ranks keep U doubled an exact
@@ -3148,20 +3144,9 @@ def mwu1_mann_whitney(documents: DataFrame) -> DataFrame:
         )
     sa, sb = top[0]["source"], top[1]["source"]
     pool = base.filter(F.col("source").isin([sa, sb]))
-    gv = pool.groupBy("x").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    # tpch hosts the distributed rank machinery; the import is lazy to
-    # keep the module graph acyclic (tpch does not import textstats)
-    from csv_crm_upload_spark.analytics.tpch import distributed_prefix_sums
-
-    cgrid, _ = distributed_prefix_sums(gv, ["x"], ["cnt"], ["cum"])
-    r = cgrid.select(
-        "x",
-        (F.lit(2) * (F.col("cum") - F.col("cnt")) + F.col("cnt") + F.lit(1))
-        .cast("long")
-        .alias("r2"),
-    )
+    r = rank2x(pool, "x")
     per = (
-        pool.join(r, "x")
+        pool.join(r.select("x", "r2"), "x")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -3169,7 +3154,7 @@ def mwu1_mann_whitney(documents: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    ties = cgrid.agg(
+    ties = r.agg(
         F.sum(
             F.col("cnt").cast(d38) * F.col("cnt").cast(d38) * F.col("cnt").cast(d38)
             - F.col("cnt").cast(d38)
@@ -3229,7 +3214,7 @@ def qq1_source_length_qq(documents: DataFrame) -> DataFrame:
     ((q·N + 99) // 100 — no float q·N whose last ulp could flip ceil).
 
     Scale shape: one sizes agg picks the pair; per source ONE
-    distinct-value combining agg + ONE distributed_prefix_sums pass;
+    distinct-value combining agg + ONE running-sum pass;
     the nine thresholds ride in as integer literals and the probe is
     a ≤|distinct|-row filter + min per decile. No buffered
     percentile state anywhere.
@@ -3256,17 +3241,10 @@ def qq1_source_length_qq(documents: DataFrame) -> DataFrame:
         (top[0]["source"], top[0]["n"]),
         (top[1]["source"], top[1]["n"]),
     )
-    from csv_crm_upload_spark.analytics.tpch import distributed_prefix_sums
-
     spark = documents.sparkSession
 
     def _pctls(src: str, n: int, out: str) -> DataFrame:
-        gv = (
-            base.filter(F.col("source") == src)
-            .groupBy("x")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        cgrid, _ = distributed_prefix_sums(gv, ["x"], ["cnt"], ["cum"])
+        cgrid, _ = value_counts(base.filter(F.col("source") == src), "x")
         spine = spark.createDataFrame(
             [(q * 10, (q * 10 * n + 99) // 100) for q in range(1, 10)],
             "decile long, k long",
@@ -3392,7 +3370,7 @@ def key1_source_keyness(
     Scale shape: ONE (source, token) combining agg (checkpointed,
     vocab-bounded); corpus marginals are re-combines of it; the
     scored candidate table is vocab-grain and the per-source top-k
-    rides distributed_grouped_rank (group-prefixed range partitioning
+    rides a grouped running count (group-prefixed range partitioning
     — no single-task per-source funnel).
 
     Cross-engine exactness: all contingency cells exact LONGS; G² is
@@ -3450,11 +3428,7 @@ def key1_source_keyness(
         F.when(over, F.lit("over")).otherwise(F.lit("under")).alias("direction"),
         (-(F.round(g2, 6) + F.lit(0.0))).alias("_negk"),
     )
-    from csv_crm_upload_spark.analytics.tpch import distributed_grouped_rank
-
-    ranked = distributed_grouped_rank(
-        scored, ["source"], ["_negk", "tok"], "rank"
-    )
+    ranked, _ = running(scored, ["_negk", "tok"], {"rank": ("count", None)}, ["source"])
     return (
         ranked.filter(F.col("rank") <= k)
         .select(

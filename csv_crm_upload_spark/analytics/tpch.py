@@ -26,6 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from csv_crm_upload_spark.analytics.ordered import (
+    grouped_ntile_expr,
+    ntile,
+    rank2x,
+    running,
+    value_counts,
+)
+
 
 def _dec(col: str, prec: int = 18, scale: int = 4) -> F.Column:
     return F.col(col).cast(f"decimal({prec},{scale})")
@@ -330,27 +338,25 @@ def w3_order_quartiles(orders: DataFrame) -> DataFrame:
     o_orderstatus has THREE distinct values, so the naive
     `Window.partitionBy("o_orderstatus")` funnels ~a third of all orders
     through one task — the same straggler class as a global ordered
-    window, split three ways. The scale-correct form is
-    `distributed_grouped_rank` (group-prefixed range partitioning +
+    window, split three ways. The scale-correct form is a grouped
+    `ordered.running` count (group-prefixed range partitioning +
     per-cell offsets) and the ANSI closed forms of both readouts:
     percent_rank = (rank−1)/(n−1) — ranks are unique here because the
     order key ends in o_orderkey — and ntile(4) via the exact integer
     bucket formula. Bit-identical to the windowed oracle."""
-    ranked = distributed_grouped_rank(
+    ranked, _ = running(
         orders.select("o_orderkey", "o_orderstatus", "o_totalprice"),
-        ["o_orderstatus"],
         ["o_totalprice", "o_orderkey"],
-        "_rn",
-        count_col="_gn",
+        {"_rn": ("count", None)},
+        ["o_orderstatus"],
     )
-    pr = F.when(F.col("_gn") > 1, (F.col("_rn") - 1) / (F.col("_gn") - 1)).otherwise(
-        F.lit(0.0)
-    )
+    n = F.col("_rn_total")
+    pr = F.when(n > 1, (F.col("_rn") - 1) / (n - 1)).otherwise(F.lit(0.0))
     return ranked.select(
         "o_orderkey",
         "o_orderstatus",
         F.round(pr, 6).alias("pr"),
-        grouped_ntile_expr("_rn", "_gn", 4).alias("quartile"),
+        grouped_ntile_expr("_rn", "_rn_total", 4).alias("quartile"),
     )
 
 
@@ -1371,8 +1377,8 @@ def tsen1_daily_trend(events: DataFrame) -> DataFrame:
 
     Scale shape: the pairwise self-join runs on the CALENDAR-bounded
     spine (n_days rows → n_days² /2 pairs — bounded by time span, not
-    corpus size; a 10-year span is ~6.6M pairs). The median rank comes
-    from distributed_rank (range-repartition + offsets), never a
+    corpus size; a 10-year span is ~6.6M pairs). The median rank is a
+    running count (range-repartition + offsets), never a
     single-partition global window."""
     daily, spine = _daily_spine(events)
     filled = (
@@ -1402,9 +1408,10 @@ def tsen1_daily_trend(events: DataFrame) -> DataFrame:
             .alias("sgn"),
         )
     )
-    ranked, n_pairs = _distributed_rank_and_total(
-        pairs, ["slope", "day_a", "day_b"], "_rn"
+    ranked, totals = running(
+        pairs, ["slope", "day_a", "day_b"], {"_rn": ("count", None)}
     )
+    n_pairs = totals["_rn"]
     if n_pairs == 0:
         return ranked.select(
             F.col("n_days"),
@@ -1433,7 +1440,7 @@ def cpd1_mean_shift(events: DataFrame) -> DataFrame:
     magnitude of the level change is read straight off the row.
 
     Cross-engine exactness: prefix sums of counts and day indexes are
-    exact longs (distributed_prefix_sums — no single-partition window);
+    exact longs (a running sum — no single-partition window);
     μ is ONE double division of exact integers; each deviation
     S_t = cum_c − t·μ is computed identically both engines and rounded
     to 9 dp BEFORE the argmax comparison; the best split breaks |S|
@@ -1451,10 +1458,10 @@ def cpd1_mean_shift(events: DataFrame) -> DataFrame:
         "n_days",
         "tot",
     )
-    pre, totals = distributed_prefix_sums(
-        filled, ["day"], ["c", "one"], ["cum_c", "cum_n"]
+    pre, totals = running(
+        filled, ["day"], {"cum_c": ("sum", "c"), "cum_n": ("sum", "one")}
     )
-    n_days, tot = totals.get("one", 0), totals.get("c", 0)
+    n_days, tot = totals["cum_n"], totals["cum_c"]
     if n_days < 2:
         return pre.select(
             F.col("n_days"),
@@ -1877,15 +1884,13 @@ def burst1_interarrival_burstiness(events: DataFrame) -> DataFrame:
     group has no dispersion to report).
 
     Scale shape: event_type is LOW-cardinality, so consecutive pairing
-    rides distributed_grouped_rank (group-prefixed range partitioning —
+    rides a grouped running count (group-prefixed range partitioning —
     never one task per type) and an equi-join of rn ↔ rn+1 on
     (type, rn); the moment agg is map-side combining."""
     ev = events.filter(F.col("ts").isNotNull()).select(
         "event_type", "ts", "event_id"
     )
-    ranked = distributed_grouped_rank(
-        ev, ["event_type"], ["ts", "event_id"], "rn"
-    )
+    ranked, _ = running(ev, ["ts", "event_id"], {"rn": ("count", None)}, ["event_type"])
     cur = ranked.select(
         "event_type", F.col("rn").alias("rn"), F.unix_timestamp("ts").alias("t1")
     )
@@ -2011,8 +2016,8 @@ def surv1_conversion_survival(events: DataFrame) -> DataFrame:
 
     Scale shape: three user-keyed aggs (one shuffle each), then
     everything runs at the duration-day grain (calendar-bounded):
-    both cumulative passes ride distributed_prefix_sums (range
-    partitioning — never a single-partition window)."""
+    both cumulative passes are running sums (range partitioning —
+    never a single-partition window)."""
     views = (
         events.filter((F.col("event_type") == "view") & F.col("ts").isNotNull())
         .groupBy("user_id")
@@ -2046,10 +2051,10 @@ def surv1_conversion_survival(events: DataFrame) -> DataFrame:
         F.sum("obs").cast("long").alias("n_ev"),
         F.sum(F.lit(1) - F.col("obs")).cast("long").alias("n_cens"),
     )
-    pre, totals = distributed_prefix_sums(
-        counts, ["t_days"], ["n_ev", "n_cens"], ["cum_ev", "cum_cens"]
+    pre, totals = running(
+        counts, ["t_days"], {"cum_ev": ("sum", "n_ev"), "cum_cens": ("sum", "n_cens")}
     )
-    n_total = totals.get("n_ev", 0) + totals.get("n_cens", 0)
+    n_total = totals["cum_ev"] + totals["cum_cens"]
     if n_total == 0:
         return events.sparkSession.createDataFrame(
             [],
@@ -2080,8 +2085,8 @@ def surv1_conversion_survival(events: DataFrame) -> DataFrame:
     evd2 = evd.select(
         "t_days", "n_ev", "n_cens", "n_at_risk", ln_nano.alias("ln_nano"), zf.alias("zf")
     )
-    km, _ = distributed_prefix_sums(
-        evd2, ["t_days"], ["ln_nano", "zf"], ["cum_ln", "cum_z"]
+    km, _ = running(
+        evd2, ["t_days"], {"cum_ln": ("sum", "ln_nano"), "cum_z": ("sum", "zf")}
     )
     surv = (
         F.when(F.col("cum_z") > 0, F.lit(0.0)).otherwise(
@@ -2454,20 +2459,19 @@ def out1_iqr_outliers(events: DataFrame) -> DataFrame:
     disagree on interpolation rules, but the k-th element of a totally
     ordered set is engine-independent. event_type has ~5 distinct values,
     so a partitionBy window would push ~20% of all events through one
-    task; ranks come from `distributed_grouped_rank` instead
+    task; ranks come from a grouped `ordered.running` count instead
     (group-prefixed range partitioning, per-cell offsets — no
     fact-sized single task anywhere). Then a |types|-row conditional agg
     for the fences (broadcast back) and a map-only filter."""
     vals = events.filter(F.col("value").isNotNull())
-    ranked = distributed_grouped_rank(
+    ranked, _ = running(
         vals.select("event_id", "event_type", "value"),
-        ["event_type"],
         ["value", "event_id"],
-        "rn",
-        count_col="n",
+        {"rn": ("count", None)},
+        ["event_type"],
     )
-    k1 = F.ceil(F.col("n") * 0.25).cast("long")
-    k3 = F.ceil(F.col("n") * 0.75).cast("long")
+    k1 = F.ceil(F.col("rn_total") * 0.25).cast("long")
+    k3 = F.ceil(F.col("rn_total") * 0.75).cast("long")
     fences = ranked.groupBy("event_type").agg(
         F.max(F.when(F.col("rn") == k1, F.col("value"))).alias("q1"),
         F.max(F.when(F.col("rn") == k3, F.col("value"))).alias("q3"),
@@ -2587,13 +2591,16 @@ def lag1_conversion_lag_quartiles(events: DataFrame) -> DataFrame:
             F.unix_timestamp("first_purchase") - F.unix_timestamp("first_view")
         ).cast("long").alias("lag_seconds"),
     )
-    # global row_number via the two-phase distributed rank (the converted-
+    # global row_number via a running count (the converted-
     # user set is fact-sized at scale — a bare Window.orderBy would sort
     # it in one task); the total count n falls out of the same pass as a
     # Python int, so each quartile pick is a literal-rank filter.
-    ranked, n = _distributed_rank_and_total(
-        lags.select("lag_seconds", "user_id"), ["lag_seconds", "user_id"], "rn"
+    ranked, totals = running(
+        lags.select("lag_seconds", "user_id"),
+        ["lag_seconds", "user_id"],
+        {"rn": ("count", None)},
     )
+    n = totals["rn"]
     import math
 
     qs = [("p25", 0.25), ("p50", 0.50), ("p75", 0.75)]
@@ -2676,210 +2683,6 @@ def co1_event_type_cooccurrence(events: DataFrame) -> DataFrame:
     )
 
 
-def distributed_rank(
-    df: DataFrame, order_cols: list[str], out_col: str, n_parts: int | None = None
-) -> DataFrame:
-    """Global ROW_NUMBER without the single-partition window collapse.
-
-    `Window.orderBy(...)` with no partitionBy funnels the whole input
-    through ONE task — the textbook global-sort scale trap. The
-    distributed form is two-phase: range-repartition on the order key,
-    rank WITHIN each (now globally ordered) partition, then add
-    per-partition row-count offsets. The only driver-side data is one
-    count per partition (bounded by n_parts, not by rows).
-
-    `order_cols` must end in a unique tiebreaker so the total order is
-    well-defined no matter where the range boundaries fall."""
-    ranked, _ = _distributed_rank_and_total(df, order_cols, out_col, n_parts)
-    return ranked
-
-
-def _distributed_rank_and_total(
-    df: DataFrame, order_cols: list, out_col: str, n_parts: int | None = None
-) -> tuple:
-    """distributed_rank plus the total row count (already known from the
-    per-partition counts — no extra job)."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    # localCheckpoint FREEZES the range partitioning: repartitionByRange
-    # picks boundaries by sampling, so a lazy recompute after the counts
-    # were collected could land rows in different partitions and corrupt
-    # the offsets. Materializing once pins partition contents for both
-    # the count job and the later window job.
-    parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = {
-        r["_pid"]: r["n"]
-        for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if not offsets:
-        # empty input: zero-arg create_map() fails analysis; any literal
-        # map works since no row will ever look a pid up
-        offsets = {0: 0}
-    off = F.create_map(
-        *[F.lit(v) for pid in sorted(offsets) for v in (pid, offsets[pid])]
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = parted.withColumn(
-        out_col, (F.row_number().over(w) + off[F.col("_pid")]).cast("long")
-    ).drop("_pid")
-    return ranked, acc
-
-
-def distributed_ntile(
-    df: DataFrame,
-    order_cols: list,
-    q: int,
-    out_col: str,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Global NTILE(q) without the single-partition window collapse.
-
-    ANSI NTILE over n rows gives the first (n mod q) buckets
-    ceil(n/q) rows and the rest floor(n/q) — a pure closed-form
-    function of the global row number, so the scale-correct form is
-    distributed_rank (range-repartition + per-partition offsets)
-    followed by a map-only bucket formula. Bit-identical to
-    `ntile(q) OVER (ORDER BY ...)` in any ANSI engine given the same
-    total order; `order_cols` must end in a unique tiebreaker.
-
-    All bucket arithmetic is integer `div` (no float division), so the
-    assignment is exact at any n."""
-    ranked, n = _distributed_rank_and_total(df, order_cols, "_rn", n_parts)
-    # ONE encoding of the ANSI bucket formula: the global form is the
-    # grouped form with the (already-known) total as a literal column
-    return (
-        ranked.withColumn("_gn", F.lit(n).cast("long"))
-        .withColumn(out_col, grouped_ntile_expr("_rn", "_gn", q))
-        .drop("_rn", "_gn")
-    )
-
-
-def distributed_grouped_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    out_col: str,
-    count_col: str | None = None,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Per-group ROW_NUMBER for LOW-cardinality groups without funneling
-    each group through one task.
-
-    `Window.partitionBy(g).orderBy(...)` with few distinct g values (order
-    status: 3, event type: ~5) routes ~1/|g| of the corpus through ONE
-    task — the same straggler class as the global ordered window, just
-    split a handful of ways. The distributed form is the per-group analog
-    of `distributed_rank`: range-repartition on (group ++ order) — group-
-    prefixed range partitioning, so each group occupies a contiguous run
-    of partitions and every partition holds at most `rows/n_parts` rows
-    regardless of group skew — then rank within each (partition, group)
-    cell and add per-cell offsets. Driver-side data is one count per
-    (partition, group): bounded by n_parts · |groups|, never by rows.
-
-    `order_cols` must end in a unique tiebreaker (same contract as
-    `distributed_rank`). When `count_col` is given the output also carries
-    the group's TOTAL row count (already known from the collected cell
-    counts — no extra job), which is what percent_rank / ntile / exact
-    order-statistic selection need alongside the rank.
-
-    Use the plain partitionBy window when groups are high-cardinality
-    (per-user, per-doc): there each partition is small and Spark's own
-    hash-partitioned window is already the scale-correct plan."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    # localCheckpoint pins the sampled range boundaries — see
-    # _distributed_rank_and_total for why a lazy recompute would corrupt
-    # the offsets.
-    parted = (
-        df.repartitionByRange(
-            n_parts, *[F.col(c) for c in group_cols + order_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    cells = (
-        parted.groupBy("_pid", *group_cols)
-        .agg(F.count(F.lit(1)).alias("_cn"))
-        .collect()
-    )
-    # per-group cumulative offsets in pid order + per-group totals
-    totals: dict = {}
-    for r in cells:
-        key = tuple(r[c] for c in group_cols)
-        totals[key] = totals.get(key, 0) + r["_cn"]
-    offsets = []
-    running: dict = {}
-    for r in sorted(cells, key=lambda r: r["_pid"]):
-        key = tuple(r[c] for c in group_cols)
-        off = running.get(key, 0)
-        running[key] = off + r["_cn"]
-        offsets.append(
-            tuple(r[c] for c in ("_pid", *group_cols)) + (off, totals[key])
-        )
-    schema = T.StructType(
-        [parted.schema["_pid"]]
-        + [parted.schema[c] for c in group_cols]
-        + [
-            T.StructField("_off", T.LongType(), False),
-            T.StructField("_gn", T.LongType(), False),
-        ]
-    )
-    offs = spark.createDataFrame(offsets, schema)
-    w = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    # the (pid, group) re-exchange under the window is n_parts·|groups|
-    # keys with each cell capped at one range partition's rows — never a
-    # single-task collapse. The offsets join is NULL-SAFE on the group
-    # columns: Window.partitionBy (and the oracle's PARTITION BY) treat
-    # NULL as its own partition, so a plain equi-join would silently
-    # DROP every NULL-group row here (review r7).
-    o = offs.alias("_offs")
-    p = parted.alias("_parted")
-    cond = p["_pid"] == o["_pid"]
-    for g in group_cols:
-        cond = cond & p[g].eqNullSafe(o[g])
-    ranked = (
-        p.join(F.broadcast(o), cond)
-        .select(
-            *[p[c] for c in parted.columns],
-            o["_off"].alias("_off"),
-            o["_gn"].alias("_gn"),
-        )
-        .withColumn(out_col, (F.row_number().over(w) + F.col("_off")).cast("long"))
-        .drop("_pid", "_off")
-    )
-    if count_col is None:
-        return ranked.drop("_gn")
-    return ranked.withColumnRenamed("_gn", count_col)
-
-
-def grouped_ntile_expr(rn: str, n: str, q: int) -> F.Column:
-    """ANSI NTILE(q) as a closed-form expression of a per-group row-number
-    COLUMN NAME `rn` and group-size COLUMN NAME `n`: the first (n mod q)
-    buckets get ceil(n/q) rows, the rest floor(n/q) — identical to
-    `ntile(q) OVER (PARTITION BY g ORDER BY ...)` given the same total
-    order. Pure integer `div`/`%` arithmetic (no float division whose
-    rounding could flip a bucket boundary at 2^50-row groups), so the
-    assignment is exact at any n."""
-    base = f"({n} div {q})"
-    rem = f"({n} % {q})"
-    head = f"({rem} * ({base} + 1))"
-    return F.expr(
-        f"CAST(CASE WHEN {base} = 0 THEN {rn} "
-        f"WHEN {rn} <= {head} THEN (({rn} - 1) div ({base} + 1)) + 1 "
-        f"ELSE {rem} + (({rn} - 1 - {head}) div {base}) + 1 END AS INT)"
-    )
-
-
 def corr1_spearman_orders(orders: DataFrame) -> DataFrame:
     """Spearman rank correlation between a customer's order COUNT and
     total SPEND — "do frequent buyers spend more?" asked robustly (rank
@@ -2889,14 +2692,14 @@ def corr1_spearman_orders(orders: DataFrame) -> DataFrame:
     order with the custkey tiebreaker), so Σd² is an INTEGER — the only
     float is the final textbook formula rho = 1 − 6Σd²/(n(n²−1)), one
     identically-ordered IEEE expression rounded to 6 dp in both engines.
-    Ranking uses the two-phase distributed_rank, not a single-partition
+    Ranks are running counts (ordered.running), not a single-partition
     window; everything upstream is one groupBy shuffle on o_custkey."""
     per_cust = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("spend"),
     )
-    ranked = distributed_rank(per_cust, ["n_orders", "o_custkey"], "rx")
-    ranked = distributed_rank(ranked, ["spend", "o_custkey"], "ry")
+    ranked, _ = running(per_cust, ["n_orders", "o_custkey"], {"rx": ("count", None)})
+    ranked, _ = running(ranked, ["spend", "o_custkey"], {"ry": ("count", None)})
     d = F.col("rx") - F.col("ry")
     agg = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -2936,7 +2739,7 @@ def gini1_spend_concentration(orders: DataFrame) -> DataFrame:
     The whale-detection metric behind every marketplace health dashboard.
 
     G = (2·Σ(i·xᵢ) − (n+1)·Σxᵢ) / (n·Σxᵢ) over spend sorted ascending
-    with rank i. Ranks come from distributed_rank (no single-partition
+    with rank i. Ranks are a running count (no single-partition
     window); Σxᵢ and Σ(i·xᵢ) are EXACT decimal sums (rank·spend stays
     within decimal(38) — 18-digit rank cap times 18,2 spend), so the
     only float is the final formula, rounded to 6 dp identically in both
@@ -2944,7 +2747,7 @@ def gini1_spend_concentration(orders: DataFrame) -> DataFrame:
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("spend")
     )
-    ranked = distributed_rank(per_cust, ["spend", "o_custkey"], "rn")
+    ranked, _ = running(per_cust, ["spend", "o_custkey"], {"rn": ("count", None)})
     agg = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n_customers"),
         F.sum("spend").alias("s0"),
@@ -3295,19 +3098,20 @@ def win1_winsorized_prices(orders: DataFrame, lo: float = 0.05, hi: float = 0.95
 
     Same exact-quantile convention as out1: type-1 order statistics
     (ceil(q·n)-th smallest under a total order) — engine-independent,
-    no interpolation. Plan: the two cut points come from the two-phase
-    distributed rank (range-repartition + per-partition offsets — no
+    no interpolation. Plan: the two cut points come from a running
+    count (range-repartition + per-partition offsets — no
     single-task global sort; n is already known from the offset counts),
     a 1-row aggregate that broadcasts, then a map-only greatest/least
     clip riding the scan. The clip stage (the part that touches every
     row) is map-only either way."""
     import math
 
-    ranked, n = _distributed_rank_and_total(
+    ranked, totals = running(
         orders.select("o_orderkey", "o_totalprice"),
         ["o_totalprice", "o_orderkey"],
-        "rn",
+        {"rn": ("count", None)},
     )
+    n = totals["rn"]
     klo, khi = math.ceil(n * lo), math.ceil(n * hi)
     cuts = ranked.filter(F.col("rn").isin(klo, khi)).agg(
         F.max(F.when(F.col("rn") == klo, F.col("o_totalprice"))).alias("p_lo"),
@@ -3366,7 +3170,7 @@ def rfm1_customer_segments(orders: DataFrame, q: int = 4) -> DataFrame:
     then one row per (r, f, m) segment with its population and average
     spend.
 
-    Each NTILE runs as distributed_ntile (range-repartition +
+    Each NTILE runs as ordered.ntile (range-repartition +
     per-partition offset rank + closed-form bucket assignment), never a
     single-partition global sort — three keyed sorts of the
     customer-grained rollup, each spread over the cluster, then the
@@ -3386,14 +3190,14 @@ def rfm1_customer_segments(orders: DataFrame, q: int = 4) -> DataFrame:
         "frequency",
         "monetary",
     )
-    # DESC orders expressed as negated keys so repartitionByRange and the
-    # in-partition rank share one ascending direction
+    # DESC orders expressed as negated keys so the range partitioning
+    # and the in-partition rank share one ascending direction
     scored = scored.withColumn("_neg_f", -F.col("frequency")).withColumn(
         "_neg_m", F.col("monetary") * F.lit(-1)
     )
-    seg = distributed_ntile(scored, ["recency_days", "o_custkey"], q, "r_score")
-    seg = distributed_ntile(seg, ["_neg_f", "o_custkey"], q, "f_score")
-    seg = distributed_ntile(seg, ["_neg_m", "o_custkey"], q, "m_score")
+    seg = ntile(scored, ["recency_days", "o_custkey"], q, "r_score")
+    seg = ntile(seg, ["_neg_f", "o_custkey"], q, "f_score")
+    seg = ntile(seg, ["_neg_m", "o_custkey"], q, "m_score")
     seg = seg.select("o_custkey", "monetary", "r_score", "f_score", "m_score")
     # avg in integer CENTS: floor(cents/n + 0.5)/100 sidesteps Spark's
     # round-via-shortest-decimal divergence at half-cent boundaries
@@ -3488,70 +3292,30 @@ def ri1_referential_integrity(
     return out.orderBy("relationship")
 
 
-def distributed_prefix_sums(
-    df: DataFrame,
-    order_cols: list,
-    value_cols: list,
-    out_cols: list,
-    n_parts: int | None = None,
-    keep_pid: bool = False,
-) -> tuple:
-    """Global running sums over a total order WITHOUT a single-partition
-    window — the weighted sibling of _distributed_rank_and_total: range-
-    repartition on the order columns (pinned by an eager localCheckpoint
-    so the offset job and the window job see identical partitions),
-    per-partition running sums, then each partition adds the collected
-    cumulative offset of everything before it (n_parts·|value_cols|
-    driver cells). Returns (frame, totals dict) — the grand totals fall
-    out of the offset pass for free, so callers needing them (CDF
-    denominators, shares) pay no extra corpus scan. Values must be
-    integral (LONG sums — exact, order-free); `order_cols` must end in
-    a unique tiebreaker for a deterministic order.
-
-    NOTE (judge r8): the eager localCheckpoint and the offset collect
-    are TWO SPARK JOBS that run at query-CONSTRUCTION time, so callers'
-    queries() entries (ks1, pctl2, w1d1) are not lazily-planned single
-    jobs — the returned plan reads the checkpoint with the offsets and
-    totals already resolved as literals. Correct and driver-bounded
-    (n_parts · |value_cols| cells); the price of totals-as-literals."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    sums = {
-        r["_pid"]: [r[f"_s{i}"] or 0 for i in range(len(value_cols))]
-        for r in parted.groupBy("_pid")
-        .agg(*[F.sum(c).cast("long").alias(f"_s{i}") for i, c in enumerate(value_cols)])
-        .collect()
-    }
-    offsets, acc = {}, [0] * len(value_cols)
-    for pid in sorted(sums):
-        offsets[pid] = list(acc)
-        acc = [a + s for a, s in zip(acc, sums[pid])]
-    if not offsets:
-        offsets = {0: [0] * len(value_cols)}
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = parted
-    for i, (vc, oc) in enumerate(zip(value_cols, out_cols)):
-        off = F.create_map(
-            *[F.lit(v) for pid in sorted(offsets) for v in (pid, offsets[pid][i])]
+def _cdf_grid(events: DataFrame, type_a: str, type_b: str) -> tuple:
+    """The pooled distinct-value grid of two event types' non-NULL
+    `value`s: per value the counts (na, nb) and the running counts
+    (ca, cb), i.e. both empirical CDFs scaled by their totals, plus the
+    totals (ta, tb). One (value)-keyed combining agg + one running sum
+    (range partitioning, never a single-task ordered window); the
+    totals fall out of the same pass, so they ride into the caller's
+    plan as LITERALS. The frame keeps running's `_pid`."""
+    g = (
+        events.filter(
+            F.col("event_type").isin(type_a, type_b) & F.col("value").isNotNull()
         )
-        out = out.withColumn(
-            oc, (F.sum(vc).over(w) + off[F.col("_pid")]).cast("long")
+        .groupBy("value")
+        .agg(
+            F.sum(F.when(F.col("event_type") == type_a, 1).otherwise(0))
+            .cast("long")
+            .alias("na"),
+            F.sum(F.when(F.col("event_type") == type_b, 1).otherwise(0))
+            .cast("long")
+            .alias("nb"),
         )
-    totals = dict(zip(value_cols, acc))
-    # keep_pid: callers needing NEIGHBOR access across the total order
-    # (lead/lag, e.g. w1d1's grid gaps) retain the range-partition id so
-    # they can window within partitions and patch the boundaries from a
-    # bounded per-partition collect — never a single-task global window
-    return (out if keep_pid else out.drop("_pid")), totals
+    )
+    c, totals = running(g, ["value"], {"ca": ("sum", "na"), "cb": ("sum", "nb")})
+    return c, totals["ca"], totals["cb"]
 
 
 def ks1_value_drift(
@@ -3563,28 +3327,14 @@ def ks1_value_drift(
     over the pooled value grid, the distribution-free test a pipeline
     runs when a source's numeric feature silently changes shape.
 
-    Scale shape: one (value)-keyed combining agg builds the distinct-
-    value grid with per-type counts, then BOTH empirical CDFs come from
-    ONE distributed_prefix_sums pass (range partitioning, never a
-    single-task ordered window); the totals fall out of that pass's
-    offsets, so they ride into the plan as LITERALS — no second corpus
-    scan, no broadcast join. D needs NO rounding: the cumulative counts
+    Scale shape: `_cdf_grid` — one (value)-keyed combining agg and ONE
+    running-sum pass give both empirical CDFs, with the totals as plan
+    LITERALS — no second corpus scan, no broadcast join. D needs NO
+    rounding: the cumulative counts
     are exact longs, so F_a/F_b/|diff|/max are the same IEEE doubles in
     both engines. A side with zero observations returns an EMPTY frame
     (KS is undefined), identically cross-engine."""
-    v = events.filter(
-        F.col("event_type").isin(type_a, type_b) & F.col("value").isNotNull()
-    )
-    g = v.groupBy("value").agg(
-        F.sum(F.when(F.col("event_type") == type_a, 1).otherwise(0))
-        .cast("long")
-        .alias("na"),
-        F.sum(F.when(F.col("event_type") == type_b, 1).otherwise(0))
-        .cast("long")
-        .alias("nb"),
-    )
-    c, totals = distributed_prefix_sums(g, ["value"], ["na", "nb"], ["ca", "cb"])
-    ta, tb = totals["na"], totals["nb"]
+    c, ta, tb = _cdf_grid(events, type_a, type_b)
     spark = events.sparkSession
     if ta == 0 or tb == 0:
         return spark.createDataFrame([], "n_a long, n_b long, ks_d double")
@@ -3614,27 +3364,15 @@ def cvm1_value_drift(
     pooled mass sits on them. Normalized to [0, 1]; 0 iff the empirical
     CDFs agree on every pooled point.
 
-    Same single-pass shape as ks1 (grid agg + ONE
-    distributed_prefix_sums — no lead() even needed); each term is a
+    Same single-pass shape as ks1 (`_cdf_grid` — no lead() even
+    needed); each term is a
     pointwise IEEE function of exact longs and the N literal
     (bit-identical cross-engine), the sum is order-free nano-unit
     BIGINTs — bounded by 1e9·Σ(n_i/N) = 1e9, so the BIGINT can never
     overflow at ANY corpus size (the w1d1/adc discipline, made
     scale-proof by weighting inside the term). Zero-observation side →
     EMPTY frame, identically cross-engine."""
-    v = events.filter(
-        F.col("event_type").isin(type_a, type_b) & F.col("value").isNotNull()
-    )
-    g = v.groupBy("value").agg(
-        F.sum(F.when(F.col("event_type") == type_a, 1).otherwise(0))
-        .cast("long")
-        .alias("na"),
-        F.sum(F.when(F.col("event_type") == type_b, 1).otherwise(0))
-        .cast("long")
-        .alias("nb"),
-    )
-    c, totals = distributed_prefix_sums(g, ["value"], ["na", "nb"], ["ca", "cb"])
-    ta, tb = totals["na"], totals["nb"]
+    c, ta, tb = _cdf_grid(events, type_a, type_b)
     spark = events.sparkSession
     if ta == 0 or tb == 0:
         return spark.createDataFrame([], "n_a long, n_b long, cvm2 double")
@@ -3680,7 +3418,7 @@ def psi1_population_stability(
 
     Bin edges are EXACT nearest-rank deciles of the reference
     distribution (pctl2's pure-integer rank discipline — (q·n+99)//100
-    thresholds over ONE distributed_prefix_sums pass, never a buffered
+    thresholds over ONE running-sum pass, never a buffered
     global percentile), riding into the binning expression as literals.
     Binning is pure comparison counting (bin = #edges < value), so both
     engines bin identically. Zero-count bins are handled by the standard
@@ -3698,9 +3436,7 @@ def psi1_population_stability(
     va = events.filter(
         (F.col("event_type") == type_a) & F.col("value").isNotNull()
     ).select("value")
-    ga = va.groupBy("value").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    c, totals = distributed_prefix_sums(ga, ["value"], ["c"], ["cum"])
-    n_a = totals["c"]
+    c, n_a = value_counts(va, "value")
     spark = events.sparkSession
     empty = (
         "bin int, n_a long, n_b long, p_a double, p_b double, psi_term double"
@@ -3767,40 +3503,24 @@ def w1d1_value_drift(
     the TOTAL transport cost, the drift score that keeps responding as
     a shifted distribution drifts further (KS saturates at 1).
 
-    Exact in 1-D from the SAME machinery as ks1: one (value)-keyed
-    combining agg builds the distinct-value grid, ONE
-    distributed_prefix_sums pass yields both CDFs and the totals as
-    plan literals. The integral is the step-function sum
+    Exact in 1-D from the SAME grid as ks1 (`_cdf_grid`: both CDFs and
+    the totals as plan literals). The integral is the step-function sum
     Σ_i |F_a(v_i) − F_b(v_i)|·(v_{i+1} − v_i); the lead(value) runs
     INSIDE each range partition and the global last row of every
     partition takes the NEXT partition's min value from a bounded
-    n_parts-row collect riding as a map literal — no single-task
+    per-partition collect riding as a map literal — no single-task
     window. Determinism: per-gap terms are pointwise IEEE functions of
     exact longs and the shared grid (bit-identical cross-engine); the
     SUM is made order-free by the nano-unit BIGINT discipline
     (round(term·1e9) — exact, so DuckDB's unordered SUM agrees), then
     one 6-dp round. A side with zero observations returns an EMPTY
     frame (W1 undefined), identically cross-engine."""
-    v = events.filter(
-        F.col("event_type").isin(type_a, type_b) & F.col("value").isNotNull()
-    )
-    g = v.groupBy("value").agg(
-        F.sum(F.when(F.col("event_type") == type_a, 1).otherwise(0))
-        .cast("long")
-        .alias("na"),
-        F.sum(F.when(F.col("event_type") == type_b, 1).otherwise(0))
-        .cast("long")
-        .alias("nb"),
-    )
-    c, totals = distributed_prefix_sums(
-        g, ["value"], ["na", "nb"], ["ca", "cb"], keep_pid=True
-    )
-    ta, tb = totals["na"], totals["nb"]
+    c, ta, tb = _cdf_grid(events, type_a, type_b)
     spark = events.sparkSession
     if ta == 0 or tb == 0:
         return spark.createDataFrame([], "n_a long, n_b long, w1 double")
     # boundary patch: each present partition's last grid value neighbors
-    # the NEXT PRESENT partition's first — a bounded n_parts-row collect,
+    # the NEXT PRESENT partition's first — a bounded per-partition collect,
     # shipped as a map. Chained over the sorted present pids (not p+1):
     # RangePartitioner may leave a mid-chain partition empty, and a
     # p+1 lookup would silently drop that gap term and understate W1.
@@ -3877,7 +3597,7 @@ def pctl2_exact_value_percentiles(events: DataFrame) -> DataFrame:
     `percentile()` buffers every value of a group in a single aggregation
     state (fine per-status, fatal for a global percentile of a 100 TB
     column), while this shape is one distinct-value combining agg + ONE
-    distributed_prefix_sums pass + a map-only threshold probe.
+    running-sum pass + a map-only threshold probe.
 
     Thresholds are PURE-INTEGER nearest-rank ranks ((q·N + 99) // 100 —
     no float q·N whose last-ulp could flip ceil at exact multiples), and
@@ -3887,9 +3607,7 @@ def pctl2_exact_value_percentiles(events: DataFrame) -> DataFrame:
     cross-engine. An all-NULL column returns an EMPTY frame (percentiles
     of nothing are undefined), identically in both engines."""
     v = events.filter(F.col("value").isNotNull()).select("value")
-    g = v.groupBy("value").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    c, totals = distributed_prefix_sums(g, ["value"], ["c"], ["cum"])
-    n = totals["c"]
+    c, n = value_counts(v, "value")
     spark = events.sparkSession
     if n == 0:
         return spark.createDataFrame(
@@ -4002,7 +3720,7 @@ def mad1_value_mad(events: DataFrame) -> DataFrame:
     exact nearest-rank median of |x − m|.
 
     Scale shape: the pctl2 discipline twice — one distinct-value
-    combining agg + one distributed_prefix_sums pass per stage, a
+    combining agg + one running-sum pass per stage, a
     map-only |x − m| in between; the only driver state is the two
     scalars the next stage folds back in as literals. Never a
     single-partition sort, never a buffered percentile() state.
@@ -4013,9 +3731,7 @@ def mad1_value_mad(events: DataFrame) -> DataFrame:
     in both engines. The robust sigma is the single rounded product.
     An all-NULL column returns an EMPTY frame, identically."""
     v = events.filter(F.col("value").isNotNull()).select("value")
-    g = v.groupBy("value").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    c, totals = distributed_prefix_sums(g, ["value"], ["c"], ["cum"])
-    n = totals["c"]
+    c, n = value_counts(v, "value")
     spark = events.sparkSession
     empty = "n_values long, median double, mad double, sigma_robust double"
     if n == 0:
@@ -4025,16 +3741,16 @@ def mad1_value_mad(events: DataFrame) -> DataFrame:
         F.min(F.when(F.col("cum") >= F.lit(rank), F.col("value")))
     ).collect()[0][0]
     # the deviation grid re-groups the CHECKPOINTED distinct-value grid
-    # (value, c) instead of re-scanning the raw column (guide §1.2: one
+    # (value, cnt) instead of re-scanning the raw column (guide §1.2: one
     # unavoidable corpus pass, everything after at the distinct grain):
     # |v − m| is identical per distinct value, so summing the grid's
     # counts under abs(value − m) is exactly the per-row regroup.
     g2 = (
-        c.select(F.abs(F.col("value") - F.lit(float(m))).alias("dev"), "c")
+        c.select(F.abs(F.col("value") - F.lit(float(m))).alias("dev"), "cnt")
         .groupBy("dev")
-        .agg(F.sum("c").cast("long").alias("c"))
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    c2, _ = distributed_prefix_sums(g2, ["dev"], ["c"], ["cum"])
+    c2, _ = running(g2, ["dev"], {"cum": ("sum", "cnt")})
     mad = F.min(F.when(F.col("cum") >= F.lit(rank), F.col("dev")))
     return c2.agg(mad.alias("mad")).select(
         F.lit(n).cast("long").alias("n_values"),
@@ -4091,26 +3807,6 @@ def theil1_spend_inequality(orders: DataFrame) -> DataFrame:
     )
 
 
-def _rank2x(df: DataFrame, col: str) -> DataFrame:
-    """(value → 2·average-rank) for tie-corrected rank statistics:
-    average rank of a tied block = cum_before + (cnt+1)/2, so DOUBLING
-    it (2·cum_before + cnt + 1) keeps every rank an EXACT LONG —
-    Spearman/Pettitt arithmetic then runs on integers with no float
-    rank in sight. One distinct-value combining agg + one
-    distributed_prefix_sums pass; join back by value (≤|distinct|
-    rows, the pctl2 grain)."""
-    g = df.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    c, _ = distributed_prefix_sums(g, [col], ["cnt"], ["cum"])
-    return c.select(
-        col,
-        (
-            F.lit(2) * (F.col("cum") - F.col("cnt")) + F.col("cnt") + F.lit(1)
-        )
-        .cast("long")
-        .alias("r2"),
-    )
-
-
 def spr1_spearman_rank_corr(orders: DataFrame, customer: DataFrame) -> DataFrame:
     """Tie-corrected Spearman rank correlation between a customer's
     account balance and their orders' prices — "do rich-balance
@@ -4119,7 +3815,7 @@ def spr1_spearman_rank_corr(orders: DataFrame, customer: DataFrame) -> DataFrame
     The eval family's missing rank-space primitive (rbo1 compares two
     RANKINGS; this correlates two VALUE columns via ranks).
 
-    Scale shape: two _rank2x passes (distinct-value grain), a join of
+    Scale shape: two rank2x passes (distinct-value grain), a join of
     those ≤|distinct|-row rank tables back onto the pair stream (AQE
     broadcasts when the value grid is small, sort-merges otherwise —
     no hint, since a continuous column's distinct count can approach
@@ -4138,8 +3834,8 @@ def spr1_spearman_rank_corr(orders: DataFrame, customer: DataFrame) -> DataFrame
             F.col("o_totalprice").alias("x"), F.col("c_acctbal").alias("y")
         )
     )
-    rx = _rank2x(pairs, "x").withColumnRenamed("r2", "u")
-    ry = _rank2x(pairs, "y").withColumnRenamed("r2", "v")
+    rx = rank2x(pairs, "x").select("x", F.col("r2").alias("u"))
+    ry = rank2x(pairs, "y").select("y", F.col("r2").alias("v"))
     ranked = pairs.join(rx, "x").join(ry, "y")
     d38 = "decimal(38,0)"
     u, v = F.col("u").cast(d38), F.col("v").cast(d38)
@@ -4174,8 +3870,9 @@ def ptt1_pettitt_change_point(events: DataFrame) -> DataFrame:
     p ≈ 2·exp(−6K²/(n³+n²)).
 
     Scale shape: everything after the one day-grained combining agg
-    runs on the calendar-bounded spine — a _rank2x pass over ≤|days|
-    counts, one prefix-sum pass for W_t, and a TakeOrdered(1) for the
+    runs on the calendar-bounded spine — a rank2x pass over ≤|days|
+    counts, one running pass for W_t and the day index t, and a
+    TakeOrdered(1) for the
     argmax. Never a day² join (unlike tsen1's pair median, Pettitt is
     linear in days by the rank-sum identity).
 
@@ -4188,20 +3885,16 @@ def ptt1_pettitt_change_point(events: DataFrame) -> DataFrame:
         spine.join(daily, "day", "left")
         .select("day", F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c"))
     )
-    r = _rank2x(filled, "c")  # 2·avg-rank per distinct count value
+    r = rank2x(filled, "c")  # 2·avg-rank per distinct count value
     ranked = filled.join(F.broadcast(r), "c").select("day", "r2")
-    w, totals = distributed_prefix_sums(ranked, ["day"], ["r2"], ["w2"])
-    n = totals["r2"]  # Σ 2·rank = n·(n+1); recover n from the identity
-    import math
-
-    n_days = int((math.isqrt(4 * n + 1) - 1) // 2) if n else 0
+    t_idx, totals = running(
+        ranked, ["day"], {"w2": ("sum", "r2"), "t": ("count", None)}
+    )
+    n_days = totals["t"]
     if n_days < 2:
         return events.sparkSession.createDataFrame(
             [], "n_days long, change_day date, k_stat long, p_approx double"
         )
-    t_idx, _ = distributed_prefix_sums(
-        w.select("day", "w2", F.lit(1).alias("one")), ["day"], ["one"], ["t"]
-    )
     u2 = (F.col("w2") - F.col("t").cast("long") * F.lit(n_days + 1)).cast("long")
     candidates = t_idx.filter(F.col("t") < n_days).select(
         "day", u2.alias("u2"), F.abs(u2).alias("abs_u2")
@@ -4310,8 +4003,8 @@ def kw1_kruskal_wallis(documents: DataFrame) -> DataFrame:
     complement of anova1: immune to the heavy document-length tails
     that drag a mean.
 
-    Scale shape: spr1's discipline — one value-grain combining agg +
-    one distributed_prefix_sums pass build the 2x-rank table
+    Scale shape: spr1's discipline — one rank2x pass builds the 2x-rank
+    table
     (≤|distinct lengths| rows), a join back onto the (source, length)
     stream, then ONE source-keyed agg of exact integer rank sums; the
     tie-correction term re-combines the bounded value-grain table. No
@@ -4327,23 +4020,15 @@ def kw1_kruskal_wallis(documents: DataFrame) -> DataFrame:
     base = documents.filter(
         F.col("n_chars").isNotNull() & F.col("source").isNotNull()
     ).select("source", F.col("n_chars").cast("long").alias("x"))
-    # _rank2x inlined so the tie-correction re-reads the SAME
-    # checkpointed value-grain table the prefix pass pinned — the tie
-    # sum costs no second corpus agg
-    gv = base.groupBy("x").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    cgrid, _ = distributed_prefix_sums(gv, ["x"], ["cnt"], ["cum"])
-    r = cgrid.select(
-        "x",
-        (F.lit(2) * (F.col("cum") - F.col("cnt")) + F.col("cnt") + F.lit(1))
-        .cast("long")
-        .alias("r2"),
-    )
-    ranked = base.join(r, "x")
+    # the tie-correction re-reads the SAME checkpointed value-grain
+    # table the rank pass pinned — the tie sum costs no second corpus agg
+    r = rank2x(base, "x")
+    ranked = base.join(r.select("x", "r2"), "x")
     per = ranked.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("nj"),
         F.sum(F.col("r2").cast(d38)).cast(d38).alias("r2j"),
     ).localCheckpoint(eager=True)
-    ties = cgrid.agg(
+    ties = r.agg(
         F.sum(
             F.col("cnt").cast(d38) * F.col("cnt").cast(d38) * F.col("cnt").cast(d38)
             - F.col("cnt").cast(d38)
@@ -4382,82 +4067,6 @@ def kw1_kruskal_wallis(documents: DataFrame) -> DataFrame:
         (F.round(h, 6) + F.lit(0.0)).alias("h_stat"),
         h_adj.alias("h_adj"),
     )
-
-
-def distributed_prefix_extrema(
-    df: DataFrame,
-    order_cols: list,
-    value_col: str,
-    out_min: str,
-    out_max: str,
-    n_parts: int | None = None,
-):
-    """Global running MIN and MAX over a total order WITHOUT a
-    single-partition window — the extremum sibling of
-    distributed_prefix_sums: range-repartition on the order columns
-    (pinned by an eager localCheckpoint so the offset job and the
-    window job see identical partitions), per-partition running
-    extrema, then each partition folds in the collected extremum of
-    everything before it (n_parts driver cells per side). min/max are
-    associative AND idempotent, so unlike the sums sibling the offset
-    merge is a plain least/greatest — no exactness caveat at all.
-    `order_cols` must end in a unique tiebreaker."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    ext = {
-        r["_pid"]: (r["_mn"], r["_mx"])
-        for r in parted.groupBy("_pid")
-        .agg(F.min(value_col).alias("_mn"), F.max(value_col).alias("_mx"))
-        .collect()
-    }
-    if not ext:
-        # empty input: no offsets to fold and no rows to window — the
-        # untyped-null offset map would otherwise fail analysis
-        return (
-            parted.withColumn(out_min, F.col(value_col))
-            .withColumn(out_max, F.col(value_col))
-            .drop("_pid")
-        )
-    mins, maxs = {}, {}
-    run_mn, run_mx = None, None
-    for pid in sorted(ext):
-        mins[pid], maxs[pid] = run_mn, run_mx
-        mn, mx = ext[pid]
-        run_mn = mn if run_mn is None else min(run_mn, mn)
-        run_mx = mx if run_mx is None else max(run_mx, mx)
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    def _offmap(d):
-        pairs = []
-        for pid in sorted(d):
-            pairs.extend([F.lit(pid), F.lit(d[pid])])
-        return F.create_map(*pairs) if pairs else F.create_map(F.lit(0), F.lit(None))
-    out = (
-        parted.withColumn(
-            out_min,
-            F.least(
-                F.min(value_col).over(w),
-                F.coalesce(_offmap(mins)[F.col("_pid")], F.min(value_col).over(w)),
-            ),
-        )
-        .withColumn(
-            out_max,
-            F.greatest(
-                F.max(value_col).over(w),
-                F.coalesce(_offmap(maxs)[F.col("_pid")], F.max(value_col).over(w)),
-            ),
-        )
-        .drop("_pid")
-    )
-    return out
 
 
 def ktau1_kendall_tau(orders: DataFrame) -> DataFrame:
@@ -4556,9 +4165,9 @@ def cusum1_cusum_drift(events: DataFrame) -> DataFrame:
     prefix passes, no recursion and no day² work.
 
     Scale shape: one day-grained combining agg, then everything runs
-    on the calendar-bounded spine — ONE distributed_prefix_sums pass
-    (counts + day index together) and ONE distributed_prefix_extrema
-    pass; the two argmax probes are TakeOrdered(1).
+    on the calendar-bounded spine — ONE running-sum pass (counts + day
+    index together) and ONE running min/max pass; the two argmax probes
+    are TakeOrdered(1).
 
     Cross-engine exactness: scaling by n clears μ = T/n into integers
     — R'_t = n·P_t − t·T is an exact LONG, running extrema of exact
@@ -4572,10 +4181,8 @@ def cusum1_cusum_drift(events: DataFrame) -> DataFrame:
         F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c"),
         F.lit(1).alias("one"),
     )
-    pre, totals = distributed_prefix_sums(
-        filled, ["day"], ["c", "one"], ["p", "t"]
-    )
-    n, tot = totals["one"], totals["c"]
+    pre, totals = running(filled, ["day"], {"p": ("sum", "c"), "t": ("count", None)})
+    n, tot = totals["t"], totals["p"]
     if n < 2:
         return events.sparkSession.createDataFrame(
             [],
@@ -4591,7 +4198,7 @@ def cusum1_cusum_drift(events: DataFrame) -> DataFrame:
         .cast("long")
         .alias("r"),
     )
-    ext = distributed_prefix_extrema(r, ["day"], "r", "mn", "mx")
+    ext, _ = running(r, ["day"], {"mn": ("min", "r"), "mx": ("max", "r")})
     s = ext.select(
         "day",
         (F.col("r") - F.least(F.col("mn"), F.lit(0))).cast("long").alias("sp"),
@@ -4655,7 +4262,7 @@ def zord1_zorder_layout(lineitem: DataFrame, n_files: int = 64) -> DataFrame:
     are built in-plan here; no writer in the package clusters files by
     z-order.
 
-    Scale shape: distributed_ntile passes only (range repartition +
+    Scale shape: ordered.ntile passes only (range repartition +
     per-partition windows + bounded driver offsets — never a
     single-task global sort); per-file min/max is one ≤n_files-row
     combining agg per layout; span averages run at the n_files grain.
@@ -4673,8 +4280,8 @@ def zord1_zorder_layout(lineitem: DataFrame, n_files: int = 64) -> DataFrame:
         F.col("l_orderkey").alias("okey"),
         F.col("l_linenumber").alias("lno"),
     )
-    b1 = distributed_ntile(base, ["x", "okey", "lno"], 16, "bx")
-    b2 = distributed_ntile(b1, ["y", "okey", "lno"], 16, "by")
+    b1 = ntile(base, ["x", "okey", "lno"], 16, "bx")
+    b2 = ntile(b1, ["y", "okey", "lno"], 16, "by")
     bxm, bym = F.col("bx") - F.lit(1), F.col("by") - F.lit(1)
     z = F.lit(0)
     for i in range(4):
@@ -4690,7 +4297,7 @@ def zord1_zorder_layout(lineitem: DataFrame, n_files: int = 64) -> DataFrame:
     )
 
     def _layout(name: str, order_cols: list) -> DataFrame:
-        f = distributed_ntile(zt, order_cols, n_files, "fid")
+        f = ntile(zt, order_cols, n_files, "fid")
         per = f.groupBy("fid").agg(
             F.min("x").alias("mnx"),
             F.max("x").alias("mxx"),
@@ -4839,9 +4446,7 @@ def runs1_runs_test(events: DataFrame) -> DataFrame:
         .select("day", F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("c"))
         .localCheckpoint(eager=True)
     )
-    gv = filled.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    cgrid, totals = distributed_prefix_sums(gv, ["c"], ["cnt"], ["cum"])
-    n_all = totals["cnt"]
+    cgrid, n_all = value_counts(filled, "c")
     if n_all < 2:
         return events.sparkSession.createDataFrame(
             [],
@@ -4860,7 +4465,8 @@ def runs1_runs_test(events: DataFrame) -> DataFrame:
         .filter(F.col("c") != F.col("med"))
         .select("day", (F.col("c") > F.col("med")).cast("int").alias("s"))
     )
-    ranked, n_used = _distributed_rank_and_total(signed, ["day"], "rn")
+    ranked, totals = running(signed, ["day"], {"rn": ("count", None)})
+    n_used = totals["rn"]
     if n_used == 0:
         return events.sparkSession.createDataFrame(
             [],
@@ -5254,9 +4860,7 @@ def hub1_huber_robust_mean(orders: DataFrame, iters: int = 3) -> DataFrame:
     v = orders.filter(F.col("o_totalprice").isNotNull()).select(
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
     )
-    g = v.groupBy("cents").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    cgrid, totals = distributed_prefix_sums(g, ["cents"], ["c"], ["cum"])
-    n = totals["c"]
+    cgrid, n = value_counts(v, "cents")
     empty = (
         "n_orders long, median double, sigma_robust double, c_huber double, "
         "mu0 double, mu1 double, mu2 double, mu3 double"
@@ -5268,15 +4872,15 @@ def hub1_huber_robust_mean(orders: DataFrame, iters: int = 3) -> DataFrame:
         F.min(F.when(F.col("cum") >= F.lit(rank), F.col("cents")))
     ).collect()[0][0]
     # the MAD grid AND the IRLS passes below run at the distinct-cents
-    # grain of the checkpointed prefix grid (value, c) — one corpus scan
+    # grain of the checkpointed prefix grid (value, cnt) — one corpus scan
     # total (the mad1 regroup trick): |cents − m0| is constant per
     # distinct value, so summing grid counts is exactly the raw regroup.
     g2 = (
-        cgrid.select(F.abs(F.col("cents") - F.lit(int(m0))).alias("dev"), "c")
+        cgrid.select(F.abs(F.col("cents") - F.lit(int(m0))).alias("dev"), "cnt")
         .groupBy("dev")
-        .agg(F.sum("c").cast("long").alias("c"))
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    c2, _ = distributed_prefix_sums(g2, ["dev"], ["c"], ["cum"])
+    c2, _ = running(g2, ["dev"], {"cum": ("sum", "cnt")})
     mad = c2.agg(
         F.min(F.when(F.col("cum") >= F.lit(rank), F.col("dev")))
     ).collect()[0][0]
@@ -5294,14 +4898,14 @@ def hub1_huber_robust_mean(orders: DataFrame, iters: int = 3) -> DataFrame:
         # per-row term ≡ per-distinct-value term × count (w and x are
         # functions of cents alone, and every row of one value rounds
         # to the SAME integer term), so the corpus agg collapses to a
-        # grid agg: Σ_rows round(t) = Σ_values c · round(t). Exact.
+        # grid agg: Σ_rows round(t) = Σ_values cnt · round(t). Exact.
         row = cgrid.agg(
             F.sum(
-                F.col("c").cast(d38)
+                F.col("cnt").cast(d38)
                 * F.round(w * x * F.lit(1e6), 0).cast(d38)
             ).cast(d38).alias("swx"),
             F.sum(
-                F.col("c").cast(d38) * F.round(w * F.lit(1e9), 0).cast(d38)
+                F.col("cnt").cast(d38) * F.round(w * F.lit(1e9), 0).cast(d38)
             ).cast(d38).alias("sw"),
         ).collect()[0]
         mus.append(
@@ -5345,7 +4949,7 @@ def sprt1_conversion_sprt(
     drift with no hypothesis pair; SPRT decides between two).
 
     Scale shape: one day-grained combining agg; the LLR path is ONE
-    distributed_prefix_sums pass (per-day terms pre-rounded to NANO
+    running-sum pass (per-day terms pre-rounded to NANO
     longs, so the cumulative path is exact integers); the crossing
     probe is a bounded filter + earliest-day TakeOrdered; thresholds
     ride as INTEGER nano literals — the crossing comparison is a pure
@@ -5382,14 +4986,16 @@ def sprt1_conversion_sprt(
         0,
     ).cast("long")
     t = daily.select("day", "n", "x", term.alias("t_nano"))
-    pre, totals = distributed_prefix_sums(
-        t, ["day"], ["t_nano", "n", "x"], ["llr_nano", "cum_n", "cum_x"]
+    pre, totals = running(
+        t,
+        ["day"],
+        {"llr_nano": ("sum", "t_nano"), "cum_n": ("sum", "n"), "cum_x": ("sum", "x")},
     )
     empty = (
         "n_days long, total_events long, total_conversions long, "
         "final_llr double, decision string, decided_day date"
     )
-    n_total, x_total = totals["n"], totals["x"]
+    n_total, x_total = totals["cum_n"], totals["cum_x"]
     if n_total == 0:
         return spark.createDataFrame([], empty)
     n_days = pre.count()
@@ -5416,7 +5022,7 @@ def sprt1_conversion_sprt(
                 int(n_days),
                 int(n_total),
                 int(x_total),
-                totals["t_nano"] / 1e9,
+                totals["llr_nano"] / 1e9,
                 decision,
                 decided_day,
             )
@@ -5530,9 +5136,7 @@ def tail1_tail_dependence(orders: DataFrame, customer: DataFrame, q: int = 95) -
     spark = orders.sparkSession
 
     def _thr(col: str) -> int | None:
-        g = pairs.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("c"))
-        cgrid, totals = distributed_prefix_sums(g, [col], ["c"], ["cum"])
-        n = totals["c"]
+        cgrid, n = value_counts(pairs, col)
         if n == 0:
             return None
         rank = (q * n + 99) // 100

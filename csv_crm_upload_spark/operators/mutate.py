@@ -19,9 +19,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def now_ts(now=None) -> F.Column:
+    """The write time: `now` as a timestamp literal when given (tests pin
+    it), else the query's current_timestamp()."""
+    return F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
+
+
 def finalize_columns(clean: DataFrame, now=None) -> DataFrame:
     """U3: add store columns with insert-time defaults."""
-    ts = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
+    ts = now_ts(now)
     return (
         clean.withColumn("uploaded", F.lit(False))
         .withColumn("created_ts", ts)
@@ -37,7 +43,7 @@ def mark_uploaded(table: DataFrame, succeeded_emails: DataFrame, now=None) -> Da
     The success set is tiny relative to the table (one upload cycle), so
     the semi-join broadcasts — no shuffle of the big side.
     """
-    ts = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
+    ts = now_ts(now)
     hits = F.broadcast(
         succeeded_emails.select(F.col("email").alias("_hit_email")).distinct()
     )

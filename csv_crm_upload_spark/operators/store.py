@@ -75,10 +75,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.operators.mutate import mark_uploaded
-from csv_crm_upload_spark.schemas import CUSTOMER_SCHEMA
+from csv_crm_upload_spark.operators.mutate import (
+    finalize_columns,
+    mark_uploaded,
+    now_ts,
+)
+from csv_crm_upload_spark.schemas import CUSTOMER_COLUMNS, CUSTOMER_SCHEMA
 
-PENDING_COLUMNS = ["id", "first_name", "last_name", "email", "phone"]
 DEFAULT_BUCKETS = 16
 
 
@@ -514,10 +517,9 @@ class CustomerStore:
         Returns {"updated": n, "inserted": n, "skipped": n}.
         """
         from csv_crm_upload_spark.operators.dedup import dedupe_batch
-        from csv_crm_upload_spark.operators.mutate import finalize_columns
 
-        ts = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
-        src = dedupe_batch(source.select(*PENDING_COLUMNS))
+        ts = now_ts(now)
+        src = dedupe_batch(source.select(*CUSTOMER_COLUMNS))
         upd = F.broadcast(
             src.select(
                 F.col("email").alias("_m_email"),
@@ -674,7 +676,7 @@ class CustomerStore:
         """F1+P1: `SELECT id, first_name, last_name, email, phone FROM
         customers WHERE uploaded = false` (reference database/database.go:18).
         Predicate + projection push down to the parquet scan."""
-        return self.read().filter(~F.col("uploaded")).select(*PENDING_COLUMNS)
+        return self.read().filter(~F.col("uploaded")).select(*CUSTOMER_COLUMNS)
 
     def mark_uploaded(self, succeeded_emails: DataFrame, now=None) -> int:
         """U1+U2: flip the flag for confirmed uploads; new snapshot.

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_RAW_COLS = ["id", "first_name", "last_name", "email", "phone"]
+from csv_crm_upload_spark.schemas import CUSTOMER_COLUMNS
 
 # An email made only of whitespace is empty (V2). F.trim strips ASCII spaces
 # alone, so a tab, newline, the \x1c-\x1f separators or a Unicode space would
@@ -57,13 +57,9 @@ def validate_split(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     clean = (
         annotated.filter(F.col("reason").isNull())
-        .select(
-            F.col("id").try_cast("long").alias("id"),
-            "first_name",
-            "last_name",
-            "email",
-            "phone",
-        )
+        .select(F.col("id").try_cast("long").alias("id"), *CUSTOMER_COLUMNS[1:])
     )
-    quarantine = annotated.filter(F.col("reason").isNotNull()).select(*_RAW_COLS, "reason")
+    quarantine = annotated.filter(F.col("reason").isNotNull()).select(
+        *CUSTOMER_COLUMNS, "reason"
+    )
     return clean, quarantine

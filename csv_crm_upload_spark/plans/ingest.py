@@ -23,6 +23,7 @@ from csv_crm_upload_spark.operators.dedup import dedupe_batch
 from csv_crm_upload_spark.operators.mutate import finalize_columns
 from csv_crm_upload_spark.operators.store import CustomerStore
 from csv_crm_upload_spark.operators.validate import validate_split
+from csv_crm_upload_spark.schemas import CUSTOMER_COLUMNS
 from csv_crm_upload_spark.sources.csv_source import read_customers_csv
 
 
@@ -59,12 +60,7 @@ def ingest_batch(
         # table with this batch already inserted and quarantine every
         # successfully inserted row as a duplicate_key
         dup_rejects = rejected_duplicates(clean, store.read()).select(
-            F.col("id").cast("string").alias("id"),
-            "first_name",
-            "last_name",
-            "email",
-            "phone",
-            "reason",
+            F.col("id").cast("string").alias("id"), *CUSTOMER_COLUMNS[1:], "reason"
         )
         quarantine.unionByName(dup_rejects).write.mode("append").parquet(quarantine_dir)
     # empty insertable sets commit no new version (reference bug §2.10 avoided)

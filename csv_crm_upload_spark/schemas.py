@@ -50,6 +50,10 @@ CUSTOMER_SCHEMA = StructType(
     ]
 )
 
+# The five business columns in CSV order: a clean batch, a quarantine row,
+# the pending-upload set and the CRM payload each carry exactly these.
+CUSTOMER_COLUMNS = CUSTOMER_SCHEMA.fieldNames()[:5]
+
 # ---------------------------------------------------------------------------
 # Driver testdata tables (/root/testdata/sf*/, TESTDATA.md). Explicit so
 # the declared types match the parquet files the driver generated

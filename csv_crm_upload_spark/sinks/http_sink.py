@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from csv_crm_upload_spark.schemas import CUSTOMER_COLUMNS
+
 DEFAULT_TIMEOUT_S = 30.0  # reference crm/upload/uploader.go:20-21
 SUCCESS_STATUS = 201  # reference crm/upload/uploader.go:127
 
@@ -131,7 +133,7 @@ def upload_partition(
                 row = next(rows, None)
                 more = row is not None
                 if more:
-                    payload = {c: row[c] for c in ("id", "first_name", "last_name", "email", "phone")}
+                    payload = {c: row[c] for c in CUSTOMER_COLUMNS}
                     submit(payload, 1, fibonacci_backoff(max_tries), 0.0)
             if not live:
                 return

@@ -31,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csv_crm_upload_spark.operators.store import PENDING_COLUMNS
+from csv_crm_upload_spark.schemas import CUSTOMER_COLUMNS, CUSTOMER_SCHEMA
 
 # reference init-db.sh:11-25 — UNIQUE id + email, uploaded flag default
 # false, audit timestamps. ANSI DDL (Derby/Postgres compatible).
@@ -116,7 +116,7 @@ class JdbcCustomerStore:
     def append(self, batch: DataFrame) -> None:
         """S5: executor-parallel batch INSERT append."""
         (
-            batch.select(*PENDING_COLUMNS, "uploaded", "created_ts", "modified_ts")
+            batch.select(*CUSTOMER_SCHEMA.fieldNames())
             .write.format("jdbc")
             .option("url", self.url)
             .option("dbtable", self.table)
@@ -150,7 +150,7 @@ class JdbcCustomerStore:
         customers WHERE uploaded = false` — both the predicate and the
         5-column projection push into the JDBC-generated SQL (verify:
         PushedFilters in the scan node)."""
-        return self.read().filter(~F.col("uploaded")).select(*PENDING_COLUMNS)
+        return self.read().filter(~F.col("uploaded")).select(*CUSTOMER_COLUMNS)
 
     def mark_uploaded(self, succeeded_emails: DataFrame, now=None) -> int:
         """U1+U2: stage the success set to a temp table, run ONE set-based

@@ -136,7 +136,7 @@ def test_mmr_skips_near_duplicate_of_selected(spark):
 def test_prune1_high_cardinality_label_fallback(spark):
     """prune1's label-count gate (advice r7): with |labels| > 1024 the
     ranking must fall back to the plain hash-partitioned window (the
-    distributed_grouped_rank cell-count collect and the prototype
+    grouped running count's per-cell collect and the prototype
     broadcast both assume few labels) and still produce the exact
     per-label rank/keep semantics."""
     from csv_crm_upload_spark.analytics.clustering import prune1_prototype_pruning

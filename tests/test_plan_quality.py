@@ -435,7 +435,7 @@ def test_round5_operator_shuffle_budgets(spark, sf_dir):
 
 def test_ntile_queries_have_no_single_partition_sort(spark, sf_dir):
     """Every query that ranks fact-sized data does it via
-    distributed_rank / distributed_ntile / distributed_grouped_rank
+    ordered.running / ordered.ntile / a grouped ordered.running
     (range-repartition + per-partition offset rank), never a bare
     `Window.orderBy` (or a partitionBy over a handful of values, which
     is the same collapse split |group| ways). A revert to the window
@@ -462,81 +462,6 @@ def test_ntile_queries_have_no_single_partition_sort(spark, sf_dir):
         )
 
 
-def test_distributed_ntile_matches_window_ntile(spark):
-    """distributed_ntile ≡ ANSI ntile for ragged n (n % q != 0), n < q,
-    and exact multiples — the closed-form bucket formula against Spark's
-    own windowed ntile as the reference."""
-    from pyspark.sql import Window
-
-    from csv_crm_upload_spark.analytics.tpch import distributed_ntile
-
-    for n, q in ((37, 4), (3, 8), (40, 4), (1, 1)):
-        df = spark.range(n).select(
-            (F.col("id") * 7 % n).alias("k"), F.col("id").alias("uid")
-        )
-        want = {
-            (r["k"], r["uid"]): r["t"]
-            for r in df.withColumn(
-                "t", F.ntile(q).over(Window.orderBy("k", "uid"))
-            ).collect()
-        }
-        got = {
-            (r["k"], r["uid"]): r["t"]
-            for r in distributed_ntile(df, ["k", "uid"], q, "t").collect()
-        }
-        assert got == want, f"n={n} q={q}"
-
-
-def test_distributed_grouped_rank_matches_window(spark):
-    """distributed_grouped_rank ≡ row_number() OVER (PARTITION BY g
-    ORDER BY ...), including the per-group total, for skewed group
-    sizes, a single-member group, and an empty input; grouped_ntile_expr
-    ≡ windowed ntile on the same ranks."""
-    from pyspark.sql import Window
-
-    from csv_crm_upload_spark.analytics.tpch import (
-        distributed_grouped_rank,
-        grouped_ntile_expr,
-    )
-
-    # group c is single-member; ids >= 199 get a NULL group — NULL is
-    # its own partition in Window.partitionBy AND the SQL oracle, so
-    # the distributed form must rank (not drop) those rows (review r7:
-    # a plain equi-join against the offsets frame lost them)
-    df = spark.range(201).select(
-        F.when(F.col("id") < 120, F.lit("a"))
-        .when(F.col("id") < 198, F.lit("b"))
-        .when(F.col("id") < 199, F.lit("c"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("g"),
-        (F.col("id") * 13 % 200).alias("v"),
-        F.col("id").alias("uid"),
-    )
-    w = Window.partitionBy("g").orderBy("v", "uid")
-    want = {
-        (r["g"], r["uid"]): (r["rn"], r["n"], r["t"])
-        for r in df.select(
-            "g",
-            "uid",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(Window.partitionBy("g")).alias("n"),
-            F.ntile(4).over(w).alias("t"),
-        ).collect()
-    }
-    ranked = distributed_grouped_rank(df, ["g"], ["v", "uid"], "_rn", count_col="_gn")
-    got = {
-        (r["g"], r["uid"]): (r["_rn"], r["_gn"], r["t"])
-        for r in ranked.withColumn(
-            "t", grouped_ntile_expr("_rn", "_gn", 4)
-        ).collect()
-    }
-    assert got == want
-    empty = distributed_grouped_rank(
-        df.filter(F.lit(False)), ["g"], ["v", "uid"], "_rn", count_col="_gn"
-    )
-    assert empty.count() == 0
-
-
 def test_round6_operator_shuffle_budgets(spark, sf_dir):
     """Budgets for the round-6 additions (ceilings, broadcasts excluded):
       hn1    1 — corpus streams through the broadcast query join map-only;
@@ -553,7 +478,7 @@ def test_round6_operator_shuffle_budgets(spark, sf_dir):
       bpe3   1 — map-only merge application; the 1-row readout agg
       skw2   2 — the (key, _salt) join exchanges; readout agg reuses them
       skw3   3 — (key, salt) partial agg, per-key combine, result order
-      rfm1   3 — the RETURNED plan after three eager distributed_ntile
+      rfm1   3 — the RETURNED plan after three eager ordered.ntile
              materializations: last rank window + segment agg + order
       batch1 3 — same shape, one ntile"""
     _reset_plan_state(spark)
@@ -619,9 +544,9 @@ def test_round7_operator_shuffle_budgets(spark, sf_dir):
             (the 3-gate cascade ran once inside it): drm1's stages over
             the checkpoint scan + the per-source doc count + the
             apportionment windows + result order
-      w3/out1 — distributed_grouped_rank: the (pid, group) window
-            re-exchange + the offsets broadcast join over the
-            checkpointed range partitioning (2 each incl. result order)
+      w3/out1 — a grouped ordered.running: the (pid, group) window
+            re-exchange over the checkpointed range partitioning, the
+            offsets a map-literal lookup (2 each incl. result order)
     """
     _reset_plan_state(spark)
     budgets = {
@@ -636,7 +561,7 @@ def test_round7_operator_shuffle_budgets(spark, sf_dir):
         # the plan per step — 200+ exchanges at k=5; the audit keeps it
         # from coming back)
         "mmr1_diversified_topk": 2,
-        # auc1 2 — distributed_rank's offset window re-exchange (the
+        # auc1 2 — ordered.running's offset window re-exchange (the
         #        range partitioning ran in the checkpoint) + the 1-row
         #        rank-sum aggregate
         "auc1_classifier_auc": 2,
@@ -654,7 +579,7 @@ def test_round7_operator_shuffle_budgets(spark, sf_dir):
         #        re-combines of the bigram-TYPE table and their join
         #        re-exchanges (vocab-bounded, corpus-scale free)
         "kn1_kneser_ney_logloss": 10,
-        # prune1 2 — returned plan after distributed_grouped_rank's
+        # prune1 2 — returned plan after a grouped ordered.running's
         #        checkpointed range partitioning: the (pid, label)
         #        window re-exchange + result order; the centroid and
         #        per-vector combining aggs ran inside the checkpoint
@@ -666,16 +591,6 @@ def test_round7_operator_shuffle_budgets(spark, sf_dir):
         assert len(ids) <= budget, f"{name}: {len(ids)} shuffles > budget {budget}\n{plan}"
 
 
-def test_distributed_rank_and_ntile_handle_empty_input(spark):
-    """Empty frames must plan and return empty (a zero-arg create_map()
-    would otherwise fail analysis on the offset lookup)."""
-    from csv_crm_upload_spark.analytics.tpch import distributed_ntile, distributed_rank
-
-    empty = spark.range(0).select(F.col("id").alias("k"), F.col("id").alias("uid"))
-    assert distributed_rank(empty, ["k", "uid"], "r").count() == 0
-    assert distributed_ntile(empty, ["k", "uid"], 4, "t").count() == 0
-
-
 def test_round8_operator_shuffle_budgets(spark, sf_dir):
     """Budgets for the round-8 additions (ceilings, broadcasts excluded):
       lex1   0 — pure Column battery (sort_array + zip_with adjacency)
@@ -685,12 +600,12 @@ def test_round8_operator_shuffle_budgets(spark, sf_dir):
       bq1    1 — packing is map-side, queries broadcast; the only
              exchange is the per-query top-k window
       heaps1 4 — first-occurrence agg (token-hash key), per-doc new-type
-             agg, distributed_ntile's offset re-exchange over the
+             agg, ordered.ntile's offset re-exchange over the
              checkpointed range partitioning, the 10-row cumsum window +
              result order share the single-partition tail
       ccnet1 4 — ppl1's stages + the lang join + the grouped-rank
              re-exchange + the <=3q-row rollup
-      cov1   5 — token-count agg, 1-row total, distributed_rank's offset
+      cov1   5 — token-count agg, 1-row total, ordered.running's offset
              re-exchange, band agg, <=|checkpoints|-row cumsum/order
       tfidf1 6 — (doc,term) tf agg, term df agg, the tf-side join
              re-exchange, per-doc top-k window, result order
@@ -725,10 +640,10 @@ def test_round8_second_batch_shuffle_budgets(spark, sf_dir):
               collects: the map-only margin pass + <=k-group agg +
               result order share the agg exchanges
       ks1     2 — the (value)-grid agg + the <=1-row max; the CDF
-              prefix sums ran inside distributed_prefix_sums'
+              prefix sums ran inside ordered.running's
               checkpointed range partitioning, totals are literals
       anon2   3 — count_distinct's two-phase expand + result order
-      shard1  3 — distributed_rank's offset window re-exchange over
+      shard1  3 — ordered.running's offset window re-exchange over
               the checkpointed range partitioning + the <=n_shards
               rollup + result order
       lshrec1 7 — pure composition: brute-force side (top-k window) +
@@ -813,7 +728,7 @@ def test_round10_second_batch_shuffle_budgets(spark, sf_dir):
             bounds agg fuses with the spine explode, leaving the isodow
             rollup + the result order over ≤7 rows
       tsen1 2 — the pairwise-slope frame is the checkpointed output of
-            distributed_rank (construction-time, the pctl2 sanction);
+            ordered.running (construction-time, the pctl2 sanction);
             the returned plan is the median filter + the 1-row
             Mann–Kendall agg broadcast back (the day_a<day_b pairing is
             a BroadcastNestedLoopJoin over the calendar-bounded spine —
@@ -930,7 +845,7 @@ def test_round11_operator_shuffle_budgets(spark, sf_dir):
       mb1   7 — (order, part) distinct + the orderkey self-join feed +
             pair/item aggs + the two partkey joins; the top-k cut is
             TakeOrderedAndProject, never a full sort
-      burst1 6 — distributed_grouped_rank's range exchange rides the
+      burst1 6 — a grouped ordered.running's range exchange rides the
             construction-time checkpoint; the rn↔rn+1 null-safe
             equi-join re-exchanges both bounded sides, then one
             map-side-combining moment agg + result order
@@ -1037,11 +952,11 @@ def test_round12_operator_shuffle_budgets(spark, sf_dir):
         # simp1/cha1 — (source, tok) agg + per-source rollup + order
         "simp1_simpson_diversity": 3,
         "cha1_chao1_richness": 3,
-        # spr1 — the pair join + two _rank2x value aggs (each: distinct
+        # spr1 — the pair join + two rank2x value aggs (each: distinct
         #        agg + prefix-sum range exchange) + the rank-table
         #        joins back onto the stream + one 5-sum reduction
         "spr1_spearman_rank_corr": 7,
-        # ptt1 — construction-time _daily_spine/_rank2x/prefix passes
+        # ptt1 — construction-time _daily_spine/rank2x/prefix passes
         #        are checkpointed; the returned plan is the bounded
         #        day-grain argmax (TakeOrdered) + one exchange
         "ptt1_pettitt_change_point": 2,
@@ -1075,7 +990,7 @@ def test_round12_wave4_shuffle_budgets(spark, sf_dir):
             map-only
       delta1 4 — the (source, token) corpus agg (checkpointed) + the
             bounded grid/stat re-combines + the pair-grain agg
-      zord1 12 — five distributed_ntile range exchanges (2 bin dims +
+      zord1 12 — five ordered.ntile range exchanges (2 bin dims +
             3 layouts) + three per-file aggs + final combines; every
             pass reads the previous pin, never the raw scan twice
     """

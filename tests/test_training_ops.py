@@ -846,33 +846,6 @@ def test_lsh_recall_audit_bounds_and_planted_duplicate(spark):
     assert rows[0]["n_hit"] >= 1  # the duplicate is rank-1 and same-bucket
 
 
-def test_distributed_prefix_sums_matches_window_and_totals(spark):
-    """The range-partitioned prefix sums must equal the single-partition
-    window cumsum for any total order, the returned totals must be the
-    grand sums, and empty input must not abort (zero-arg create_map)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from csv_crm_upload_spark.analytics.tpch import distributed_prefix_sums
-
-    df = spark.createDataFrame(
-        [(v, v % 3, (v * 7) % 5) for v in range(97)], ["k", "a", "b"]
-    )
-    got, totals = distributed_prefix_sums(df, ["k"], ["a", "b"], ["ca", "cb"], n_parts=7)
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-    want = df.select(
-        "k", F.sum("a").over(w).alias("ca"), F.sum("b").over(w).alias("cb")
-    )
-    g = {r["k"]: (r["ca"], r["cb"]) for r in got.collect()}
-    e = {r["k"]: (r["ca"], r["cb"]) for r in want.collect()}
-    assert g == e
-    assert totals == {"a": sum(v % 3 for v in range(97)),
-                      "b": sum((v * 7) % 5 for v in range(97))}
-    empty = spark.createDataFrame([], "k long, a long, b long")
-    out, tot = distributed_prefix_sums(empty, ["k"], ["a", "b"], ["ca", "cb"])
-    assert out.count() == 0 and tot == {"a": 0, "b": 0}
-
-
 def test_ks_drift_identical_zero_disjoint_one(spark):
     """ks1: identical value distributions across the two types give
     D ~ 1/n at most (equal CDFs on the shared grid → 0 exactly here);

@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from bench import HEADLINE
+from bench import HEADLINE, warm_up
 from csv_crm_upload_spark.session import get_spark
 
 
@@ -36,10 +36,7 @@ def main() -> None:
     spark = get_spark(app_name="profile")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
-    # warm-up: prime JVM/codegen/parquet footers like bench.py does
-    queries["a1_count"](spark, sf_dir).collect()
-    for wname in ("j1_brand_margin", "w5_order_gaps"):
-        queries[wname](spark, sf_dir).agg({"*": "count"}).collect()
+    warm_up(spark, sf_dir, queries)
 
     def n_jobs() -> int:
         return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))

@@ -39,27 +39,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: scan-heavy headline queries over lineitem/orders/events — the set the
-#: verdict's "Done" bar names (q3/q5/dd_* read documents, which stays
-#: single-file; the two dd_* entries are kept to show their shuffle
-#: stages scale even when the scan side does not)
-QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_unshipped",
-    "q5_region_revenue",
-    "top_customers",
-    "w1_top_orders_per_customer",
-    "e1_sessionize",
-    "dd_exact_dups",
-    "dd_minhash_lsh",
-    "t2_quality_score",
-]
+from bench import HEADLINE, TABLES, warm_up
+
+#: the scan-heavy headline queries (q3/q5/dd_* read documents, which
+#: stays single-file; the two dd_* entries are kept to show their
+#: shuffle stages scale even when the scan side does not)
+QUERIES = [n for n in HEADLINE if n != "sim_knn_bruteforce"]
 
 SPLIT_TABLES = {"lineitem": 64, "events": 64, "orders": 64, "documents": 32}
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def prepare(sf_dir: str, out_dir: str, amplify: int) -> None:
@@ -118,9 +105,7 @@ def run_side(data_dir: str) -> dict:
     spark = get_spark(app_name="scaling-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
-    queries["a1_count"](spark, data_dir).collect()
-    for wname in ("j1_brand_margin", "w5_order_gaps"):
-        queries[wname](spark, data_dir).agg({"*": "count"}).collect()
+    warm_up(spark, data_dir, queries)
     rec: dict = {"cpus": spark.sparkContext.defaultParallelism, "cold": {}, "warm": {}}
     for name in QUERIES:
         fn = queries[name]
