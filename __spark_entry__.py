@@ -261,25 +261,13 @@ def _q_skw3(s: SparkSession, sf: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-# Round-13 driver-verification window (slots 13+, in order). Two
-# priorities: (1) every query whose EXECUTION PATH was rewritten this
-# optimization round gets a post-rewrite driver row (the Arrow-native
-# quantizer/kmeans scoring, the dd_minhash map-only verification, the
-# shared audit readout) — slots 13-27; (2) first driver contact for the
-# round-12 operator-wave keys that have never had a driver row
-# (added in the interrupted r12 build round; the r12 window was spent
-# on the r2/r3-stale cohort per that round's verdict) — slots 28-50,
-# the 23 heaviest/most-load-bearing of them. Still never-contacted
-# after this window (next round's cohort): cha1, cusum1, dpn1,
-# fun1_ordered, gt1, hill1, ney1, prop1, ptt1, simp1, spr1, sprt1,
-# tail1, theil1 (+ the rows-only mm2/mm3/pca2, not driver-checkable),
-# then the round-4-6 stale cohort (bf1/bp1/co1/coh1/cum1/dd2/decay1/
-# dq1/gini1/mix2, lr2/path1/phr1/ri1/samp1, asof1/bpe1/bpe2/bpe4/dd3/
-# drift1/fh1/fun1_stage/leak1/linedd1/mix3/mix4/ppl1/ppl2/prep1/
-# samp2/sess1/unpiv1).
+# Keys moved to the front of the verification window: they fill slots
+# 13+ in this order, and every other key keeps its relative order after
+# them (see queries()). Correctness checks read only the first 50
+# entries, so this list alone chooses what they verify.
 _ROTATION_FRONT = [
-    # (a) rewritten-this-round cohort (Arrow scoring / minhash rewire /
-    # audit readout): the driver ledger must hold post-rewrite rows
+    # (a) queries on the Arrow scoring stages, the map-only minhash
+    # verification and the shared audit readout
     "pq1_quantized_knn",
     "ivfpq1_quantized_knn",
     "ivfpq2_residual_knn",
@@ -295,7 +283,7 @@ _ROTATION_FRONT = [
     "audlog1_batch_audit_log",
     "rbo1_rank_agreement",
     "deg1_dup_degree_hist",
-    # (b) first-contact round-12-wave keys (no driver row yet)
+    # (b) the statistics / text / layout operator waves
     "zord1_zorder_layout",
     "mad1_value_mad",
     "hub1_huber_robust_mean",
@@ -343,8 +331,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a1_count": q_a1_count,
         "x2_x3_json_roundtrip": q_x2_x3_json_roundtrip,
         "x3_json_props": q_x3_json_props,
-        # --- round-6 rotation window (slots 13-19): the seven queries
-        # with no prior driver CORRECTNESS row lead the window ---
+        # --- every key below follows _ROTATION_FRONT, in this order ---
         # audit-threshold decon2 variant (0.4): flags rows on the synthetic
         # fixture so the cosine/argmax/tie-break path is exercised
         # non-vacuously cross-engine (decon2's 0.9 matches nothing there)
@@ -578,9 +565,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mi1_lang_source_mi": lambda s, sf: ts.mi1_lang_source_mi(
             _t("documents")(s, sf)
         ),
-        # --- rotation window (slots 13-50), round 5: the six oracle-paired
-        # queries that have never had a driver CORRECTNESS row lead the
-        # window (slots 13-18); the rest of the window re-samples r4 keys ---
         "stat1_price_quantity_stats": lambda s, sf: tpch.stat1_price_quantity_stats(
             _t("lineitem")(s, sf)
         ),
@@ -604,7 +588,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dd3_containment_pairs": lambda s, sf: dd.d_containment_pairs(
             _t("documents")(s, sf)
         ),
-        # --- round-5 additions (slots 19-21): event-pipeline operators ---
+        # --- event-pipeline operators ---
         # AS-OF join via the union+keyed-window composition (oracle-paired)
         "asof1_purchase_view_asof": lambda s, sf: tpch.asof1_purchase_view_asof(
             _t("events")(s, sf)

@@ -11,9 +11,9 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small local runs: fast startup
 
 from csv_crm_upload_spark.session import get_spark  # noqa: E402
 
-#: Deep (opt-in) test files — round-13 verdict ask #1: the default suite
-#: had grown past the driver's pytest budget (1,347 tests / ~72 min;
-#: VERIFY_r12 recorded a TRUNCATED run), so the long integration /
+#: Deep (opt-in) test files: the default suite had grown past its
+#: time budget (1,347 tests / ~72 min; one recorded run was
+#: TRUNCATED), so the long integration /
 #: soak / model-loop suites are marked `deep` here and excluded by
 #: pytest.ini's addopts. The default suite keeps the full
 #: oracle+degenerate parity core, every fast unit/contract file and

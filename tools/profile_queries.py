@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -24,6 +25,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from bench import HEADLINE, warm_up
 from csv_crm_upload_spark.session import get_spark
+
+#: physical node names at the Python/Arrow boundary: UDF eval
+#: (ArrowEvalPython, BatchEvalPython), MapInPandas, MapInArrow and the
+#: grouped / windowed pandas and Arrow operators
+_PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
+
+
+def node_counts(plan: str) -> tuple[int, int]:
+    """(exchanges, Python-boundary nodes) in a `formatted` explain. That
+    format prints each node twice, as a tree line and as its numbered
+    `(k) <Node>` detail header, so only the headers are counted."""
+    names = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+    return (
+        sum(n.endswith("Exchange") for n in names),
+        sum(bool(_PYTHON_NODE.search(n)) for n in names),
+    )
 
 
 def main() -> None:
@@ -60,6 +77,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        n_exchanges, n_python = node_counts(plan)
         rec = {
             "construct_sec": round(t1 - t0, 3),
             "exec_sec": round(t2 - t1, 3),
@@ -67,8 +85,8 @@ def main() -> None:
             "warm_sec": round(t4 - t3, 3),
             "jobs_cold": n_jobs1 - n_jobs0,
             "jobs_warm": n_jobs2 - n_jobs1,
-            "n_exchanges": plan.count("Exchange"),
-            "n_python": plan.count("EvalPython") + plan.count("MapInPandas"),
+            "n_exchanges": n_exchanges,
+            "n_python": n_python,
         }
         with open(os.path.join(out_dir, f"{name}.json"), "w") as f:
             json.dump(rec, f, indent=1)

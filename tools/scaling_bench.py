@@ -1,4 +1,4 @@
-"""Core-scaling measurement mode (round-13 verdict ask #6).
+"""Core-scaling measurement mode.
 
 The official bench's 8-vs-32-core headline ratios sit at ~1.0-1.6 not
 because the plans are serial but because the testdata parquet is written
@@ -35,11 +35,10 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, TABLES, warm_up
+from bench import HEADLINE, TABLES, cold_warm, warm_up
 
 #: the scan-heavy headline queries (q3/q5/dd_* read documents, which
 #: stays single-file; the two dd_* entries are kept to show their
@@ -108,16 +107,9 @@ def run_side(data_dir: str) -> dict:
     warm_up(spark, data_dir, queries)
     rec: dict = {"cpus": spark.sparkContext.defaultParallelism, "cold": {}, "warm": {}}
     for name in QUERIES:
-        fn = queries[name]
-        t0 = time.perf_counter()
-        fn(spark, data_dir).agg({"*": "count"}).collect()
-        rec["cold"][name] = round(time.perf_counter() - t0, 3)
-        samples = []
-        for _ in range(3):
-            t1 = time.perf_counter()
-            fn(spark, data_dir).agg({"*": "count"}).collect()
-            samples.append(round(time.perf_counter() - t1, 3))
-        rec["warm"][name] = sorted(samples)[1]
+        rec["cold"][name], rec["warm"][name], _ = cold_warm(
+            lambda: queries[name](spark, data_dir)
+        )
     return rec
 
 
@@ -160,12 +152,7 @@ def main() -> None:
         sides = {
             cpus: {
                 "cpus": cpus,
-                "cold": {
-                    n: min(r["cold"][n] for r in rs) for n in QUERIES
-                },
-                "warm": {
-                    n: min(r["warm"][n] for r in rs) for n in QUERIES
-                },
+                **{k: {n: min(r[k][n] for r in rs) for n in QUERIES} for k in ("cold", "warm")},
                 "n_runs": len(rs),
             }
             for cpus, rs in runs.items()
