@@ -7,10 +7,10 @@ search, text analysis, multimodal plumbing).
 
 Layout:
   session    — SparkSession factory tuned for local testing / cluster scale
-  schemas    — explicit StructTypes for the customer CSV and store
-               (reference addresses CSV columns positionally:
-               cmd/csvreader/csvreader.go:120-128); the testdata
-               table loads still read their schema from parquet footers
+  schemas    — explicit StructTypes for the customer CSV, the store
+               and the testdata tables, each read under its declared
+               schema (reference addresses CSV columns positionally:
+               cmd/csvreader/csvreader.go:120-128)
   sources/   — CSV + parquet table readers (S1-S3)
   operators/ — validate/quarantine (V1-V3), dedup/anti-join (D1-D2),
                mutation/defaults (U1-U3), store append + pending scan (S4-S5)

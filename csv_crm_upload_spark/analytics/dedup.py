@@ -549,9 +549,10 @@ def d_simhash(documents: DataFrame) -> DataFrame:
 #: loudly instead of silently pairing nothing.
 DEDUP_KEY_FORMAT = "normtext-spaceshingle-md560-minhash-v1"
 
-#: pairs: epoch-RANGED (doc_a, doc_b, est_jaccard) rows
+#: pairs: epoch-RANGED (doc_a, doc_b, est_jaccard) rows, the columns
+#: _verify_pairs selects; declared so an open infers nothing from footers
 DEDUP_LAYOUT = Layout(
-    ranged={"pairs": Ranged()},
+    ranged={"pairs": Ranged(schema="doc_a long, doc_b long, est_jaccard double, epoch int")},
     key_format=DEDUP_KEY_FORMAT,
     missing_ok=True,
 )

@@ -20,6 +20,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -55,9 +56,10 @@ CUSTOMER_SCHEMA = StructType(
 CUSTOMER_COLUMNS = CUSTOMER_SCHEMA.fieldNames()[:5]
 
 # ---------------------------------------------------------------------------
-# Driver testdata tables (/root/testdata/sf*/, TESTDATA.md). Explicit so
-# the declared types match the parquet files the driver generated
-# (sources/tables.py reads footers and uses these for timestamp columns).
+# Driver testdata tables (TESTDATA.md): the read schema of every
+# sources.tables.load_table, so no load infers one from footers. Each
+# type is what inference yields on the generated files; their timestamps
+# are zone-less microseconds, hence TimestampNTZType.
 # ---------------------------------------------------------------------------
 TESTDATA_SCHEMAS: dict[str, StructType] = {
     "region": StructType(
@@ -106,7 +108,7 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
             StructField("o_custkey", LongType(), True),
             StructField("o_orderstatus", StringType(), True),
             StructField("o_totalprice", DoubleType(), True),
-            StructField("o_orderdate", TimestampType(), True),
+            StructField("o_orderdate", TimestampNTZType(), True),
             StructField("o_orderpriority", StringType(), True),
         ]
     ),
@@ -122,13 +124,13 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
             StructField("l_tax", DoubleType(), True),
             StructField("l_returnflag", StringType(), True),
             StructField("l_linestatus", StringType(), True),
-            StructField("l_shipdate", TimestampType(), True),
+            StructField("l_shipdate", TimestampNTZType(), True),
         ]
     ),
     "events": StructType(
         [
             StructField("event_id", LongType(), True),
-            StructField("ts", TimestampType(), True),
+            StructField("ts", TimestampNTZType(), True),
             StructField("user_id", LongType(), True),
             StructField("event_type", StringType(), True),
             StructField("value", DoubleType(), True),

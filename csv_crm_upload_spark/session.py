@@ -47,9 +47,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp — read as long, converted in sources.tables
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # static conf: managed (bucketed) tables live outside the repo
         .config(
             "spark.sql.warehouse.dir",
